@@ -113,8 +113,9 @@ def run_ingest(
         F.to_date("datetime") == F.lit(target_date)
     )
     day = day.withColumn("date", F.to_date("datetime"))
-    # count BEFORE the merge: day's plan lazily reads the store (history
-    # side), and the merge rewrites those partitions
+    # the metrics doc records the day's row count; take it before the
+    # merge, which swaps out the touched partition's files that day's
+    # plan (history side) still lists
     n_rows = day.count()
     merge_into_partitioned(day, store, keys=["datetime"], partition_col="date")
     write_metrics_json(
@@ -139,7 +140,7 @@ def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
     except AnalysisException:  # bootstrap: no previous output yet
         previous = raw.limit(0).select("datetime")
     features = incremental_feature_run(raw, previous)
-    # the plan reads prev_path → two-phase promote (sinks.promote_overwrite)
+    # the plan reads prev_path → staged swap (sinks.promote_overwrite)
     promote_overwrite(features, prev_path)
     out = spark.read.parquet(prev_path)
     export_csv(out, os.path.join(out_dir, "engineered_data.csv"))

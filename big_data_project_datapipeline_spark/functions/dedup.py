@@ -349,26 +349,6 @@ def jaccard_pairs(
     )
 
 
-def minhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    band_size: int | None = 4,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Full near-dup pipeline: signatures → LSH candidates → Jaccard verify
-    → pairs above threshold. ``band_size=None`` auto-solves (b, r) for the
-    threshold via ``solve_banding``."""
-    if band_size is None:
-        _, band_size = solve_banding(threshold, num_hashes)
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, band_size)
-    return jaccard_pairs(df, cands, text_col, id_col).filter(
-        F.col("jaccard") >= F.lit(threshold)
-    )
-
-
 def _verified_ancestors(
     df: DataFrame,
     text_col: str,

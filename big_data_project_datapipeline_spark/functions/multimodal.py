@@ -93,15 +93,6 @@ def _sniff(content: bytes | None) -> str | None:
     return "application/octet-stream"
 
 
-def _fake_dims(content: bytes | None) -> tuple[int | None, int | None]:
-    """Deterministic stand-in for decoded dimensions: derived from the
-    content digest so tests are stable and the column shape is realistic."""
-    if content is None:
-        return None, None
-    d = hashlib.md5(content).digest()
-    return 16 * (1 + d[0] % 64), 16 * (1 + d[1] % 64)
-
-
 def extract_media_features(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Arrow-batched per-item feature extraction over a binary column.
 

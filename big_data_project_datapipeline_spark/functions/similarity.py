@@ -971,10 +971,6 @@ def load_ivfpq_model(path: str) -> dict:
         return json.load(fh)
 
 
-def _cents_arr(model: dict) -> Column:
-    return _dmat_expr(model["centroids"])
-
-
 def ivfpq_encode(
     corpus: DataFrame,
     model: dict,

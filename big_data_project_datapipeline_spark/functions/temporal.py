@@ -27,10 +27,6 @@ from pyspark.sql import functions as F
 TWO_PI = 2.0 * math.pi
 
 
-def hour_of_day(ts: Column) -> Column:
-    return F.hour(ts)
-
-
 def day_of_week(ts: Column) -> Column:
     """Monday=0 .. Sunday=6 (pandas convention, reference :34)."""
     return F.weekday(ts)

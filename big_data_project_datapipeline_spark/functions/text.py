@@ -173,29 +173,6 @@ def shingle_fingerprint(text: Column, k: int = 3) -> Column:
     return F.when(text.isNotNull(), F.array_min(shingles))
 
 
-def winnow_fingerprints(text: Column, k: int = 5, window: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
-    SIGMOD 2003 — the MOSS algorithm): hash every character k-gram of the
-    lowercased text, then keep the MINIMUM hash of each ``window``
-    consecutive gram hashes; the distinct minima are the fingerprint set.
-    Any substring match of length ≥ k + window − 1 between two documents
-    is guaranteed to share a fingerprint.
-
-    Gram hashes are base-256 polynomial codes over the characters (the
-    paper's rolling-hash family) — pure integer arithmetic, bit-identical
-    across engines (oracle-checkable) and ~10× cheaper than a digest per
-    gram (measured vs md5). Pure higher-order expressions: fingerprinting
-    a 100 TB corpus is a map-only scan, no shuffle, no Python boundary.
-
-    Column-level convenience — prefer ``add_winnow_fingerprints`` on
-    DataFrames: it stages the char-code and gram arrays as real columns so
-    each is evaluated once. Inlining them here makes every lambda
-    reference re-evaluate the whole upstream array (O(n²) per row).
-    """
-    codes = char_codes(text)
-    return winnow_from_grams(gram_hashes_from_codes(codes, k), window)
-
-
 def char_codes(text: Column) -> Column:
     """Codepoint array of lowercased text (1 code per character)."""
     clean = F.lower(text)

@@ -12,8 +12,9 @@ made explicit: tag each side, then keep ``row_number() == 1`` over
 — its keeper is nondeterministic across runs/partitionings.
 
 Scale: one shuffle on the merge key. On a date-partitioned sink only the
-touched partitions need rewriting (dynamic partition overwrite) — the
-reference rewrites the whole CSV every day (raw_data.py:263).
+touched partition directories are read back and swapped
+(``sinks.merge_into_partitioned``) — the reference rewrites the whole CSV
+every day (raw_data.py:263).
 """
 
 from __future__ import annotations

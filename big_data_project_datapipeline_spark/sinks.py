@@ -5,7 +5,7 @@ day, versioned by DVC md5 (reference raw_data.py:241-269, data/*.dvc). The
 Spark-native storage model:
 
 - **Date-partitioned parquet** as the system of record. The daily upsert
-  touches only the target date's partitions (dynamic partition overwrite)
+  reads and rewrites only the target date's ``key=value`` directories
   instead of rewriting history — at 100 TB that is the difference between
   an O(day) and O(years) write.
 - **Bucketed tables** for fact tables that join repeatedly on one key:
@@ -16,37 +16,136 @@ Spark-native storage model:
 - **Content hash manifest** — the engine-side analog of DVC's md5 role
   (K4): a deterministic order-insensitive hash of the dataset for
   regression pinning.
+
+One commit protocol replaces parquet data in place: ``write_partitioned``,
+``merge_into_partitioned``, ``delete_where``, ``promote_overwrite``,
+``compact_parquet`` and the fold in ``streaming/corpus.py`` all write the
+new data to the sibling ``<path>.staging``, then :func:`_commit` renames
+each replaced directory (the whole store, or one ``key=value`` partition
+directory) into the sibling ``<path>.backup``, renames its staged twin into
+place, and drops the backup. Each of them first calls :func:`_recover`,
+before it reads the store, so a crash at any point leaves every replaced
+directory at its old or its new version and a rerun of the same
+operation converges to the uninterrupted result. The protocol needs
+``os.rename`` (a local filesystem); object stores need a table format.
+
+The streaming gram index (``streaming/dedup.py``) keeps its own protocol,
+because it never replaces a live directory: each micro-batch writes a
+shard named by its batch id, a replayed batch overwrites only its own
+shard, and the stream checkpoint is the commit.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+from collections import Counter
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark.operators.merge import upsert_keep_last
 
+_STAGING, _BACKUP = ".staging", ".backup"
+# the backup name of a whole-store swap; a partition directory is always
+# key=value, so it can never be this
+_WHOLE_STORE = "_store"
+
+
+def _recover(path: str) -> None:
+    """Undo a crashed :func:`_commit` on ``path``: restore each backed-up
+    directory whose live twin is missing, then clear leftover staging and
+    backup. A no-op after a clean commit."""
+    root = path.rstrip("/")
+    backup = root + _BACKUP
+    if os.path.isdir(backup):
+        for name in os.listdir(backup):
+            live = root if name == _WHOLE_STORE else os.path.join(root, name)
+            if not os.path.exists(live):
+                os.rename(os.path.join(backup, name), live)
+    shutil.rmtree(root + _STAGING, ignore_errors=True)
+    shutil.rmtree(backup, ignore_errors=True)
+
+
+def _commit(
+    path: str, stage: Callable[[str], None], names: list[str] | None = None
+) -> None:
+    """Replace data under ``path`` by a staged rename-swap.
+
+    ``stage(staging)`` writes the new data to the sibling staging dir and
+    may raise to abort before anything live is touched. With ``names``
+    None the staged dir replaces the whole store; otherwise it holds
+    ``key=value`` partition dirs and each named partition is swapped for
+    its staged twin, or removed when the stage wrote none (an emptied
+    partition). Replaced dirs move into one backup dir that is dropped
+    only after every staged dir is in place. Callers run :func:`_recover`
+    first, before they read the store."""
+    root = path.rstrip("/")
+    staging, backup = root + _STAGING, root + _BACKUP
+    stage(staging)
+    os.makedirs(backup)
+    if names is None:
+        if os.path.exists(root):
+            os.rename(root, os.path.join(backup, _WHOLE_STORE))
+        os.rename(staging, root)
+    else:
+        os.makedirs(root, exist_ok=True)
+        for name in names:
+            if os.path.exists(os.path.join(root, name)):
+                os.rename(os.path.join(root, name), os.path.join(backup, name))
+        for name in names:
+            if os.path.exists(os.path.join(staging, name)):
+                os.rename(os.path.join(staging, name), os.path.join(root, name))
+    shutil.rmtree(backup)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def _partition_dirs(df: DataFrame, col: str) -> Counter:
+    """Row count per ``key=value`` directory that a ``partitionBy(col)``
+    write of ``df`` lands in, named by Spark's own rule
+    (``ExternalCatalogUtils.getPartitionPathString``: path escaping, and
+    NULL or empty as ``__HIVE_DEFAULT_PARTITION__``) over the value cast
+    to string, as the writer casts it."""
+    jvm = df.sparkSession._jvm
+    path_string = (
+        jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    ).getPartitionPathString
+    # collect-ok: O(distinct partition values) manifest
+    rows = df.groupBy(F.col(col).cast("string")).count().collect()
+    dirs: Counter = Counter()
+    for value, n in rows:
+        dirs[path_string(col, value)] += n
+    return dirs
+
+
+def _read_partitions(
+    spark: SparkSession, path: str, names: list[str]
+) -> DataFrame | None:
+    """The named partition dirs of ``path`` that exist, read by path with
+    the partition column kept (``basePath``); None when none exists."""
+    dirs = [os.path.join(path, n) for n in names]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if not dirs:
+        return None
+    return spark.read.option("basePath", path).parquet(*dirs)
+
 
 def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, partition_cols: list[str]
 ) -> None:
-    """Date-partitioned parquet sink with dynamic partition overwrite: an
-    idempotent daily job rewrites only the partitions present in ``df``."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        writer = df.write.mode(mode)
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    """Date-partitioned parquet sink: replace the ``key=value`` dirs of
+    the partition values present in ``df`` and leave every other
+    partition's files untouched, so an idempotent daily job rewrites
+    only its own dates. One partition column: the swap unit is one
+    top-level partition dir."""
+    if len(partition_cols) != 1:
+        raise ValueError("write_partitioned takes exactly one partition column")
+    (col,) = partition_cols
+    _recover(path)
+    names = sorted(_partition_dirs(df, col))
+    _commit(path, df.write.partitionBy(col).parquet, names)
 
 
 def merge_into_partitioned(
@@ -58,47 +157,21 @@ def merge_into_partitioned(
 ) -> None:
     """Upsert ``new`` into the partitioned sink, new-wins per key (D1).
 
-    Only partitions present in ``new`` are read back, merged, and
-    rewritten — the reference's read-modify-write of the whole CSV
-    (raw_data.py:246-263) shrunk to the touched dates. Emulates Delta
-    MERGE with plain parquet.
+    Only the partition dirs ``new`` touches are read back (by path),
+    merged, and swapped in — the reference's read-modify-write of the
+    whole CSV (raw_data.py:246-263) shrunk to the touched dates. Emulates
+    Delta MERGE with plain parquet. The merged plan reads the live dirs
+    while the write goes to staging, so it needs no materialization
+    before the swap.
     """
-    from pyspark.errors import AnalysisException
-
     spark = spark or new.sparkSession
-    try:
-        existing = spark.read.parquet(path)
-    except AnalysisException:  # path not found — first write, nothing to merge
-        merged = new
-    else:
-        # Any error past this point (corrupt file, permission, schema
-        # mismatch) must propagate: treating it as "first write" would
-        # dynamic-overwrite touched partitions with only the new rows and
-        # silently drop the existing rows that should have been merged.
-        # collect-ok: O(distinct partition values) manifest
-        touched = [
-            r[0] for r in new.select(partition_col).distinct().collect()
-        ]
-        # isin() never matches NULL: without the isNull branch, existing
-        # rows in the null partition are excluded from the merge while
-        # dynamic overwrite still rewrites __HIVE_DEFAULT_PARTITION__ —
-        # silent data loss (review fix, reproduced)
-        non_null = [t for t in touched if t is not None]
-        cond = F.col(partition_col).isin(non_null)
-        if any(t is None for t in touched):
-            cond = cond | F.col(partition_col).isNull()
-        existing_slice = existing.filter(cond).persist()
-        # materialize the slice BEFORE the overwrite: the merged plan
-        # otherwise reads the very files the committer replaces (the
-        # delete_where guard, applied here too)
-        existing_slice.count()
-        merged = upsert_keep_last(existing_slice, new, keys=keys)
-        try:
-            write_partitioned(merged, path, [partition_col])
-        finally:
-            existing_slice.unpersist()
-        return
-    write_partitioned(merged, path, [partition_col])
+    _recover(path)
+    names = sorted(_partition_dirs(new, partition_col))
+    existing = _read_partitions(spark, path, names)
+    merged = (
+        new if existing is None else upsert_keep_last(existing, new, keys=keys)
+    )
+    _commit(path, merged.write.partitionBy(partition_col).parquet, names)
 
 
 def write_bucketed(
@@ -129,8 +202,7 @@ def write_bucketed(
     # catalog entry — saveAsTable refuses to reuse it, so clear it
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     # the metastore lowercases table names and nests db-qualified tables
-    # under <db>.db/ — the verbatim join missed the leftover directory
-    # this guard exists to clear (review fix)
+    # under <db>.db/, so a verbatim join would miss the leftover directory
     parts = table_name.lower().split(".")
     rel = (
         os.path.join(f"{parts[0]}.db", parts[1])
@@ -139,8 +211,6 @@ def write_bucketed(
     )
     loc = os.path.join(warehouse.removeprefix("file:"), rel)
     if os.path.exists(loc):
-        import shutil
-
         shutil.rmtree(loc)
     writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
     if sort_col:
@@ -177,36 +247,13 @@ def register_bucketed_table(
 
 
 def promote_overwrite(df: DataFrame, path: str) -> None:
-    """Two-phase parquet overwrite for stores whose OWN plan reads
-    ``path`` (the incremental read-transform-replace shape): materialize
-    to ``<path>.tmp`` first, then swap by rename — never clobber an
-    input mid-plan, never leave a stale ``.tmp`` for glob consumers.
-    Falls back to a copy-write when the rename crosses devices or the
-    path isn't local."""
-    import shutil
-
-    tmp = path.rstrip("/") + ".tmp"
-    old = path.rstrip("/") + ".promote.old"
-    # recover a prior crash: a stale .old with no live store IS the
-    # store (crashed between the two renames) — restore it first
-    if os.path.exists(old) and not os.path.exists(path):
-        os.replace(old, path)
-    shutil.rmtree(old, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    # never a window with NO store at path: rename the live store aside,
-    # swap the tmp in, and only then drop the backup (review fix — the
-    # previous rmtree-then-replace order lost the store on a crash
-    # between the two steps, with only .tmp left behind)
-    if os.path.exists(path):
-        os.replace(path, old)
-    try:
-        os.replace(tmp, path)
-    except OSError:
-        if os.path.exists(old):  # restore before the slow fallback
-            os.replace(old, path)
-        df.sparkSession.read.parquet(tmp).write.mode("overwrite").parquet(path)
-        shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
+    """Whole-store parquet overwrite for stores whose OWN plan reads
+    ``path`` (the incremental read-transform-replace shape): the plan
+    reads the live store while the write goes to staging, then
+    :func:`_commit` swaps it in — an input is never clobbered mid-plan
+    and readers never see a half-written store."""
+    _recover(path)
+    _commit(path, df.write.parquet)
 
 
 def export_csv(df: DataFrame, path: str) -> None:
@@ -227,8 +274,12 @@ def write_metrics_json(metrics: dict, path: str) -> None:
                 existing = {}
     existing.update(metrics)
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as fh:
+    # write-temp + rename: a write that raises mid-dump leaves the
+    # previous doc intact
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
         json.dump(existing, fh, indent=2, sort_keys=True)
+    os.replace(tmp, path)
 
 
 def content_hash(df: DataFrame) -> str:
@@ -373,37 +424,19 @@ def compact_parquet(
     ``merge_into_partitioned`` layout, ``key=value`` subdirectories) are
     detected from the directory names and rewritten WITH the same
     ``partitionBy`` — a flat rewrite would mix root-level files with
-    ``key=`` dirs on the next dynamic-partition merge and break both
-    reads and partition pruning. The rewrite hash-partitions on the
-    partition columns, so every ``key=`` dir compacts to one file (all
-    rows of a key land in one task); unpartitioned stores compact to
+    ``key=`` dirs on the next partition merge and break both reads and
+    partition pruning. The rewrite hash-partitions on the partition
+    columns, so every ``key=`` dir compacts to one file (all rows of a
+    key land in one task); unpartitioned stores compact to
     ceil(bytes / target) files.
 
-    Swap protocol (LOCAL-FS ONLY — ``os.rename``; object stores need a
-    table format / manifest pointer, see ``write_versioned`` for the
-    crash-safe pointer device): write ``.compact.tmp`` → verify its row
-    count matches the source → rename source to ``.compact.old`` →
-    rename tmp into place → verification read of the final store →
-    only then drop the backup. On any verification failure the backup
-    is restored/kept and the error propagates. The brief window between
-    the two renames (path absent) is inherent to directory renames on a
-    plain filesystem; if a crash lands there, ``.compact.old`` holds the
-    intact store. Returns the new file count.
+    The rewrite is staged and swapped in whole by :func:`_commit`, and
+    only if the staged copy's row count matches the source's; otherwise
+    it raises with the source untouched. Returns the new file count.
     """
     import math
-    import shutil
 
-    back = path.rstrip("/") + ".compact.old"
-    # Crash-artifact recovery (review fix): a prior run killed between
-    # the two swap renames leaves the data ONLY in .compact.old (restore
-    # it); one killed after the swap but before cleanup leaves a stale
-    # .compact.old next to a healthy store (drop it). Without this, the
-    # next compaction tick fails forever on the leftover directory.
-    if os.path.exists(back) and not os.path.exists(path):
-        os.rename(back, path)
-    shutil.rmtree(back, ignore_errors=True)
-    shutil.rmtree(path.rstrip("/") + ".compact.tmp", ignore_errors=True)
-
+    _recover(path)
     part_cols = sorted(
         {
             d.split("=", 1)[0]
@@ -418,82 +451,24 @@ def compact_parquet(
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(size / target_file_bytes))
-    tmp = path.rstrip("/") + ".compact.tmp"
     src = spark.read.parquet(path)
     src_rows = src.count()
-    if part_cols:
-        src.repartition(n_files, *part_cols).write.mode(
-            "overwrite"
-        ).partitionBy(*part_cols).parquet(tmp)
-    else:
-        src.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    if spark.read.parquet(tmp).count() != src_rows:
-        shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"compact_parquet: rewrite of {path} lost rows; aborted "
-            f"before swap, source untouched"
-        )
-    os.rename(path, back)
-    os.rename(tmp, path)
-    try:
-        ok = spark.read.parquet(path).count() == src_rows
-    except Exception:
-        ok = False
-    if not ok:
-        shutil.rmtree(path, ignore_errors=True)
-        os.rename(back, path)
-        raise RuntimeError(
-            f"compact_parquet: verification read of compacted {path} "
-            f"failed; original store restored from backup"
-        )
-    shutil.rmtree(back)
+
+    def stage(staging: str) -> None:
+        if part_cols:
+            src.repartition(n_files, *part_cols).write.partitionBy(
+                *part_cols
+            ).parquet(staging)
+        else:
+            src.coalesce(n_files).write.parquet(staging)
+        if spark.read.parquet(staging).count() != src_rows:
+            raise RuntimeError(
+                f"compact_parquet: rewrite of {path} lost rows; aborted "
+                f"before swap, source untouched"
+            )
+
+    _commit(path, stage)
     return n_files
-
-
-def write_versioned(df: DataFrame, root: str) -> int:
-    """Versioned snapshot write (the poor-man's table format): each call
-    lands a complete snapshot under ``root/v=N`` and atomically repoints
-    ``root/_CURRENT`` (write-temp + rename) — readers following the
-    pointer see an old or a new snapshot, never a mix, and any prior
-    version stays readable for time travel / rollback. Returns N."""
-    import os
-
-    os.makedirs(root, exist_ok=True)
-    versions = [
-        int(d.split("=")[1])
-        for d in os.listdir(root)
-        if d.startswith("v=") and d.split("=")[1].isdigit()
-    ]
-    n = max(versions, default=-1) + 1
-    df.write.mode("errorifexists").parquet(os.path.join(root, f"v={n}"))
-    tmp = os.path.join(root, "._CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(n))
-    os.replace(tmp, os.path.join(root, "_CURRENT"))
-    return n
-
-
-def read_versioned(spark, root: str, version: int | None = None) -> DataFrame:
-    """Read a snapshot: the _CURRENT pointer by default, or any explicit
-    ``version`` for time travel."""
-    import os
-
-    if version is None:
-        with open(os.path.join(root, "_CURRENT")) as fh:
-            version = int(fh.read().strip())
-    return spark.read.parquet(os.path.join(root, f"v={version}"))
-
-
-def rollback_versioned(root: str, version: int) -> None:
-    """Repoint _CURRENT at an older snapshot (atomic rename)."""
-    import os
-
-    if not os.path.isdir(os.path.join(root, f"v={version}")):
-        raise FileNotFoundError(f"no snapshot v={version} under {root}")
-    tmp = os.path.join(root, "._CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(root, "_CURRENT"))
 
 
 def write_training_shards(
@@ -589,66 +564,28 @@ def delete_where(
 ) -> int:
     """Targeted row purge from a hive-partitioned parquet store (the
     GDPR-delete / right-to-be-forgotten shape): locate the partitions
-    that actually contain matching rows (one pruned scan), rewrite ONLY
-    those partitions without the matches (dynamic partition overwrite),
-    and leave every other partition's files untouched. Returns the
-    number of rows deleted (rows where ``condition`` is TRUE — a NULL
-    predicate result keeps the row, SQL DELETE semantics).
+    that actually contain matching rows (one scan), rewrite ONLY those
+    partitions without the matches, and leave every other partition's
+    files untouched. Returns the number of rows deleted (rows where
+    ``condition`` is TRUE — a NULL predicate result keeps the row, SQL
+    DELETE semantics, so the keep filter is ``~condition OR condition IS
+    NULL`` rather than ``~condition`` alone).
 
     This is DELETE-emulation over plain parquet, the same posture as
     merge_into_partitioned's MERGE emulation: at 100 TB the point is
     that a purge touches O(partitions containing the subject), never
     the store. ``condition`` is a boolean Column over the store's
-    schema.
-
-    Two failure modes of the naive version are handled explicitly
-    (both found by review, pinned by tests): a partition whose rows
-    ALL match produces no output rows, and dynamic overwrite cannot
-    rewrite an empty partition — its directory is removed directly
-    (local-FS path semantics, the compact_parquet caveat; on object
-    stores emit a delete marker instead); and ``~condition`` alone
-    would also drop NULL-evaluating rows, so the keep filter is
-    ``~condition OR condition IS NULL``."""
-    import shutil
-
-    existing = spark.read.parquet(path)
-    # collect-ok: O(distinct partition values) manifest
-    touched = [
-        r[0]
-        for r in existing.filter(condition)
-        .select(partition_col)
-        .distinct()
-        .collect()
-    ]
+    schema. A partition whose rows ALL match has no staged twin, so
+    :func:`_commit` removes its directory."""
+    _recover(path)
+    touched = _partition_dirs(
+        spark.read.parquet(path).filter(condition), partition_col
+    )
     if not touched:
         return 0
-    # isin() never matches NULL — subject rows in the null partition
-    # would be silently skipped while reporting 0 (review fix)
-    non_null = [t for t in touched if t is not None]
-    cond = F.col(partition_col).isin(non_null)
-    if any(t is None for t in touched):
-        cond = cond | F.col(partition_col).isNull()
-    slice_ = existing.filter(cond).persist()
-    try:
-        # one pass for both counts; materializes the cache the rewrite
-        # reads from (so the write never scans the files it replaces)
-        stats = slice_.agg(
-            F.sum(F.when(condition, 1).otherwise(0)).alias("matched")
-        ).first()
-        kept = slice_.filter(~condition | condition.isNull())
-        kept_parts = {
-            r[0] for r in kept.select(partition_col).distinct().collect()
-        }
-        if kept_parts:
-            write_partitioned(kept, path, [partition_col])
-    finally:
-        slice_.unpersist()
-    for p in touched:
-        if p not in kept_parts:
-            dirname = (
-                f"{partition_col}=__HIVE_DEFAULT_PARTITION__"
-                if p is None
-                else f"{partition_col}={p}"
-            )
-            shutil.rmtree(os.path.join(path, dirname), ignore_errors=True)
-    return int(stats["matched"] or 0)
+    names = sorted(touched)
+    kept = _read_partitions(spark, path, names).filter(
+        ~condition | condition.isNull()
+    )
+    _commit(path, kept.write.partitionBy(partition_col).parquet, names)
+    return sum(touched.values())

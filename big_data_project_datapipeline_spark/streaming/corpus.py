@@ -10,8 +10,8 @@ operators/incremental.aggregate_state's mergeable-MV pattern.
 
 Scale shape per tick: one explode + groupBy over the NEW batch only,
 then one groupBy over the union of two O(vocab) frames. The store is
-rewritten via the two-phase promote (sinks.promote_overwrite) because
-its own plan reads the store path. Vocabulary grows sublinearly in
+rewritten by the sinks' staged rename-swap commit because its own plan
+reads the store path. Vocabulary grows sublinearly in
 corpus size (Heaps' law), so the merged frame stays small relative to
 any batch of raw text; at extreme vocab, partition the store by a token
 hash prefix and merge per partition.
@@ -36,7 +36,7 @@ from big_data_project_datapipeline_spark.functions import corpus as CO
 from big_data_project_datapipeline_spark.operators.incremental import (
     load_or_empty,
 )
-from big_data_project_datapipeline_spark.sinks import promote_overwrite
+from big_data_project_datapipeline_spark.sinks import _commit, _recover
 
 COUNT_SCHEMA = T.StructType(
     [
@@ -73,25 +73,25 @@ def _fold_pending_deltas(
     merge_fn,
 ) -> DataFrame:
     """Shared fold: rebuild the base store as base ⊕ every landed delta
-    whose batch id is not in the folded ledger, promote, and return the
-    re-read store. merge_fn(prev, delta) must be an associative
+    whose batch id is not in the folded ledger, swap it in, and return
+    the re-read store. merge_fn(prev, delta) must be an associative
     aggregate merge over two already-collapsed frames (the single call
     receives the UNION of all pending deltas — sums over a union equal
     chained pairwise merges, with one shuffle instead of N).
 
-    Crash safety (review fix): the ledger lives INSIDE the promoted
-    store directory (``counts/_folded.json``) and is written into the
-    tmp directory BEFORE the atomic rename, so the merged counts and
-    the folded-id set move in one filesystem operation — a crash
-    between "promote" and "record folded" can no longer double-count
-    every pending delta on the next tick (Spark ignores underscore-
-    prefixed files in a parquet directory). Folded delta shards are
-    pruned afterwards; the ledger alone prevents refolds, so a
-    replay-relanded shard is garbage-collected on the next fold."""
+    Crash safety: the ledger lives INSIDE the store directory
+    (``counts/_folded.json``; Spark ignores underscore-prefixed files in
+    a parquet directory) and is written into the staged directory before
+    the swap, so the merged counts and the folded-id set are replaced
+    together — a crash can never leave counts that disagree with their
+    ledger and double-count a delta on the next tick. Folded delta
+    shards are pruned afterwards; the ledger alone prevents refolds, so
+    a replay-relanded shard is garbage-collected on the next fold."""
     import json as _json
     import shutil
 
     base_path = os.path.join(store_dir, "counts")
+    _recover(base_path)
     ledger_name = "_folded.json"
     folded: set[str] = set()
     ledger_path = os.path.join(base_path, ledger_name)
@@ -115,14 +115,14 @@ def _fold_pending_deltas(
         for f in delta_frames[1:]:
             union = union.unionByName(f)
         merged = merge_fn(merged, union)
-        # two-phase promote with the ledger riding in the SAME rename
-        tmp = base_path.rstrip("/") + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, ledger_name), "w") as fh:
-            _json.dump(sorted(folded | set(pending)), fh)
-        shutil.rmtree(base_path, ignore_errors=True)
-        os.replace(tmp, base_path)
         folded |= set(pending)
+
+        def stage(staging: str) -> None:
+            merged.write.parquet(staging)
+            with open(os.path.join(staging, ledger_name), "w") as fh:
+                _json.dump(sorted(folded), fh)
+
+        _commit(base_path, stage)
     # prune delta shards already recorded in the ledger (incl. shards
     # re-landed by a replayed batch id — the ledger blocks refolds)
     for d in os.listdir(deltas_root):
@@ -139,7 +139,7 @@ def maintain_token_counts(
 ) -> DataFrame:
     """One cron tick: land the batch delta (idempotent per batch_id),
     then rebuild the merged store from base ⊕ unfolded deltas. Returns
-    the merged (token, cnt) frame as re-read from the promoted store."""
+    the merged (token, cnt) frame as re-read from the committed store."""
     land_delta(docs_batch, store_dir, batch_id)
     return _fold_pending_deltas(
         spark, store_dir, COUNT_SCHEMA, merge_token_counts

@@ -14,12 +14,12 @@ Exactly-once shape: the file-source checkpoint tracks which raw files
 each micro-batch consumed, so a drain per cron tick feeds every landed
 file into exactly one feature run. Replay is additionally harmless at
 the ROW level — ``incremental_feature_run`` anti-joins the batch
-against the previous feature keys, so rows re-surfaced by a dynamic
-partition rewrite (``merge_into_partitioned`` replaces whole partition
-files, and the file stream re-reads them as "new" files) are dropped
-before any feature work. The store update itself is the batch job's
-two-phase promote (`sinks.promote_overwrite`), so readers never see a
-half-written feature table.
+against the previous feature keys, so rows re-surfaced by a partition
+rewrite (``merge_into_partitioned`` swaps in a touched partition's
+directory with new files, and the file stream reads them as "new"
+files) are dropped before any feature work. The store update itself is
+the batch job's staged swap (`sinks.promote_overwrite`), so readers
+never see a half-written feature table.
 
 Scale note: each micro-batch shuffles only on the feature key
 (anti-join + keep-first dedup); the feature store side of both joins

@@ -225,41 +225,3 @@ def kmv_report(
     return kmv_distinct_estimate(sk, ["grp"], k=k).withColumnRenamed(
         "grp", group_col
     )
-
-
-def stream_kmv_monitor(
-    spark: SparkSession,
-    events_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    group_col: str = "event_type",
-    k: int = 256,
-    hll_p: int = 8,
-    query_name: str = "engine_stream_kmv",
-    schema=None,
-):
-    """availableNow drain maintaining the KMV store — the q178/q183
-    streaming front end, same idempotence contract as
-    stream_hll_monitor (batch-keyed delta overwrite + fold ledger)."""
-    if schema is None:
-        schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    return (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, batch_id: maintain_kmv_sketch(
-                batch_df.sparkSession,
-                batch_df,
-                store_dir,
-                f"b{batch_id}",
-                key_col=key_col,
-                group_col=group_col,
-                k=k,
-                hll_p=hll_p,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )

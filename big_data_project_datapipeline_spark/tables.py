@@ -134,9 +134,3 @@ def _fan_out_unsplittable(
     if n_groups >= cores or n_rows < cores * 16:
         return df
     return df.repartition(cores)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql use)."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -5,10 +5,14 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark import sinks
+from big_data_project_datapipeline_spark.streaming import corpus as SC
 
 UTC = dt.timezone.utc
 
@@ -80,6 +84,18 @@ def test_metrics_json_read_modify_write(tmp_path):
     assert doc["api_success_rate"] == 0.8  # updated
     assert doc["total_apis"] == 5          # preserved
     assert doc["last_run"].endswith("Z")
+
+
+def test_metrics_json_survives_a_failed_write(tmp_path):
+    # a value json cannot serialize raises mid-dump; the earlier doc must
+    # stay readable and keep every key for the next write
+    p = str(tmp_path / "metrics.json")
+    sinks.write_metrics_json({"last_run": "d1", "rows_ingested": 24}, p)
+    with pytest.raises(TypeError):
+        sinks.write_metrics_json({"zz": object()}, p)
+    assert json.load(open(p)) == {"last_run": "d1", "rows_ingested": 24}
+    sinks.write_metrics_json({"rows_ingested": 25}, p)
+    assert json.load(open(p)) == {"last_run": "d1", "rows_ingested": 25}
 
 
 def test_content_hash_stability(spark):
@@ -226,8 +242,8 @@ def test_compact_parquet_preserves_hive_partitions(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == 3_000
     assert back.filter(F.col("date") == "1").count() == 1_000
-    # no backup/tmp left behind after a verified swap
-    assert not glob.glob(str(tmp_path / "store.compact.*"))
+    # no staging/backup left behind after a verified swap
+    assert not glob.glob(str(tmp_path / "store.*"))
 
 
 def test_zorder_value_guards():
@@ -249,26 +265,6 @@ def test_zorder_value_empty_input_raises(spark):
     empty = spark.range(0).selectExpr("id AS a", "id AS b")
     with pytest.raises(ValueError, match="no min/max"):
         zorder_value(empty, ["a", "b"], bits=8)
-
-
-def test_versioned_write_time_travel_and_rollback(spark, tmp_path):
-    from big_data_project_datapipeline_spark.sinks import (
-        read_versioned,
-        rollback_versioned,
-        write_versioned,
-    )
-
-    root = str(tmp_path / "store")
-    assert write_versioned(spark.range(0, 5), root) == 0
-    assert write_versioned(spark.range(0, 9), root) == 1
-    assert read_versioned(spark, root).count() == 9          # current
-    assert read_versioned(spark, root, version=0).count() == 5  # travel
-    rollback_versioned(root, 0)
-    assert read_versioned(spark, root).count() == 5
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        rollback_versioned(root, 7)
 
 
 def test_training_shards_manifest_and_determinism(spark, tmp_path):
@@ -401,33 +397,6 @@ def test_delete_where_null_partition_rows(spark, tmp_path):
     assert sorted(r.id for r in spark.read.parquet(path).collect()) == [2]
 
 
-def test_promote_overwrite_recovers_from_crash_artifacts(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "store")
-    df1 = spark.createDataFrame([(1,)], "x long")
-    sinks.promote_overwrite(df1, path)
-    # simulate a crash between the two renames: store moved aside, no live dir
-    os.replace(path, path + ".promote.old")
-    df2 = spark.createDataFrame([(2,)], "x long")
-    sinks.promote_overwrite(df2, path)  # must recover, then promote
-    assert [r.x for r in spark.read.parquet(path).collect()] == [2]
-    assert not os.path.exists(path + ".promote.old")
-
-
-def test_compact_recovers_from_stale_backup(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "store")
-    spark.range(100).write.parquet(path)
-    # simulate crash right after the first swap rename
-    os.replace(path, path + ".compact.old")
-    n = sinks.compact_parquet(spark, path)
-    assert n >= 1
-    assert spark.read.parquet(path).count() == 100
-    assert not os.path.exists(path + ".compact.old")
-
-
 def test_training_shards_null_doc_id_rejected(spark, tmp_path):
     import pytest
 
@@ -496,3 +465,195 @@ def test_write_bucketed_one_file_per_bucket(spark, tmp_path):
         if f.endswith(".parquet")
     ]
     assert len(files) == 8, files
+
+
+# --- crash windows of the staged rename-swap commit -----------------------
+#
+# Each site is (build, op, store, whole): build(spark, root) writes the
+# state the operation starts from under root, op(spark, root) runs it,
+# store is the committed directory relative to root, and whole says
+# whether the commit swaps the whole store or key=value partition dirs.
+
+
+def _merge_build(spark, root):
+    days = _mk(spark, [(ts(d, 0), float(d)) for d in (1, 2, 3)])
+    sinks.write_partitioned(days, f"{root}/store", ["date"])
+
+
+def _merge_op(spark, root):
+    # a correction for day 1 and a new hour on day 2: two partitions
+    new = _mk(spark, [(ts(1, 0), 10.0), (ts(2, 1), 20.0)])
+    sinks.merge_into_partitioned(
+        new, f"{root}/store", keys=["datetime"], partition_col="date"
+    )
+
+
+def _delete_build(spark, root):
+    spark.createDataFrame(
+        [(1, 1, "d0"), (2, 1, "d0"), (3, 1, "d1"), (4, 2, "d1"), (5, 3, "d2")],
+        "id long, user long, day string",
+    ).write.partitionBy("day").parquet(f"{root}/store")
+
+
+def _delete_op(spark, root):
+    # empties day=d0, shrinks day=d1
+    sinks.delete_where(spark, f"{root}/store", F.col("user") == 1, "day")
+
+
+def _promote_build(spark, root):
+    df = spark.createDataFrame([(1,), (2,)], "x long")
+    sinks.promote_overwrite(df, f"{root}/store")
+
+
+def _promote_op(spark, root):
+    df = spark.createDataFrame([(3,)], "x long")
+    sinks.promote_overwrite(df, f"{root}/store")
+
+
+def _compact_build(spark, root):
+    spark.range(300).select(
+        (F.col("id") % 3).cast("string").alias("date"), "id"
+    ).repartition(4).write.partitionBy("date").parquet(f"{root}/store")
+
+
+def _compact_op(spark, root):
+    sinks.compact_parquet(spark, f"{root}/store")
+
+
+def _fold_docs(spark):
+    return spark.createDataFrame([(1, "b c c")], "doc_id long, text string")
+
+
+def _fold_build(spark, root):
+    first = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
+    SC.maintain_token_counts(spark, first, f"{root}/corpus", "b0")
+    # the tick being retried had landed its delta before its fold
+    SC.land_delta(_fold_docs(spark), f"{root}/corpus", "b1")
+
+
+def _fold_op(spark, root):
+    SC.maintain_token_counts(spark, _fold_docs(spark), f"{root}/corpus", "b1")
+
+
+_SITES = {
+    "merge_two_dates": (_merge_build, _merge_op, "store", False),
+    "delete_empties_partition": (_delete_build, _delete_op, "store", False),
+    "promote_overwrite": (_promote_build, _promote_op, "store", True),
+    "compact_parquet": (_compact_build, _compact_op, "store", True),
+    "corpus_fold": (_fold_build, _fold_op, "corpus/counts", True),
+}
+# the states a commit can stop in, in the order it passes them:
+# staged      - the new data is in staging, nothing live has moved
+# backing_up  - the first replaced dir is in the backup
+# backed_up   - every replaced dir is in the backup, none swapped in
+# swapping    - the first staged dir is in place
+# swapped     - every staged dir is in place, the backup not yet dropped
+_WINDOWS = {
+    "merge_two_dates": ("staged", "backing_up", "backed_up", "swapping", "swapped"),
+    # one staged dir (day=d1): swapping is swapped
+    "delete_empties_partition": ("staged", "backing_up", "backed_up", "swapped"),
+    # one replaced dir (the store): backing_up is backed_up, swapping is swapped
+    "promote_overwrite": ("staged", "backed_up", "swapped"),
+    "compact_parquet": ("staged", "backed_up", "swapped"),
+    "corpus_fold": ("staged", "backed_up", "swapped"),
+}
+
+
+def _listing(d):
+    return sorted(os.listdir(d)) if os.path.isdir(d) else None
+
+
+def _leave_crash_state(store, after, whole, window):
+    """Lay out by hand what a commit of ``store`` towards ``after`` leaves
+    when the process dies in ``window``."""
+    staging, backup = store + sinks._STAGING, store + sinks._BACKUP
+    if whole:
+        names = [sinks._WHOLE_STORE]
+        shutil.copytree(after, staging)
+
+        def paths(name):
+            return store, staging, os.path.join(backup, name)
+
+    else:
+        names = sorted(
+            d
+            for d in set(os.listdir(store)) | set(os.listdir(after))
+            if "=" in d
+            and _listing(os.path.join(store, d))
+            != _listing(os.path.join(after, d))
+        )
+        os.makedirs(staging)
+        for n in names:
+            if os.path.isdir(os.path.join(after, n)):
+                shutil.copytree(os.path.join(after, n), os.path.join(staging, n))
+
+        def paths(name):
+            return (
+                os.path.join(store, name),
+                os.path.join(staging, name),
+                os.path.join(backup, name),
+            )
+
+    staged = [n for n in names if os.path.exists(paths(n)[1])]
+    moved = {"staged": 0, "backing_up": 1}.get(window, len(names))
+    swapped = {"swapping": 1, "swapped": len(staged)}.get(window, 0)
+    os.makedirs(backup)
+    for n in names[:moved]:
+        live, _, backed = paths(n)
+        if os.path.exists(live):
+            os.rename(live, backed)
+    for n in staged[:swapped]:
+        live, stage, _ = paths(n)
+        os.rename(stage, live)
+
+
+def _snapshot(spark, store):
+    rows = sorted(map(repr, spark.read.parquet(store).collect()))
+    files = {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(store, d)))
+        for d in os.listdir(store)
+        if "=" in d
+    }
+    ledger = os.path.join(store, "_folded.json")
+    folded = json.load(open(ledger)) if os.path.exists(ledger) else None
+    return rows, files, folded
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """Per site: (root before the operation, root after an uninterrupted
+    run of it), built once."""
+    runs = {}
+
+    def get(site):
+        if site not in runs:
+            build, op, _, _ = _SITES[site]
+            base = tmp_path_factory.mktemp(site)
+            before, after = str(base / "before"), str(base / "after")
+            build(spark, before)
+            shutil.copytree(before, after)
+            op(spark, after)
+            runs[site] = before, after
+        return runs[site]
+
+    return get
+
+
+@pytest.mark.parametrize(
+    "site,window", [(s, w) for s, ws in _WINDOWS.items() for w in ws]
+)
+def test_commit_crash_window_recovers(
+    spark, tmp_path, uninterrupted, site, window
+):
+    """A process killed in any window of a commit leaves a state from
+    which rerunning the same operation yields the uninterrupted store."""
+    _, op, rel, whole = _SITES[site]
+    before, after = uninterrupted(site)
+    root = str(tmp_path / "root")
+    shutil.copytree(before, root)
+    store = os.path.join(root, rel)
+    _leave_crash_state(store, os.path.join(after, rel), whole, window)
+    op(spark, root)
+    assert _snapshot(spark, store) == _snapshot(spark, os.path.join(after, rel))
+    assert not os.path.exists(store + sinks._STAGING)
+    assert not os.path.exists(store + sinks._BACKUP)
