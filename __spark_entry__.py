@@ -4960,8 +4960,7 @@ def q198_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q199_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (Newman 2002) of the support>=2 co-purchase
     graph (operators/graph.degree_assortativity, factored from this
-    entry in round 12 so the prepared-support-edge path pins bit-equal
-    to the in-session build): the Pearson correlation of endpoint
+    entry): the Pearson correlation of endpoint
     degrees across the symmetrized edge list — do popular parts
     co-purchase with popular parts (assortative, r>0) or with niche
     ones (disassortative, r<0)? All moment sums accumulate EXACTLY in
@@ -5545,9 +5544,7 @@ def q226_lpa_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived ``sym`` and modularity re-derives ``canon``, so the
     ledger's most expensive build — the within-order pair self-join —
     ran TWICE, doubling the family's sf10 spill to 104 GB). One lazy
-    localCheckpoint on the O(edges) frame halves that; at deployment
-    scale the prepared pair-stats landing removes the build entirely
-    (market.support_graph_edges(prepared_stats=...))."""
+    localCheckpoint on the O(edges) frame halves that."""
     ed = (
         _copurchase_support_edges(spark, sf_dir)
         .select("src", "dst")

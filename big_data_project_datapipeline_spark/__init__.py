@@ -13,7 +13,7 @@ Layout
 - ``functions``  column-level feature functions: temporal, interaction, log,
                  text analysis, dedup hashing, vector similarity (§2.8-2.13 + ext).
 - ``plans``      end-to-end lazy pipelines mirroring the reference's two jobs (§3).
-- ``streaming``  Structured Streaming equivalents of the incremental semantics (§2.11).
+- ``streaming``  the cron's Structured Streaming substring dedup of the day's docs (§2.11).
 """
 
 __version__ = "0.1.0"

@@ -45,6 +45,7 @@ from big_data_project_datapipeline_spark.plans.ingest import (
 )
 from big_data_project_datapipeline_spark.session import get_spark
 from big_data_project_datapipeline_spark.sinks import (
+    _recover,
     export_csv,
     merge_into_partitioned,
     promote_overwrite,
@@ -135,6 +136,9 @@ def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
     t0 = time.monotonic()
     raw = spark.read.parquet(store).drop("date")
     prev_path = os.path.join(out_dir, "features.parquet")
+    # finish a crashed commit first: this read must see the previous
+    # output, which such a crash can leave only in the backup dir
+    _recover(prev_path)
     try:
         previous = spark.read.parquet(prev_path)
     except AnalysisException:  # bootstrap: no previous output yet

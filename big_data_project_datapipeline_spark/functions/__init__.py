@@ -7,7 +7,6 @@
 - ``dedup``      exact/minhash/simhash/jaccard dedup + cluster resolution.
 - ``similarity`` vector similarity: cosine top-k, SRP-LSH, IVF.
 - ``multimodal`` opaque-binary media columns (mapInPandas plumbing).
-- ``pandas_ops`` grouped applyInPandas escape hatches.
 
 The REFERENCE surface (SURVEY.md §2.12) uses zero Python UDFs — it is all
 JVM-side Column expressions. The LLM-pipeline extensions add Arrow-batched

@@ -172,8 +172,7 @@ def token_budget_sample(
 def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus (token, cnt) frame — one explode + one map-side-combinable
     groupBy. This is also the MERGEABLE state unit for incremental
-    corpus stats (counts are associative sums): see
-    streaming/corpus.maintain_token_counts."""
+    corpus stats (counts are associative sums)."""
     tok = df.select(F.explode(TX.tokens(F.col(text_col))).alias("token"))
     return tok.groupBy("token").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -446,9 +445,8 @@ def dsir_importance(
 
     Factored so the expensive half is a MERGEABLE aggregate: the
     (bucket, ct, cr) frame from dsir_bucket_counts is associative-sum
-    state that streaming/corpus.maintain_dsir_counts folds across cron
-    ticks; dsir_weights_from_counts + dsir_score_docs are the cheap
-    read path shared by both the batch and incremental pipelines."""
+    state that can be folded across cron ticks; dsir_weights_from_counts
+    + dsir_score_docs are the cheap read path over it."""
     counts = dsir_bucket_counts(
         df,
         target_source,
@@ -479,7 +477,7 @@ def dsir_bucket_counts(
     (cr), full-outer-merged with coalesce-0 (a bucket seen on only one
     side still needs its smoothed probability on the other). Counts are
     associative sums — fold daily deltas instead of re-exploding the
-    corpus (streaming/corpus.maintain_dsir_counts)."""
+    corpus."""
     staged = df.select(
         (F.col(source_col) == target_source).alias("is_target"),
         F.explode(TX.tokens(F.col(text_col))).alias("token"),
@@ -605,8 +603,8 @@ def bigram_logprob_scores(
 
     Cost note (review): the exact vocabulary size V costs a SECOND
     corpus tokenize (the pair staging cannot supply doc-final tokens of
-    1-token docs). At 100 TB read V off the incrementally maintained
-    token-count store (streaming/corpus.maintain_token_counts) instead
+    1-token docs). At 100 TB read V off an incrementally maintained
+    token-count store (:func:`token_counts` folded per tick) instead
     of recomputing it here."""
     toks = TX.tokens(F.col(text_col))
     staged = df.select(
@@ -1503,10 +1501,9 @@ def nb_fit(
     doc_tokens: DataFrame | None = None,
 ):
     """Multinomial NB model state: (classes = per-class doc counts,
-    tc = per-(class, token) occurrence counts). Both are SUMS — the
-    mergeable state unit the incremental model maintainer folds
-    across ticks (streaming/nbmodel.py); a model folded batch-by-batch
-    is bit-equal to this fit on the union."""
+    tc = per-(class, token) occurrence counts). Both are SUMS — a
+    mergeable state unit: a model folded batch-by-batch is bit-equal
+    to this fit on the union."""
     dt = (
         doc_tokens
         if doc_tokens is not None
@@ -1723,10 +1720,8 @@ def sampling_table_from_counts(
     cnt: DataFrame, alpha: float = 0.75
 ) -> DataFrame:
     """The sampling-table tail of :func:`negative_sampling_table` over
-    an already-materialized (token, n) count frame — shared verbatim
-    with the streaming store's served report
-    (streaming/corpus.negative_sampling_report), so the incremental
-    path is bit-equal to batch by construction."""
+    an already-materialized (token, n) count frame, so a maintained
+    count store is bit-equal to batch by construction."""
     from big_data_project_datapipeline_spark.operators.prefix import (
         partitioned_prefix,
     )
@@ -2210,12 +2205,10 @@ def good_turing(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def good_turing_from_counts(cnt: DataFrame) -> DataFrame:
     """The Good–Turing tail of :func:`good_turing` over an
-    already-materialized (token, n) count frame — shared verbatim with
-    the streaming store's served report (streaming/corpus.
-    good_turing_report), so the incremental path is bit-equal to a
-    batch recount by construction (the gini_from_counts /
-    sampling_table_from_counts pairing). Expressions identical to the
-    original in-line form (factored, not changed)."""
+    already-materialized (token, n) count frame, so a maintained count
+    store is bit-equal to a batch recount by construction (the
+    gini_from_counts / sampling_table_from_counts pairing). Expressions
+    identical to the original in-line form (factored, not changed)."""
     cnt = cnt.select("token", F.col("n").cast("long").alias("r"))
     nr = cnt.groupBy("r").agg(
         F.count(F.lit(1)).cast("long").alias("n_types")
@@ -2299,10 +2292,8 @@ def token_gini(
 
 def gini_from_counts(cnt: DataFrame) -> DataFrame:
     """The Gini/top-decile tail of :func:`token_gini` over an
-    already-materialized global (token, n) count frame — shared
-    verbatim with the streaming store's served report
-    (streaming/corpus.gini_report), so the incremental path is
-    bit-equal to a batch recount by construction (the
+    already-materialized global (token, n) count frame, so a maintained
+    count store is bit-equal to a batch recount by construction (the
     sampling_table_from_counts pairing, q227's precedent). One row
     out: (n_types, n_tokens, gini, top_decile_share)."""
     g = cnt.select("token", F.col("n").cast("long").alias("cnt"))
@@ -2489,10 +2480,10 @@ def bigram_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus bigram-count frame ``(w1, w2, c12)`` — one map-only
     arrays_zip explode (the q101/q118 device) + one map-side-combinable
     count. The mergeable state behind the KN family: associative long
-    sums, so a streaming store folds per-batch deltas of this frame
-    and :func:`kneser_ney_from_counts` re-prices the model per tick
-    with zero corpus rescans (streaming/corpus.maintain_bigram_counts
-    — the token_counts pattern one n-gram order up)."""
+    sums, so a store can fold per-batch deltas of this frame and
+    :func:`kneser_ney_from_counts` re-price the model per tick with
+    zero corpus rescans (the token_counts pattern one n-gram order
+    up)."""
     toks = df.select(TX.tokens(F.col(text_col)).alias("__t"))
     n = F.size("__t")
     return (
@@ -2641,8 +2632,7 @@ def _kn_doc_pairs(
 def kn_score_doc_pairs(doc_pairs: DataFrame, model: DataFrame) -> DataFrame:
     """Score per-document bigram counts under a KN model table — the
     closing tail of :func:`kneser_ney_doc_scores`, exposed so a
-    maintained bigram store can serve the model
-    (streaming/corpus.kn_doc_scores_report) with bit-equal output:
+    maintained bigram store can serve the model with bit-equal output:
     p_kn is floor-quantized at 9 in the model, ln of engine-identical
     doubles is glibc-identical, per-doc c·ln p terms fold in
     decimal(28,12), round(6) surfaces. ``model`` needs columns

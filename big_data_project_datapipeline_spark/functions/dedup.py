@@ -224,10 +224,9 @@ def banded_rows(
     band_size: int = 8,
 ) -> DataFrame:
     """(id, band, band_key) bucket rows of a MinHash signature frame —
-    the shared banding expression of :func:`_verified_ancestors` /
-    ``streaming/neardup`` (including concat_ws's NULL-skipping on
-    all-NULL empty-doc signatures), exposed for index introspection
-    (q197 bucket stats) and incremental maintenance. One map-only
+    the banding expression of :func:`_verified_ancestors` (including
+    concat_ws's NULL-skipping on all-NULL empty-doc signatures),
+    exposed for index introspection (q197 bucket stats). One map-only
     explode: |bands| rows per doc."""
     n_bands = num_hashes // band_size
     bands = F.array(

@@ -795,11 +795,10 @@ def psi_from_bin_counts(
     smoothing: float = 0.5,
 ) -> DataFrame:
     """PSI from an already-binned complete count frame (grp, bin, cr,
-    cc) — the shared tail of :func:`psi_drift`, split out so the
-    streaming monitor (streaming/drift.py), which maintains the SAME
-    (group, bin) counts as mergeable fold state, produces bit-equal
-    PSI to the batch operator. Expects every (grp, bin) cell present
-    (zeros included) — the Laplace terms need the empty bins."""
+    cc) — the tail of :func:`psi_drift`, split out so (group, bin)
+    counts maintained as mergeable fold state give bit-equal PSI to
+    the batch operator. Expects every (grp, bin) cell present (zeros
+    included) — the Laplace terms need the empty bins."""
     tot = full.groupBy("grp").agg(
         F.sum("cr").alias("n_ref"), F.sum("cc").alias("n_cur")
     )
@@ -867,12 +866,11 @@ def jsd_from_bin_counts(
     smoothing: float = 0.5,
 ) -> DataFrame:
     """JSD from an already-binned complete count frame (grp, bin, cr,
-    cc) — the shared tail of :func:`jsd_drift`, split out (the
-    psi_from_bin_counts pattern) so the streaming drift monitor
-    (streaming/drift.py), which maintains the SAME reference-frozen
-    (group, bin) counts as its PSI fold state, produces bit-equal JSD
-    to the batch operator from the stores alone. Expects every
-    (grp, bin) cell present (zeros included)."""
+    cc) — the tail of :func:`jsd_drift`, split out (the
+    psi_from_bin_counts pattern) so reference-frozen (group, bin)
+    counts maintained as fold state give bit-equal JSD to the batch
+    operator. Expects every (grp, bin) cell present (zeros
+    included)."""
     tot = full.groupBy("grp").agg(
         F.sum("cr").alias("n_ref"), F.sum("cc").alias("n_cur")
     )
@@ -2190,8 +2188,8 @@ def snapshot_diff(
     Scale shape: one full-outer shuffle join on the key (the minimal
     possible cost — both sides must meet), map-only hashing, one
     map-side-combinable count rollup. For repeated diffs at 100 TB,
-    bucket both snapshots on the key to make the join zero-exchange
-    (sinks.write_bucketed).
+    bucket both snapshots on the key (``bucketBy``) to make the join
+    zero-exchange.
     """
     kcols = list(key_cols)
 
@@ -3153,9 +3151,8 @@ def stacked_pair_cells(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     are stringified and NULL becomes the sentinel level '__NULL__' —
     NULL is a real category for association purposes, and a bare NULL
     key would silently fall out of the totals equi-joins downstream.
-    One map-side-combinable groupBy over a map-only stack; shared by
-    the batch matrix (cramers_v_matrix) and the incremental store
-    (streaming/crosstab), so their cells are the same expression."""
+    One map-side-combinable groupBy over a map-only stack; the cells of
+    the batch matrix (cramers_v_matrix)."""
     cols = list(cols)
     if len(cols) < 2:
         raise ValueError("stacked_pair_cells needs >= 2 columns")
@@ -3450,6 +3447,7 @@ def logistic_irls(
             1e9
         )
 
+    snaps: list[DataFrame] = []
     for _ in range(n_iters):
         j = rows.join(F.broadcast(beta), gcols) if gcols else rows.crossJoin(
             F.broadcast(beta)
@@ -3501,7 +3499,8 @@ def logistic_irls(
         # (the pagerank per-sweep device): without it each broadcast
         # nests the whole prior chain as one deep tree and the
         # planner/codegen re-pays it per step — measured 23.0 s → 9.6 s
-        # at sf0.1 for 3 steps
+        # at sf0.1 for 3 steps. The snapshots ride on the result and
+        # free with it (attach_cache_release below).
         beta = mom.select(
             *gcols,
             "n",
@@ -3515,6 +3514,7 @@ def logistic_irls(
                 F.col("b2") + F.when(ok, d2).otherwise(F.lit(0.0)), 9
             ).alias("b2"),
         ).localCheckpoint(eager=False)
+        snaps.append(beta)
     jf = rows.join(F.broadcast(beta), gcols) if gcols else rows.crossJoin(
         F.broadcast(beta)
     )
@@ -3532,7 +3532,11 @@ def logistic_irls(
         # __y is exactly 0.0/1.0: the long cast is exact in any engine
         F.sum(F.col("__y").cast("long")).cast("long").alias("n_pos"),
     )
-    return out.select(
+    from big_data_project_datapipeline_spark.operators.caching import (
+        attach_cache_release,
+    )
+
+    res = out.select(
         *gcols,
         "n",
         "n_pos",
@@ -3543,6 +3547,7 @@ def logistic_irls(
             "avg_logloss"
         ),
     )
+    return attach_cache_release(res, (), snapshots=snaps)
 
 
 def _hist_median(

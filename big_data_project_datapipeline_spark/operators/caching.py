@@ -16,12 +16,11 @@ materialization dwarfs the cache it frees), so the contract here is:
   already-stopped session is swallowed — finalizers can run at
   interpreter shutdown.)
 
-Releases are BLOCKING (round 12): the async default handed block
-removal to a background thread that raced the next query's allocation
-— the round-11 sf30 second-run OOM mode. A blocking unpersist returns
-after the blocks are gone, so back-to-back heavy queries see storage
-actually return to baseline (tools/audit_cache_runs.py is the
-measured witness).
+Releases are BLOCKING: the async default hands block removal to a
+background thread that races the next query's allocation (an sf30
+second-run OOM mode). A blocking unpersist returns after the blocks are
+gone, so back-to-back heavy queries see storage actually return to
+baseline.
 
 ``snapshots=``: localCheckpoint-backed frames the result's plan reads
 (an iterative operator's final round state). Their blocks belong to

@@ -47,23 +47,9 @@ def pagerank(
     n_iter: int = 3,
     checkpoint_every: int = 1,
     weight: str | None = None,
-    prepared: bool = False,
 ) -> DataFrame:
     """Fixed ``n_iter`` PageRank sweeps over a (src, dst) edge list
     (deduplicated internally). Returns (node, pr) with pr round(6).
-
-    ``prepared=True``: ``edges`` is an ALREADY-prepared edge frame —
-    deduplicated, carrying the out-degree as a ``deg`` column, and
-    physically co-located on ``src`` (e.g. a `sinks.write_bucketed`
-    table read, bucketed+sorted on src) — so the one-time
-    distinct+deg-join+repartition+sort+persist is skipped and every
-    sweep's join reads the bucket-local scan directly. This is the
-    100 TB shape when the same graph is ranked repeatedly across jobs:
-    the edge prep (and its sort spill) is paid ONCE at landing time,
-    not per session; within one session the default in-memory persist
-    path wins instead (measured at sf10, see SCALING.md round-9 A/B).
-    Mutually exclusive with ``weight=`` (prepare the weighted frame's
-    ``__w``/``deg`` upstream if needed — not yet plumbed).
 
     ``weight``: optional edge-weight column — contributions become
     ``pr(src) · w(src,dst) / Σ_dst w(src,·)`` (duplicate (src,dst)
@@ -90,11 +76,6 @@ def pagerank(
     shuffle within the single action, so k=0 only re-pays plan cost,
     not execution).
     """
-    if prepared and weight is not None:
-        raise ValueError(
-            "pagerank(prepared=True) does not compose with weight= "
-            "— pre-compute the weighted frame's __w/deg upstream."
-        )
     # One-exchange edge prep (r12/r13, guide §2.4): repartition the
     # RAW edges on src FIRST, then dedup — hash(src) partitioning
     # satisfies the (src, dst) dedup's clustering requirement, so the
@@ -123,12 +104,7 @@ def pagerank(
     from pyspark.sql import Window
 
     wdeg = Window.partitionBy(src)
-    if prepared:
-        # caller-prepared frame: deduplicated, carrying "deg",
-        # co-located+sorted on src (bucketed-table read) — the sweeps
-        # scan it directly; no one-time prep, no persist to release.
-        e = edges
-    elif weight is not None:
+    if weight is not None:
         # duplicate (src,dst) rows sum their weights; "deg" becomes the
         # src's total outgoing weight so the unweighted loop body below
         # is reused verbatim (contribution = pr·w/deg with w folded in).
@@ -242,11 +218,7 @@ def pagerank(
     # lifetime (auto on GC, or operators.caching.release_caches for
     # explicit control) — as are the sweep snapshots the result's plan
     # reads (round-12 cross-run accumulation fix).
-    return attach_cache_release(
-        out,
-        (nodes,) if prepared else (e, nodes),
-        snapshots=snaps,
-    )
+    return attach_cache_release(out, (e, nodes), snapshots=snaps)
 
 
 def personalized_pagerank(
@@ -350,7 +322,6 @@ def hits(
     dst: str = "dst",
     n_iter: int = 3,
     checkpoint_every: int = 1,
-    prepared_dst: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed ``n_iter`` HITS sweeps (Kleinberg 1999) over a DIRECTED
     (src, dst) edge list (deduplicated internally): authority(v) =
@@ -418,43 +389,29 @@ def hits(
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    if prepared_dst is not None:
-        # caller-prepared pair (the pagerank ``prepared=True`` story,
-        # doubled for HITS' alternating join key): ``edges`` is the
-        # deduplicated copy co-located+sorted on src, ``prepared_dst``
-        # the same rows co-located+sorted on dst — e.g. two
-        # `sinks.write_bucketed` table reads. Half-sweeps scan the
-        # bucket-local tables directly; no one-time prep, no edge
-        # persists to release.
-        e_src, e_dst = edges, prepared_dst
-    else:
-        # sortWithinPartitions: the cached copies expose partitioning
-        # AND ordering on their half-sweep join key, so each sweep's
-        # SortMergeJoin shuffles+sorts only the O(nodes) score frame
-        # (see pagerank — the round-8 sf10 attribution measured
-        # ~68 GB of per-sweep edge-side sort spill without this; at
-        # gate SFs AQE broadcasts the score side and the sort is
-        # unused). repartition RAW rows before the dedup so the dedup
-        # runs partition-local on the one exchange (the r12 pagerank
-        # one-shuffle prep).
-        e_src = (
-            edges.select(src, dst)
-            .repartition(F.col(src))
-            .distinct()
-            .sortWithinPartitions(src)
-            .persist()
-        )
-        # The dst-partitioned copy derives from the CACHED src copy,
-        # not from e0: two independent persists of e0 each re-run the
-        # whole upstream lineage (edge-build join + distinct) on first
-        # materialization — profiled at sf1 as ~140 MB of duplicate
-        # shuffle, 18% of the query total (tools/profile_hits.py).
-        # Reading through e_src's InMemoryRelation computes the
-        # lineage once and charges only the unavoidable second
-        # repartition.
-        e_dst = (
-            e_src.repartition(F.col(dst)).sortWithinPartitions(dst).persist()
-        )
+    # sortWithinPartitions: the cached copies expose partitioning AND
+    # ordering on their half-sweep join key, so each sweep's
+    # SortMergeJoin shuffles+sorts only the O(nodes) score frame (see
+    # pagerank — an sf10 attribution run measured ~68 GB of per-sweep
+    # edge-side sort spill without this; at small scale AQE broadcasts
+    # the score side and the sort is unused). repartition RAW rows
+    # before the dedup so the dedup runs partition-local on the one
+    # exchange (pagerank's one-shuffle prep).
+    e_src = (
+        edges.select(src, dst)
+        .repartition(F.col(src))
+        .distinct()
+        .sortWithinPartitions(src)
+        .persist()
+    )
+    # The dst-partitioned copy derives from the CACHED src copy: two
+    # independent persists of the raw edges would each re-run the whole
+    # upstream lineage (edge-build join + distinct) on first
+    # materialization — profiled at sf1 as ~140 MB of duplicate
+    # shuffle, 18% of the query total. Reading through e_src's
+    # InMemoryRelation computes the lineage once and charges only the
+    # unavoidable second repartition.
+    e_dst = e_src.repartition(F.col(dst)).sortWithinPartitions(dst).persist()
     nodes = (
         e_src.select(F.col(src).alias("node"))
         .union(e_src.select(F.col(dst).alias("node")))
@@ -516,13 +473,13 @@ def hits(
             # — and an unpersisted plan node with two consumers
             # recomputes its whole upstream chain once per consumer
             # (profiled: every loop stage TWICE with identical bytes,
-            # ~204 MB = half the loop shuffle at sf1,
-            # tools/profile_hits.py). Persist must happen HERE, before
-            # the half-sweep, so BOTH consumers read the cache: with
-            # the r13 lazy checkpoints everything materializes at the
-            # post-loop bounded action, whose first evaluation of the
-            # auths subtree fills the cache for the other consumer
-            # (Spark serializes concurrent fills per partition).
+            # ~204 MB = half the loop shuffle at sf1). Persist must
+            # happen HERE, before the half-sweep, so BOTH consumers
+            # read the cache: with the lazy checkpoints everything
+            # materializes at the post-loop bounded action, whose first
+            # evaluation of the auths subtree fills the cache for the
+            # other consumer (Spark serializes concurrent fills per
+            # partition).
             auths = auths.persist()
         hubs = _sweep(
             e_dst.join(auths.withColumnRenamed("node", dst), dst),
@@ -611,12 +568,11 @@ def hits(
         F.round(F.col("h") / F.lit(sh), 6).alias("hub"),
         F.round(F.col("a") / F.lit(sa), 6).alias("auth"),
     )
-    release = (
-        (nodes, auths, state, *sweep_persists)
-        if prepared_dst is not None
-        else (e_src, e_dst, nodes, auths, state, *sweep_persists)
+    return attach_cache_release(
+        out,
+        (e_src, e_dst, nodes, auths, state, *sweep_persists),
+        snapshots=snaps,
     )
-    return attach_cache_release(out, release, snapshots=snaps)
 
 
 def connected_components(
@@ -1077,9 +1033,8 @@ def degree_assortativity(
     Determinism: all moment sums accumulate EXACTLY in decimal(38,0)
     (degrees are integers), convert to double once, and the closing
     Pearson formula is one expression both engines share; round(6) on
-    the sqrt output. Factored out of the q199 entry (round 12) so the
-    prepared-support-edge path can be pinned bit-equal to the
-    in-session build — expression structure is the entry's verbatim.
+    the sqrt output. Factored out of the q199 entry — expression
+    structure is the entry's verbatim.
 
     Scale shape: one map-side-combinable degree count, two equi-joins
     of the O(2m) edge list against the O(nodes) degree frame, one

@@ -25,8 +25,7 @@ def interval_net_deltas(
     deltas (ts, net) — +1 at each interval's start date, −1 the day
     after its inclusive end date, summed per date. Nets are additive
     over any partition of the input (sums over a union equal summed
-    parts), which is exactly what the incremental twin
-    (streaming/intervals.py) folds across cron ticks."""
+    parts), so per-tick nets can be folded across cron ticks."""
     s = F.to_date(F.col(start_col))
     e = F.to_date(F.col(end_col))
     iv = df.filter(s.isNotNull() & e.isNotNull() & (e >= s)).select(

@@ -34,8 +34,10 @@ def _pair_stats(
     item_col: str,
     min_pair_count: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared pair-statistics build (see :func:`basket_pair_stats`).
-    Returns (stats frame, persisted baskets handle)."""
+    """Pair statistics of :func:`copurchase_lift`: one flat row per
+    unordered item pair (item_a < item_b) co-occurring in >=
+    ``min_pair_count`` baskets — ``(item_a, item_b, pair_n, n_a, n_b,
+    n_baskets)``. Returns (stats frame, persisted baskets handle)."""
     # ONE shuffle on the basket key builds the per-basket distinct item
     # array (collect_set is bounded by basket size); pairs are then
     # generated MAP-SIDE from the sorted array — a self-join on the
@@ -90,44 +92,11 @@ def _pair_stats(
     return out, baskets
 
 
-def basket_pair_stats(
-    lines: DataFrame,
-    basket_col: str,
-    item_col: str,
-    min_pair_count: int = 2,
-) -> DataFrame:
-    """The LANDABLE pair-statistics frame shared by the whole
-    co-occurrence family: one flat row per unordered item pair
-    (item_a < item_b) co-occurring in >= ``min_pair_count`` baskets —
-    ``(item_a, item_b, pair_n, n_a, n_b, n_baskets)``. Everything
-    downstream is a cheap closing expression over this frame:
-    :func:`copurchase_lift` (support/lift), :func:`item_item_cosine`
-    (cosine + top-k), and the support-graph family (edges =
-    ``select(item_a AS src, item_b AS dst)`` — the same pair set the
-    within-basket self-join build produces, unit-test-pinned).
-
-    This is the 100 TB pre-landing artifact (the pagerank
-    ``prepared=True`` story for the wedge/pair family, VERDICT r9
-    item 4): the pair explosion + its external sort is the single
-    largest measured cost of the family at decade scale (sf10: 37.7 GB
-    spill under q213, 59.2 GB under q214's support-edge twin). Land it
-    ONCE per corpus tick with ``sinks.write_bucketed(stats,
-    "copurchase_pairs", "item_a", sort_col="item_a")`` and every
-    ranking / graph job in the deployment window reads a bucket-local
-    parquet scan instead of re-exploding baskets. One-shot jobs should
-    keep the in-session build (the landing costs one materialization —
-    the same honest framing as the r9 pagerank decision).
-    """
-    out, baskets = _pair_stats(lines, basket_col, item_col, min_pair_count)
-    return attach_cache_release(out, (baskets,))
-
-
 def copurchase_lift(
-    lines: DataFrame | None,
+    lines: DataFrame,
     basket_col: str = "basket",
     item_col: str = "item",
-    min_pair_count: int | None = None,
-    prepared_stats: DataFrame | None = None,
+    min_pair_count: int = 2,
 ) -> DataFrame:
     """Support and lift for every unordered item pair co-occurring in at
     least ``min_pair_count`` baskets.
@@ -137,33 +106,8 @@ def copurchase_lift(
               = pairs(a,b) * n_baskets / (baskets(a) * baskets(b)).
     Both rounded to 6 (pure double arithmetic on exact counts — engine
     reproducible given the same expression structure).
-
-    ``prepared_stats``: a pre-landed :func:`basket_pair_stats` frame
-    (``lines`` is then unused and may be None) — the closing select
-    runs directly over the landed table, bit-equal to the default path
-    by construction (same expressions over the same frame). The landed
-    table's own threshold governs: passing ``min_pair_count`` together
-    with ``prepared_stats`` raises, because the operator cannot
-    re-threshold rows the landing already dropped (ADVICE r11).
     """
-    if prepared_stats is not None:
-        if min_pair_count is not None:
-            raise ValueError(
-                "min_pair_count cannot be combined with prepared_stats: "
-                "the landed basket_pair_stats table's threshold governs"
-            )
-        stats: DataFrame = prepared_stats
-        handles: tuple[DataFrame, ...] = ()
-    elif lines is not None:
-        stats, baskets = _pair_stats(
-            lines,
-            basket_col,
-            item_col,
-            2 if min_pair_count is None else int(min_pair_count),
-        )
-        handles = (baskets,)
-    else:
-        raise ValueError("pass lines= or prepared_stats=")
+    stats, baskets = _pair_stats(lines, basket_col, item_col, min_pair_count)
     result = stats.select(
         "item_a",
         "item_b",
@@ -180,64 +124,7 @@ def copurchase_lift(
     # The persisted per-basket arrays release with the result (auto on
     # GC, or operators.caching.release_caches) instead of pinning
     # executor memory for the session lifetime.
-    return attach_cache_release(result, handles)
-
-
-def support_graph_edges(
-    lines: DataFrame | None = None,
-    basket_col: str = "basket",
-    item_col: str = "item",
-    min_pair_count: int | None = None,
-    prepared_stats: DataFrame | None = None,
-) -> DataFrame:
-    """The co-occurrence SUPPORT GRAPH's weighted edge list
-    ``(src, dst, n)`` — one row per unordered item pair (src < dst)
-    co-occurring in >= ``min_pair_count`` baskets, weight = basket
-    count. This is the edge frame the whole graph family consumes
-    (pagerank/LPA/modularity/k-truss/clustering/assortativity — the
-    q121/q198/q199/q207/q226 build), expressed over the SAME pair
-    statistics as lift/cosine so one landed table serves ranking and
-    graph jobs alike (the pair set is unit-test-pinned equal to the
-    within-basket self-join device).
-
-    ``prepared_stats``: a pre-landed :func:`basket_pair_stats` frame
-    (``lines`` then unused) — the 100 TB deployment shape (VERDICT r10
-    item 3): the pair explosion + external sort dominating the
-    family's decade cost happens once in the landing, and every graph
-    consumer's edge build becomes a bucket-local parquet scan. Graph
-    results over prepared edges are bit-equal to the in-session build
-    by construction (same rows in, fixed-round algorithms on top) —
-    pinned per consumer in test_stats_market.py. One-shot jobs keep
-    the in-session build (the honest q226 gate default). As with
-    :func:`copurchase_lift`, the landed table's threshold governs:
-    ``min_pair_count`` together with ``prepared_stats`` raises
-    (ADVICE r11 — a landing with a different threshold would silently
-    yield a different graph).
-    """
-    if prepared_stats is not None:
-        if min_pair_count is not None:
-            raise ValueError(
-                "min_pair_count cannot be combined with prepared_stats: "
-                "the landed basket_pair_stats table's threshold governs"
-            )
-        stats: DataFrame = prepared_stats
-        handles: tuple[DataFrame, ...] = ()
-    elif lines is not None:
-        stats, baskets = _pair_stats(
-            lines,
-            basket_col,
-            item_col,
-            2 if min_pair_count is None else int(min_pair_count),
-        )
-        handles = (baskets,)
-    else:
-        raise ValueError("pass lines= or prepared_stats=")
-    edges = stats.select(
-        F.col("item_a").alias("src"),
-        F.col("item_b").alias("dst"),
-        F.col("pair_n").alias("n"),
-    )
-    return attach_cache_release(edges, handles)
+    return attach_cache_release(result, (baskets,))
 
 
 def frequent_triples(
@@ -308,12 +195,11 @@ def frequent_triples(
 
 
 def item_item_cosine(
-    lines: DataFrame | None,
+    lines: DataFrame,
     basket_col: str = "basket",
     item_col: str = "item",
-    min_pair_count: int | None = None,
+    min_pair_count: int = 2,
     top_k: int = 100,
-    prepared_stats: DataFrame | None = None,
 ) -> DataFrame:
     """Item-item cosine similarity over basket co-occurrence — the
     collaborative-filtering "customers also bought" score:
@@ -331,19 +217,9 @@ def item_item_cosine(
     no global sort materialized, and the tie-break makes the kept SET
     engine-reproducible (counts are exact, sqrt/division is one
     correctly-rounded IEEE chain on integer-valued doubles).
-
-    ``prepared_stats``: a pre-landed :func:`basket_pair_stats` frame
-    (``lines`` then unused) — the repeated-recommendation deployment
-    shape; bit-equal to the default path by construction. The landed
-    table's threshold governs — combining it with ``min_pair_count``
-    raises (via :func:`copurchase_lift`).
     """
     scored = copurchase_lift(
-        lines,
-        basket_col,
-        item_col,
-        min_pair_count=min_pair_count,
-        prepared_stats=prepared_stats,
+        lines, basket_col, item_col, min_pair_count=min_pair_count
     ).select(
         "item_a",
         "item_b",

@@ -43,16 +43,14 @@ def get_spark(
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst stays at its default (true). The r5
-        # experiment with false (honor the 64 MB advisory size, often
-        # recommended for clusters) measured SLOWER here in a clean
-        # both-orders A/B on a quiet host: q121 2.9->5.2 s, q132
-        # 1.6->4.3 s, q87 1.8->3.2 s, q126 1.4->2.7 s solo at sf0.1 —
-        # with 32 local threads and kilobyte partitions, extra tasks
-        # are nearly free while coalescing to 1-2 tasks serializes the
-        # CPU-heavy collapsed stages (wedge joins, percentile sorts).
-        # On a real multi-executor cluster the trade can flip;
-        # re-measure there before changing it (NOTES_r5.md).
+        # parallelismFirst stays at its default (true): with local
+        # threads and kilobyte partitions extra tasks are nearly free,
+        # while honoring the 64 MB advisory size coalesces the
+        # CPU-heavy collapsed stages (wedge joins, percentile sorts) to
+        # 1-2 tasks and serializes them (q121, q132, q87 and q126 ran
+        # 1.8-2.7x slower solo at sf0.1 with it off). On a real
+        # multi-executor cluster the trade can flip; re-measure there
+        # before changing it.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -62,41 +60,31 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # PySpark call-site capture (r13, guide §1.2 per-task work —
-        # here per-DRIVER work): with dataFrameDebugging on (the
-        # default), EVERY Python DataFrame/Column API call walks the
-        # Python stack and ships the call site to the JVM for error
-        # enrichment — measured 5–16 ms per F.col / 230 ms per
-        # groupBy().agg() on this host vs 1.4 / 72 ms with it off
-        # (same process, toggled back and forth). Across the 237-query
-        # registry one full construction pass is ~240 s with capture
-        # on — pure driver-side fixed cost repeated per run. The trade
-        # is error messages without user-code line numbers; operators
-        # raise their own typed errors, so the loss is small.
-        # Env-overridable for debugging sessions.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
-        # Scan-split sizing (guide §6): Spark sizes file splits as
+        # PySpark call-site capture is off: with dataFrameDebugging on
+        # (the default), EVERY Python DataFrame/Column API call walks
+        # the Python stack and ships the call site to the JVM for error
+        # enrichment — measured 5–16 ms per F.col and 230 ms per
+        # groupBy().agg(), against 1.4 / 72 ms with it off. Across the
+        # 237-query registry one full construction pass costs ~240 s
+        # with capture on, pure driver-side fixed cost repeated per
+        # run. The trade is error messages without user-code line
+        # numbers; operators raise their own typed errors, so the loss
+        # is small. To debug, pass it as ``extra_conf``. Caveat: PySpark
+        # reads the flag once per process, from the session active at
+        # the first DataFrame API call, and caches it; a conf set or a
+        # session built after that call does not change it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Scan-split sizing: Spark sizes file splits as
         # min(maxPartitionBytes, max(openCostInBytes, bytes/minPartitionNum)).
-        # r12 floored openCost at 64 KB so single-file scans split to
-        # the core count — but a parquet file splits only at row-group
-        # granularity, so on the single-row-group driver inputs every
-        # extra split is an EMPTY task: pure scheduler tax, measured
-        # ~30 s across the 237-query bench in a same-window A/B
-        # (64 KB vs 4 MB, fan-out off: 440.5 s -> 410.2 s). Real scan
-        # parallelism for unsplittable inputs comes from the opt-in
-        # fan-out repartition (tables._fan_out_unsplittable), which
-        # needs no split help. Back at the stock 4 MB default; the env
-        # knob stays for layouts where splits are real (multi-row-group
-        # derived datasets, e.g. tools/make_scale_smoke*).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get(
-                "SPARK_GRAFT_OPEN_COST_BYTES", str(4 * 1024 * 1024)
-            ),
-        )
+        # A smaller openCost splits single-file scans to the core count
+        # — but a parquet file splits only at row-group granularity, so
+        # on single-row-group inputs every extra split is an EMPTY task:
+        # pure scheduler tax (64 KB cost ~30 s across the 237-query
+        # bench against 4 MB). Scan parallelism for unsplittable inputs
+        # comes from the opt-in fan-out repartition
+        # (tables._fan_out_unsplittable) instead. Pinned at the stock
+        # 4 MB.
+        .config("spark.sql.files.openCostInBytes", str(4 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

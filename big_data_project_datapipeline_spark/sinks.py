@@ -8,8 +8,6 @@ Spark-native storage model:
   reads and rewrites only the target date's ``key=value`` directories
   instead of rewriting history — at 100 TB that is the difference between
   an O(day) and O(years) write.
-- **Bucketed tables** for fact tables that join repeatedly on one key:
-  bucket both sides → the join needs no shuffle at read time.
 - **CSV export** kept as a parity/interchange surface (K1/K2 semantics,
   exact column names preserved).
 - **JSON metrics doc** (K3) — O(1) driver-side write.
@@ -18,12 +16,12 @@ Spark-native storage model:
   regression pinning.
 
 One commit protocol replaces parquet data in place: ``write_partitioned``,
-``merge_into_partitioned``, ``delete_where``, ``promote_overwrite``,
-``compact_parquet`` and the fold in ``streaming/corpus.py`` all write the
-new data to the sibling ``<path>.staging``, then :func:`_commit` renames
-each replaced directory (the whole store, or one ``key=value`` partition
-directory) into the sibling ``<path>.backup``, renames its staged twin into
-place, and drops the backup. Each of them first calls :func:`_recover`,
+``merge_into_partitioned``, ``delete_where``, ``promote_overwrite`` and
+``compact_parquet`` all write the new data to the sibling
+``<path>.staging``, then :func:`_commit` renames each replaced directory
+(the whole store, or one ``key=value`` partition directory) into the
+sibling ``<path>.backup``, renames its staged twin into place, and drops
+the backup. Each of them first calls :func:`_recover`,
 before it reads the store, so a crash at any point leaves every replaced
 directory at its old or its new version and a rerun of the same
 operation converges to the uninterrupted result. The protocol needs
@@ -172,78 +170,6 @@ def merge_into_partitioned(
         new if existing is None else upsert_keep_last(existing, new, keys=keys)
     )
     _commit(path, merged.write.partitionBy(partition_col).parquet, names)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-    align_partitions: bool = True,
-) -> None:
-    """Bucketed managed table: both sides of a repeated equi-join bucketed
-    on the key read co-located — the join plans with zero exchanges
-    (verify: no Exchange under SortMergeJoin in .explain).
-
-    ``align_partitions`` (default ON) repartitions by the bucket column
-    first: the bucket hash is the shuffle hash, so each write task then
-    holds exactly one bucket and emits ONE file. Without it every input
-    partition writes a file per bucket it touches — up to
-    |partitions| x |buckets| files (measured: a 32-partition frame
-    misaligned with 32 buckets wrote 1,024 files instead of 32; at
-    1000-executor scale that is a millions-of-small-files store). Skip
-    only when the input is already partitioned by the bucket column."""
-    spark = df.sparkSession
-    if align_partitions:
-        df = df.repartition(num_buckets, F.col(bucket_col))
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    # a crashed prior run can leave the managed location behind with no
-    # catalog entry — saveAsTable refuses to reuse it, so clear it
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    # the metastore lowercases table names and nests db-qualified tables
-    # under <db>.db/, so a verbatim join would miss the leftover directory
-    parts = table_name.lower().split(".")
-    rel = (
-        os.path.join(f"{parts[0]}.db", parts[1])
-        if len(parts) == 2
-        else parts[0]
-    )
-    loc = os.path.join(warehouse.removeprefix("file:"), rel)
-    if os.path.exists(loc):
-        shutil.rmtree(loc)
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
-
-
-def register_bucketed_table(
-    spark: SparkSession,
-    table_name: str,
-    location: str,
-    schema_sql: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Register an EXISTING bucketed-table directory (files written by
-    :func:`write_bucketed` — bucket ids ride in the part-file names) in
-    the current session's catalog as an EXTERNAL table, with the
-    bucketing spec restated in DDL. The deployment story for pre-landed
-    graph/dim tables: a persistent metastore remembers the spec across
-    sessions, but local in-memory catalogs forget it on restart — this
-    is the bridge (and what `tools/ab_prepared_edges.py`'s per-session
-    measurement uses). External: dropping the registration never
-    deletes the files. Do NOT register over a same-session MANAGED
-    table's own name — the DROP here would delete its files."""
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    sort = f" SORTED BY ({sort_col})" if sort_col else ""
-    spark.sql(
-        f"CREATE TABLE {table_name} ({schema_sql}) USING parquet "
-        f"CLUSTERED BY ({bucket_col}){sort} INTO {num_buckets} BUCKETS "
-        f"LOCATION '{location}'"
-    )
 
 
 def promote_overwrite(df: DataFrame, path: str) -> None:

@@ -5,7 +5,7 @@ production pipelines dedup each incoming BATCH against a persistent
 index of every window-gram ever seen, then fold the batch's new grams
 into the index. This module is that pattern on Spark's runtime,
 composing the q99 machinery (`functions/dedup.exact_substring_dedup`
-semantics) with the ingest/FE streaming twins' exactly-once story:
+semantics) with a file stream's exactly-once story:
 
 - semantics: FIRST ARRIVAL WINS. A gram already in the index scrubs
   every occurrence in the new batch; within a batch, the minimal
@@ -20,11 +20,10 @@ semantics) with the ingest/FE streaming twins' exactly-once story:
 - scale: the per-batch work is the q99 budget (map-only window explode,
   map-side-combinable groupBy(gram), gram-keyed joins); the index join
   is one equi-join on the gram key. The index itself is the large
-  state — O(distinct grams) rows of one string column; lay it out
-  bucketed on the gram (``sinks.write_bucketed``) and compact
+  state — O(distinct grams) rows of one string column; compact it
   periodically (:func:`compact_gram_index` — shard count and fold
   cost stay bounded, measured over a 50-tick run in the tests /
-  NOTES_r10) to keep the join shuffle one-sided at scale.
+  NOTES_r10).
 """
 
 from __future__ import annotations

@@ -8,8 +8,6 @@ the queries that consume them (check with ``.explain``: ``PushedFilters`` /
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,12 +45,12 @@ def load_table(
     ``fan_out=True`` requests the unsplittable-input fan-out
     (:func:`_fan_out_unsplittable`) for consumers whose post-scan
     compute is heavy enough to amortize one extra exchange. Default
-    OFF (r13): the r12 always-on fan-out was a measured net loss —
-    a same-window full-bench A/B (fan-out on vs off, 237 queries at
-    sf0.1/local[32]) showed 75 s of additive exchange/AQE-replan tax
-    spread over ~190 light queries against 37 s of wins concentrated
-    in ~30 compute-amplified ones, and NO table for which winners
-    outweigh losers. The winners now opt in at their call sites.
+    OFF: an always-on fan-out is a net loss — a full-bench A/B
+    (fan-out on vs off, 237 queries at sf0.1/local[32]) showed 75 s of
+    additive exchange/AQE-replan tax spread over ~190 light queries
+    against 37 s of wins concentrated in ~30 compute-amplified ones,
+    and NO table for which winners outweigh losers. The winners opt in
+    at their call sites.
     """
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -69,13 +67,7 @@ def load_table(
             df = df.withColumn(
                 field.name, F.col(field.name).cast(T.TimestampType())
             )
-    # SPARK_GRAFT_FANOUT: "auto" (default — honor the per-call-site
-    # flag), "off" (never fan out), "all" (the r12 always-on policy,
-    # kept for A/B measurement).
-    mode = os.environ.get("SPARK_GRAFT_FANOUT", "auto")
-    if mode == "off":
-        return df
-    if fan_out or mode == "all":
+    if fan_out:
         return _fan_out_unsplittable(spark, sf_dir, name, df)
     return df
 
@@ -110,13 +102,13 @@ def _fan_out_unsplittable(
     SPARK-23207) keeps the row->partition assignment deterministic
     under task retry.
 
-    OPT-IN since r13 (``load_table(..., fan_out=True)``): the extra
-    exchange is one more AQE query stage — a full driver re-plan plus
-    a cores-wide task wave — which a sub-second single-pass query
-    never earns back. Only call sites whose per-row compute is heavy
-    (text tokenization/shingling, vector math, multi-pass IRLS
-    moments) request it; the same-window A/B behind the per-query
-    list lives in OPTIMIZATION_r13.md."""
+    OPT-IN (``load_table(..., fan_out=True)``): the extra exchange is
+    one more AQE query stage — a full driver re-plan plus a cores-wide
+    task wave — which a sub-second single-pass query never earns back.
+    Only call sites whose per-row compute is heavy (text
+    tokenization/shingling, vector math, multi-pass IRLS moments)
+    request it; the A/B behind the per-query list lives in
+    OPTIMIZATION_r13.md."""
     key = (sf_dir, name)
     if key not in _ROW_GROUPS:
         try:

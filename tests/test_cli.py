@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 from big_data_project_datapipeline_spark.__main__ import run_features, run_ingest
 
@@ -96,6 +97,37 @@ def test_two_day_ingest_then_incremental_features(spark, tmp_path):
 
     metrics = json.loads((tmp_path / "raw" / "_metrics" / "ingest.json").read_text())
     assert metrics["rows_ingested"] == 2
+
+
+def test_features_rerun_after_crashed_commit_matches_uninterrupted(
+    spark, tmp_path
+):
+    """A features run killed inside its commit's swap window leaves the
+    previous features.parquet only in the backup dir. The rerun must
+    read it from there, not bootstrap from an empty previous table and
+    re-fit the z-score over every raw row."""
+    import shutil
+
+    from big_data_project_datapipeline_spark import sinks
+
+    store = str(tmp_path / "raw")
+    _write_payloads(tmp_path / "d1", "2024-01-15", [5.0, 6.0, 7.0])
+    run_ingest(spark, str(tmp_path / "d1"), store, dt.date(2024, 1, 15))
+    clean, crashed = tmp_path / "clean", tmp_path / "crashed"
+    run_features(spark, store, str(clean))
+    _write_payloads(tmp_path / "d2", "2024-01-16", [8.0, 9.0])
+    run_ingest(spark, str(tmp_path / "d2"), store, dt.date(2024, 1, 16))
+
+    shutil.copytree(clean, crashed)
+    prev = str(crashed / "features.parquet")
+    backup = prev + sinks._BACKUP
+    os.makedirs(backup)
+    os.rename(prev, os.path.join(backup, sinks._WHOLE_STORE))
+
+    want = sorted(map(tuple, run_features(spark, store, str(clean)).collect()))
+    got = sorted(map(tuple, run_features(spark, store, str(crashed)).collect()))
+    assert len(got) == 5
+    assert got == want
 
 
 def test_cli_compact(spark, tmp_path):

@@ -86,3 +86,63 @@ def test_gate_prefix_rotation_invariants():
         if any(n.startswith(p) for p in must_certify)
     ]
     assert stranded == [], stranded
+
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    """Every module of the package is imported, directly or through other
+    package modules, from the CLI (``__main__.py``) or the query registry
+    (``__spark_entry__.py``). A module only tests reach is dead weight.
+    Static (stdlib ``ast``), so it needs no Spark: imports inside
+    functions count, and importing ``a.b.c`` also runs ``a`` and
+    ``a.b``'s ``__init__``."""
+    import ast
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "big_data_project_datapipeline_spark"
+    modules = {}
+    for dirpath, _, files in os.walk(os.path.join(repo, pkg)):
+        for f in files:
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(dirpath, f), repo)[:-3]
+                parts = rel.split(os.sep)
+                if parts[-1] == "__init__":
+                    parts.pop()
+                modules[".".join(parts)] = os.path.join(dirpath, f)
+
+    def imported(name, path):
+        """Package modules a module imports (itself a package if
+        ``path`` is an ``__init__.py``)."""
+        base = name if path.endswith("__init__.py") else name.rpartition(".")[0]
+        out = set()
+        for node in ast.walk(ast.parse(open(path).read())):
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mod = node.module or ""
+                if node.level:
+                    anchor = base.split(".")
+                    anchor = anchor[: len(anchor) - (node.level - 1)]
+                    mod = ".".join(anchor + ([mod] if mod else []))
+                # ``from pkg import sub`` imports the submodule ``sub``
+                targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
+            else:
+                continue
+            for t in targets:
+                parts = t.split(".")
+                for i in range(1, len(parts) + 1):
+                    if ".".join(parts[:i]) in modules:
+                        out.add(".".join(parts[:i]))
+        return out
+
+    seen = set()
+    todo = set()
+    for entry in ("__spark_entry__.py", os.path.join(pkg, "__main__.py")):
+        todo |= imported(pkg, os.path.join(repo, entry))
+    todo.add(f"{pkg}.__main__")
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo |= imported(name, modules[name])
+    assert sorted(set(modules) - seen) == []

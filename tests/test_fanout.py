@@ -24,8 +24,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(autouse=True)
-def _clear_cache(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_FANOUT", raising=False)
+def _clear_cache():
     tables._ROW_GROUPS.clear()
     yield
     tables._ROW_GROUPS.clear()
@@ -44,18 +43,6 @@ def test_default_does_not_fan_out(spark):
 def test_opt_in_single_row_group_table_fans_out(spark):
     df = load_table(spark, SF_DIR, "lineitem", fan_out=True)
     assert "Repartition" in _plan(df), _plan(df)
-
-
-def test_env_off_suppresses_opt_in(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "off")
-    df = load_table(spark, SF_DIR, "lineitem", fan_out=True)
-    assert "Repartition" not in _plan(df)
-
-
-def test_env_all_restores_always_on(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "all")
-    df = load_table(spark, SF_DIR, "lineitem")
-    assert "Repartition" in _plan(df)
 
 
 def test_tiny_dim_table_does_not_fan_out(spark):

@@ -1,5 +1,5 @@
-"""Sinks: partitioned merge rewrites only touched partitions, bucketed
-join plans without exchanges, CSV parity, metrics doc, content hash."""
+"""Sinks: partitioned merge rewrites only touched partitions, CSV
+parity, metrics doc, content hash, crash-safe commits."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark import sinks
-from big_data_project_datapipeline_spark.streaming import corpus as SC
 
 UTC = dt.timezone.utc
 
@@ -44,26 +43,6 @@ def test_merge_into_partitioned_upsert(spark, tmp_path):
     # idempotent re-merge
     sinks.merge_into_partitioned(day2, path, keys=["datetime"], partition_col="date")
     assert spark.read.parquet(path).count() == 3
-
-
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    # managed tables land in ./spark-warehouse (gitignored); overwritten per run
-    a = spark.range(1000).withColumnRenamed("id", "k").withColumn("va", F.col("k") * 2)
-    b = spark.range(1000).withColumnRenamed("id", "k").withColumn("vb", F.col("k") * 3)
-    sinks.write_bucketed(a, "bk_a", "k", num_buckets=8, sort_col="k")
-    sinks.write_bucketed(b, "bk_b", "k", num_buckets=8, sort_col="k")
-    # force SMJ (small tables would broadcast, which bypasses bucketing) to
-    # show the bucketed co-location: a shuffle-free sort-merge join
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bk_a").join(spark.table("bk_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert joined.count() == 1000
-        assert "hashpartitioning" not in plan, plan  # no shuffle exchange
-        assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_csv_roundtrip_special_columns(spark, tmp_path):
@@ -407,66 +386,6 @@ def test_training_shards_null_doc_id_rejected(spark, tmp_path):
         sinks.write_training_shards(df, str(tmp_path / "x"), n_shards=2)
 
 
-def test_register_bucketed_external_over_landed_dir(spark):
-    """register_bucketed_table re-registers a write_bucketed directory
-    (fresh-catalog role) as an EXTERNAL table whose restated bucketing
-    spec still joins shuffle-free; files survive the registration's
-    own DROP."""
-    import os
-
-    a = spark.range(500).withColumnRenamed("id", "k").withColumn(
-        "va", F.col("k") * 2
-    )
-    sinks.write_bucketed(a, "bk_reg_src", "k", num_buckets=8, sort_col="k")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    loc = os.path.join(wh, "bk_reg_src")
-    sinks.register_bucketed_table(
-        spark, "bk_reg_twin", loc, "k BIGINT, va BIGINT", "k", 8, "k"
-    )
-    b = spark.range(500).withColumnRenamed("id", "k").withColumn(
-        "vb", F.col("k") * 3
-    )
-    sinks.write_bucketed(b, "bk_reg_b", "k", num_buckets=8, sort_col="k")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bk_reg_twin").join(spark.table("bk_reg_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert joined.count() == 500
-        assert "hashpartitioning" not in plan, plan
-        assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    # external: dropping the registration keeps the landed files
-    spark.sql("DROP TABLE bk_reg_twin")
-    assert os.path.exists(loc) and any(
-        f.endswith(".parquet") for f in os.listdir(loc)
-    )
-
-
-def test_write_bucketed_one_file_per_bucket(spark, tmp_path):
-    """The round-9 alignment fix: a frame whose partitioning is
-    MISALIGNED with the bucket column still lands exactly one data
-    file per bucket (it wrote |partitions| x |buckets| files before —
-    1,024 measured for a 32-bucket table at sf10)."""
-    import os
-
-    df = (
-        spark.range(2000)
-        .withColumnRenamed("id", "k")
-        .withColumn("v", F.col("k") % 7)
-        .repartition(16, F.col("v"))  # deliberately NOT the bucket col
-    )
-    sinks.write_bucketed(df, "bk_onefile", "k", num_buckets=8, sort_col="k")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    files = [
-        f
-        for f in os.listdir(os.path.join(wh, "bk_onefile"))
-        if f.endswith(".parquet")
-    ]
-    assert len(files) == 8, files
-
-
 # --- crash windows of the staged rename-swap commit -----------------------
 #
 # Each site is (build, op, store, whole): build(spark, root) writes the
@@ -520,27 +439,11 @@ def _compact_op(spark, root):
     sinks.compact_parquet(spark, f"{root}/store")
 
 
-def _fold_docs(spark):
-    return spark.createDataFrame([(1, "b c c")], "doc_id long, text string")
-
-
-def _fold_build(spark, root):
-    first = spark.createDataFrame([(0, "a b")], "doc_id long, text string")
-    SC.maintain_token_counts(spark, first, f"{root}/corpus", "b0")
-    # the tick being retried had landed its delta before its fold
-    SC.land_delta(_fold_docs(spark), f"{root}/corpus", "b1")
-
-
-def _fold_op(spark, root):
-    SC.maintain_token_counts(spark, _fold_docs(spark), f"{root}/corpus", "b1")
-
-
 _SITES = {
     "merge_two_dates": (_merge_build, _merge_op, "store", False),
     "delete_empties_partition": (_delete_build, _delete_op, "store", False),
     "promote_overwrite": (_promote_build, _promote_op, "store", True),
     "compact_parquet": (_compact_build, _compact_op, "store", True),
-    "corpus_fold": (_fold_build, _fold_op, "corpus/counts", True),
 }
 # the states a commit can stop in, in the order it passes them:
 # staged      - the new data is in staging, nothing live has moved
@@ -555,7 +458,6 @@ _WINDOWS = {
     # one replaced dir (the store): backing_up is backed_up, swapping is swapped
     "promote_overwrite": ("staged", "backed_up", "swapped"),
     "compact_parquet": ("staged", "backed_up", "swapped"),
-    "corpus_fold": ("staged", "backed_up", "swapped"),
 }
 
 
@@ -614,9 +516,7 @@ def _snapshot(spark, store):
         for d in os.listdir(store)
         if "=" in d
     }
-    ledger = os.path.join(store, "_folded.json")
-    folded = json.load(open(ledger)) if os.path.exists(ledger) else None
-    return rows, files, folded
+    return rows, files
 
 
 @pytest.fixture(scope="module")

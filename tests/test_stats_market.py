@@ -357,7 +357,8 @@ def test_pagerank_caches_release_with_result():
     localCheckpoint snapshots with BLOCKING unpersists via the
     LogicalRDD handle — no ContextCleaner drain, no poll. Pinned for
     the whole heavy family (pagerank, hits, connected_components,
-    LPA+modularity with the upstream chain) in a 2-run-each loop: the
+    LPA+modularity with the upstream chain, logistic_irls's per-step
+    snapshots) in a 2-run-each loop: the
     cross-run accumulation profile bench.py's in-session mode sees.
     Runs in an ISOLATED subprocess JVM so suite-state reachability
     can't pollute the lifetime under test."""
@@ -367,6 +368,8 @@ def test_pagerank_caches_release_with_result():
 
     script = r"""
 import gc
+from pyspark.sql import functions as F
+from big_data_project_datapipeline_spark.functions.quality import logistic_irls
 from big_data_project_datapipeline_spark.operators.caching import release_caches
 from big_data_project_datapipeline_spark.operators.graph import (
     connected_components, hits, label_propagation, modularity, pagerank)
@@ -406,7 +409,9 @@ def lpa_mod(e):
 for build in (lambda e: pagerank(e, n_iter=2),
               lambda e: hits(e, n_iter=2),
               lambda e: connected_components(e),
-              lpa_mod):
+              lpa_mod,
+              lambda e: logistic_irls(e, F.col("dst") > 1, "src", "dst",
+                                      n_iters=2)):
     for _ in range(2):
         before = ids()
         r = build(edges)
@@ -1288,59 +1293,6 @@ def test_vocab_coverage_curve_hand_computed(spark):
     assert got[4.0]["weight_kept_frac"] == round(4 / 7, 6)
 
 
-def test_pagerank_prepared_edges_bit_equal(spark):
-    """pagerank(prepared=True) over a pre-landed bucketed (src, dst,
-    deg) table returns bit-identical ranks to the default in-session
-    prep path, and rejects composing with weight=."""
-    from big_data_project_datapipeline_spark import sinks
-    from big_data_project_datapipeline_spark.operators.graph import pagerank
-
-    ed = [(0, i) for i in (1, 2, 3)] + [(i, 0) for i in (1, 2, 3)] + [(1, 2), (2, 1)]
-    edges = spark.createDataFrame(ed, "src long, dst long")
-    want = sorted(
-        (r["node"], r["pr"]) for r in pagerank(edges, n_iter=3).collect()
-    )
-    deg = edges.distinct().groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    prepared = edges.distinct().join(deg, "src").select("src", "dst", "deg")
-    sinks.write_bucketed(prepared, "pr_edges_test", "src", num_buckets=4, sort_col="src")
-    got = sorted(
-        (r["node"], r["pr"])
-        for r in pagerank(
-            spark.table("pr_edges_test"), n_iter=3, prepared=True
-        ).collect()
-    )
-    assert got == want
-    with pytest.raises(ValueError, match="prepared=True"):
-        pagerank(spark.table("pr_edges_test"), weight="deg", prepared=True)
-
-
-def test_hits_prepared_tables_bit_equal(spark):
-    """hits(prepared_dst=) over two pre-landed bucketed copies (one
-    per half-sweep join key) returns bit-identical scores to the
-    default in-session prep path."""
-    from big_data_project_datapipeline_spark import sinks
-    from big_data_project_datapipeline_spark.operators.graph import hits
-
-    ed = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (0, 1)]
-    edges = spark.createDataFrame(ed, "src long, dst long")
-    want = sorted(
-        (r["node"], r["hub"], r["auth"])
-        for r in hits(edges, n_iter=3).collect()
-    )
-    dedup = edges.distinct()
-    sinks.write_bucketed(dedup, "hits_src_test", "src", num_buckets=4, sort_col="src")
-    sinks.write_bucketed(dedup, "hits_dst_test", "dst", num_buckets=4, sort_col="dst")
-    got = sorted(
-        (r["node"], r["hub"], r["auth"])
-        for r in hits(
-            spark.table("hits_src_test"),
-            n_iter=3,
-            prepared_dst=spark.table("hits_dst_test"),
-        ).collect()
-    )
-    assert got == want
-
-
 def test_textrank_edge_construction_and_ranks(spark):
     """q195's co-occurrence construction on a hand corpus: window-2
     pairs via lead(1)/lead(2) per doc, NULL tails dropped — the edge
@@ -1616,7 +1568,7 @@ def test_skyline_2d_null_nan_rows_drop(spark):
     assert [r["id"] for r in skyline_2d(df, "x", "y").collect()] == ["a"]
 
 
-# ---------------- prepared pair-stats pre-landing (round-10, 100 TB)
+# ---------------- co-occurrence pair device
 
 
 def _basket_lines(spark):
@@ -1631,76 +1583,14 @@ def _basket_lines(spark):
     return spark.createDataFrame(rows, ["basket", "item"])
 
 
-def test_copurchase_lift_prepared_equals_default(spark):
-    from big_data_project_datapipeline_spark.operators.market import (
-        basket_pair_stats,
-        copurchase_lift,
-    )
-
-    lines = _basket_lines(spark)
-    default = copurchase_lift(lines, "basket", "item").collect()
-    stats = basket_pair_stats(lines, "basket", "item")
-    prepared = copurchase_lift(None, prepared_stats=stats).collect()
-    key = lambda r: (r["item_a"], r["item_b"])  # noqa: E731
-    assert sorted(map(tuple, prepared), key=lambda t: t[:2]) == sorted(
-        map(tuple, default), key=lambda t: t[:2]
-    )
-    assert len(default) > 0
-
-
-def test_item_item_cosine_prepared_equals_default(spark):
-    from big_data_project_datapipeline_spark.operators.market import (
-        basket_pair_stats,
-        item_item_cosine,
-    )
-
-    lines = _basket_lines(spark)
-    default = item_item_cosine(lines, "basket", "item", top_k=5).collect()
-    stats = basket_pair_stats(lines, "basket", "item")
-    prepared = item_item_cosine(
-        None, top_k=5, prepared_stats=stats
-    ).collect()
-    assert [tuple(r) for r in prepared] == [tuple(r) for r in default]
-
-
-def test_pair_stats_bucketed_roundtrip_bit_equal(spark, tmp_path):
-    """The full pre-landing story: land basket_pair_stats bucketed,
-    read it back, and the prepared cosine equals the in-session one
-    bit-for-bit (parquet round-trip of exact longs)."""
-    from big_data_project_datapipeline_spark import sinks
-    from big_data_project_datapipeline_spark.operators.market import (
-        basket_pair_stats,
-        item_item_cosine,
-    )
-
-    lines = _basket_lines(spark)
-    sinks.write_bucketed(
-        basket_pair_stats(lines, "basket", "item"),
-        "t_pair_stats_rt",
-        "item_a",
-        num_buckets=4,
-        sort_col="item_a",
-    )
-    try:
-        prepared = item_item_cosine(
-            None, top_k=5, prepared_stats=spark.table("t_pair_stats_rt")
-        ).collect()
-        default = item_item_cosine(
-            lines, "basket", "item", top_k=5
-        ).collect()
-        assert [tuple(r) for r in prepared] == [tuple(r) for r in default]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_pair_stats_rt")
-
-
 def test_pair_stats_edges_equal_selfjoin_support_device(spark):
-    """The support>=2 graph family contract: edges derived from the
-    landed stats frame are exactly the within-basket self-join
-    device's pair set (distinct items per basket, a < b, count >= 2
-    across baskets) — so one landed table serves q79/q213 AND the
-    q121/q198/q199/q207/q214 wedge/graph consumers."""
+    """The support>=2 graph family contract: the pairs the lift
+    operator's map-side pair device counts are exactly the
+    within-basket self-join device's pair set (distinct items per
+    basket, a < b, count >= 2 across baskets) — so q79/q213 and the
+    q121/q198/q199/q207/q214 wedge/graph consumers see one pair set."""
     from big_data_project_datapipeline_spark.operators.market import (
-        basket_pair_stats,
+        copurchase_lift,
     )
 
     lines = _basket_lines(spark)
@@ -1715,7 +1605,7 @@ def test_pair_stats_edges_equal_selfjoin_support_device(spark):
         .filter(F.col("n") >= 2)
         .collect()
     )
-    stats = basket_pair_stats(lines, "basket", "item", min_pair_count=2)
+    stats = copurchase_lift(lines, "basket", "item", min_pair_count=2)
     derived = stats.select(
         F.col("item_a").alias("src"),
         F.col("item_b").alias("dst"),
@@ -1723,70 +1613,6 @@ def test_pair_stats_edges_equal_selfjoin_support_device(spark):
     ).collect()
     assert sorted(map(tuple, derived)) == sorted(map(tuple, selfjoin))
     assert len(selfjoin) > 0
-
-
-def test_graph_family_prepared_edges_bit_equal(spark):
-    """Round-11 (VERDICT r10 item 3): LPA, modularity, and k-truss
-    over support_graph_edges(prepared_stats=) — the landed
-    basket_pair_stats table round-tripped through a bucketed sink —
-    are bit-equal to the same consumers over the in-session build.
-    Fixed-round algorithms over the identical (pinned) edge set can't
-    differ; this pins the whole chain including the parquet
-    round-trip, like lift/cosine before it."""
-    from big_data_project_datapipeline_spark import sinks
-    from big_data_project_datapipeline_spark.operators.graph import (
-        degree_assortativity,
-        ktruss_peel,
-        label_propagation,
-        local_clustering,
-        modularity,
-    )
-    from big_data_project_datapipeline_spark.operators.market import (
-        basket_pair_stats,
-        support_graph_edges,
-    )
-
-    # two overlapping triangles (support-2 each) + a pendant edge and
-    # a chord: non-trivial communities, a k-truss that actually peels
-    rows = []
-    b = 0
-    for members in [(10, 20, 30), (10, 20, 30), (20, 30, 40),
-                    (20, 30, 40), (50, 60), (50, 60), (10, 40),
-                    (10, 40)]:
-        b += 1
-        rows.extend((b, i) for i in members)
-    lines = spark.createDataFrame(rows, ["basket", "item"])
-
-    default = support_graph_edges(lines, "basket", "item")
-    stats = basket_pair_stats(lines, "basket", "item")
-    sinks.write_bucketed(
-        stats, "t_sge_stats", "item_a", num_buckets=4, sort_col="item_a"
-    )
-    try:
-        prepared = support_graph_edges(
-            prepared_stats=spark.table("t_sge_stats")
-        )
-        # weighted edge frame itself round-trips bit-equal
-        assert sorted(map(tuple, prepared.collect())) == sorted(
-            map(tuple, default.collect())
-        )
-        de, pe = default.select("src", "dst"), prepared.select("src", "dst")
-        for build in (
-            lambda e: label_propagation(e, n_rounds=3),
-            lambda e: modularity(e, label_propagation(e, n_rounds=3)),
-            lambda e: ktruss_peel(e, k=3, n_rounds=4),
-            # round 12 (VERDICT r11 item 5): the q198/q199 consumers
-            local_clustering,
-            degree_assortativity,
-        ):
-            d = sorted(map(tuple, build(de).collect()))
-            p = sorted(map(tuple, build(pe).collect()))
-            assert d == p
-            assert len(d) > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sge_stats")
-    with pytest.raises(ValueError, match="lines= or prepared_stats="):
-        support_graph_edges()
 
 
 def test_degree_assortativity_star_is_minus_one(spark):
@@ -1804,46 +1630,6 @@ def test_degree_assortativity_star_is_minus_one(spark):
     r = degree_assortativity(edges).first()
     assert r["n_edges"] == 6
     assert r["assortativity"] == -1.0
-
-
-def test_copurchase_lift_requires_input(spark):
-    from big_data_project_datapipeline_spark.operators.market import (
-        copurchase_lift,
-    )
-
-    with pytest.raises(ValueError, match="lines= or prepared_stats="):
-        copurchase_lift(None)
-
-
-def test_prepared_stats_rejects_min_pair_count(spark):
-    """A landed basket_pair_stats table's threshold governs: passing
-    min_pair_count together with prepared_stats raises instead of
-    silently yielding a different pair set / graph than the in-session
-    build (ADVICE r11) — on all three prepared-path consumers."""
-    from big_data_project_datapipeline_spark.operators.market import (
-        copurchase_lift,
-        item_item_cosine,
-        support_graph_edges,
-    )
-
-    stats = spark.createDataFrame(
-        [("a", "b", 3, 4, 5, 10)],
-        "item_a string, item_b string, pair_n long, n_a long, "
-        "n_b long, n_baskets long",
-    )
-    for call in (
-        lambda: copurchase_lift(
-            None, min_pair_count=3, prepared_stats=stats
-        ),
-        lambda: item_item_cosine(
-            None, min_pair_count=3, prepared_stats=stats
-        ),
-        lambda: support_graph_edges(
-            min_pair_count=3, prepared_stats=stats
-        ),
-    ):
-        with pytest.raises(ValueError, match="threshold governs"):
-            call()
 
 
 # --------------- embedding outlier audit (q225 composition, round-10)

@@ -180,48 +180,3 @@ def test_compact_gram_index_crash_window_is_superset_safe(spark, tmp_path):
     assert compact_gram_index(spark, idx, upto_batch_id=3) == 4
     after = {r["w"] for r in load_gram_index(spark, idx).collect()}
     assert after == before
-
-
-def test_compact_label_ledger_keeps_replay_window(spark, tmp_path):
-    import os
-
-    from big_data_project_datapipeline_spark.streaming.graph import (
-        apply_cc_batch,
-        compact_label_ledger,
-        load_labels,
-    )
-
-    labels = str(tmp_path / "labels")
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "src long, dst long"
-    )
-    for t in range(5):
-        apply_cc_batch(
-            spark.createDataFrame(
-                [(100 + t, 101 + t)], "src long, dst long"
-            )
-            if t
-            else edges,
-            t,
-            labels,
-        )
-    assert len(os.listdir(labels)) == 5
-    latest = {
-        (r["node"], r["comp"]) for r in load_labels(spark, labels).collect()
-    }
-    assert compact_label_ledger(labels) == 3
-    kept = sorted(os.listdir(labels))
-    assert kept == ["labels_3", "labels_4"]
-    # the surviving latest state is unchanged
-    assert {
-        (r["node"], r["comp"]) for r in load_labels(spark, labels).collect()
-    } == latest
-    # the newest batch can still replay: it excludes its own shard and
-    # finds labels_3
-    assert (
-        load_labels(spark, labels, exclude_batch_id=4).count() > 0
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="keep_latest"):
-        compact_label_ledger(labels, keep_latest=1)

@@ -1,8 +1,7 @@
 """Per-stage shuffle RECORDS vs BYTES for one query at one or more SF
-dirs — the decomposition tool behind the q175 HITS findings
-(tools/profile_hits.py), generalized. Records growing linearly while
-bytes grow faster points at encoding/compression; records growing
-super-linearly points at a plan term that multiplies rows.
+dirs — the decomposition behind the q175 HITS findings. Records growing
+linearly while bytes grow faster points at encoding/compression; records
+growing super-linearly points at a plan term that multiplies rows.
 
 Usage: python tools/profile_stages.py <query> <sf_dir> [sf_dir ...]
 """

@@ -1,7 +1,7 @@
 """Warm-solo timing + formatted-plan capture for named queries.
 
 Usage: python tools/solo_bench.py <sf_dir> <n_runs> <query> [query ...]
-       [--plan-dir plans/r12 --plan-suffix _before]
+       [--plan-dir plans --plan-suffix _before]
 
 For each query: builds the DataFrame fresh per run (construction time is
 part of the driver contract's measurement), executes via the noop sink,
