@@ -36,7 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 from big_data_project_datapipeline_spark.plans.features import (
     incremental_feature_run,
 )
-from big_data_project_datapipeline_spark.sinks import promote_overwrite
+from big_data_project_datapipeline_spark.sinks import _recover, promote_overwrite
 
 
 def apply_feature_batch(
@@ -50,6 +50,9 @@ def apply_feature_batch(
     spark = batch_df.sparkSession
     if "date" in batch_df.columns:  # partition column of the raw store
         batch_df = batch_df.drop("date")
+    # finish a crashed commit first: this read must see the previous
+    # output, which such a crash can leave only in the backup dir
+    _recover(features_path)
     try:
         previous = spark.read.parquet(features_path)
     except AnalysisException:  # bootstrap run

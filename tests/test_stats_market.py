@@ -1632,6 +1632,15 @@ def test_degree_assortativity_star_is_minus_one(spark):
     assert r["assortativity"] == -1.0
 
 
+def test_copurchase_lift_requires_input(spark):
+    from big_data_project_datapipeline_spark.operators.market import (
+        copurchase_lift,
+    )
+
+    with pytest.raises(TypeError, match="lines"):
+        copurchase_lift()
+
+
 # --------------- embedding outlier audit (q225 composition, round-10)
 
 
