@@ -13,8 +13,9 @@ this engine runs:
 ``ingest`` reads the day's LANDED payload files (one JSON document per
 source API, as dumped by any fetcher — the HTTP step is out of engine
 scope by design), normalizes them through the S1–S5 source ops, runs the
-merge pipeline (J1–J4, F1/F2, D1 upsert) and merges into a date-partitioned
-parquet store, then writes run metrics (K3). ``features`` runs the
+merge pipeline (J1–J4, F1/F2), upserts the day into a date-partitioned
+parquet store (D1), then writes run metrics with the reference's
+completeness check (K3, A2). ``features`` runs the
 incremental feature pipeline (anti-join delta → X1–X14 + z-score → keep-
 first union) and writes the feature table + CSV export (K2).
 
@@ -33,14 +34,16 @@ import json
 import os
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_project_datapipeline_spark.operators.incremental import load_or_empty
+from big_data_project_datapipeline_spark.functions.quality import (
+    completeness_warnings,
+    observe_quality,
+)
 from big_data_project_datapipeline_spark.plans.features import incremental_feature_run
 from big_data_project_datapipeline_spark.plans.ingest import (
-    daily_ingest,
+    day_grid,
     merge_all_sources,
 )
 from big_data_project_datapipeline_spark.session import get_spark
@@ -75,6 +78,12 @@ AIR_QUALITY_MAPPING = {
     "ozone": "o3",
     "us_aqi": "aqi_us",
 }
+# The reference's completeness warnings (raw_data.py:330-339): more than
+# this many of the day's rows missing the column.
+COMPLETENESS_THRESHOLDS = {
+    "missing_carbon_intensity_actual": 2,
+    "missing_retail_price_£_per_kWh": 5,
+}
 
 
 def _read_json(path: str) -> dict:
@@ -85,8 +94,11 @@ def _read_json(path: str) -> dict:
 def run_ingest(
     spark: SparkSession, payload_dir: str, store: str, target_date: dt.date
 ) -> DataFrame:
-    """Normalize the day's landed payloads, run the merge pipeline, upsert
-    into the date-partitioned store. Returns the day's grid rows."""
+    """Normalize the day's landed payloads, run the merge pipeline and
+    upsert the day's grid rows into the date-partitioned store, whose
+    merge reads back only the target date. The day's row and null counts
+    ride the merge's own jobs as an observation. Returns the day's grid
+    rows."""
     t0 = time.monotonic()
     weather = normalize_parallel_arrays(
         spark, _read_json(os.path.join(payload_dir, "weather.json")),
@@ -109,21 +121,24 @@ def run_ingest(
     merged = merge_all_sources(
         weather, air, carbon, mix, prices, price_target_date=target_date
     )
-    history = load_or_empty(spark, store, merged.schema)
-    day = daily_ingest(merged, history, target_date).filter(
-        F.to_date("datetime") == F.lit(target_date)
+    day = day_grid(merged, target_date).withColumn(
+        "date", F.to_date("datetime")
     )
-    day = day.withColumn("date", F.to_date("datetime"))
-    # the metrics doc records the day's row count; take it before the
-    # merge, which swaps out the touched partition's files that day's
-    # plan (history side) still lists
-    n_rows = day.count()
-    merge_into_partitioned(day, store, keys=["datetime"], partition_col="date")
+    checked = [k.removeprefix("missing_") for k in COMPLETENESS_THRESHOLDS]
+    observed, obs = observe_quality(day, "ingest", checked)
+    merge_into_partitioned(
+        observed, store, keys=["datetime"], partition_col="date"
+    )
+    quality = obs.get
     write_metrics_json(
         {
             "last_run": dt.datetime.now(dt.timezone.utc).isoformat(),
             "target_date": str(target_date),
-            "rows_ingested": n_rows,
+            "rows_ingested": quality["row_count"],
+            **{k: quality[k] for k in COMPLETENESS_THRESHOLDS},
+            "completeness_warnings": completeness_warnings(
+                quality, COMPLETENESS_THRESHOLDS
+            ),
             "ingest_seconds": round(time.monotonic() - t0, 3),
         },
         os.path.join(store, "_metrics", "ingest.json"),
@@ -139,9 +154,9 @@ def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
     # finish a crashed commit first: this read must see the previous
     # output, which such a crash can leave only in the backup dir
     _recover(prev_path)
-    try:
+    if os.path.exists(prev_path):
         previous = spark.read.parquet(prev_path)
-    except AnalysisException:  # bootstrap: no previous output yet
+    else:  # bootstrap: no previous output yet
         previous = raw.limit(0).select("datetime")
     features = incremental_feature_run(raw, previous)
     # the plan reads prev_path → staged swap (sinks.promote_overwrite)

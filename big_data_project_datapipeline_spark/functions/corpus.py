@@ -2207,7 +2207,7 @@ def good_turing_from_counts(cnt: DataFrame) -> DataFrame:
     """The Good–Turing tail of :func:`good_turing` over an
     already-materialized (token, n) count frame, so a maintained count
     store is bit-equal to a batch recount by construction (the
-    gini_from_counts / sampling_table_from_counts pairing). Expressions
+    sampling_table_from_counts pairing). Expressions
     identical to the original in-line form (factored, not changed)."""
     cnt = cnt.select("token", F.col("n").cast("long").alias("r"))
     nr = cnt.groupBy("r").agg(
@@ -2290,18 +2290,8 @@ def token_gini(
     return _gini_tail(g, ["grp"]).withColumnRenamed("grp", group_col)
 
 
-def gini_from_counts(cnt: DataFrame) -> DataFrame:
-    """The Gini/top-decile tail of :func:`token_gini` over an
-    already-materialized global (token, n) count frame, so a maintained
-    count store is bit-equal to a batch recount by construction (the
-    sampling_table_from_counts pairing, q227's precedent). One row
-    out: (n_types, n_tokens, gini, top_decile_share)."""
-    g = cnt.select("token", F.col("n").cast("long").alias("cnt"))
-    return _gini_tail(g, [])
-
-
 def _gini_tail(g: DataFrame, gcols: list) -> DataFrame:
-    """Shared Gini closing over a (*gcols, token, cnt) type frame —
+    """The Gini closing over a (*gcols, token, cnt) type frame —
     expressions identical to the original in-line q232 form (factored,
     not changed)."""
     from big_data_project_datapipeline_spark.operators.prefix import (
@@ -2481,9 +2471,8 @@ def bigram_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     arrays_zip explode (the q101/q118 device) + one map-side-combinable
     count. The mergeable state behind the KN family: associative long
     sums, so a store can fold per-batch deltas of this frame and
-    :func:`kneser_ney_from_counts` re-price the model per tick with
-    zero corpus rescans (the token_counts pattern one n-gram order
-    up)."""
+    re-price the model per tick with zero corpus rescans (the
+    token_counts pattern one n-gram order up)."""
     toks = df.select(TX.tokens(F.col(text_col)).alias("__t"))
     n = F.size("__t")
     return (
@@ -2499,22 +2488,6 @@ def bigram_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .agg(F.count(F.lit(1)).cast("long").alias("c12"))
     )
-
-
-def kneser_ney_from_counts(
-    big: DataFrame, discount: float = 0.75
-) -> DataFrame:
-    """The interpolated-KN closing over an already-aggregated
-    ``(w1, w2, c12)`` bigram-count frame — :func:`kneser_ney_bigram`'s
-    tail exposed for count stores (the gini_from_counts pattern):
-    served off a maintained store it is bit-equal to the batch model
-    over every document ever folded, because exact long counts admit
-    exactly one value no matter how they were summed."""
-    if not (0.0 < discount < 1.0):
-        raise ValueError(
-            "kneser_ney_from_counts: discount must be in (0, 1)"
-        )
-    return _kn_model_from_pairs(big, discount)
 
 
 def _kn_model_from_pairs(big: DataFrame, discount: float) -> DataFrame:

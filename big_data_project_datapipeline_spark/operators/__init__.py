@@ -6,10 +6,7 @@ inside whole-stage codegen and scale with ordinary shuffle semantics.
 """
 
 from big_data_project_datapipeline_spark.operators.asof import asof_join
-from big_data_project_datapipeline_spark.operators.incremental import (
-    anti_join_delta,
-    load_or_empty,
-)
+from big_data_project_datapipeline_spark.operators.incremental import anti_join_delta
 from big_data_project_datapipeline_spark.operators.merge import (
     upsert_keep_last,
     upsert_keep_first,
@@ -20,7 +17,6 @@ from big_data_project_datapipeline_spark.operators.scale import zscore_scale
 __all__ = [
     "asof_join",
     "anti_join_delta",
-    "load_or_empty",
     "upsert_keep_last",
     "upsert_keep_first",
     "pivot_records",

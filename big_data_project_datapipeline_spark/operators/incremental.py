@@ -1,9 +1,10 @@
-"""Incremental-processing primitives: anti-join delta + empty-state bootstrap.
+"""Incremental-processing primitives: anti-join delta + mergeable aggregate state.
 
 The reference's incremental core is ``raw[~raw.datetime.isin(prev.datetime)]``
-(reference data_engineering.py:107, F5/J5) plus an existence-guarded scan that
-falls back to an empty frame when no previous output exists (reference
-raw_data.py:245,266-269 and data_engineering.py:23-28, S7).
+(reference data_engineering.py:107, F5/J5). Its existence-guarded bootstrap
+(raw_data.py:245,266-269 and data_engineering.py:23-28, S7) lives in the
+jobs: ``sinks.merge_into_partitioned`` creates a missing store, and
+``run_features`` starts from an empty previous table only when none exists.
 
 Spark-first design: the delta is a ``left_anti`` join — one shuffle on the
 key, map-side combinable, and at 100 TB the previous-output side is pruned
@@ -15,10 +16,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.utils import AnalysisException
 
 
 def anti_join_delta(
@@ -42,30 +41,6 @@ def anti_join_delta(
         c = F.col(k).eqNullSafe(F.col(f"__prev_{k}"))
         cond = c if cond is None else (cond & c)
     return new.join(prev, on=cond, how="left_anti")
-
-
-def load_or_empty(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """Existence-guarded scan (S7): previous output, or empty frame with the
-    declared schema when the sink doesn't exist yet (bootstrap run)."""
-    try:
-        reader = spark.read.schema(schema)
-        if fmt == "csv":
-            return reader.csv(path, header=True)
-        return reader.format(fmt).load(path)
-    except AnalysisException as e:
-        # ONLY the path-missing bootstrap case may fall back to empty:
-        # swallowing every AnalysisException (corrupt footer, bad fmt)
-        # would make an established sink look like a first run and
-        # re-append the whole input (review fix)
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return spark.createDataFrame([], schema)
-        raise
 
 
 AGG_STATE_COLS = ["n", "sum_dec", "vmin", "vmax", "users_hll"]

@@ -1,19 +1,22 @@
-"""Ingestion pipeline: merge 5 sources → hourly grid → upsert history.
+"""Ingestion pipeline: merge 5 sources → the target day's hourly grid.
 
 Mirrors ``merge_all_sources`` + ``collect_and_append_yesterday`` (reference
-raw_data.py:210-269,273-352) as ONE lazy plan:
+raw_data.py:210-269,273-352) as lazy plans:
 
     weather ⟗ air_quality ⟗ carbon          (J1, J2 full-outer on datetime)
       as-of⋈ prices (nearest, ±30 min)       (J3)
       ⨯ broadcast(generation_mix row)        (J4)
-      filter(day == target, minute == 0)     (F1, F2)
-      upsert into history, new wins          (U1 + D1)
+      filter(day == target, minute == 0)     (F1, F2: ``day_grid``)
+
+The daily cron upserts that grid into the date-partitioned store with
+``sinks.merge_into_partitioned`` (U1 + D1, new wins), which reads back
+only the target date's directory. ``daily_ingest`` is that filter plus
+the upsert into a given history frame (the registry's q37).
 
 Physical plan at scale: the three grid sources shuffle once on ``datetime``
 (AQE coalesces the tiny ones), prices joins via the bucketed as-of (one
 shuffle on a salted-enough integer bucket key), the 1-row generation mix is
-a literal broadcast, and the final upsert is one window over the key —
-partition-prunable to the touched dates on a date-partitioned sink.
+a literal broadcast, and the upsert is one window over the key.
 """
 
 from __future__ import annotations
@@ -68,6 +71,17 @@ def merge_all_sources(
     return merged.crossJoin(F.broadcast(mix_payload))
 
 
+def day_grid(
+    merged: DataFrame, target_date: dt.date, ts_col: str = "datetime"
+) -> DataFrame:
+    """The target day's hourly grid rows of the merged sources
+    (reference raw_data.py:306-316)."""
+    return (
+        merged.filter(F.to_date(F.col(ts_col)) == F.lit(target_date))  # F1
+        .filter(F.minute(F.col(ts_col)) == 0)  # F2: hourly grid
+    )
+
+
 def daily_ingest(
     merged: DataFrame,
     history: DataFrame,
@@ -76,8 +90,5 @@ def daily_ingest(
 ) -> DataFrame:
     """Filter to the target day's hourly grid and upsert into history
     (reference raw_data.py:306-316,241-263). Returns the new history."""
-    day = (
-        merged.filter(F.to_date(F.col(ts_col)) == F.lit(target_date))  # F1
-        .filter(F.minute(F.col(ts_col)) == 0)  # F2: hourly grid
-    )
+    day = day_grid(merged, target_date, ts_col)
     return upsert_keep_last(history, day, keys=(ts_col,)).orderBy(ts_col)

@@ -147,25 +147,22 @@ def write_partitioned(
 
 
 def merge_into_partitioned(
-    new: DataFrame,
-    path: str,
-    keys: list[str],
-    partition_col: str,
-    spark: SparkSession | None = None,
+    new: DataFrame, path: str, keys: list[str], partition_col: str
 ) -> None:
     """Upsert ``new`` into the partitioned sink, new-wins per key (D1).
 
     Only the partition dirs ``new`` touches are read back (by path),
     merged, and swapped in — the reference's read-modify-write of the
-    whole CSV (raw_data.py:246-263) shrunk to the touched dates. Emulates
-    Delta MERGE with plain parquet. The merged plan reads the live dirs
-    while the write goes to staging, so it needs no materialization
-    before the swap.
+    whole CSV (raw_data.py:246-263) shrunk to the touched dates; a
+    missing store is created. Emulates Delta MERGE with plain parquet.
+    The merged plan reads the live dirs while the write goes to staging,
+    so it needs no materialization before the swap. Its first job scans
+    ``new`` alone (to name the touched dirs), so an observation on
+    ``new`` counts exactly its rows.
     """
-    spark = spark or new.sparkSession
     _recover(path)
     names = sorted(_partition_dirs(new, partition_col))
-    existing = _read_partitions(spark, path, names)
+    existing = _read_partitions(new.sparkSession, path, names)
     merged = (
         new if existing is None else upsert_keep_last(existing, new, keys=keys)
     )

@@ -10,8 +10,10 @@ import os
 from big_data_project_datapipeline_spark.__main__ import run_features, run_ingest
 
 
-def _write_payloads(day_dir, date: str, temps):
+def _write_payloads(day_dir, date: str, temps, carbon_hours=None):
     day_dir.mkdir(parents=True)
+    if carbon_hours is None:
+        carbon_hours = range(len(temps))
     hours = [f"{date}T{h:02d}:00" for h in range(len(temps))]
     (day_dir / "weather.json").write_text(json.dumps({
         "hourly": {
@@ -40,7 +42,7 @@ def _write_payloads(day_dir, date: str, temps):
             {"from": f"{date}T{h:02d}:00Z", "to": f"{date}T{h:02d}:30Z",
              "intensity": {"actual": 100.0 + h, "forecast": 99.0 + h,
                            "index": "moderate"}}
-            for h in range(len(temps))
+            for h in carbon_hours
         ]
     }))
     (day_dir / "generation_mix.json").write_text(json.dumps({
@@ -128,6 +130,68 @@ def test_features_rerun_after_crashed_commit_matches_uninterrupted(
     got = sorted(map(tuple, run_features(spark, store, str(crashed)).collect()))
     assert len(got) == 5
     assert got == want
+
+
+def test_features_fail_on_an_unreadable_previous_output(spark, tmp_path):
+    """Only a missing features.parquet is a first run. One that exists
+    but cannot be read must fail the run, not re-fit the z-score over
+    every raw row and overwrite the table."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    store, out = str(tmp_path / "raw"), tmp_path / "features"
+    _write_payloads(tmp_path / "d1", "2024-01-15", [5.0, 6.0, 7.0])
+    run_ingest(spark, str(tmp_path / "d1"), store, dt.date(2024, 1, 15))
+    prev = out / "features.parquet"
+    prev.mkdir(parents=True)
+    (prev / "_SUCCESS").write_text("")
+    with pytest.raises(AnalysisException):
+        run_features(spark, store, str(out))
+    assert os.listdir(prev) == ["_SUCCESS"]
+    assert not (out / "engineered_data.csv").exists()
+
+
+def test_ingest_metrics_record_the_completeness_check(spark, tmp_path):
+    """The reference's warning fires when more than 2 of the day's rows
+    lack a carbon reading (raw_data.py:330-339)."""
+    store = str(tmp_path / "raw")
+    metrics = tmp_path / "raw" / "_metrics" / "ingest.json"
+    _write_payloads(
+        tmp_path / "d1", "2024-01-15", [5.0] * 6, carbon_hours=range(3)
+    )
+    run_ingest(spark, str(tmp_path / "d1"), store, dt.date(2024, 1, 15))
+    m = json.loads(metrics.read_text())
+    assert m["rows_ingested"] == 6
+    assert m["missing_carbon_intensity_actual"] == 3
+    assert m["missing_retail_price_£_per_kWh"] == 0
+    assert m["completeness_warnings"] == [
+        "missing_carbon_intensity_actual: 3 missing > 2"
+    ]
+
+    _write_payloads(tmp_path / "d2", "2024-01-16", [5.0] * 6)
+    run_ingest(spark, str(tmp_path / "d2"), store, dt.date(2024, 1, 16))
+    m = json.loads(metrics.read_text())
+    assert m["missing_carbon_intensity_actual"] == 0
+    assert m["completeness_warnings"] == []
+
+
+def test_ingest_reads_only_the_target_date(spark, tmp_path):
+    """A day's ingest reads back only its own date partition: another
+    date's files, even unreadable ones, are never scanned."""
+    import glob
+
+    store = str(tmp_path / "raw")
+    _write_payloads(tmp_path / "d1", "2024-01-15", [5.0, 6.0, 7.0])
+    run_ingest(spark, str(tmp_path / "d1"), store, dt.date(2024, 1, 15))
+    for f in glob.glob(os.path.join(store, "date=2024-01-15", "*.parquet")):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    _write_payloads(tmp_path / "d2", "2024-01-16", [8.0, 9.0])
+    run_ingest(spark, str(tmp_path / "d2"), store, dt.date(2024, 1, 16))
+    metrics = json.loads((tmp_path / "raw" / "_metrics" / "ingest.json").read_text())
+    assert metrics["rows_ingested"] == 2
+    day2 = spark.read.parquet(os.path.join(store, "date=2024-01-16"))
+    assert day2.count() == 2
 
 
 def test_cli_compact(spark, tmp_path):

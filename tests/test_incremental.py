@@ -1,16 +1,11 @@
-"""Anti-join delta (F5/J5), empty-state bootstrap (S7), end-to-end
-incremental feature run (reference data_engineering.py:100-132)."""
+"""Anti-join delta (F5/J5), end-to-end incremental feature run
+(reference data_engineering.py:100-132)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import types as T
-
-from big_data_project_datapipeline_spark.operators.incremental import (
-    anti_join_delta,
-    load_or_empty,
-)
+from big_data_project_datapipeline_spark.operators.incremental import anti_join_delta
 from big_data_project_datapipeline_spark.plans.features import incremental_feature_run
 
 UTC = dt.timezone.utc
@@ -27,19 +22,6 @@ def test_anti_join_delta(spark):
     prev = spark.createDataFrame([(ts(0),), (ts(1),)], "datetime timestamp")
     out = anti_join_delta(raw, prev)
     assert [r["datetime"].hour for r in out.collect()] == [2]
-
-
-def test_load_or_empty_missing_path(spark, tmp_path):
-    schema = T.StructType([T.StructField("x", T.DoubleType())])
-    df = load_or_empty(spark, str(tmp_path / "nope"), schema)
-    assert df.count() == 0 and df.schema == schema
-
-
-def test_load_or_empty_roundtrip(spark, tmp_path):
-    schema = T.StructType([T.StructField("x", T.DoubleType())])
-    path = str(tmp_path / "t")
-    spark.createDataFrame([(1.0,), (2.0,)], schema).write.parquet(path)
-    assert load_or_empty(spark, path, schema).count() == 2
 
 
 def test_incremental_feature_run_processes_only_delta(spark):
