@@ -15,22 +15,26 @@ Spark-native storage model:
   (K4): a deterministic order-insensitive hash of the dataset for
   regression pinning.
 
-One commit protocol replaces parquet data in place: ``write_partitioned``,
-``merge_into_partitioned``, ``delete_where``, ``promote_overwrite`` and
-``compact_parquet`` all write the new data to the sibling
-``<path>.staging``, then :func:`_commit` renames each replaced directory
-(the whole store, or one ``key=value`` partition directory) into the
-sibling ``<path>.backup``, renames its staged twin into place, and drops
-the backup. Each of them first calls :func:`_recover`,
-before it reads the store, so a crash at any point leaves every replaced
-directory at its old or its new version and a rerun of the same
-operation converges to the uninterrupted result. The protocol needs
-``os.rename`` (a local filesystem); object stores need a table format.
+One commit protocol replaces data in place. Every write that replaces
+a directory stages the new data in the sibling ``<path>.staging``, then
+:func:`_commit` renames each replaced directory (the whole store, or
+named subdirectories of it) into the sibling ``<path>.backup``, renames
+its staged twin into place, and drops the backup. The sites:
 
-The streaming gram index (``streaming/dedup.py``) keeps its own protocol,
-because it never replaces a live directory: each micro-batch writes a
-shard named by its batch id, a replayed batch overwrites only its own
-shard, and the stream checkpoint is the commit.
+- whole store: ``promote_overwrite``, ``compact_parquet``,
+  ``export_csv`` and ``write_training_shards`` (its ``data/`` and
+  ``_MANIFEST.json`` swap in together);
+- ``key=value`` partition dirs: ``merge_into_partitioned`` and
+  ``delete_where``;
+- named shards of the streaming gram index (``streaming/dedup.py``): a
+  tick's ``docs_<batch>`` and ``grams_<batch>``, and
+  ``compact_gram_index``, whose merged shard replaces its sources.
+
+Each site first calls :func:`_recover`, before it reads the store, so a
+crash at any point leaves every replaced directory at its old or its new
+version and a rerun of the same operation converges to the uninterrupted
+result. The protocol needs ``os.rename`` (a local filesystem); object
+stores need a table format.
 """
 
 from __future__ import annotations
@@ -75,11 +79,12 @@ def _commit(
     ``stage(staging)`` writes the new data to the sibling staging dir and
     may raise to abort before anything live is touched. With ``names``
     None the staged dir replaces the whole store; otherwise it holds
-    ``key=value`` partition dirs and each named partition is swapped for
-    its staged twin, or removed when the stage wrote none (an emptied
-    partition). Replaced dirs move into one backup dir that is dropped
-    only after every staged dir is in place. Callers run :func:`_recover`
-    first, before they read the store."""
+    named subdirs (``key=value`` partitions, gram-index shards) and each
+    named subdir is swapped for its staged twin, or removed when the
+    stage wrote none (an emptied partition, a merged-away shard).
+    Replaced dirs move into one backup dir that is dropped only after
+    every staged dir is in place. Callers run :func:`_recover` first,
+    before they read the store."""
     root = path.rstrip("/")
     staging, backup = root + _STAGING, root + _BACKUP
     stage(staging)
@@ -130,22 +135,6 @@ def _read_partitions(
     return spark.read.option("basePath", path).parquet(*dirs)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str]
-) -> None:
-    """Date-partitioned parquet sink: replace the ``key=value`` dirs of
-    the partition values present in ``df`` and leave every other
-    partition's files untouched, so an idempotent daily job rewrites
-    only its own dates. One partition column: the swap unit is one
-    top-level partition dir."""
-    if len(partition_cols) != 1:
-        raise ValueError("write_partitioned takes exactly one partition column")
-    (col,) = partition_cols
-    _recover(path)
-    names = sorted(_partition_dirs(df, col))
-    _commit(path, df.write.partitionBy(col).parquet, names)
-
-
 def merge_into_partitioned(
     new: DataFrame, path: str, keys: list[str], partition_col: str
 ) -> None:
@@ -182,7 +171,8 @@ def promote_overwrite(df: DataFrame, path: str) -> None:
 def export_csv(df: DataFrame, path: str) -> None:
     """K1/K2 parity export: single-header CSV directory, exact column
     names (incl. %/£ chars), UTC ISO timestamps."""
-    df.write.mode("overwrite").option("header", True).csv(path)
+    _recover(path)
+    _commit(path, df.write.option("header", True).csv)
 
 
 def write_metrics_json(metrics: dict, path: str) -> None:
@@ -222,119 +212,6 @@ def content_hash(df: DataFrame) -> str:
     return format(int(total or 0) % (1 << 128), "x")
 
 
-def write_sorted_for_skipping(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    target_files: int | None = None,
-) -> None:
-    """Data-skipping layout: range-partition + sort the data on the skip
-    columns before writing, so each parquet file owns a narrow, mostly
-    disjoint min/max range — the poor-man's Z-order. A later filtered
-    scan on those columns prunes whole files/row-groups from the parquet
-    footer statistics alone; on a 100 TB fact table that is the
-    difference between touching every file and touching the few that can
-    contain the predicate range.
-
-    ``repartitionByRange`` samples the sort keys for balanced range
-    bounds (one shuffle), ``sortWithinPartitions`` orders rows inside
-    each file so row-group stats stay tight too."""
-    parted = (
-        df.repartitionByRange(target_files, *sort_cols)
-        if target_files
-        else df.repartitionByRange(*sort_cols)
-    )
-    parted.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(
-        path
-    )
-
-
-def zorder_value(
-    df: DataFrame, cols: list[str], bits: int = 16
-) -> DataFrame:
-    """Append a ``__z`` Morton (Z-order) key interleaving the bits of
-    each column's rank bucket. Buckets come from min/max linear scaling
-    into [0, 2^bits) — ONE tiny aggregate (collected as 2·len(cols)
-    scalars) folded back as literals, so the bucket step is map-only.
-
-    Bit interleave is a fixed shift/mask expression chain (len(cols) ×
-    bits operations) — integer-exact, whole-stage-codegen friendly.
-
-    Guards: the highest shift position is ``len(cols)*bits - 1``; Java's
-    shiftleft wraps at 64 (shift mod 64), which would silently scramble
-    the Morton order, so ``len(cols)*bits`` must stay ≤ 63 — pass a
-    smaller ``bits`` for wide column sets (e.g. 4 cols → bits ≤ 15).
-    Empty / all-null inputs have no min/max to scale by and raise.
-    """
-    if not cols:
-        raise ValueError("zorder_value needs at least one column")
-    if len(cols) * bits > 63:
-        raise ValueError(
-            f"len(cols)*bits = {len(cols) * bits} exceeds 63: shiftleft "
-            f"wraps mod 64 and would scramble the Morton order; lower "
-            f"bits to <= {63 // len(cols)} for {len(cols)} columns"
-        )
-    bounds = df.agg(
-        *[F.min(c).alias(f"lo_{c}") for c in cols],
-        *[F.max(c).alias(f"hi_{c}") for c in cols],
-    ).first()
-    n_buckets = 1 << bits
-    bucket_cols = []
-    for c in cols:
-        if bounds[f"lo_{c}"] is None or bounds[f"hi_{c}"] is None:
-            raise ValueError(
-                f"zorder_value: column {c!r} has no min/max (empty "
-                f"DataFrame or all-null column) — nothing to bucket"
-            )
-        lo = float(bounds[f"lo_{c}"])
-        hi = float(bounds[f"hi_{c}"])
-        span = (hi - lo) or 1.0
-        b = F.least(
-            F.lit(n_buckets - 1),
-            F.floor(
-                (F.col(c).cast("double") - F.lit(lo))
-                / F.lit(span)
-                * n_buckets
-            ).cast("long"),
-        )
-        bucket_cols.append(F.greatest(F.lit(0), b))
-    z = F.lit(0).cast("long")
-    for bit in range(bits):
-        for i, b in enumerate(bucket_cols):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(b, bit).bitwiseAND(F.lit(1).cast("long")),
-                    bit * len(cols) + i,
-                )
-            )
-    return df.withColumn("__z", z)
-
-
-def write_zorder(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    target_files: int | None = None,
-    bits: int = 16,
-) -> None:
-    """Multi-column data-skipping layout: range-partition + sort on the
-    Morton key so each parquet file owns a small HYPER-RECTANGLE of the
-    (col1, col2, …) space — footer min/max stats then prune files for
-    predicates on ANY of the interleaved columns, where a plain sort
-    only skips on its leading column. The Databricks/Iceberg Z-ORDER
-    device, expressed as two narrow steps: map-only key computation +
-    one range shuffle."""
-    with_z = zorder_value(df, cols, bits)
-    parted = (
-        with_z.repartitionByRange(target_files, "__z")
-        if target_files
-        else with_z.repartitionByRange("__z")
-    )
-    parted.sortWithinPartitions("__z").drop("__z").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
 def compact_parquet(
     spark, path: str, target_file_bytes: int = 128 * 1024 * 1024
 ) -> int:
@@ -343,9 +220,9 @@ def compact_parquet(
     O(partitions) files; a year of half-hourly cron ticks is ~17k tiny
     files whose footer reads dominate scan time at 100 TB).
 
-    Hive-partitioned stores (the ``write_partitioned`` /
-    ``merge_into_partitioned`` layout, ``key=value`` subdirectories) are
-    detected from the directory names and rewritten WITH the same
+    Hive-partitioned stores (the ``merge_into_partitioned`` layout,
+    ``key=value`` subdirectories) are detected from the directory names
+    and rewritten WITH the same
     ``partitionBy`` — a flat rewrite would mix root-level files with
     ``key=`` dirs on the next partition merge and break both reads and
     partition pruning. The rewrite hash-partitions on the partition
@@ -412,7 +289,9 @@ def write_training_shards(
     same corpus reproduces byte-identical shard membership.
 
     Format ``json`` emits JSONL (the lingua franca of LLM data drops);
-    ``parquet`` keeps columnar. Returns the manifest dict.
+    ``parquet`` keeps columnar. Returns the manifest dict. ``data/`` and
+    the manifest are staged and swapped in together by :func:`_commit`;
+    an export rejected for null doc ids writes nothing.
 
     Scale shape: one repartition on the shard key (each output file is
     one partition — n_shards is the parallelism knob, sized so
@@ -427,55 +306,51 @@ def write_training_shards(
     ).cast("int")
     from big_data_project_datapipeline_spark.functions.text import token_count
 
+    if fmt not in ("json", "parquet"):
+        raise ValueError(f"unsupported fmt: {fmt}")
+    _recover(root)
     # persist around the two actions (manifest aggregate + shard write)
     # so the corpus is scanned/tokenized once, and both read the same
     # snapshot even if the input directory is concurrently appended
     staged = df.withColumn("shard", shard).persist()
-    manifest_rows = (
-        staged.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(token_count(F.col(text_col))).cast("long").alias("n_tokens"),
-        )
-        .collect()
-    )
-    out = (
-        staged.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", id_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-    )
-    data_path = os.path.join(root, "data")
     try:
-        if fmt == "json":
-            out.json(data_path)
-        elif fmt == "parquet":
-            out.parquet(data_path)
-        else:
-            raise ValueError(f"unsupported fmt: {fmt}")
+        manifest_rows = (
+            staged.groupBy("shard")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(token_count(F.col(text_col))).cast("long").alias("n_tokens"),
+            )
+            .collect()
+        )
+        if any(r["shard"] is None for r in manifest_rows):
+            raise ValueError(
+                "write_training_shards: null doc ids present — they cannot "
+                "be sharded deterministically (md5(NULL) is NULL); drop or "
+                "key them first"
+            )
+        manifest = {
+            "n_shards": n_shards,
+            "format": fmt,
+            "shards": {
+                str(r["shard"]): {"n_rows": r["n_rows"], "n_tokens": r["n_tokens"]}
+                for r in sorted(manifest_rows, key=lambda r: r["shard"])
+            },
+            "total_rows": int(sum(r["n_rows"] for r in manifest_rows)),
+            "total_tokens": int(sum(r["n_tokens"] or 0 for r in manifest_rows)),
+        }
+
+        def stage(staging: str) -> None:
+            staged.repartition(n_shards, "shard").sortWithinPartitions(
+                "shard", id_col
+            ).write.partitionBy("shard").format(fmt).save(
+                os.path.join(staging, "data")
+            )
+            with open(os.path.join(staging, "_MANIFEST.json"), "w") as fh:
+                json.dump(manifest, fh, indent=1, sort_keys=True)
+
+        _commit(root, stage)
     finally:
         staged.unpersist()
-    if any(r["shard"] is None for r in manifest_rows):
-        staged.unpersist()
-        raise ValueError(
-            "write_training_shards: null doc ids present — they cannot "
-            "be sharded deterministically (md5(NULL) is NULL); drop or "
-            "key them first"
-        )
-    manifest = {
-        "n_shards": n_shards,
-        "format": fmt,
-        "shards": {
-            str(r["shard"]): {"n_rows": r["n_rows"], "n_tokens": r["n_tokens"]}
-            for r in sorted(manifest_rows, key=lambda r: r["shard"])
-        },
-        "total_rows": int(sum(r["n_rows"] for r in manifest_rows)),
-        "total_tokens": int(sum(r["n_tokens"] or 0 for r in manifest_rows)),
-    }
-    tmp = os.path.join(root, "._MANIFEST.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(root, "_MANIFEST.json"))
     return manifest
 
 

@@ -2,9 +2,9 @@
 
 The daily cron's corpus path is a ``trigger(availableNow=True)`` drain of
 the substring-dedup stream (`streaming/dedup.py`): each tick scrubs the
-day's document batch against the persisted gram index and folds its
-grams in, with the stream checkpoint as the commit. The ingest and
-feature jobs are scheduled batch jobs (``__main__``).
+day's document batch against the persisted gram index, folds its grams
+in and compacts the index once it passes a fixed shard count. The ingest
+and feature jobs are scheduled batch jobs (``__main__``).
 """
 
 from big_data_project_datapipeline_spark.streaming.dedup import (

@@ -12,21 +12,24 @@ semantics) with a file stream's exactly-once story:
   (doc_id, pos) occurrence survives (the q99 rule). When doc ids are
   assigned in arrival order this reproduces the global q99 result on
   the union exactly — the equivalence the tests pin.
-- state: the gram index is a directory of per-batch parquet subdirs
-  (``grams_<batch_id>``). Each micro-batch OVERWRITES its own subdir,
-  so a crashed-and-replayed batch rewrites the same files instead of
-  appending duplicates — idempotent without reading-while-appending a
-  single directory. Deduped docs land the same way (``docs_<batch_id>``).
+- state: the gram index is a directory of per-batch parquet shards
+  (``grams_<batch_id>``); deduped docs land beside it as
+  ``docs_<batch_id>``. Each tick commits both through
+  :func:`sinks._commit` in names mode, so a crashed-and-replayed batch
+  swaps its own shard in instead of appending duplicates, and a crash
+  mid-commit is undone by :func:`sinks._recover` at the next tick.
 - scale: the per-batch work is the q99 budget (map-only window explode,
   map-side-combinable groupBy(gram), gram-keyed joins); the index join
   is one equi-join on the gram key. The index itself is the large
-  state — O(distinct grams) rows of one string column; compact it
-  periodically (:func:`compact_gram_index` — shard count and fold
-  cost stay bounded, measured over a 50-tick run in the tests /
-  NOTES_r10).
+  state — O(distinct grams) rows of one string column. A tick that
+  finds more than ``_MAX_SHARDS`` shards below its batch id first
+  merges them into one (:func:`compact_gram_index`), so the index
+  never holds more than ``_MAX_SHARDS + 1`` shards.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -37,35 +40,97 @@ from big_data_project_datapipeline_spark.functions.dedup import (
     scrub_marked_occurrences,
     window_gram_firsts,
 )
+from big_data_project_datapipeline_spark.sinks import _commit, _recover
+
+# shards below a tick's batch id that trigger a compaction at its entry
+_MAX_SHARDS = 8
+
+
+def _shard_ids(index_dir: str) -> list[int]:
+    """Batch id of every ``grams_<id>`` shard in ``index_dir``, sorted.
+    Local-FS directory listing; an object-store deployment swaps this
+    for the FileSystem API listing."""
+    try:
+        names = os.listdir(index_dir)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        int(n[len("grams_"):]) for n in names if n.startswith("grams_")
+    )
 
 
 def load_gram_index(
     spark: SparkSession, index_dir: str, exclude_batch_id: int | None = None
 ) -> DataFrame:
-    """Union of every batch's gram subdir; empty frame on bootstrap.
+    """Distinct union of every gram shard; empty frame on bootstrap.
 
     ``exclude_batch_id`` skips that batch's OWN shard — a replayed
     batch must dedup against the pre-batch state, not against the grams
-    it wrote on the crashed attempt (it would otherwise scrub itself).
-    Local-FS directory listing; an object-store deployment swaps this
-    for the FileSystem API listing."""
-    import os
-
-    try:
-        shards = sorted(
-            d for d in os.listdir(index_dir) if d.startswith("grams_")
-        )
-    except FileNotFoundError:
-        shards = []
-    if exclude_batch_id is not None:
-        shards = [d for d in shards if d != f"grams_{exclude_batch_id}"]
-    if not shards:
+    it wrote on the crashed attempt (it would otherwise scrub itself)."""
+    paths = [
+        os.path.join(index_dir, f"grams_{i}")
+        for i in _shard_ids(index_dir)
+        if i != exclude_batch_id
+    ]
+    if not paths:
         return spark.createDataFrame([], "w string")
-    paths = [os.path.join(index_dir, d) for d in shards]
     try:
         return spark.read.parquet(*paths).select("w").distinct()
     except AnalysisException:
         return spark.createDataFrame([], "w string")
+
+
+def compact_gram_index(
+    spark: SparkSession, index_dir: str, upto_batch_id: int
+) -> int:
+    """Merge every gram shard with batch id < ``upto_batch_id`` into ONE
+    distinct-gram shard, bounding the fold's union cost at O(1 merged +
+    recent shards) instead of O(ticks). Ticks write their full
+    distinct-gram set (simple, replay-idempotent), so grams repeat
+    across shards; this reclaims that. Shards >= ``upto_batch_id`` are
+    untouched, so a batch that replays still finds the pre-batch state
+    and still excludes its own shard.
+
+    One names-mode :func:`sinks._commit` whose names are the source
+    shards: the merged shard is staged under the largest source's name
+    and swapped in, and the other sources have no staged twin, so the
+    swap removes them. It swaps only if the staged shard's row count
+    equals the sources' distinct count; otherwise it raises with the
+    sources untouched. A crash before the merged shard is in place
+    recovers the sources. A crash after it can leave some sources
+    restored next to it: a superset with duplicates, which
+    :func:`load_gram_index` takes ``distinct`` over and the next
+    compaction absorbs. Returns the number of shards merged (0 =
+    nothing to do)."""
+    _recover(index_dir)
+    names = [
+        f"grams_{i}" for i in _shard_ids(index_dir) if i < upto_batch_id
+    ]
+    if len(names) < 2:
+        return 0
+    paths = [os.path.join(index_dir, n) for n in names]
+    merged = spark.read.parquet(*paths).select("w").distinct()
+    n_src = merged.count()
+
+    def stage(staging: str) -> None:
+        shard = os.path.join(staging, names[-1])
+        merged.write.parquet(shard)
+        n_out = spark.read.parquet(shard).count()
+        if n_out != n_src:
+            raise RuntimeError(
+                f"compact_gram_index: merged shard row count {n_out} != "
+                f"source distinct count {n_src}; aborted, sources kept"
+            )
+
+    _commit(index_dir, stage, names)
+    return len(names)
+
+
+def _commit_shard(root: str, name: str, df: DataFrame) -> None:
+    """Write ``df`` as the parquet dir ``root/name``, swapped in whole."""
+    _commit(
+        root, lambda staging: df.write.parquet(os.path.join(staging, name)), [name]
+    )
 
 
 def apply_substring_dedup_batch(
@@ -80,8 +145,16 @@ def apply_substring_dedup_batch(
     """One incremental dedup tick: scrub ``batch_df`` against the gram
     index + its own internal repeats, land the deduped docs, fold the
     batch's grams into the index. Also callable directly on a batch
-    frame (the stream ≡ batch equivalence the tests pin)."""
+    frame (the stream ≡ batch equivalence the tests pin).
+
+    Structured Streaming starts batch ``b`` only after batch ``b-1``'s
+    commit is logged, so every shard below ``b`` is committed: the tick
+    compacts them when they number more than ``_MAX_SHARDS``."""
     spark = batch_df.sparkSession
+    _recover(index_dir)
+    _recover(out_dir)
+    if sum(i < batch_id for i in _shard_ids(index_dir)) > _MAX_SHARDS:
+        compact_gram_index(spark, index_dir, batch_id)
     seen = load_gram_index(spark, index_dir, exclude_batch_id=batch_id)
 
     # shared q99 machinery (functions/dedup.window_gram_firsts /
@@ -111,13 +184,8 @@ def apply_substring_dedup_batch(
             .select(F.col(id_col), F.col("pos"))
         )
         deduped = scrub_marked_occurrences(base, dup_occ, window, id_col)
-        # per-batch subdirs: a replayed batch overwrites its own output
-        # and gram shard — idempotent, and the index is never read and
-        # appended in the same directory listing
-        deduped.write.mode("overwrite").parquet(f"{out_dir}/docs_{batch_id}")
-        firsts.select("w").write.mode("overwrite").parquet(
-            f"{index_dir}/grams_{batch_id}"
-        )
+        _commit_shard(index_dir, f"grams_{batch_id}", firsts.select("w"))
+        _commit_shard(out_dir, f"docs_{batch_id}", deduped)
     finally:
         firsts.unpersist()
 
@@ -138,7 +206,7 @@ def stream_substring_dedup(
 
     The (checkpoint_dir, index_dir, out_dir) triple is ONE unit of
     state: batch ids are unique per checkpoint, so pairing a fresh
-    checkpoint with an existing index/output would overwrite the
+    checkpoint with an existing index/output would replace the
     earliest batch subdirs — recover by reusing the checkpoint, never
     by replacing it."""
     schema = spark.read.parquet(docs_dir).schema
@@ -154,89 +222,3 @@ def stream_substring_dedup(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def compact_gram_index(
-    spark: SparkSession, index_dir: str, upto_batch_id: int
-) -> int:
-    """The documented "compact periodically" maintenance job, as code
-    (VERDICT r9 item 8): merge every gram shard with batch id <
-    ``upto_batch_id`` into ONE distinct-gram shard, bounding the
-    fold's union cost at O(1 merged + recent shards) instead of
-    O(ticks). Ticks write their full distinct-gram set (simple,
-    replay-idempotent), so grams repeat across shards and the raw
-    ledger grows with ticks even when the gram population doesn't —
-    this job reclaims that.
-
-    Pass the latest CHECKPOINT-COMMITTED batch id: shards >=
-    ``upto_batch_id`` are untouched, so the one batch that can ever
-    replay (the latest, if its commit crashed) still finds the
-    pre-batch state and still excludes its own shard.
-
-    Crash-safe by idempotent redundancy, never by a delete-first
-    window: (1) the merged distinct union writes to a tmp name
-    the loader never matches; (2) one atomic rename publishes it as
-    ``grams_merged_<maxid>_g<gen>`` (matched by the loader's
-    ``grams_`` prefix, never matched by an ``exclude_batch_id``, and
-    the generation counter — one past the highest among the sources —
-    guarantees the published name NEVER collides with a source, so no
-    source is ever deleted before the merged copy is live); (3) only
-    then are the source shards deleted one by one. A crash at ANY
-    point leaves the loaded union a superset-with-duplicates of the
-    true gram set — and ``load_gram_index`` distincts — so correctness
-    never depends on completing the sweep; the next compaction absorbs
-    leftovers (merged shards with maxid < upto re-merge like plain
-    ones). Returns the number of shards merged (0 = nothing to do)."""
-    import os
-    import shutil
-
-    def parse(name: str) -> tuple[int, int] | None:
-        """(batch id, generation) of a shard name, else None."""
-        if name.startswith("grams_merged_"):
-            tail = name[len("grams_merged_"):]
-            parts = tail.split("_g")
-            if (
-                len(parts) == 2
-                and parts[0].isdigit()
-                and parts[1].isdigit()
-            ):
-                return int(parts[0]), int(parts[1])
-            return None
-        if name.startswith("grams_"):
-            tail = name[len("grams_"):]
-            return (int(tail), 0) if tail.isdigit() else None
-        return None
-
-    try:
-        entries = sorted(os.listdir(index_dir))
-    except FileNotFoundError:
-        return 0
-    merge = [
-        d for d in entries if (p := parse(d)) is not None and p[0] < upto_batch_id
-    ]
-    if len(merge) < 2:
-        return 0
-    max_id = max(parse(d)[0] for d in merge)
-    gen = 1 + max(parse(d)[1] for d in merge)
-    # any name without the "grams_" prefix is invisible to the loader;
-    # an UNHIDDEN tmp name keeps the verification read off Spark's
-    # hidden-path filter (dot/underscore prefixes warn and are
-    # version-fragile there)
-    tmp = os.path.join(index_dir, "compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    paths = [os.path.join(index_dir, d) for d in merge]
-    merged = spark.read.parquet(*paths).select("w").distinct()
-    merged.write.mode("overwrite").parquet(tmp)
-    n_src = spark.read.parquet(*paths).select("w").distinct().count()
-    n_tmp = spark.read.parquet(tmp).count()
-    if n_tmp != n_src:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compact_gram_index: merged shard row count {n_tmp} != "
-            f"source distinct count {n_src}; aborted, sources kept"
-        )
-    dst = os.path.join(index_dir, f"grams_merged_{max_id}_g{gen}")
-    os.replace(tmp, dst)
-    for d in merge:
-        shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
-    return len(merge)

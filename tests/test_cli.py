@@ -257,7 +257,7 @@ def test_cli_delete(spark, tmp_path):
         [(i, i % 3, f"d{i % 2}") for i in range(12)],
         "id long, user long, day string",
     )
-    sinks.write_partitioned(df, path, ["day"])
+    sinks.merge_into_partitioned(df, path, keys=["id"], partition_col="day")
     main(["delete", "--path", path, "--where", "user = 1",
           "--partition-col", "day"])
     assert spark.read.parquet(path).filter("user = 1").count() == 0

@@ -6,7 +6,7 @@ from __future__ import annotations
 import __spark_entry__ as entrymod
 import bench
 
-# Round 4 closed the rows-only class: the approximate family
+# No rows-only queries: the approximate family
 # (q90/q91/q93/q94/q109/q117) is gated via in-plan property checks
 # whose expected values are plain SQL, so EVERY query is oracle-backed.
 ROWS_ONLY: set[str] = set()
@@ -25,8 +25,8 @@ def test_bench_covers_every_query():
 def test_baseline_covers_every_query():
     """Every registered query carries a committed sf0.1 baseline —
     without one a perf regression is invisible to bench.py's flag
-    pass (the round-8 q193/q194 wiring gap, closed via
-    tools/certify.wiring_check; this is the pytest-side witness)."""
+    pass (``tools/certify.wiring_check`` is the tool-side twin of this
+    check)."""
     import json
     import os
 
@@ -50,30 +50,23 @@ def test_gate_prefix_rotation_invariants():
     """The driver certifies only the FIRST 50 queries() entries — pin
     the rotation rules so a reorder can't silently waste the gate:
     at least 50 entries, every prefix entry oracle-backed, the
-    composite pipelines (q92/q37) re-certified every round, and the
-    round-8 rotation itself: the three round-7 additions q186–q188
-    (the only registry entries with zero driver rows), plus every
-    plan round 8 touched — q175/q87 (sticky per-sweep overflow flags
-    + measured per-sweep localCheckpoint default) and q51/q119
-    (resolve_dup_clusters non-convergence guard). Nothing the driver
-    has never checked sits past the cap."""
+    composite pipelines (q92/q37) always in the prefix, and the
+    queries that must be certified next in a certified slot."""
     names = list(entrymod.queries())
     assert len(names) >= 50
     prefix = set(names[:50])
     assert "q92_feature_pipeline" in prefix
     assert "q37_ingest_pipeline" in prefix
-    # round 4 closed this: every prefix entry has an oracle (the
-    # approximate family via property gates)
+    # every prefix entry has an oracle (the approximate family via
+    # property gates)
     osql = set(entrymod.oracle_sql())
     assert all(n in osql for n in prefix), sorted(prefix - osql)
-    # round-12 contract: the never-certified round-12 registrations
-    # (q234–q236, staged in r11), every plan round 12 touches
+    # must occupy certified slots: the newest registrations
+    # (q234–q237), the plans changed since their last certification
     # (graph.py connected_components eager snapshot release →
     # q187/q189; market.py prepared_stats threshold guard →
     # q79/q213; q198/q199 degree_assortativity factoring + prepared
-    # support edges), and the round-5 cohort — the stalest driver
-    # rows in the registry (VERDICT r11 item 3) — must occupy
-    # certified slots
+    # support edges), and the queries with the stalest driver rows
     must_certify = {
         "q234_", "q235_", "q236_", "q237_",
         "q187_", "q189_", "q79_", "q213_", "q198_", "q199_",
@@ -146,3 +139,41 @@ def test_every_package_module_is_reachable_from_an_entry_point():
             seen.add(name)
             todo |= imported(name, modules[name])
     assert sorted(set(modules) - seen) == []
+
+
+def test_no_package_write_overwrites_in_place():
+    """No package module calls ``.mode("overwrite")`` (or passes
+    ``mode="overwrite"``): every write that replaces data is staged and
+    swapped in by ``sinks._commit``, so a crash mid-write leaves the
+    old or the new version, never a half-written one. Static (stdlib
+    ``ast``), so it needs no Spark."""
+    import ast
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "big_data_project_datapipeline_spark")
+
+    def overwrite(node):
+        if not isinstance(node, ast.Call):
+            return False
+        args = list(node.args) if (
+            isinstance(node.func, ast.Attribute) and node.func.attr == "mode"
+        ) else []
+        args += [k.value for k in node.keywords if k.arg == "mode"]
+        return any(
+            isinstance(a, ast.Constant) and a.value == "overwrite" for a in args
+        )
+
+    found = []
+    for dirpath, _, files in os.walk(pkg):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read())
+                found += [
+                    f"{os.path.relpath(path, repo)}:{node.lineno}"
+                    for node in ast.walk(tree)
+                    if overwrite(node)
+                ]
+    assert found == [], found

@@ -12,6 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark import sinks
+from big_data_project_datapipeline_spark.streaming.dedup import (
+    apply_substring_dedup_batch,
+    compact_gram_index,
+    load_gram_index,
+)
 
 UTC = dt.timezone.utc
 
@@ -90,91 +95,17 @@ def test_partition_pruning_on_read(spark, tmp_path):
     """A date filter over the partitioned sink must prune at the partition
     level (PartitionFilters in the scan, not a post-scan filter) — this is
     the reference's F1 'filter to yesterday' made O(day) at 100 TB."""
-    from big_data_project_datapipeline_spark.sinks import write_partitioned
-
     path = str(tmp_path / "store")
     df = spark.createDataFrame(
         [(i, f"2024-01-{1 + i % 3:02d}", float(i)) for i in range(30)],
         "id long, d string, v double",
     )
-    write_partitioned(df, path, ["d"])
+    sinks.merge_into_partitioned(df, path, keys=["id"], partition_col="d")
     q = spark.read.parquet(path).filter(F.col("d") == "2024-01-02")
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(d" in plan
     # pruned scan reads exactly the one partition's rows
     assert q.count() == 10
-
-
-def test_sorted_write_produces_disjoint_file_ranges(spark, tmp_path):
-    """write_sorted_for_skipping: per-file min/max ranges on the sort key
-    must be (near-)disjoint so footer stats can prune files; a plain
-    round-robin write of the same data has overlapping ranges."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from big_data_project_datapipeline_spark.sinks import (
-        write_sorted_for_skipping,
-    )
-    from big_data_project_datapipeline_spark.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    out = str(tmp_path / "skip")
-    write_sorted_for_skipping(ev, out, ["user_id"], target_files=4)
-
-    ranges = []
-    for f in sorted(glob.glob(out + "/part-*.parquet")):
-        md = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.row_group(rg).num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "user_id"
-            )
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) >= 2
-    # consecutive file ranges must not interleave: each file owns its slice
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, (hi1, lo2)
-    # and the data survives intact
-    assert spark.read.parquet(out).count() == ev.count()
-
-
-def test_write_zorder_prunes_both_columns(spark, tmp_path):
-    """Each z-ordered file must own a small hyper-rectangle: per-file
-    footer ranges on BOTH interleaved columns are a fraction of the
-    global span (a plain sort leaves the trailing column unprunable)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from big_data_project_datapipeline_spark.sinks import write_zorder
-
-    df = spark.range(0, 4096).selectExpr(
-        "id % 64 as a", "cast(id / 64 as long) as b", "id as payload"
-    )
-    path = str(tmp_path / "z")
-    write_zorder(df, path, ["a", "b"], target_files=16, bits=6)
-    files = glob.glob(path + "/*.parquet")
-    assert len(files) == 16
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        mins = {"a": 10**9, "b": 10**9}
-        maxs = {"a": -(10**9), "b": -(10**9)}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                if name in mins:
-                    mins[name] = min(mins[name], col.statistics.min)
-                    maxs[name] = max(maxs[name], col.statistics.max)
-        # 16 files over a 64×64 grid → 16×16 tiles: both spans bounded
-        assert maxs["a"] - mins["a"] <= 16
-        assert maxs["b"] - mins["b"] <= 16
 
 
 def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
@@ -225,27 +156,6 @@ def test_compact_parquet_preserves_hive_partitions(spark, tmp_path):
     assert not glob.glob(str(tmp_path / "store.*"))
 
 
-def test_zorder_value_guards():
-    import pytest
-
-    from big_data_project_datapipeline_spark.sinks import zorder_value
-
-    with pytest.raises(ValueError, match="exceeds 63"):
-        zorder_value(None, ["a", "b", "c", "d"], bits=16)
-    with pytest.raises(ValueError, match="at least one column"):
-        zorder_value(None, [], bits=16)
-
-
-def test_zorder_value_empty_input_raises(spark):
-    import pytest
-
-    from big_data_project_datapipeline_spark.sinks import zorder_value
-
-    empty = spark.range(0).selectExpr("id AS a", "id AS b")
-    with pytest.raises(ValueError, match="no min/max"):
-        zorder_value(empty, ["a", "b"], bits=8)
-
-
 def test_training_shards_manifest_and_determinism(spark, tmp_path):
     import hashlib
     import os
@@ -289,7 +199,7 @@ def test_delete_where_touches_only_matching_partitions(spark, tmp_path):
         [(i, i % 4, f"d{i % 3}") for i in range(60)],
         "id long, user long, day string",
     )
-    sinks.write_partitioned(df, path, ["day"])
+    sinks.merge_into_partitioned(df, path, keys=["id"], partition_col="day")
     # snapshot untouched partition's file listing + mtimes
     def files_of(day):
         d = os.path.join(path, f"day={day}")
@@ -306,7 +216,7 @@ def test_delete_where_touches_only_matching_partitions(spark, tmp_path):
     extra = spark.createDataFrame(
         [(100, 2, "clean"), (101, 3, "clean")], "id long, user long, day string"
     )
-    sinks.write_partitioned(extra, path, ["day"])
+    sinks.merge_into_partitioned(extra, path, keys=["id"], partition_col="day")
     clean_before = files_of("clean")
     n = sinks.delete_where(
         spark, path, F.col("user") == 1, partition_col="day"
@@ -338,7 +248,7 @@ def test_delete_where_fully_matching_partition_and_nulls(spark, tmp_path):
         ],
         "id long, user long, day string",
     )
-    sinks.write_partitioned(df, path, ["day"])
+    sinks.merge_into_partitioned(df, path, keys=["id"], partition_col="day")
     n = sinks.delete_where(
         spark, path, F.col("user") == 1, partition_col="day"
     )
@@ -357,7 +267,7 @@ def test_merge_into_partitioned_null_partition_preserved(spark, tmp_path):
     first = spark.createDataFrame(
         [(1, "a", "d1"), (2, "b", None)], "k long, v string, date string"
     )
-    sinks.write_partitioned(first, path, ["date"])
+    sinks.merge_into_partitioned(first, path, keys=["k"], partition_col="date")
     new = spark.createDataFrame([(3, "c", None)], "k long, v string, date string")
     sinks.merge_into_partitioned(new, path, keys=["k"], partition_col="date")
     got = sorted((r.k, r.v) for r in spark.read.parquet(path).collect())
@@ -370,33 +280,55 @@ def test_delete_where_null_partition_rows(spark, tmp_path):
         [(1, 1, None), (2, 2, None), (3, 1, "d1")],
         "id long, user long, date string",
     )
-    sinks.write_partitioned(df, path, ["date"])
+    sinks.merge_into_partitioned(df, path, keys=["id"], partition_col="date")
     n = sinks.delete_where(spark, path, F.col("user") == 1, "date")
     assert n == 2  # the null-partition subject row is found and purged
     assert sorted(r.id for r in spark.read.parquet(path).collect()) == [2]
 
 
-def test_training_shards_null_doc_id_rejected(spark, tmp_path):
-    import pytest
+def _tree_bytes(root):
+    """Every file under ``root``, by relative path, with its bytes."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
 
+
+def test_training_shards_null_doc_id_rejected(spark, tmp_path):
+    # a rejected export must leave the last good one, manifest included,
+    # byte for byte as it was
+    root = str(tmp_path / "x")
+    good = spark.createDataFrame(
+        [(2, "good text"), (3, "more good text")], "doc_id long, text string"
+    )
+    sinks.write_training_shards(good, root, n_shards=2)
+    before = _tree_bytes(root)
     df = spark.createDataFrame(
         [(None, "some text"), (1, "more text")], "doc_id long, text string"
     )
     with pytest.raises(ValueError, match="null doc ids"):
-        sinks.write_training_shards(df, str(tmp_path / "x"), n_shards=2)
+        sinks.write_training_shards(df, root, n_shards=2)
+    assert _tree_bytes(root) == before
+    assert not os.path.exists(root + sinks._STAGING)
 
 
 # --- crash windows of the staged rename-swap commit -----------------------
 #
-# Each site is (build, op, store, whole): build(spark, root) writes the
-# state the operation starts from under root, op(spark, root) runs it,
-# store is the committed directory relative to root, and whole says
-# whether the commit swaps the whole store or key=value partition dirs.
+# Each site is (build, op, store, whole, snapshot): build(spark, root)
+# writes the state the operation starts from under root, op(spark, root)
+# runs it, store is the committed directory relative to root, whole says
+# whether the commit swaps the whole store or named subdirs of it, and
+# snapshot(spark, store) is what an uninterrupted run must match.
 
 
 def _merge_build(spark, root):
     days = _mk(spark, [(ts(d, 0), float(d)) for d in (1, 2, 3)])
-    sinks.write_partitioned(days, f"{root}/store", ["date"])
+    sinks.merge_into_partitioned(
+        days, f"{root}/store", keys=["datetime"], partition_col="date"
+    )
 
 
 def _merge_op(spark, root):
@@ -439,11 +371,69 @@ def _compact_op(spark, root):
     sinks.compact_parquet(spark, f"{root}/store")
 
 
+def _tick(spark, root, t):
+    rows = [(t * 10 + i, f"t{t} w{i} x y z") for i in range(3)]
+    rows.append((t * 10 + 3, "a b c d"))  # repeats tick 0's first doc
+    apply_substring_dedup_batch(
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        t, f"{root}/index", f"{root}/out", window=3,
+    )
+
+
+def _gram_build(spark, root):
+    for t in range(4):
+        _tick(spark, root, t)
+
+
+def _gram_compact_op(spark, root):
+    # merges grams_0..grams_2 into grams_2; grams_3 is past the bound.
+    # After a crash once the merged shard is in, the two restored
+    # sources sit beside it and the rerun merges all three again
+    assert compact_gram_index(spark, f"{root}/index", upto_batch_id=3) == 3
+
+
+def _tick_build(spark, root):
+    for t in range(2):
+        _tick(spark, root, t)
+
+
+def _tick_op(spark, root):
+    # the tick commits its gram shard, then its docs: a crash in the
+    # gram commit leaves docs_2 unwritten, as the build has it
+    _tick(spark, root, 2)
+
+
+def _snapshot(spark, store):
+    rows = sorted(map(repr, spark.read.parquet(store).collect()))
+    files = {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(store, d)))
+        for d in os.listdir(store)
+        if "=" in d
+    }
+    return rows, files
+
+
+def _gram_snapshot(spark, store):
+    """The loaded gram set, the shard names and the deduped docs."""
+    docs = os.path.join(os.path.dirname(store), "out", "docs_*")
+    return (
+        sorted(r.w for r in load_gram_index(spark, store).collect()),
+        sorted(os.listdir(store)),
+        sorted(map(repr, spark.read.parquet(docs).collect())),
+    )
+
+
 _SITES = {
-    "merge_two_dates": (_merge_build, _merge_op, "store", False),
-    "delete_empties_partition": (_delete_build, _delete_op, "store", False),
-    "promote_overwrite": (_promote_build, _promote_op, "store", True),
-    "compact_parquet": (_compact_build, _compact_op, "store", True),
+    "merge_two_dates": (_merge_build, _merge_op, "store", False, _snapshot),
+    "delete_empties_partition": (
+        _delete_build, _delete_op, "store", False, _snapshot
+    ),
+    "promote_overwrite": (_promote_build, _promote_op, "store", True, _snapshot),
+    "compact_parquet": (_compact_build, _compact_op, "store", True, _snapshot),
+    "compact_gram_index": (
+        _gram_build, _gram_compact_op, "index", False, _gram_snapshot
+    ),
+    "dedup_tick": (_tick_build, _tick_op, "index", False, _gram_snapshot),
 }
 # the states a commit can stop in, in the order it passes them:
 # staged      - the new data is in staging, nothing live has moved
@@ -458,6 +448,10 @@ _WINDOWS = {
     # one replaced dir (the store): backing_up is backed_up, swapping is swapped
     "promote_overwrite": ("staged", "backed_up", "swapped"),
     "compact_parquet": ("staged", "backed_up", "swapped"),
+    # one staged dir (the merged shard): swapping is swapped
+    "compact_gram_index": ("staged", "backing_up", "backed_up", "swapped"),
+    # a new shard: nothing to back up, one staged dir
+    "dedup_tick": ("staged", "backed_up", "swapped"),
 }
 
 
@@ -480,8 +474,7 @@ def _leave_crash_state(store, after, whole, window):
         names = sorted(
             d
             for d in set(os.listdir(store)) | set(os.listdir(after))
-            if "=" in d
-            and _listing(os.path.join(store, d))
+            if _listing(os.path.join(store, d))
             != _listing(os.path.join(after, d))
         )
         os.makedirs(staging)
@@ -509,16 +502,6 @@ def _leave_crash_state(store, after, whole, window):
         os.rename(stage, live)
 
 
-def _snapshot(spark, store):
-    rows = sorted(map(repr, spark.read.parquet(store).collect()))
-    files = {
-        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(store, d)))
-        for d in os.listdir(store)
-        if "=" in d
-    }
-    return rows, files
-
-
 @pytest.fixture(scope="module")
 def uninterrupted(spark, tmp_path_factory):
     """Per site: (root before the operation, root after an uninterrupted
@@ -527,7 +510,7 @@ def uninterrupted(spark, tmp_path_factory):
 
     def get(site):
         if site not in runs:
-            build, op, _, _ = _SITES[site]
+            build, op = _SITES[site][:2]
             base = tmp_path_factory.mktemp(site)
             before, after = str(base / "before"), str(base / "after")
             build(spark, before)
@@ -547,13 +530,23 @@ def test_commit_crash_window_recovers(
 ):
     """A process killed in any window of a commit leaves a state from
     which rerunning the same operation yields the uninterrupted store."""
-    _, op, rel, whole = _SITES[site]
+    _, op, rel, whole, snapshot = _SITES[site]
     before, after = uninterrupted(site)
     root = str(tmp_path / "root")
     shutil.copytree(before, root)
     store = os.path.join(root, rel)
     _leave_crash_state(store, os.path.join(after, rel), whole, window)
+    if snapshot is _gram_snapshot:
+        # recovery alone leaves the gram index loading as the old or the
+        # new set: a compaction's sources restored beside its merged
+        # shard are a superset that loads as the same set
+        sinks._recover(store)
+        grams = snapshot(spark, store)[0]
+        assert grams in (
+            snapshot(spark, os.path.join(before, rel))[0],
+            snapshot(spark, os.path.join(after, rel))[0],
+        )
     op(spark, root)
-    assert _snapshot(spark, store) == _snapshot(spark, os.path.join(after, rel))
+    assert snapshot(spark, store) == snapshot(spark, os.path.join(after, rel))
     assert not os.path.exists(store + sinks._STAGING)
     assert not os.path.exists(store + sinks._BACKUP)

@@ -2,7 +2,7 @@
 more docs, drain wave 2 — the union of per-batch outputs must equal the
 corpus-wide q99 dedup on all docs (first-arrival == global keep-first
 when ids are assigned in arrival order), and replaying a batch must
-overwrite, not duplicate, its output and gram shard."""
+replace, not duplicate, its output and gram shard."""
 
 from __future__ import annotations
 
@@ -66,7 +66,7 @@ def test_incremental_equals_global_dedup(spark, tmp_path):
 
 def test_batch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch may re-run a batch after a crash: the same batch_id
-    must overwrite its own subdirs, leaving identical state."""
+    must swap in its own subdirs, leaving identical state."""
     index = str(tmp_path / "index")
     out = str(tmp_path / "out")
 
@@ -79,7 +79,7 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     assert load_gram_index(spark, index).count() == n_grams
 
 
-# ----------------- store GC under compaction (round-10, VERDICT item 8)
+# ----------------- many ticks: the index stays bounded by the tick's own compaction
 
 
 def _tick_docs(base_id, n=4):
@@ -96,87 +96,51 @@ def _tick_docs(base_id, n=4):
 
 
 def test_fifty_tick_run_store_bounded_under_compaction(spark, tmp_path):
-    """The measured many-tick contract (VERDICT r9 item 8): 50 direct
-    ticks with compact_gram_index every 10, pinned structurally —
-    (a) shard count stays bounded by the compaction interval instead
-    of growing O(ticks); (b) the compacted index holds EXACTLY the
-    distinct grams of an uncompacted twin (no loss, no invention);
-    (c) the deduped outputs are bit-identical to the uncompacted
-    twin's tick for tick; (d) replaying the latest tick after a
-    compaction still overwrites idempotently (the kept-shard window
-    is wide enough)."""
+    """50 direct ticks with no compaction scheduled by the caller — every
+    compaction comes from a tick's entry. (a) The shard count stays at
+    most ``_MAX_SHARDS + 1`` instead of growing O(ticks); (b) the index
+    holds exactly the distinct window-grams of every doc seen (no loss,
+    no invention); (c) the union of the per-tick outputs equals the
+    corpus-wide q99 dedup of all 50 ticks' docs (ids rise with arrival
+    order); (d) replaying the latest tick after the compactions gives
+    the same outputs."""
     import os
 
     from big_data_project_datapipeline_spark.streaming.dedup import (
-        compact_gram_index,
+        _MAX_SHARDS,
     )
 
     w = 3
-    idx_a = str(tmp_path / "idx_a")   # compacted
-    out_a = str(tmp_path / "out_a")
-    idx_b = str(tmp_path / "idx_b")   # uncompacted twin
-    out_b = str(tmp_path / "out_b")
-    max_shards = 0
-    for t in range(50):
-        batch = _mk(spark, _tick_docs(t))
-        apply_substring_dedup_batch(batch, t, idx_a, out_a, window=w)
-        apply_substring_dedup_batch(batch, t, idx_b, out_b, window=w)
-        if t and t % 10 == 0:
-            # t is the latest committed tick; compact strictly below it
-            compact_gram_index(spark, idx_a, upto_batch_id=t)
-        max_shards = max(max_shards, len(os.listdir(idx_a)))
-    # (a) bounded: 1 merged + <= 10 recent + a possible tmp leftover,
-    # vs the twin's 50
-    assert max_shards <= 13, max_shards
-    assert len(os.listdir(idx_b)) == 50
-    # (b) identical gram population
-    ga = {r["w"] for r in load_gram_index(spark, idx_a).collect()}
-    gb = {r["w"] for r in load_gram_index(spark, idx_b).collect()}
-    assert ga == gb and len(ga) > 0
-    # (c) identical deduped outputs
-    assert _out_rows(spark, out_a) == _out_rows(spark, out_b)
-    # (d) replay of the latest tick against the compacted index
-    apply_substring_dedup_batch(
-        _mk(spark, _tick_docs(49)), 49, idx_a, out_a, window=w
-    )
-    assert _out_rows(spark, out_a) == _out_rows(spark, out_b)
-
-
-def test_compact_gram_index_crash_window_is_superset_safe(spark, tmp_path):
-    """Kill the sweep between publish and source deletion (simulated by
-    re-listing mid-state): a published merged shard coexisting with its
-    sources must load as the same distinct gram set, and a re-run
-    compaction absorbs both."""
-    import os
-
-    from big_data_project_datapipeline_spark.streaming.dedup import (
-        compact_gram_index,
-    )
-
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
-    for t in range(4):
+    rows = []
+    max_shards = 0
+    for t in range(50):
+        rows += _tick_docs(t)
         apply_substring_dedup_batch(
-            _mk(spark, _tick_docs(t)), t, idx, out, window=3
+            _mk(spark, _tick_docs(t)), t, idx, out, window=w
         )
-    before = {r["w"] for r in load_gram_index(spark, idx).collect()}
-    # simulate the crash window: publish the merged shard but keep the
-    # sources (copy them aside and restore after a real compaction)
-    import shutil
-
-    saved = str(tmp_path / "saved")
-    shutil.copytree(idx, saved)
-    assert compact_gram_index(spark, idx, upto_batch_id=3) == 3
-    for d in os.listdir(saved):
-        if not os.path.exists(os.path.join(idx, d)):
-            shutil.copytree(
-                os.path.join(saved, d), os.path.join(idx, d)
-            )
-    # superset-with-duplicates state: loader still returns the set
-    mid = {r["w"] for r in load_gram_index(spark, idx).collect()}
-    assert mid == before
-    # second sweep absorbs the leftovers (merged shard + restored
-    # sources merge together; generation counter avoids collision)
-    assert compact_gram_index(spark, idx, upto_batch_id=3) == 4
-    after = {r["w"] for r in load_gram_index(spark, idx).collect()}
-    assert after == before
+        max_shards = max(max_shards, len(os.listdir(idx)))
+    # (a) bounded by the tick's compaction, vs 50 uncompacted shards
+    assert max_shards <= _MAX_SHARDS + 1, max_shards
+    # (b) the gram population of the union
+    want_grams = {
+        " ".join(toks[i : i + w])
+        for _, text in rows
+        for toks in [text.lower().split()]
+        for i in range(len(toks) - w + 1)
+    }
+    got_grams = {r["w"] for r in load_gram_index(spark, idx).collect()}
+    assert got_grams == want_grams
+    # (c) first arrival wins == global keep-first over the union
+    want = {
+        r["doc_id"]: (r["n_tokens"], r["n_removed"], r["text_dedup"])
+        for r in exact_substring_dedup(_mk(spark, rows), window=w).collect()
+    }
+    got = _out_rows(spark, out)
+    assert got == want
+    # (d) replay of the latest tick against the compacted index
+    apply_substring_dedup_batch(
+        _mk(spark, _tick_docs(49)), 49, idx, out, window=w
+    )
+    assert _out_rows(spark, out) == want
