@@ -41,7 +41,10 @@ from big_data_project_datapipeline_spark.functions.quality import (
     completeness_warnings,
     observe_quality,
 )
-from big_data_project_datapipeline_spark.plans.features import incremental_feature_run
+from big_data_project_datapipeline_spark.plans.features import (
+    feature_delta,
+    incremental_feature_run,
+)
 from big_data_project_datapipeline_spark.plans.ingest import (
     day_grid,
     merge_all_sources,
@@ -147,7 +150,12 @@ def run_ingest(
 
 
 def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
-    """Incremental feature run over the raw store; parquet + CSV outputs."""
+    """Incremental feature run over the raw store; parquet + CSV outputs.
+
+    The delta is persisted for the run, so the empty check, the scaler
+    fit and the write share one execution of it; it is released once
+    the commit ends. The table's row count rides the write as an
+    observation."""
     t0 = time.monotonic()
     raw = spark.read.parquet(store).drop("date")
     prev_path = os.path.join(out_dir, "features.parquet")
@@ -158,15 +166,23 @@ def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
         previous = spark.read.parquet(prev_path)
     else:  # bootstrap: no previous output yet
         previous = raw.limit(0).select("datetime")
-    features = incremental_feature_run(raw, previous)
-    # the plan reads prev_path → staged swap (sinks.promote_overwrite)
-    promote_overwrite(features, prev_path)
-    out = spark.read.parquet(prev_path)
+    # incremental_feature_run builds this same delta plan, so its empty
+    # check, scaler fit and write all read this one cached execution
+    delta = feature_delta(raw, previous).cache()
+    try:
+        features, obs = observe_quality(
+            incremental_feature_run(raw, previous), "features", []
+        )
+        # the plan reads prev_path → staged swap (sinks.promote_overwrite)
+        promote_overwrite(features, prev_path)
+    finally:
+        delta.unpersist(blocking=True)
+    out = spark.read.schema(features.schema).parquet(prev_path)
     export_csv(out, os.path.join(out_dir, "engineered_data.csv"))
     write_metrics_json(
         {
             "last_run": dt.datetime.now(dt.timezone.utc).isoformat(),
-            "rows": out.count(),
+            "rows": obs.get["row_count"],
             "columns": len(out.columns),
             "features_seconds": round(time.monotonic() - t0, 3),
         },

@@ -14,16 +14,25 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from big_data_project_datapipeline_spark.schemas import quote_ident
+
 
 def null_count(c: str):
-    """A2: ``count(when(isnull(c), 1))`` — one expression per column."""
-    return F.count(F.when(F.col(c).isNull(), F.lit(1))).alias(f"missing_{c}")
+    """A2: ``count(when(isnull(c), 1))`` — one expression per column,
+    parsed from SQL text in one py4j call."""
+    return F.expr(
+        f"count(CASE WHEN {quote_ident(c)} IS NULL THEN 1 END) "
+        f"AS {quote_ident('missing_' + c)}"
+    )
+
+
+_ROW_COUNT = "count(1) AS row_count"
 
 
 def quality_aggregates(df: DataFrame, cols: Sequence[str] | None = None):
     """One-job quality summary: total rows, per-column nulls, key range."""
     cols = list(cols or df.columns)
-    aggs = [F.count(F.lit(1)).alias("row_count")] + [null_count(c) for c in cols]
+    aggs = [F.expr(_ROW_COUNT)] + [null_count(c) for c in cols]
     return df.agg(*aggs)
 
 
@@ -36,7 +45,7 @@ def observe_quality(
     obs = Observation(name)
     observed = df.observe(
         obs,
-        F.count(F.lit(1)).alias("row_count"),
+        F.expr(_ROW_COUNT),
         *[null_count(c) for c in cols],
     )
     return observed, obs

@@ -23,6 +23,8 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_project_datapipeline_spark.schemas import quote_ident
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ in double, sequential left-to-right accumulation."""
@@ -987,7 +989,7 @@ def ivfpq_encode(
     # whole-expression SQL strings, parsed once each (the _sqd_sql
     # r13 device): the per-lambda Column API costs made THIS function
     # a measurable slice of q117's 8.3 s construction
-    v_sql = f"cast(`{vec_col}` as array<double>)"
+    v_sql = f"cast({quote_ident(vec_col)} as array<double>)"
     coarse_d = F.expr(
         f"transform({cents_sql}, c -> {_sqd_sql('__v', 'c')})"
     )
@@ -1052,7 +1054,7 @@ def ivfpq_search(
     # whole-expression SQL strings parsed once (the _sqd_sql r13
     # device) — this constructor was the bulk of q117's measured 8.3 s
     # of per-run py4j plan-construction time
-    qv_sql = f"cast(`{vec_col}` as array<double>)"
+    qv_sql = f"cast({quote_ident(vec_col)} as array<double>)"
     q_coarse_sql = "array(" + ",".join(
         f"struct({_sqd_sql(qv_sql, _dvec_sql(c))} as d, {i} as list)"
         for i, c in enumerate(cents)

@@ -61,10 +61,10 @@ def pagerank(
     ``checkpoint_every=k`` localCheckpoints the rank frame every k
     iterations (the q119 lineage-cap device): the O(nodes) state
     truncates to a LogicalRDD leaf, so the plan stays O(k) deep at
-    any sweep count and old rounds free on GC. Default ON (k=1) per
-    the round-8 interleaved sf0.1 A/B on the q87 co-purchase graph
-    (two sessions, best-of-2 each, clearCache between runs):
-    checkpointed 7.32/5.92 s vs unrolled 7.60/7.69 s best, and the
+    any sweep count. Default ON (k=1): in an interleaved sf0.1 A/B on
+    the q87 co-purchase graph (two sessions, best-of-2 each,
+    clearCache between runs), checkpointed took 7.32/5.92 s best vs
+    unrolled 7.60/7.69 s, and the
     COLD first run is where the unrolled plan really pays — its
     299-Exchange plan string costs planner/codegen time every fresh
     session while the checkpointed plan is 0 post-loop Exchanges.
@@ -75,15 +75,24 @@ def pagerank(
     pure-lineage unrolled plan (ReusedExchange still shares each
     shuffle within the single action, so k=0 only re-pays plan cost,
     not execution).
+
+    Memory: the per-sweep snapshots are lazy, so none can be freed
+    before the caller's action materializes the result, and every one
+    stays pinned until the result is released
+    (``operators.caching.release_caches``) or garbage-collected.
+    Executor storage therefore holds O(``n_iter``) O(nodes) frames at
+    once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
+    deep sweep counts on large graphs, raise ``checkpoint_every`` or
+    run fewer sweeps per call.
     """
-    # One-exchange edge prep (r12/r13, guide §2.4): repartition the
+    # One-exchange edge prep (guide §2.4): repartition the
     # RAW edges on src FIRST, then dedup — hash(src) partitioning
     # satisfies the (src, dst) dedup's clustering requirement, so the
     # aggregate runs partition-local on the one exchange. The
-    # out-degree then comes from a WINDOW over the same partitioning
-    # (r13): the r12 shape derived deg as a SECOND aggregate branch
-    # joined back, counting on ReusedExchange to share the repartition
-    # — but AQE does not reuse it (verified in the executed plan:
+    # out-degree then comes from a WINDOW over the same partitioning.
+    # Deriving deg as a SECOND aggregate branch joined back would count
+    # on ReusedExchange to share the repartition — but AQE does not
+    # reuse it (verified in the executed plan:
     # two independent ShuffleQueryStages, the entire upstream edge
     # build executed twice). count(*) OVER (PARTITION BY src) needs no
     # second branch, no join, and its required sort IS the
@@ -96,8 +105,8 @@ def pagerank(
     # plan's outputPartitioning/outputOrdering, so every iteration's
     # SortMergeJoin skips exchange AND sort on the O(edges) side —
     # only the O(nodes) rank frame shuffles+sorts per sweep. Without
-    # it each sweep re-sorted the edge side: the round-8 sf10
-    # attribution run measured 78 GB of external-sort spill across 3
+    # it each sweep re-sorted the edge side: an sf10 attribution run
+    # measured 78 GB of external-sort spill across 3
     # iterations on the 60M-edge co-purchase graph; the one-time sort
     # at cache fill removes all of it. At gate SFs AQE broadcasts the
     # rank side instead and the sort is simply unused.
@@ -109,8 +118,7 @@ def pagerank(
         # src's total outgoing weight so the unweighted loop body below
         # is reused verbatim (contribution = pr·w/deg with w folded in).
         # Integral weights (recommended, see docstring) keep the window
-        # fold exact like the old aggregate+join; float weights were
-        # order-unspecified in both shapes.
+        # fold exact; float weights sum in unspecified order.
         e = (
             edges.repartition(F.col(src))
             .groupBy(src, dst)
@@ -129,7 +137,7 @@ def pagerank(
             .persist()
         )
     if weight is not None:
-        # Weight validation (ADVICE r8): a NULL weight NULLs the whole
+        # Weight validation: a NULL weight NULLs the whole
         # (src,dst) group sum, NULL/zero totals NULL the contribution
         # (silently dropped from the rank SUM), and negative weights
         # break the stochastic-matrix semantics — all three would ship
@@ -164,8 +172,8 @@ def pagerank(
     # The node count folds in as a LITERAL (one bounded O(1)-output
     # action on the already-persisted node frame) instead of a 1-row
     # crossJoin(broadcast(agg)) referenced by every unrolled iteration —
-    # that shape re-ran the count subtree + a broadcast exchange
-    # n_iter+1 times (round-4 stage-overhead trim, VERDICT item #6).
+    # that shape would re-run the count subtree + a broadcast exchange
+    # n_iter+1 times.
     # Parity: (1-damping)/n and 1/n are IEEE double divisions whether
     # evaluated in Python or in the engine, so ranks are bit-identical
     # to the crossJoin formulation and to the unrolled SQL oracle.
@@ -177,7 +185,7 @@ def pagerank(
         if weight is not None
         else (F.col("pr") / F.col("deg"))
     )
-    # LAZY per-sweep checkpoints (r13): the iteration count is fixed —
+    # LAZY per-sweep checkpoints: the iteration count is fixed —
     # nothing needs a mid-loop action — so the sweeps materialize in
     # dependency order at the CALLER's single terminal action (the
     # kcore_peel device) instead of one eager job + AQE replan cycle
@@ -185,7 +193,8 @@ def pagerank(
     # eager 12.4 s vs lazy 5.8 s first run, 4.7 s both warm — the
     # eager jobs only re-paid driver planning. Plan depth stays O(1)
     # per sweep either way (LogicalRDD leaf). Snapshots ride on the
-    # result and free (blocking) with it.
+    # result and free (blocking) with it — so all n_iter of them stay
+    # pinned until then (see the docstring).
     snaps: list[DataFrame] = []
     for _i in range(n_iter):
         contrib = (
@@ -217,7 +226,8 @@ def pagerank(
     # slower at sf0.1, so instead their release is tied to the result's
     # lifetime (auto on GC, or operators.caching.release_caches for
     # explicit control) — as are the sweep snapshots the result's plan
-    # reads (round-12 cross-run accumulation fix).
+    # reads, which would otherwise drain only via ContextCleaner GC and
+    # accumulate across runs.
     return attach_cache_release(out, (e, nodes), snapshots=snaps)
 
 
@@ -243,16 +253,25 @@ def personalized_pagerank(
     0 elsewhere; pr_0 = r; each sweep pr = (1-d)·r + d·M·pr with the
     same simplified-textbook dangling treatment, decimal(28,12)
     contribution accumulation, co-partitioned+sorted persisted edge
-    frame, and per-sweep localCheckpoint default as :func:`pagerank`
-    (all the round-8 adjudications inherit). |S| folds in as a
-    literal from one bounded count on the persisted seed-flagged node
-    frame — the q87 node-count device.
+    frame, and per-sweep localCheckpoint default as :func:`pagerank`,
+    for the same measured reasons. |S| folds in as a literal from one
+    bounded count on the persisted seed-flagged node frame — the q87
+    node-count device.
 
     Raises ValueError when no seed is present in the graph (a PPR
     over an empty restart set has no meaning; returning the zero
     vector silently would hide a wiring bug upstream).
+
+    Memory: the per-sweep snapshots are lazy, so none can be freed
+    before the caller's action materializes the result, and every one
+    stays pinned until the result is released
+    (``operators.caching.release_caches``) or garbage-collected.
+    Executor storage therefore holds O(``n_iter``) O(nodes) frames at
+    once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
+    deep sweep counts on large graphs, raise ``checkpoint_every`` or
+    run fewer sweeps per call.
     """
-    # one-exchange edge prep with window out-degree — see pagerank (r13)
+    # one-exchange edge prep with window out-degree — see pagerank
     from pyspark.sql import Window
 
     e = (
@@ -274,8 +293,8 @@ def personalized_pagerank(
     )
     ns = nodes.agg(F.sum("__seed").alias("s")).first()["s"] or 0
     if ns == 0:
-        # release before raising (ADVICE r8): the error path must not
-        # leak the two persisted frames for the session lifetime
+        # release before raising: the error path must not leak the two
+        # persisted frames for the session lifetime
         e.unpersist()
         nodes.unpersist()
         raise ValueError(
@@ -287,7 +306,7 @@ def personalized_pagerank(
         F.col("__seed") == 1, F.lit(1.0 / ns)
     ).otherwise(F.lit(0.0))
     ranks = nodes.select("node", restart.alias("pr"))
-    snaps: list[DataFrame] = []  # lazy sweep snapshots — see pagerank (r13)
+    snaps: list[DataFrame] = []  # lazy sweep snapshots — see pagerank
     for _i in range(n_iter):
         contrib = (
             e.join(ranks.withColumnRenamed("node", src), src)
@@ -343,15 +362,15 @@ def hits(
     order-independence device — partition order cannot wiggle bits)
     and Spark/DuckDB both widen the SUM to (38,12), so 3 sweeps stay
     exact-representable up to ~1e12-degree-product graphs. That bound
-    is ENFORCED, not just documented (ADVICE r5): with ``n_iter > 3``
+    is ENFORCED, not just documented: with ``n_iter > 3``
     the hub frame is L1-normalized after every sweep (one bounded
     action per sweep; the scalar folds in as a literal, so the final
     direction is unchanged in exact arithmetic), and overflow-to-NULL
     under non-ANSI execution is detected EXACTLY via a sticky
-    per-node overflow flag threaded through every sweep (ADVICE r7:
-    the previous final-frame presence markers only witnessed NULLs
-    that SURVIVED to the last sweep — an intermediate NULL is dropped
-    by the next sweep's SUM and can heal into depressed-but-non-NULL
+    per-node overflow flag threaded through every sweep (presence
+    markers on the final frame alone would witness only NULLs that
+    SURVIVED to the last sweep — an intermediate NULL is dropped by
+    the next sweep's SUM and can heal into depressed-but-non-NULL
     final scores). The flag costs one int column and two expressions
     per sweep — zero extra jobs: a contribution row is flagged when
     its input score is NULL, already-flagged, or NULLed by the
@@ -374,10 +393,9 @@ def hits(
     ~7 s warm at sf0.1 for 3 sweeps.
 
     ``checkpoint_every=1`` (default) localCheckpoints the hub frame
-    after every sweep — the q119 lineage-cap device, adjudicated for
-    HITS by the round-8 interleaved sf0.1 A/B (two sessions,
-    best-of-2 each, clearCache between runs): plan string 749 → 89
-    Exchanges, warm best 8.87/7.61 s vs unrolled 9.26/7.62 s, and the
+    after every sweep — the q119 lineage-cap device. An interleaved
+    sf0.1 A/B (two sessions, best-of-2 each, clearCache between
+    runs) measured: plan string 749 → 89 Exchanges, warm best 8.87/7.61 s vs unrolled 9.26/7.62 s, and the
     COLD first run falls 14.7/13.5 s → 8.9/8.7 s because the
     749-Exchange unrolled plan re-pays planner/codegen every fresh
     session (execution itself was already shared via ReusedExchange —
@@ -386,6 +404,15 @@ def hits(
     without bound; the checkpointed plan stays O(1). k=0 restores the
     pure-lineage shape; on clusters with preemptible executors swap
     in ``setCheckpointDir`` + ``.checkpoint()``.
+
+    Memory: the per-sweep snapshots are lazy, so none can be freed
+    before the caller's action materializes the result, and every one
+    stays pinned until the result is released
+    (``operators.caching.release_caches``) or garbage-collected.
+    Executor storage therefore holds O(``n_iter``) O(nodes) frames at
+    once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
+    deep sweep counts on large graphs, raise ``checkpoint_every`` or
+    run fewer sweeps per call.
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
@@ -430,7 +457,7 @@ def hits(
     auths = None
     per_sweep_norm = n_iter > 3
     sweep_persists: list[DataFrame] = []
-    snaps: list[DataFrame] = []  # lazy sweep snapshots — see pagerank (r13)
+    snaps: list[DataFrame] = []  # lazy sweep snapshots — see pagerank
 
     def _sweep(ed, key, out_node, score_in, ovf_in, score_out, ovf_out):
         # One half-sweep with the sticky overflow flag: a contribution
@@ -488,8 +515,8 @@ def hits(
         ckpted = checkpoint_every and (_i + 1) % checkpoint_every == 0
         if ckpted:
             # lazy — the sweeps materialize in dependency order at the
-            # post-loop bounded action (see pagerank r13; cold-path
-            # job/replan cost, not execution, is what eagerness paid)
+            # post-loop bounded action (see pagerank; cold-path
+            # job/replan cost, not execution, is what eagerness pays)
             hubs = hubs.localCheckpoint(eager=False)
             snaps.append(hubs)
         if per_sweep_norm:
@@ -519,8 +546,8 @@ def hits(
     # The sticky __hovf/__aovf flags arrive here having witnessed
     # EVERY overflow-to-NULL event across all sweeps (including
     # intermediate ones that healed into depressed-but-non-NULL final
-    # scores — the ADVICE r7 hole in the old final-frame presence
-    # markers). A left-join miss is a node with no in/out edges —
+    # scores, which final-frame presence markers would miss). A
+    # left-join miss is a node with no in/out edges —
     # score exactly 0, no sweep ever touched it — so its flag
     # coalesces to 0.
     state = (
@@ -611,7 +638,7 @@ def connected_components(
     Scale shape: the symmetrized edge list is repartitioned on the
     join key once and persisted (every round's propagate joins it —
     the pagerank device); per-round state is O(nodes) and is
-    ``localCheckpoint``ed (round-7 finding: per-round caching cannot
+    ``localCheckpoint``ed (per-round caching cannot
     bound the unrolled plan either way — leaked caches nest a level
     per round, correctly-unpersisted caches re-inline upstream
     lineage into dependents), so the plan stays O(1) at any depth;
@@ -621,8 +648,7 @@ def connected_components(
     convergence probe materializes the round it checks.
 
     Raises ``ValueError`` if the fixpoint is not reached within
-    ``max_iters`` rounds (ADVICE r7: exhausting the budget silently
-    returned not-yet-merged labels). Pointer jumping needs ~log2 of
+    ``max_iters`` rounds, rather than return not-yet-merged labels. Pointer jumping needs ~log2 of
     the label-tree depth rounds, so the default 20 covers any graph a
     pathological input short of ~2^20 effective depth; raise
     ``max_iters`` rather than trusting truncated labels.
@@ -634,7 +660,7 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
     )
     # partitioned AND sorted on the per-round join key (the pagerank
-    # round-8 device: the cached ordering lets every round's
+    # device: the cached ordering lets every round's
     # SortMergeJoin skip the O(edges)-side sort)
     sym = (
         e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -652,7 +678,7 @@ def connected_components(
     # handle on the round's snapshot so each superseded round frees
     # EAGERLY (blocking) inside the loop rather than waiting on
     # ContextCleaner GC — bounds executor storage at O(1) rounds and
-    # makes the raise path deterministic (VERDICT r11 item 2)
+    # makes the raise path deterministic
     prev_snap = parent
     for _ in range(max_iters):
         nb_min = (
@@ -693,10 +719,10 @@ def connected_components(
             )
         )
         # The convergence probe RIDES the checkpoint's materialization
-        # job via df.observe (r12): the old separate
-        # filter(...).limit(1).count() was a second O(nodes) action per
-        # round — one job per round instead of two, same decision
-        # (changed > 0), values untouched (observe is a pure metric).
+        # job via df.observe: a separate filter(...).limit(1).count()
+        # would be a second O(nodes) action per round — one job per
+        # round instead of two, same decision (changed > 0), values
+        # untouched (observe is a pure metric).
         obs = Observation()
         jumped = jumped.observe(
             obs,
@@ -714,7 +740,7 @@ def connected_components(
         if changed == 0:
             break
     else:
-        # release before raising (ADVICE r8): the error path must not
+        # release before raising: the error path must not
         # leak the persisted symmetrized edge frame — nor the final
         # round's snapshot (no result escapes, so nothing needs it)
         release_local_checkpoint(prev_snap)
@@ -730,9 +756,9 @@ def connected_components(
         isolated = (
             nodes.select(F.col(node_col).alias("node"))
             # NULL node ids drop, matching the edge path's NULL-endpoint
-            # filter (ADVICE r8: a NULL here emitted a (NULL, NULL)
-            # singleton while the edge path silently dropped NULLs —
-            # inconsistent semantics for the same bad input)
+            # filter (a NULL here would emit a (NULL, NULL) singleton
+            # while the edge path drops NULLs — inconsistent semantics
+            # for the same bad input)
             .filter(F.col("node").isNotNull())
             .distinct()
             .join(parent.select("node"), "node", "left_anti")
@@ -741,7 +767,7 @@ def connected_components(
         out = out.unionByName(isolated)
     # the final round's snapshot backs the result's plan — its blocks
     # free (blocking) with the result instead of draining via
-    # ContextCleaner GC, the round-12 cross-run accumulation fix
+    # ContextCleaner GC and accumulating across runs
     return attach_cache_release(out, (sym,), snapshots=(prev_snap,))
 
 
@@ -766,8 +792,8 @@ def kcore_peel(
     a fixed round count keeps the operator bit-reproducible against a
     round-unrolled SQL twin. With ``check_converged`` (default) a
     final degree pass verifies the fixpoint and raises if one more
-    round would still drop nodes (the round-8 convergence-guard
-    contract: never silently return a not-yet-core superset); peeling
+    round would still drop nodes (the convergence-guard contract:
+    never silently return a not-yet-core superset); peeling
     removes at least one node per non-converged round, so rounds
     needed ≤ nodes, and real graphs converge in a handful.
 
@@ -791,7 +817,7 @@ def kcore_peel(
     # round snapshots ride on the result and free (blocking) with it —
     # lazy checkpoints materialize at the caller's action, so in-loop
     # release has no hook; the guarded release skips any that never
-    # computed (round-12 cross-run accumulation fix)
+    # computed, and none drains only via ContextCleaner GC
     snaps = [cur]
     for _ in range(n_rounds):
         keep = (
@@ -859,11 +885,11 @@ def triangle_count(
     closing semi-join on the oriented edge set — every join is an
     equi-join on edge/vertex keys; no cartesian anywhere. ``canon``
     and ``oriented`` each have 3-4 plan consumers; they are
-    deliberately NOT persisted (VERDICT r6 item #4 adjudication):
+    deliberately NOT persisted:
     Catalyst's ReusedExchange already computes each underlying shuffle
     ONCE and shares its files across all consumers within the single
     materializing action, so only cheap post-shuffle merge/map work
-    repeats — and the round-7 interleaved A/B at sf0.1 measured the
+    repeats — and an interleaved A/B at sf0.1 measured the
     persisted variants consistently SLOWER (5.7-6.0 s vs 4.2-5.3 s;
     cache write+read overhead exceeds the saved recompute, and at
     100 TB an O(edges) cache adds memory pressure the reused shuffle
@@ -1199,7 +1225,7 @@ def bfs_distance(
         .select("node", F.lit(0).cast("int").alias("dist"))
         .localCheckpoint(eager=False)
     )
-    snaps = [sym, dist]  # the kcore_peel round-12 release device
+    snaps = [sym, dist]  # the kcore_peel release device
     frontier = dist.select("node")
     for k in range(1, n_rounds + 1):
         new = (
@@ -1261,7 +1287,7 @@ def label_propagation(
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     ).localCheckpoint(eager=False)
-    snaps = [sym, labels]  # the kcore_peel round-12 release device
+    snaps = [sym, labels]  # the kcore_peel release device
     w = Window.partitionBy("node").orderBy(
         F.col("votes").desc(), F.col("label").asc()
     )
@@ -1322,7 +1348,7 @@ def ktruss_peel(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    snaps = [cur]  # the kcore_peel round-12 release device
+    snaps = [cur]  # the kcore_peel release device
 
     def _support(canon: DataFrame) -> DataFrame:
         """Per-edge triangle support over a canonical (u<v) edge set:
@@ -1446,7 +1472,7 @@ def multi_source_bfs(
         )
         .localCheckpoint(eager=False)
     )
-    snaps = [sym, dist]  # the kcore_peel round-12 release device
+    snaps = [sym, dist]  # the kcore_peel release device
     frontier = dist.select("seed", "node")
     for k in range(1, n_rounds + 1):
         new = (
@@ -1484,7 +1510,7 @@ def harmonic_centrality(
 
     Parity: distances are exact integers; each 1/d term is one
     correctly-rounded IEEE division folded with the
-    round-12-then-decimal device (the landmark fold order can't flip
+    ``round(·, 12)``-then-decimal device (the landmark fold order can't flip
     a bit). n_reached counts landmarks at positive distance; a
     landmark's own row excludes its 0-distance self term (standard
     harmonic convention).
@@ -1506,7 +1532,7 @@ def harmonic_centrality(
         ).alias("harmonic"),
     )
     # the BFS frame's snapshot releases must not fire while this
-    # derived result is alive (upstream chain, round 12)
+    # derived result is alive (upstream chain)
     return attach_cache_release(out, (), upstream=(d,))
 
 
@@ -1638,5 +1664,5 @@ def modularity(
     # releases (label_propagation snapshots, support-edge handles) and
     # are dropped at the call site — modularity(ed, label_propagation(
     # ed)) — while this result's plan still reads them; the upstream
-    # chain defers their release to this result's lifetime (round 12)
+    # chain defers their release to this result's lifetime
     return attach_cache_release(out, (), upstream=(edges, labels))

@@ -7,9 +7,11 @@ jobs: ``sinks.merge_into_partitioned`` creates a missing store, and
 ``run_features`` starts from an empty previous table only when none exists.
 
 Spark-first design: the delta is a ``left_anti`` join — one shuffle on the
-key, map-side combinable, and at 100 TB the previous-output side is pruned
-to the trailing partitions by a partition filter *before* the shuffle
-(the reference re-reads its whole history file every run).
+key (or a broadcast of the previous side's keys when they are small),
+map-side combinable. Both sides are still read whole, as the reference
+re-reads its whole history file every run: the feature table is not
+partitioned, so no partition filter can prune the previous side to the
+trailing dates yet.
 """
 
 from __future__ import annotations
@@ -18,6 +20,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from big_data_project_datapipeline_spark.schemas import quote_ident
 
 
 def anti_join_delta(
@@ -33,14 +37,14 @@ def anti_join_delta(
     and duplicate monotonically (review fix). pandas ``isin`` — the
     reference semantics — matches NaT to NaT, which eqNullSafe mirrors.
     """
-    prev = previous.select(
-        *[F.col(k).alias(f"__prev_{k}") for k in keys]
+    # SQL text: one parse per expression list, not a py4j hop per Column
+    prev = previous.selectExpr(
+        *[f"{quote_ident(k)} AS {quote_ident('__prev_' + k)}" for k in keys]
     ).dropDuplicates()
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"__prev_{k}"))
-        cond = c if cond is None else (cond & c)
-    return new.join(prev, on=cond, how="left_anti")
+    cond = " AND ".join(
+        f"{quote_ident(k)} <=> {quote_ident('__prev_' + k)}" for k in keys
+    )
+    return new.join(prev, on=F.expr(cond), how="left_anti")
 
 
 AGG_STATE_COLS = ["n", "sum_dec", "vmin", "vmax", "users_hll"]

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_project_datapipeline_spark.schemas import quote_ident
+
 _PRIORITY = "__merge_priority"
 _RN = "__merge_rn"
 
@@ -63,7 +65,7 @@ def _merge(
     order = (
         [F.col(_PRIORITY).desc()]
         + [F.col(c).asc_nulls_last() for c in tiebreak]
-        + [F.col(f"`{c}`").asc_nulls_last() for c in fallback]
+        + [F.col(quote_ident(c)).asc_nulls_last() for c in fallback]
     )
     w = Window.partitionBy(*keys).orderBy(*order)
     return (

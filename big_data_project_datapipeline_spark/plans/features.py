@@ -5,9 +5,13 @@ output (only new keys are processed), derive ~32 features, union back, and
 keep-first dedup as the idempotency guard. The scaler fits on the *delta
 batch only* — a deliberate reference semantic (SURVEY.md §7.4 trap 6).
 
-One lazy plan from raw scan to sink; the only materialization is the O(1)
-scaler-stats aggregate (12 scalars to the driver, then folded back in as
-literals — the Spark analog of broadcasting fitted parameters).
+One lazy plan from raw scan to sink. Three actions execute the delta: the
+empty check, the O(1) scaler-stats aggregate (12 scalars to the driver,
+then folded back in as literals — the Spark analog of broadcasting fitted
+parameters) and the sink's write. The plan persists nothing itself; a
+caller that persists :func:`feature_delta` of the same inputs first (the
+daily job, ``run_features``) makes all three read one cached execution,
+because Spark substitutes a cached plan wherever an identical one recurs.
 """
 
 from __future__ import annotations
@@ -59,6 +63,13 @@ def engineer_features(
     return zscore_scale(out, list(scale_cols), stats=scale_stats)
 
 
+def feature_delta(
+    raw: DataFrame, previous: DataFrame, ts_col: str = "datetime"
+) -> DataFrame:
+    """The raw rows whose key the previous feature table lacks (F5/J5)."""
+    return anti_join_delta(raw, previous.select(ts_col), keys=(ts_col,))
+
+
 def incremental_feature_run(
     raw: DataFrame,
     previous: DataFrame,
@@ -72,7 +83,7 @@ def incremental_feature_run(
     check (`isEmpty`, one cheap job — reference data_engineering.py:113-115)
     returns ``previous`` unchanged.
     """
-    delta = anti_join_delta(raw, previous.select(ts_col), keys=(ts_col,))
+    delta = feature_delta(raw, previous, ts_col)
     if delta.isEmpty():
         return previous
     engineered = engineer_features(delta, ts_col, scale_cols, scale_stats)

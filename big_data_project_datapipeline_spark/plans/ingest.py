@@ -5,7 +5,7 @@ raw_data.py:210-269,273-352) as lazy plans:
 
     weather ⟗ air_quality ⟗ carbon          (J1, J2 full-outer on datetime)
       as-of⋈ prices (nearest, ±30 min)       (J3)
-      ⨯ broadcast(generation_mix row)        (J4)
+      ⟕ broadcast(generation_mix row)        (J4, on TRUE; empty mix raises)
       filter(day == target, minute == 0)     (F1, F2: ``day_grid``)
 
 The daily cron upserts that grid into the date-partitioned store with
@@ -28,6 +28,14 @@ from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark.operators.asof import asof_join
 from big_data_project_datapipeline_spark.operators.merge import upsert_keep_last
+
+_MIX_MARK = "__mix_present"
+# SQL text, so the guard costs one parse rather than a py4j hop per call
+_MIX_GUARD = (
+    f"coalesce({_MIX_MARK}, cast(raise_error('merge_all_sources: "
+    "generation-mix payload is empty — refusing to annihilate the merged "
+    "grid of the day') AS boolean))"
+)
 
 
 def merge_all_sources(
@@ -57,18 +65,19 @@ def merge_all_sources(
         merged, prices, on=ts_col, tolerance_seconds=1800, direction="nearest"
     )
     # J4: stamp the single-row snapshot onto every row. The mix row is O(1);
-    # crossJoin(broadcast(...)) keeps it plan-side with no shuffle.
-    mix_payload = generation_mix.drop(ts_col)
-    # an EMPTY mix payload (API returned no generationmix block) would
-    # cross-join the whole day down to zero rows and silently discard
-    # every other source (review fix) — fail loudly like the reference's
-    # column assignment would; the frame is O(1), so the count is free
-    if mix_payload.count() == 0:
-        raise ValueError(
-            "merge_all_sources: generation-mix payload is empty — "
-            "refusing to annihilate the day's merged grid"
-        )
-    return merged.crossJoin(F.broadcast(mix_payload))
+    # a broadcast nested-loop join keeps it plan-side with no shuffle.
+    # An EMPTY mix payload (API returned no generationmix block) must not
+    # cross-join the day down to zero rows and silently discard every
+    # other source: the join is a left outer join on TRUE, so an empty
+    # mix leaves the marker NULL, and the guard raises on the first grid
+    # row — in the day's first Spark job, before any sink commits. A
+    # count here would cost a job of its own.
+    mix_payload = generation_mix.drop(ts_col).selectExpr("*", f"true AS {_MIX_MARK}")
+    return (
+        merged.join(F.broadcast(mix_payload), F.lit(True), "left")
+        .filter(_MIX_GUARD)
+        .drop(_MIX_MARK)
+    )
 
 
 def day_grid(

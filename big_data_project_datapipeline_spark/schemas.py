@@ -182,3 +182,11 @@ def assert_schema(df, expected) -> None:
     drifts = schema_drift(df.schema, expected)
     if drifts:
         raise ValueError("schema drift:\n  " + "\n  ".join(drifts))
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier for SQL text: wrapped in
+    backticks, each embedded backtick doubled, so any column name — the
+    reference's ``humidity_%`` or one holding a backtick — parses as
+    exactly one identifier, never as SQL."""
+    return "`" + name.replace("`", "``") + "`"

@@ -10,13 +10,22 @@ reference manages by hand are pinned here once:
 - AQE on — runtime shuffle-partition coalescing + skew-join splitting; this is
   what makes the same plan survive sf0.001 → 100 TB without retuning.
 - Arrow on — vectorized pandas interchange for the few pandas_udf extension ops.
+
+The daily job's driver-side rows (parsed payloads, the empty bootstrap
+gram index) enter a plan through :func:`local_frame`, not through
+``createDataFrame(<list>)``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping, Sequence
+from typing import Any
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -91,3 +100,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Mapping[str, Any]], schema: T.StructType
+) -> DataFrame:
+    """Driver-side ``rows`` (dicts keyed by field name; a missing key is
+    NULL) as a frame over a ``LocalRelation``.
+
+    ``createDataFrame`` of a Python list plans a Python-RDD scan: every
+    job that reads it runs Python worker tasks, and its size estimate
+    is unknown, so no join against it broadcasts. An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation`` instead: the rows travel inside the plan, with an
+    exact size estimate, and no Python worker starts. Arrow casts JSON
+    integers to double columns."""
+    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

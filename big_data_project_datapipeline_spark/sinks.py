@@ -145,17 +145,31 @@ def merge_into_partitioned(
     whole CSV (raw_data.py:246-263) shrunk to the touched dates; a
     missing store is created. Emulates Delta MERGE with plain parquet.
     The merged plan reads the live dirs while the write goes to staging,
-    so it needs no materialization before the swap. Its first job scans
-    ``new`` alone (to name the touched dirs), so an observation on
-    ``new`` counts exactly its rows.
+    so the store needs no materialization before the swap.
+
+    ``new`` is persisted for the call: the first job, which names the
+    touched dirs, executes its plan once and caches the rows, and the
+    write reads that cache. An observation on ``new`` is collected by
+    that first job and counts exactly its rows. The cache is released
+    once the commit ends, whether it succeeds or raises.
     """
     _recover(path)
-    names = sorted(_partition_dirs(new, partition_col))
-    existing = _read_partitions(new.sparkSession, path, names)
-    merged = (
-        new if existing is None else upsert_keep_last(existing, new, keys=keys)
-    )
-    _commit(path, merged.write.partitionBy(partition_col).parquet, names)
+    new.cache()
+    try:
+        names = sorted(_partition_dirs(new, partition_col))
+        existing = _read_partitions(new.sparkSession, path, names)
+        merged = (
+            new if existing is None else upsert_keep_last(existing, new, keys=keys)
+        )
+        # one file per partition dir, in key order, whatever partitioning
+        # the cache or the upsert left: the layout, and so every later
+        # order-sensitive float sum over the store, does not depend on it
+        laid_out = merged.repartition(partition_col).sortWithinPartitions(
+            partition_col, *keys
+        )
+        _commit(path, laid_out.write.partitionBy(partition_col).parquet, names)
+    finally:
+        new.unpersist(blocking=True)
 
 
 def promote_overwrite(df: DataFrame, path: str) -> None:

@@ -15,9 +15,13 @@ returns a typed DataFrame. The shapes:
   tariff code out of a URL, ``value_inc_vat/100`` (reference
   raw_data.py:158-206).
 
-At 100 TB the same normalizers apply unchanged to landed JSON files: swap
-``spark.createDataFrame(payload_rows)`` for ``spark.read.json(path)`` — the
-column expressions are identical.
+Each payload's rows enter the plan through :func:`session.local_frame`, as
+a ``LocalRelation``: a job over a normalized frame runs no Python worker,
+and the frame's exact size estimate lets joins against it broadcast. At
+100 TB the same normalizers apply unchanged to landed JSON files: swap
+``local_frame(spark, payload_rows, schema)`` for
+``spark.read.schema(schema).json(path)`` — the column expressions are
+identical.
 """
 
 from __future__ import annotations
@@ -30,8 +34,17 @@ from pyspark.sql import types as T
 
 from big_data_project_datapipeline_spark import schemas
 from big_data_project_datapipeline_spark.operators.pivot import pivot_records
+from big_data_project_datapipeline_spark.session import local_frame
 
 UTC_FMT = "yyyy-MM-dd'T'HH:mm"
+
+
+def _number(x: Any) -> Any:
+    """A JSON value bound for a double column. JSON integers pass (Arrow
+    casts them); a JSON boolean is refused rather than cast to 1.0."""
+    if isinstance(x, bool):
+        raise TypeError(f"expected a JSON number, got {x!r}")
+    return x
 
 
 def normalize_parallel_arrays(
@@ -50,24 +63,18 @@ def normalize_parallel_arrays(
     block = payload.get(section) or {}
     times = block.get(ts_key) or []
     arrays = {out: (block.get(src) or []) for src, out in mapping.items()}
-    # float() coercion: real APIs emit JSON integers (humidity 55, not
-    # 55.0) and createDataFrame's DoubleType verifier REJECTS python int
-    # (review fix, reproduced on live-shaped payloads)
-    def _num(x):
-        return float(x) if isinstance(x, (int, float)) and not isinstance(x, bool) else x
-
     rows = [
-        tuple(
-            [times[i]]
-            + [_num(arr[i]) if i < len(arr) else None for arr in arrays.values()]
-        )
-        for i in range(len(times))
+        {
+            ts_col: t,
+            **{c: _number(arr[i]) for c, arr in arrays.items() if i < len(arr)},
+        }
+        for i, t in enumerate(times)
     ]
     schema = T.StructType(
         [T.StructField(ts_col, T.StringType(), True)]
         + [T.StructField(c, T.DoubleType(), True) for c in arrays]
     )
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
     # Lenient cast: malformed stamps → null (pandas errors="coerce", P4).
     return df.withColumn(ts_col, F.try_to_timestamp(F.col(ts_col)))
 
@@ -127,19 +134,13 @@ def normalize_carbon_records(
     spark: SparkSession, payloads: list[dict[str, Any]]
 ) -> DataFrame:
     """S3: union of per-day record-list payloads → flat typed rows."""
-    records: list[Any] = []
+    records = []
     for p in payloads:
         for r in p.get("data") or []:
-            inten = dict(r.get("intensity") or {})
-            for k in ("actual", "forecast"):
-                v = inten.get(k)
-                if isinstance(v, int) and not isinstance(v, bool):
-                    inten[k] = float(v)  # DoubleType rejects python int
-            records.append({**r, "intensity": inten})
-    df = spark.createDataFrame(records, CARBON_RECORD) if records else (
-        spark.createDataFrame([], CARBON_RECORD)
-    )
-    return carbon_record_columns(df)
+            inten = r.get("intensity") or {}
+            nums = {k: _number(inten.get(k)) for k in ("actual", "forecast")}
+            records.append({**r, "intensity": {**inten, **nums}})
+    return carbon_record_columns(local_frame(spark, records, CARBON_RECORD))
 
 
 def normalize_generation_mix(
@@ -160,12 +161,10 @@ def normalize_generation_mix(
             T.StructField("perc", T.DoubleType(), True),
         ]
     )
-    def _numf(x):
-        return float(x) if isinstance(x, (int, float)) and not isinstance(x, bool) else x
-
-    df = spark.createDataFrame(
-        [(r.get("fuel"), _numf(r.get("perc"))) for r in mix], schema
-    ).withColumn("datetime", lenient_iso_timestamp(F.lit(ts)))
+    rows = [{"fuel": r.get("fuel"), "perc": _number(r.get("perc"))} for r in mix]
+    df = local_frame(spark, rows, schema).withColumn(
+        "datetime", lenient_iso_timestamp(F.lit(ts))
+    )
     df = df.withColumn("fuel", F.regexp_replace(F.lower("fuel"), " ", "_"))
     return pivot_records(
         df,
@@ -187,17 +186,13 @@ def normalize_prices(
     2 columns (:206, P1).
     """
     results = payload.get("results") or []
-    df = spark.createDataFrame(
-        [
-            (
-                r.get("valid_from"),
-                float(r["value_inc_vat"])
-                if isinstance(r.get("value_inc_vat"), (int, float))
-                and not isinstance(r.get("value_inc_vat"), bool)
-                else r.get("value_inc_vat"),
-            )
-            for r in results
-        ],
+    rows = [
+        {"valid_from": r.get("valid_from"), "value_inc_vat": _number(r.get("value_inc_vat"))}
+        for r in results
+    ]
+    df = local_frame(
+        spark,
+        rows,
         T.StructType(
             [
                 T.StructField("valid_from", T.StringType(), True),

@@ -34,12 +34,14 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from big_data_project_datapipeline_spark.functions.dedup import (
     scrub_marked_occurrences,
     window_gram_firsts,
 )
+from big_data_project_datapipeline_spark.session import local_frame
 from big_data_project_datapipeline_spark.sinks import _commit, _recover
 
 # shards below a tick's batch id that trigger a compaction at its entry
@@ -72,12 +74,13 @@ def load_gram_index(
         for i in _shard_ids(index_dir)
         if i != exclude_batch_id
     ]
+    empty = T.StructType([T.StructField("w", T.StringType())])
     if not paths:
-        return spark.createDataFrame([], "w string")
+        return local_frame(spark, [], empty)
     try:
         return spark.read.parquet(*paths).select("w").distinct()
     except AnalysisException:
-        return spark.createDataFrame([], "w string")
+        return local_frame(spark, [], empty)
 
 
 def compact_gram_index(

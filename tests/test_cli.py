@@ -86,6 +86,9 @@ def test_two_day_ingest_then_incremental_features(spark, tmp_path):
 
     f2 = run_features(spark, store, out)
     assert f2.count() == 5
+    # the metrics doc's row count comes from an observation on the write
+    fm = json.loads((tmp_path / "features" / "_metrics" / "features.json").read_text())
+    assert fm["rows"] == 5 and fm["columns"] == len(f2.columns)
     # rename-promote leaves no stale .tmp for glob consumers to pick up
     assert not (tmp_path / "features" / "features.parquet.tmp").exists()
     # day-1 rows unchanged by the incremental run (keep-first)
@@ -173,6 +176,96 @@ def test_ingest_metrics_record_the_completeness_check(spark, tmp_path):
     m = json.loads(metrics.read_text())
     assert m["missing_carbon_intensity_actual"] == 0
     assert m["completeness_warnings"] == []
+
+
+def _tree_bytes(root) -> dict:
+    """Every file under ``root`` (relative path → contents)."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+def test_ingest_refuses_an_empty_generation_mix_before_touching_the_store(
+    spark, tmp_path
+):
+    """An empty generationmix block would cross-join the day's grid down
+    to zero rows. The run raises instead, before anything live is
+    touched: the store and its metrics doc stay byte-identical."""
+    import pytest
+
+    store = tmp_path / "raw"
+    _write_payloads(tmp_path / "d1", "2024-01-15", [5.0, 6.0, 7.0])
+    run_ingest(spark, str(tmp_path / "d1"), str(store), dt.date(2024, 1, 15))
+    before = _tree_bytes(store)
+    assert "_metrics/ingest.json" in before
+    _write_payloads(tmp_path / "d2", "2024-01-16", [8.0, 9.0])
+    (tmp_path / "d2" / "generation_mix.json").write_text(json.dumps(
+        {"data": {"from": "2024-01-16T00:00Z", "generationmix": []}}
+    ))
+    with pytest.raises(Exception, match="generation-mix payload is empty"):
+        run_ingest(spark, str(tmp_path / "d2"), str(store), dt.date(2024, 1, 16))
+    assert _tree_bytes(store) == before
+    assert sorted(os.listdir(tmp_path)) == ["d1", "d2", "raw"]
+
+
+def _cached_rdds(spark) -> set:
+    """Ids of the RDDs marked persistent or holding cached blocks."""
+    jsc = spark.sparkContext._jsc
+    return set(jsc.getPersistentRDDs().keySet()) | {
+        info.id() for info in jsc.sc().getRDDStorageInfo()
+    }
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_a_second_day_runs_each_plan_once_and_releases_its_caches(
+    spark, tmp_path
+):
+    """Job budgets for a second day (24 rows) of ingest and features,
+    and no cached blocks left behind by either.
+
+    Ingest runs the day's plan once: the job that names the touched
+    partition fills a cache the write reads (14 jobs here, 25 when the
+    write re-ran the plan). Features run their delta once: the empty
+    check, the scaler fit and the write share one cached execution (13
+    jobs here, 19 when each re-ran it). The budgets leave a little room
+    for planner variation, not for a second execution of either plan."""
+    import uuid
+
+    store, out = str(tmp_path / "raw"), str(tmp_path / "features")
+    _write_payloads(tmp_path / "d1", "2024-01-15", [5.0 + h for h in range(24)])
+    run_ingest(spark, str(tmp_path / "d1"), store, dt.date(2024, 1, 15))
+    run_features(spark, store, out)
+    _write_payloads(tmp_path / "d2", "2024-01-16", [8.0 + h for h in range(24)])
+    cached = _cached_rdds(spark)
+    tag = uuid.uuid4().hex
+    ingest_jobs = _jobs_of(
+        spark, f"ingest-{tag}",
+        lambda: run_ingest(spark, str(tmp_path / "d2"), store, dt.date(2024, 1, 16)),
+    )
+    assert _cached_rdds(spark) <= cached
+    feature_jobs = _jobs_of(
+        spark, f"features-{tag}", lambda: run_features(spark, store, out)
+    )
+    assert _cached_rdds(spark) <= cached
+    assert ingest_jobs <= 15, ingest_jobs
+    assert feature_jobs <= 15, feature_jobs
+    fm = json.loads((tmp_path / "features" / "_metrics" / "features.json").read_text())
+    assert fm["rows"] == 48
 
 
 def test_ingest_reads_only_the_target_date(spark, tmp_path):

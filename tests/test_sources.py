@@ -164,3 +164,88 @@ def test_normalizers_accept_integer_json_values(spark):
                       "value_inc_vat": 25}]},
     )
     assert p.collect()[0]['retail_price_£_per_kWh'] == 0.25
+
+
+def test_payload_frames_and_the_bootstrap_index_are_local_relations(
+    spark, tmp_path
+):
+    """Every normalizer output and the empty bootstrap gram index plans
+    over a LocalRelation, never a Python-RDD scan (``LogicalRDD``): a
+    job over them starts no Python worker, and their exact size lets
+    joins broadcast them. Plan-only: building and analyzing them runs
+    no Spark job."""
+    import uuid
+
+    from big_data_project_datapipeline_spark.streaming.dedup import (
+        load_gram_index,
+    )
+
+    sc = spark.sparkContext
+    group = f"plan-only-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        frames = {
+            "weather": normalize_parallel_arrays(
+                spark,
+                {"hourly": {"time": ["2024-01-01T00:00"], "temperature_2m": [5]}},
+                "hourly",
+                {"temperature_2m": "temperature_C"},
+            ),
+            "carbon": normalize_carbon_records(
+                spark,
+                [{"data": [{"from": "2024-01-01T00:00Z",
+                            "intensity": {"actual": 1, "index": "low"}}]}],
+            ),
+            "carbon_empty": normalize_carbon_records(spark, []),
+            "mix": normalize_generation_mix(
+                spark,
+                {"data": {"from": "2024-01-01T00:00Z",
+                          "generationmix": [{"fuel": "gas", "perc": 30.0}]}},
+            ),
+            "prices": normalize_prices(
+                spark,
+                {"results": [{"valid_from": "2024-01-01T00:00:00Z",
+                              "value_inc_vat": 25.0}]},
+            ),
+            "gram_index": load_gram_index(spark, str(tmp_path / "no-index")),
+        }
+        plans = {
+            name: df._jdf.queryExecution().analyzed().toString()
+            for name, df in frames.items()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    for name, plan in plans.items():
+        assert "LogicalRDD" not in plan, (name, plan)
+        assert "LocalRelation" in plan, (name, plan)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_normalizers_refuse_a_boolean_for_a_number(spark):
+    import pytest
+
+    with pytest.raises(TypeError, match="JSON number"):
+        normalize_prices(
+            spark,
+            {"results": [{"valid_from": "2024-01-01T00:00:00Z",
+                          "value_inc_vat": True}]},
+        )
+
+
+def test_quote_ident_doubles_embedded_backticks(spark):
+    from pyspark.sql import functions as F
+
+    from big_data_project_datapipeline_spark.schemas import quote_ident
+
+    assert quote_ident("humidity_%") == "`humidity_%`"
+    assert quote_ident("a`b") == "`a``b`"
+    assert quote_ident("x` + 1 --") == "`x`` + 1 --`"
+    df = spark.createDataFrame([(1.0, 2.0)], "`a``b` double, `x`` + 1 --` double")
+    # each quoted name resolves to exactly its own column, in the Column
+    # API and in SQL text
+    got = df.select(
+        F.col(quote_ident("a`b")).alias("p"),
+        F.expr(f"{quote_ident('x` + 1 --')} * 10").alias("q"),
+    ).first()
+    assert (got["p"], got["q"]) == (1.0, 20.0)
