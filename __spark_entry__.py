@@ -112,6 +112,7 @@ from big_data_project_datapipeline_spark.operators.intervals import (
 from big_data_project_datapipeline_spark.operators.temporal_fill import (
     gap_fill_locf,
 )
+from big_data_project_datapipeline_spark.session import local_frame
 from big_data_project_datapipeline_spark.tables import load_table
 
 TWO_PI = 2.0 * math.pi
@@ -829,7 +830,7 @@ def q37_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("datetime", "uk_gen_gas_%", "uk_gen_wind_%")
     )
     merged = merge_all_sources(weather, air, carbon, mix, prices)
-    history = spark.createDataFrame([], merged.schema)
+    history = local_frame(spark, [], merged.schema)
     out = daily_ingest(merged, history, _dt.date(2024, 1, 15))
     return out.select(
         "datetime",
@@ -1198,9 +1199,7 @@ def q47_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     rates = {"view": 10, "click": 25, "purchase": 100, "error": 50, "signup": 100}
     rate_df = F.broadcast(
-        spark.createDataFrame(
-            [(k, v) for k, v in rates.items()], "event_type string, pct int"
-        )
+        local_frame(spark, list(rates.items()), "event_type string, pct int")
     )
     bucket = (
         F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10)
@@ -1256,7 +1255,8 @@ def q52_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_project_datapipeline_spark.operators.skew import salted_join
 
     ev = _t(spark, sf_dir, "events")
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("view", 1.0), ("click", 2.0), ("purchase", 10.0), ("error", 0.0),
          ("signup", 5.0)],
         "event_type string, weight double",

@@ -34,6 +34,7 @@ import json
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -295,14 +296,23 @@ def main(argv: list[str] | None = None) -> None:
             stream_substring_dedup,
         )
 
-        q = stream_substring_dedup(
-            spark,
-            args.docs_dir,
-            args.index_dir,
-            args.out,
-            args.checkpoint,
-            window=args.window,
-        )
+        try:
+            q = stream_substring_dedup(
+                spark,
+                args.docs_dir,
+                args.index_dir,
+                args.out,
+                args.checkpoint,
+                window=args.window,
+            )
+        except AnalysisException as e:
+            # a docs dir with no file yet (a first day before any
+            # document lands) has no schema to infer: nothing to dedup,
+            # and no index, output or checkpoint to start
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                raise
+            print(f"no docs in {args.docs_dir}; nothing to dedup")
+            return
         q.awaitTermination()
         print(f"deduped {args.docs_dir} -> {args.out} (index {args.index_dir})")
     elif args.job == "delete":

@@ -32,6 +32,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_project_datapipeline_spark.session import local_frame
+
 
 def ordered_funnel(
     events: DataFrame,
@@ -590,8 +592,8 @@ def markov_removal_attribution(
         Decimal(0),
     )
     tre = float(tre_dec) if any(re is not None for _, re in effects) else None
-    spark = events.sparkSession
-    raw = spark.createDataFrame(
+    raw = local_frame(
+        events.sparkSession,
         [(c, a, b, r, tre) for (c, a, b, r) in rows],
         "channel string, __pf double, __pr double, __re double, "
         "__tre double",

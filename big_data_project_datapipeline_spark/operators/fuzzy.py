@@ -20,8 +20,8 @@ per-pair prunes, and the exact DP distance runs only on survivors:
 
 Levenshtein is integer-exact and identically defined everywhere
 (``F.levenshtein`` / DuckDB ``levenshtein``), so the op is hash-gateable
-— no float parity concerns; ``_blocked_pairs_naive`` (band + DP only)
-stays as the equivalence oracle for the admissibility tests.
+— no float parity concerns. The admissibility tests compare the op with
+a band + DP oracle that has no bitmap prune (``tests/fuzzy_oracle.py``).
 
 Scale: the join is a plain equi-join on the block key (one shuffle,
 co-partitioned self-join); the quadratic step is bounded by the largest
@@ -50,29 +50,6 @@ def charset_bitmap(text_col: str) -> Column:
     return F.expr(
         f"aggregate(split({text_col}, ''), 0L, "
         f"(acc, c) -> acc | shiftleft(1L, pmod(ascii(c), 64)))"
-    )
-
-
-def _verify(
-    joined: DataFrame, text_col: str, id_col: str, max_dist: int
-) -> DataFrame:
-    """Thresholded banded DP (O(len·d) per pair, −1 past the budget) on
-    candidate pairs; exact distances for kept pairs."""
-    return (
-        joined.withColumn(
-            "distance",
-            F.levenshtein(
-                F.col(f"l_{text_col}"), F.col(f"r_{text_col}"), max_dist
-            ),
-        )
-        .filter(F.col("distance") >= 0)
-        .select(
-            F.col(f"l_{id_col}").alias("left_id"),
-            F.col(f"r_{id_col}").alias("right_id"),
-            F.col(f"l_{text_col}").alias("left_text"),
-            F.col(f"r_{text_col}").alias("right_text"),
-            F.col("distance").cast("int").alias("distance"),
-        )
     )
 
 
@@ -133,26 +110,3 @@ def blocked_levenshtein_pairs(
         .cast("int")
         .alias("distance"),
     )
-
-
-def _blocked_pairs_naive(
-    df: DataFrame,
-    block_cols: Sequence[str],
-    text_col: str,
-    id_col: str,
-    max_dist: int,
-) -> DataFrame:
-    """Reference implementation: block² join + length band + DP, no
-    bitmap prune — the equivalence oracle proving the prune admissible."""
-    keep = [*block_cols, id_col, text_col]
-    left = df.select(*[F.col(c).alias(f"l_{c}") for c in keep])
-    right = df.select(*[F.col(c).alias(f"r_{c}") for c in keep])
-    cond = [F.col(f"l_{c}") == F.col(f"r_{c}") for c in block_cols] + [
-        F.col(f"l_{id_col}") < F.col(f"r_{id_col}"),
-        F.abs(
-            F.length(F.col(f"l_{text_col}"))
-            - F.length(F.col(f"r_{text_col}"))
-        )
-        <= max_dist,
-    ]
-    return _verify(left.join(right, cond), text_col, id_col, max_dist)

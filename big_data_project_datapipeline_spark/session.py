@@ -11,9 +11,10 @@ reference manages by hand are pinned here once:
   what makes the same plan survive sf0.001 → 100 TB without retuning.
 - Arrow on — vectorized pandas interchange for the few pandas_udf extension ops.
 
-The daily job's driver-side rows (parsed payloads, the empty bootstrap
-gram index) enter a plan through :func:`local_frame`, not through
-``createDataFrame(<list>)``.
+Every driver-side row set (the parsed payloads, the empty bootstrap gram
+index, registry literals such as q52's dimension, rows computed on the
+driver such as q180's attribution) enters a plan through
+:func:`local_frame`, the package's one ``createDataFrame`` call.
 """
 
 from __future__ import annotations
@@ -103,10 +104,16 @@ def get_spark(
 
 
 def local_frame(
-    spark: SparkSession, rows: Sequence[Mapping[str, Any]], schema: T.StructType
+    spark: SparkSession,
+    rows: Sequence[Mapping[str, Any] | Sequence[Any]],
+    schema: T.StructType | str,
 ) -> DataFrame:
-    """Driver-side ``rows`` (dicts keyed by field name; a missing key is
-    NULL) as a frame over a ``LocalRelation``.
+    """Driver-side ``rows`` as a frame over a ``LocalRelation``.
+
+    A row is a dict keyed by field name (a missing key is NULL) or a
+    tuple in field order; ``schema`` is a ``StructType`` or a DDL string
+    such as ``"k string, v double"``. The schema is never inferred from
+    the data.
 
     ``createDataFrame`` of a Python list plans a Python-RDD scan: every
     job that reads it runs Python worker tasks, and its size estimate
@@ -115,5 +122,11 @@ def local_frame(
     ``LocalRelation`` instead: the rows travel inside the plan, with an
     exact size estimate, and no Python worker starts. Arrow casts JSON
     integers to double columns."""
-    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, Mapping) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
     return spark.createDataFrame(table, schema)

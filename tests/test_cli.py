@@ -324,6 +324,26 @@ def test_cli_dedup(spark, tmp_path):
     assert got == {1: "a b c d", 2: "x"}
 
 
+def test_cli_dedup_of_an_empty_docs_dir_is_a_no_op(spark, tmp_path):
+    """The first day before any document lands: the docs dir exists but
+    holds no file. The job returns normally and starts no index, output
+    or checkpoint."""
+    from big_data_project_datapipeline_spark.__main__ import main
+
+    docs = tmp_path / "docs"
+    docs.mkdir()
+    main(
+        [
+            "dedup",
+            "--docs-dir", str(docs),
+            "--index-dir", str(tmp_path / "index"),
+            "--out", str(tmp_path / "out"),
+            "--checkpoint", str(tmp_path / "cp"),
+        ]
+    )
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["docs"]
+
+
 def test_cli_export(spark, tmp_path):
     import json as _json
 

@@ -177,3 +177,39 @@ def test_no_package_write_overwrites_in_place():
                     if overwrite(node)
                 ]
     assert found == [], found
+
+
+def test_driver_rows_enter_a_plan_only_through_local_frame():
+    """No package module and not ``__spark_entry__.py`` calls
+    ``createDataFrame`` except ``session.local_frame``: driver-side rows
+    plan as a ``LocalRelation``, so no job reads a Python RDD and no
+    registry query or cron job starts a Python worker for them. Static
+    (stdlib ``ast``), so it needs no Spark."""
+    import ast
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "big_data_project_datapipeline_spark")
+    paths = [os.path.join(repo, "__spark_entry__.py")] + [
+        os.path.join(dirpath, f)
+        for dirpath, _, files in os.walk(pkg)
+        for f in sorted(files)
+        if f.endswith(".py")
+    ]
+    allowed = {(os.path.join("big_data_project_datapipeline_spark", "session.py"),
+                "local_frame")}
+    found = []
+    for path in paths:
+        rel = os.path.relpath(path, repo)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                    and (rel, getattr(top, "name", None)) not in allowed
+                ):
+                    found.append(f"{rel}:{node.lineno}")
+    assert found == [], found

@@ -72,9 +72,7 @@ def test_fuzzy_charset_prune_is_admissible(spark):
     (substitutions that retire/introduce characters, repeated chars whose
     set is unchanged, transposition-like double substitutions, and
     colliding bits via pmod-64)."""
-    from big_data_project_datapipeline_spark.operators.fuzzy import (
-        _blocked_pairs_naive,
-    )
+    from fuzzy_oracle import blocked_pairs_naive
 
     rows = [
         (1, "A", "banana"),
@@ -98,7 +96,7 @@ def test_fuzzy_charset_prune_is_admissible(spark):
         }
         naive = {
             (r.left_id, r.right_id, r.distance)
-            for r in _blocked_pairs_naive(
+            for r in blocked_pairs_naive(
                 df, ["blk"], "name", "id", max_dist=d
             ).collect()
         }

@@ -179,8 +179,9 @@ def test_charset_prune_never_loses_a_match(spark, names, d):
     """Random small-alphabet corpora (maximally collision- and
     anagram-prone): the bitmap-pruned fuzzy matcher returns exactly the
     naive band+DP result."""
+    from fuzzy_oracle import blocked_pairs_naive
+
     from big_data_project_datapipeline_spark.operators.fuzzy import (
-        _blocked_pairs_naive,
         blocked_levenshtein_pairs,
     )
 
@@ -194,7 +195,7 @@ def test_charset_prune_never_loses_a_match(spark, names, d):
     }
     naive = {
         (r.left_id, r.right_id, r.distance)
-        for r in _blocked_pairs_naive(
+        for r in blocked_pairs_naive(
             df, ["blk"], "name", "id", max_dist=d
         ).collect()
     }

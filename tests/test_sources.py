@@ -222,6 +222,88 @@ def test_payload_frames_and_the_bootstrap_index_are_local_relations(
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def test_registry_and_operator_driver_rows_are_local_relations(spark, tmp_path):
+    """The driver-side row sets of the registry and the operators plan
+    over a LocalRelation, never a Python-RDD scan (``LogicalRDD``): q37's
+    empty history, q47's rate map, q52's dimension, q180's attribution
+    rows, the KMV pair list and the empty results of the two KMV
+    set-expression ops."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    import __spark_entry__ as E
+    from big_data_project_datapipeline_spark.functions import sketches as SK
+    from big_data_project_datapipeline_spark.operators.behavior import (
+        markov_removal_attribution,
+    )
+    from big_data_project_datapipeline_spark.operators.caching import (
+        release_caches,
+    )
+    from big_data_project_datapipeline_spark.session import local_frame
+    from big_data_project_datapipeline_spark.tables import load_table
+
+    types = ["view", "click", "purchase", "error", "signup", "view", "purchase"]
+    t0 = dt.datetime(2024, 1, 15)
+    events = pa.table(
+        {
+            "event_id": pa.array(range(len(types)), pa.int64()),
+            "ts": pa.array(
+                [t0 + dt.timedelta(minutes=40 * i) for i in range(len(types))],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([i % 2 for i in range(len(types))], pa.int64()),
+            "event_type": types,
+            "value": [float(i) for i in range(len(types))],
+            "props": ['{"k": 1}'] * len(types),
+        }
+    )
+    sf = str(tmp_path)
+    pq.write_table(events, f"{sf}/events.parquet")
+
+    sketch = T.StructType(
+        [T.StructField("event_type", T.StringType()),
+         T.StructField("h", T.LongType())]
+    )
+    two = local_frame(
+        spark,
+        [{"event_type": g, "h": h} for g, h in [("a", 1), ("a", 2), ("b", 2)]],
+        sketch,
+    )
+    one = two.filter("event_type = 'a'")
+    # an int group column: the pair list takes its type, not one
+    # inferred from the Python values (which would be long)
+    ints = two.selectExpr(
+        "CAST(ascii(event_type) AS INT) AS event_type", "h"
+    )
+    frames = {
+        "q37_history": E.q37_ingest_pipeline(spark, sf),
+        "q47_rates": E.q47_stratified_sample(spark, sf),
+        "q52_dim": E.q52_salted_join(spark, sf),
+        "q180_rows": markov_removal_attribution(
+            load_table(spark, sf, "events"), conv_state="purchase"
+        ),
+        "kmv_pairs": SK.kmv_pair_overlap(two, "event_type", k=4),
+        "kmv_int_pairs": SK.kmv_pair_overlap(ints, "event_type", k=4),
+        "kmv_overlap_empty": SK.kmv_pair_overlap(one, "event_type", k=4),
+        "kmv_difference_empty": SK.kmv_set_difference(one, "event_type", k=4),
+    }
+    plans = {
+        name: df._jdf.queryExecution().analyzed().toString()
+        for name, df in frames.items()
+    }
+    pairs = frames["kmv_pairs"].select("grp_a", "grp_b").collect()
+    for df in frames.values():
+        release_caches(df)
+    for name, plan in plans.items():
+        assert "LogicalRDD" not in plan, (name, plan)
+        assert "LocalRelation" in plan, (name, plan)
+    assert [tuple(r) for r in pairs] == [("a", "b")]
+    assert frames["kmv_int_pairs"].schema["grp_a"].dataType == T.IntegerType()
+
+
 def test_normalizers_refuse_a_boolean_for_a_number(spark):
     import pytest
 
