@@ -1305,11 +1305,11 @@ def q54_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing under the driver hash gate: documents-as-media
     (opaque utf-8 bytes + mime, multimodal.documents_as_media) → Arrow-
     batched ``mapInPandas`` feature extraction (MEDIA_FEATURES_SCHEMA:
-    size, digest, magic-sniffed kind, dims). The codec step is the
-    documented deterministic md5-based fake (container ships no image
-    libs; ``decode_image`` is the real-decode swap point), which makes
-    every output column oracle-reproducible in SQL — the mapInPandas
-    path itself gets value-hash-gated, not just rows-counted."""
+    size, digest, magic-sniffed kind, dims). There is no codec step: the
+    dims are a deterministic md5-based stand-in (a real decoder would
+    replace them inside the same batch function), which makes every
+    output column oracle-reproducible in SQL — the mapInPandas path
+    itself gets value-hash-gated, not just rows-counted."""
     d = _t(spark, sf_dir, "documents")
     return MM.extract_media_features(MM.documents_as_media(d))
 

@@ -133,7 +133,7 @@ def token_budget_sample(
     training mix with hard per-source caps — reproducible across runs
     and engines because the admission order is md5(doc_id), not RNG.
 
-    Scale shape (round-6 funnel fix): the per-source cumulative sum
+    Scale shape: the per-source cumulative sum
     comes from operators/prefix.group_rank_frame (ONE range exchange)
     instead of a window partitioned by the LOW-cardinality source key
     — the window form serialized each source through one task, which
@@ -928,7 +928,7 @@ def weighted_sample(
 
     Scale shape: map-only key computation, then one per-group top-k
     window. The low-cardinality group key is NOT a funnel here
-    (deliberately kept as a window in the round-6 funnel sweep):
+    (deliberately kept as a window):
     Catalyst's WindowGroupLimit rewrites the ``row_number <= k``
     filter into a map-side PARTIAL top-k before the exchange
     (verified in-plan), so the shuffle and the per-group final sort
@@ -1002,7 +1002,7 @@ def heaps_law(
     and only the final closed-form slope/intercept runs in double, in
     an expression order the oracle mirrors token-for-token.
 
-    Scale shape (round-5 fix of verdict r4 item #4): explode → two
+    Scale shape: explode → two
     map-side-combinable groupBys; both cumulative curves come from
     operators.prefix.partitioned_prefix — range repartition on doc_id,
     per-partition running sums, broadcast O(partitions) offsets — so
@@ -1149,7 +1149,7 @@ def domain_cap_report(
     double division rounded at the surface. NULL lengths count as 0
     (they still occupy a slot — the cap is about doc COUNT pressure).
 
-    Scale shape (round-6 funnel fix): the per-source top-cap rank
+    Scale shape: the per-source top-cap rank
     comes from operators/prefix.group_rank_frame over the NEGATED
     length (exact long negation reverses the order) — one range
     exchange instead of a window partitioned by the LOW-cardinality
@@ -1263,8 +1263,8 @@ def class_log_odds(
         "y",
         F.round(delta / F.sqrt(var), 6).alias("z"),
     )
-    # Per-class top-k stays a WINDOW on purpose (round-6 funnel
-    # sweep): the ``row_number <= top_k`` filter triggers Catalyst's
+    # Per-class top-k stays a WINDOW on purpose: the
+    # ``row_number <= top_k`` filter triggers Catalyst's
     # WindowGroupLimit map-side partial top-k, so the exchange and the
     # per-class final sort see at most top_k·partitions rows per class
     # — strictly cheaper than a range re-exchange of the full vocab
@@ -1306,14 +1306,14 @@ def negative_pairs(
     hash; bucket and position arithmetic is exact integer; shifts are
     capped at the block size (j ≤ nb−1), which simultaneously removes
     self-pairs (j ≡ 0 mod nb) and DUPLICATE partners (j and j+nb alias
-    the same successor — the r4 advice fix: a repeated partner would
+    the same successor — a repeated partner would
     silently overweight it in downstream contrastive training), so
     tiny blocks yield min(k, nb−1) DISTINCT negatives (documented
     edge; at corpus scale blocks are thousands of docs). Circular
     pairing is an equi-join on (bucket, position) — never a window
     lead with a lost tail.
 
-    Scale shape (round-6 funnel fix): one map-only hash; block
+    Scale shape: one map-only hash; block
     position + block size come from operators/prefix.group_rank_frame
     (one range exchange — ``n_buckets`` is a FIXED low cardinality, so
     the former per-bucket window serialized 1/n_buckets of the corpus
@@ -1906,7 +1906,7 @@ def bpe_train_merges_batched(
     n_rounds: int = 2,
     batch_k: int = 4,
 ) -> DataFrame:
-    """BPE training at realistic merge budgets (VERDICT r10 item 6):
+    """BPE training at realistic merge budgets:
     per round learn UP TO ``batch_k`` merges instead of one — the
     standard scalable approximation (SentencePiece/fast HF trainers
     batch the same way), because :func:`bpe_train_merges`'s
@@ -1939,22 +1939,6 @@ def bpe_train_merges_batched(
     kept frame, one map-only rewrite pass over the O(vocab) word
     table) — but ``batch_k``× fewer rounds per merge budget.
     """
-    kept_frames, _ = _bpe_batched_round_frames(
-        df, text_col, n_rounds, batch_k
-    )
-    out = kept_frames[0]
-    for w in kept_frames[1:]:
-        out = out.unionByName(w)
-    return out
-
-
-def _bpe_batched_round_frames(
-    df: DataFrame, text_col: str, n_rounds: int, batch_k: int
-) -> tuple[list, list]:
-    """The batched trainer loop shared by :func:`bpe_train_merges_batched`
-    and :func:`bpe_compression_curve_batched`: per round, the exploded
-    kept-merge frame and the post-rewrite word table (expressions
-    identical to the original in-line loop — factored, not changed)."""
     if batch_k < 1 or n_rounds < 1:
         raise ValueError(
             "bpe_train_merges_batched: n_rounds and batch_k must be >= 1"
@@ -1993,7 +1977,6 @@ def _bpe_batched_round_frames(
         return F.when(ok, taken).otherwise(acc)
 
     out_frames = []
-    word_frames = []
     for r in range(1, n_rounds + 1):
         cand = (
             _adjacent_pair_counts(words)
@@ -2046,75 +2029,10 @@ def _bpe_batched_round_frames(
             )
             .localCheckpoint(eager=False)
         )
-        word_frames.append(words)
-    return out_frames, word_frames
-
-
-def bpe_compression_curve_batched(
-    df: DataFrame,
-    text_col: str = "text",
-    n_rounds: int = 2,
-    batch_k: int = 4,
-) -> DataFrame:
-    """The merge-BUDGET curve at batched cadence (the q230 readout for
-    :func:`bpe_train_merges_batched`, closing VERDICT r10 item 6's
-    budget-comparison ask): after each ROUND's whole kept batch, the
-    corpus's exact total symbol count, the cumulative merge budget
-    spent, and the compression vs raw characters — (round,
-    n_merges_in_round, budget_spent, total_symbols, compression).
-    This is the curve a tokenizer team reads when batching: it shows
-    compression per BUDGET unit, so batched-vs-exact cadences compare
-    on the same x-axis. One O(vocab) aggregate per round over word
-    frames the trainer already built; exactness devices identical to
-    :func:`bpe_compression_curve`.
-    """
-    kept_frames, word_frames = _bpe_batched_round_frames(
-        df, text_col, n_rounds, batch_k
-    )
-    wc = token_counts(df, text_col)
-    base = wc.agg(
-        F.sum(F.length("token").cast("long") * F.col("cnt"))
-        .cast("long")
-        .alias("__chars")
-    )
-    rows = []
-    for r, (kept, words) in enumerate(zip(kept_frames, word_frames), 1):
-        nk = kept.agg(
-            F.lit(r).cast("int").alias("round"),
-            F.count(F.lit(1)).cast("long").alias("n_merges_in_round"),
-        )
-        size = words.agg(
-            F.sum(F.size("__s").cast("long") * F.col("__f"))
-            .cast("long")
-            .alias("total_symbols")
-        )
-        rows.append(
-            nk.crossJoin(F.broadcast(size)).crossJoin(F.broadcast(base))
-        )
-    out = rows[0]
-    for w in rows[1:]:
+    out = out_frames[0]
+    for w in out_frames[1:]:
         out = out.unionByName(w)
-    from pyspark.sql import Window as _W
-
-    # budget_spent = running sum of batch sizes over the O(n_rounds)
-    # collapsed frame (bounded rows — the q224 allowlist class is not
-    # even needed: n_rounds is a call-site constant)
-    wcum = _W.orderBy("round").rowsBetween(
-        _W.unboundedPreceding, _W.currentRow
-    )
-    ratio = (
-        F.col("total_symbols").cast("double")
-        / F.col("__chars").cast("double")
-    )
-    return out.select(
-        "round",
-        "n_merges_in_round",
-        F.sum("n_merges_in_round").over(wcum).alias("budget_spent"),
-        "total_symbols",
-        (F.floor(ratio * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "compression"
-        ),
-    )
+    return out
 
 
 def bpe_compression_curve(
@@ -2396,7 +2314,7 @@ def vocab_coverage(
         )
     # an empty corpus yields one all-null agg row (max/sum over zero
     # rows); drop it so the surface is an EMPTY frame, matching the
-    # other corpus operators' empty-input behavior (ADVICE r11)
+    # other corpus operators' empty-input behavior
     a = ranked.agg(*aggs).filter(F.col("__t").isNotNull())
 
     def _q6(x):
@@ -2569,7 +2487,24 @@ def kneser_ney_doc_scores(
         F.sum("c").cast("long").alias("c12")
     )
     model = _kn_model_from_pairs(big, discount)
-    return kn_score_doc_pairs(doc_pairs, model)
+    scored = doc_pairs.join(
+        model.select("w1", "w2", "p_kn"), ["w1", "w2"]
+    ).withColumn(
+        "lp",
+        (F.col("c").cast("double") * F.log(F.col("p_kn"))).cast(
+            "decimal(28,12)"
+        ),
+    )
+    per = scored.groupBy("doc_id").agg(
+        F.sum("c").alias("n_pairs"),
+        (F.sum("lp").cast("double") / F.sum("c")).alias("__avg"),
+    )
+    return per.select(
+        "doc_id",
+        "n_pairs",
+        F.round("__avg", 6).alias("avg_logprob"),
+        F.round(F.exp(-F.col("__avg")), 6).alias("ppl"),
+    )
 
 
 def _kn_doc_pairs(
@@ -2577,8 +2512,7 @@ def _kn_doc_pairs(
 ) -> DataFrame:
     """Per-document bigram occurrence counts ``(doc_id, w1, w2, c)``
     — the staged frame :func:`kneser_ney_doc_scores` both scores and
-    derives its model from (factored round 12 so the streaming twin
-    scores with the identical expressions)."""
+    derives its model from."""
     toks = TX.tokens(F.col(text_col))
     staged = df.select(
         F.col(id_col).alias("doc_id"), toks.alias("__t")
@@ -2599,36 +2533,6 @@ def _kn_doc_pairs(
         )
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def kn_score_doc_pairs(doc_pairs: DataFrame, model: DataFrame) -> DataFrame:
-    """Score per-document bigram counts under a KN model table — the
-    closing tail of :func:`kneser_ney_doc_scores`, exposed so a
-    maintained bigram store can serve the model with bit-equal output:
-    p_kn is floor-quantized at 9 in the model, ln of engine-identical
-    doubles is glibc-identical, per-doc c·ln p terms fold in
-    decimal(28,12), round(6) surfaces. ``model`` needs columns
-    (w1, w2, p_kn); observed-pairs-only semantics (an unseen bigram in
-    ``doc_pairs`` simply drops from the inner join — the fit-on-self
-    framing where that branch never fires)."""
-    scored = doc_pairs.join(
-        model.select("w1", "w2", "p_kn"), ["w1", "w2"]
-    ).withColumn(
-        "lp",
-        (F.col("c").cast("double") * F.log(F.col("p_kn"))).cast(
-            "decimal(28,12)"
-        ),
-    )
-    per = scored.groupBy("doc_id").agg(
-        F.sum("c").alias("n_pairs"),
-        (F.sum("lp").cast("double") / F.sum("c")).alias("__avg"),
-    )
-    return per.select(
-        "doc_id",
-        "n_pairs",
-        F.round("__avg", 6).alias("avg_logprob"),
-        F.round(F.exp(-F.col("__avg")), 6).alias("ppl"),
     )
 
 

@@ -77,13 +77,6 @@ def shingles_from_tokens(toks: Column, k: int = 5) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_shingles(text: Column, k: int = 5) -> Column:
-    """Convenience form over raw text — fine for small frames/tests; on
-    hot paths stage ``tokens(text)`` into a real column first and use
-    ``shingles_from_tokens`` (see its docstring for why)."""
-    return shingles_from_tokens(tokens(text), k)
-
-
 def hash60(s: Column) -> Column:
     """60-bit md5-derived hash — the engine-portable digest used for
     token/shingle sets (DuckDB: CAST(('0x' || substr(md5(s),1,15)) AS
@@ -95,17 +88,6 @@ def shingle_hash_set_from_tokens(toks: Column, k: int = 5) -> Column:
     """Distinct 60-bit hashes of the word k-gram shingles of a staged
     token-array column."""
     return F.array_distinct(F.transform(shingles_from_tokens(toks, k), hash60))
-
-
-def shingle_hash_set(text: Column, k: int = 5) -> Column:
-    """Convenience form over raw text — stage tokens on hot paths."""
-    return F.array_distinct(F.transform(word_shingles(text, k), hash60))
-
-
-def lsh_threshold(n_bands: int, band_size: int) -> float:
-    """Approximate Jaccard similarity where the (b, r) LSH S-curve is
-    steepest: (1/b)^(1/r). Pairs above it are likely candidates."""
-    return (1.0 / n_bands) ** (1.0 / band_size)
 
 
 def candidate_probability(similarity: float, n_bands: int, band_size: int) -> float:
@@ -333,7 +315,7 @@ def jaccard_pairs(
             "left_id",
             "right_id",
             # zero-union guard: two empty-token docs would otherwise
-            # abort the job under ANSI mode (review fix) — define their
+            # abort the job under ANSI mode — define their
             # similarity as 0.0. nullif, NOT when(size>0, ...): the when
             # form evaluates array_union TWICE per candidate pair and
             # was measured 2x slower on the verify step.
@@ -556,7 +538,7 @@ def resolve_dup_clusters(
     graphs (not forests) use alternating large-star/small-star; a parent
     forest never needs it.
 
-    Plan-growth cap (VERDICT r6 item #4): with plain ``.cache()`` per
+    Plan-growth cap: with plain ``.cache()`` per
     round the plan cannot stay bounded EITHER way — leak the caches
     and each round's stored plan nests the previous round's
     InMemoryRelation (q119 reached 260 plan-string Exchanges by round
@@ -576,7 +558,7 @@ def resolve_dup_clusters(
 
     Raises ``ValueError`` when the fixpoint is not reached within
     ``max_iters`` rounds instead of returning silently non-canonical
-    roots (ADVICE r7) — with pointer jumping that means a >2^30-deep
+    roots — with pointer jumping that means a >2^30-deep
     chain or a cyclic (non-forest) input.
     """
     parent = decision.select(
@@ -609,8 +591,8 @@ def resolve_dup_clusters(
         # unpersisting a relation that a DEPENDENT CACHED plan reads
         # triggers the re-inlining blowup documented above. Also note
         # unpersist must target the frame that OWNS the cache entry — a
-        # select() over it is a cache-manager no-op (the pre-round-7
-        # code leaked every round's cache that way).
+        # select() over it is a cache-manager no-op (unpersisting the
+        # select would leak every round's cache).
         stored.unpersist()
         stored = grand
         parent = grand.select(id_col, "p")
@@ -620,7 +602,7 @@ def resolve_dup_clusters(
         raise ValueError(
             f"resolve_dup_clusters(): chains did not resolve within "
             f"max_iters={max_iters} pointer-jumping rounds — returned "
-            "roots would be silently non-canonical (ADVICE r7). A "
+            "roots would be silently non-canonical. A "
             "parent forest resolves in ~log2(chain depth) rounds, so "
             "this indicates either a pathological >2^30-deep chain "
             "(raise max_iters) or a CYCLIC input that is not a "
@@ -1081,7 +1063,7 @@ def collapsed_near_duplicates(
     clones_a x clones_b).
 
     Byte-identical texts group on md5 (NULL text keyed separately —
-    never aliased to the empty string, the shingle_fingerprint lesson);
+    never aliased to the empty string's md5);
     the min-id member represents the group; the COMPLETE pigeonhole
     SimHash pair search (simhash_near_duplicates) runs over
     REPRESENTATIVES only; each side carries its clone-group size so

@@ -40,7 +40,7 @@ def target_encode_loo(
     dec = F.col(target_col).cast("decimal(18,4)")
     # NaN targets are excluded like NULLs: the decimal cast nulls NaN
     # inside the sum while count() would still count the row, biasing
-    # every LOO encode in the category (review fix, reproduced)
+    # every LOO encode in the category
     valid = F.col(target_col).isNotNull() & ~F.isnan(
         F.col(target_col).cast("double")
     )

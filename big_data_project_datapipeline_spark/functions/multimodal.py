@@ -7,12 +7,11 @@ place Python belongs — per-item opaque-bytes work that no built-in
 expression can do). Everything around it — schema, partitioning, batch
 shape, null handling — is real Spark plumbing and tested.
 
-The actual codec step is STUBBED: this container has no image/audio
-libraries, so ``decode_image`` raises ``NotImplementedError`` unless a
-decoder (PIL) is importable, and ``extract_media_features`` falls back to a
-deterministic header-based fake (size, md5, magic-sniffed kind,
-fake dimensions parsed from the header bytes) so the pipeline shape is
-exercised end-to-end.
+There is no codec step: ``extract_media_features`` computes a
+deterministic header-based stand-in (size, md5, magic-sniffed kind, fake
+dimensions derived from the content digest), so the pipeline shape is
+exercised end-to-end without an image library. A real decoder replaces
+the fake dimensions inside the same batch function.
 
 Scale notes: mapInPandas streams Arrow batches — peak memory is
 O(batch) not O(partition); keep ``spark.sql.execution.arrow.
@@ -30,14 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-    ]
-)
 
 MEDIA_FEATURES_SCHEMA = T.StructType(
     [
@@ -58,28 +49,12 @@ _MAGIC = {
 
 # RIFF is a CONTAINER: the format tag at offset 8 decides the media kind
 # (WAVE audio, WEBP image, 'AVI ' video) — mapping the 4-byte prefix
-# straight to audio/wav misrouted WebP/AVI payloads (review fix).
+# straight to audio/wav would misroute WebP/AVI payloads.
 _RIFF_KINDS = {
     b"WAVE": "audio/wav",
     b"WEBP": "image/webp",
     b"AVI ": "video/avi",
 }
-
-
-def decode_image(content: bytes):
-    """Real decode — requires an image library. STUB: raises unless PIL is
-    available (not in this container); callers use the deterministic
-    feature fallback instead."""
-    try:
-        import io
-
-        from PIL import Image  # noqa: PLC0415
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "image decode requires PIL; container has no image libs — "
-            "use extract_media_features (deterministic fallback) instead"
-        ) from exc
-    return Image.open(io.BytesIO(content))  # pragma: no cover
 
 
 def _sniff(content: bytes | None) -> str | None:
@@ -104,9 +79,8 @@ def extract_media_features(df: DataFrame, content_col: str = "content") -> DataF
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             contents = pdf[content_col]
-            # ONE digest per item (md5 + both fake dims derive from it)
-            # — the previous per-column calls hashed multi-MB blobs
-            # three times each (review fix; output bit-identical)
+            # ONE digest per item (md5 + both fake dims derive from it),
+            # not one per output column: multi-MB blobs hash once
             digests = [
                 hashlib.md5(c).digest() if c is not None else None
                 for c in contents
@@ -135,108 +109,6 @@ def extract_media_features(df: DataFrame, content_col: str = "content") -> DataF
     return df.select("media_id", content_col).mapInPandas(
         _extract, MEDIA_FEATURES_SCHEMA
     )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    content_col: str = "content",
-) -> DataFrame:
-    """Resize plumbing: 1→1 Arrow-batched transform of a binary column.
-
-    The pixel work is STUBBED (no image libs in this container): output
-    bytes are a deterministic function of (input digest, target dims) with
-    a recognizable header, so round-trip tests are stable. With PIL
-    present, swap the stub body for ``decode_image(c).resize(...)`` —
-    the Spark plumbing (schema, pruning, batch shape, nulls) is identical.
-    """
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_content = []
-            for c in pdf[content_col]:
-                if c is None:
-                    out_content.append(None)
-                    continue
-                d = hashlib.sha1(bytes(c)).digest()
-                out_content.append(
-                    b"FAKE-RESIZE:%dx%d:" % (width, height) + d
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": out_content,
-                    "width": [
-                        width if c is not None else None for c in pdf[content_col]
-                    ],
-                    "height": [
-                        height if c is not None else None for c in pdf[content_col]
-                    ],
-                }
-            )
-
-    return df.select("media_id", content_col).mapInPandas(_resize, RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("ts_offset_s", T.DoubleType(), False),
-        T.StructField("frame", T.BinaryType(), True),
-    ]
-)
-
-
-def sample_video_frames(
-    df: DataFrame,
-    n_frames: int = 4,
-    fps: float = 1.0,
-    content_col: str = "content",
-) -> DataFrame:
-    """Frame-sampling plumbing: 1→N Arrow-batched fan-out — each video row
-    yields ``n_frames`` frame rows (uniform stride at ``fps``). The decode
-    is STUBBED (deterministic digest-derived frame bytes); the fan-out,
-    schema, and constant-memory batch shape are the real thing. At scale
-    the output is ``n_frames×`` the input row count with no shuffle —
-    repartition AFTER sampling if downstream needs balance.
-    """
-    if fps <= 0:
-        raise ValueError(f"fps must be > 0, got {fps}")
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, offs, frames = [], [], [], []
-            for mid, c in zip(pdf["media_id"], pdf[content_col]):
-                if c is None:
-                    continue  # undecodable media yields no frames
-                d = hashlib.sha1(bytes(c)).digest()
-                for i in range(n_frames):
-                    ids.append(mid)
-                    idxs.append(i)
-                    offs.append(i / fps)
-                    frames.append(b"FAKE-FRAME:%d:" % i + d)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "ts_offset_s": pd.Series(offs, dtype="float64"),
-                    "frame": frames,
-                }
-            )
-
-    return df.select("media_id", content_col).mapInPandas(_sample, FRAME_SCHEMA)
 
 
 def documents_as_media(df: DataFrame) -> DataFrame:

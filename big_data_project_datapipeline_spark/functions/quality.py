@@ -3,8 +3,7 @@
 The reference computes row counts, per-column null counts, and the timestamp
 range with eager pandas calls and prints warnings. Spark-first: the same
 metrics ride along the main action as a single ``df.observe`` (zero extra
-jobs) or as one explicit aggregate (one job, map-side combined) — never one
-job per column.
+jobs) — never one job per column.
 """
 
 from __future__ import annotations
@@ -27,13 +26,6 @@ def null_count(c: str):
 
 
 _ROW_COUNT = "count(1) AS row_count"
-
-
-def quality_aggregates(df: DataFrame, cols: Sequence[str] | None = None):
-    """One-job quality summary: total rows, per-column nulls, key range."""
-    cols = list(cols or df.columns)
-    aggs = [F.expr(_ROW_COUNT)] + [null_count(c) for c in cols]
-    return df.agg(*aggs)
 
 
 def observe_quality(
@@ -128,7 +120,7 @@ def welch_ttest(
 
     # NaN is excluded like NULL: the decimal cast nulls NaN inside the
     # sums while count() would still count the row, fabricating moments
-    # (review fix — same rule applied to histogram/trend/anomalies/gini)
+    # (the same rule applies in histogram/trend/anomalies/gini)
     base = (
         df.filter(
             F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col))
@@ -210,8 +202,8 @@ def mad_outlier_summary(
     frame is still O(rows), so the exact path pays two full range
     exchanges at decade scale.
 
-    ``scale_estimator="sketch"`` is the 100 TB path (the q219 huber
-    swap, round-11 audit): both medians come from the mergeable
+    ``scale_estimator="sketch"`` is the 100 TB path (q219's huber
+    swap): both medians come from the mergeable
     O(groups × scale_bins) histogram device (:func:`_hist_median`) —
     every aggregate map-side combinable, NO sort, no per-group value
     buffer; |median error| <= bin width/2 per median, and the MAD grid
@@ -304,10 +296,10 @@ def grouped_rank_elements(
     element (q=1/2 reproduces grouped_lower_median exactly).
 
     One distinct-value aggregate + ONE group_rank_frame pass serves
-    every requested quantile (round-6 funnel fix: for continuous
-    values the collapsed frame is still O(rows), and the former
-    cumulative window partitioned by the low-cardinality group key
-    serialized each group through one task).
+    every requested quantile (for continuous values the collapsed
+    frame is still O(rows), and a cumulative window partitioned by the
+    low-cardinality group key would serialize each group through one
+    task).
     """
     from big_data_project_datapipeline_spark.operators.prefix import (
         group_rank_frame,
@@ -440,7 +432,7 @@ def equal_frequency_bins(
     order, hence deterministic across engines — with per-bin count and
     value bounds.
 
-    Scale (round-6 funnel fix): bin = ntile_from_rank over a
+    Scale: bin = ntile_from_rank over a
     group_rank_frame per-group rank — ONE range exchange instead of an
     ntile window partitioned by the LOW-cardinality group key, which
     serialized each group through one task. Bit-identical to the
@@ -533,7 +525,7 @@ def grouped_linear_trend(
     xy = (x.cast("double") * F.col(value_col)).cast("decimal(28,6)")
     # null/NaN x rows must ALSO drop: they are skipped by the x-moment
     # sums but would inflate n and __sy, silently corrupting the fit
-    # (review fix, reproduced: slope -1.5 where the valid rows define 1.0)
+    # (e.g. slope -1.5 where the valid rows define 1.0)
     g = (
         df.filter(
             F.col(value_col).isNotNull()
@@ -589,8 +581,8 @@ def gini_dispersion(
     Scale shape: the per-group rank comes from
     operators/prefix.group_rank_frame (ONE range exchange, no
     group-partitioned window — a low-cardinality group key would
-    otherwise serialize each group through one task; round-6 funnel
-    fix) plus one map-side-combinable aggregate."""
+    otherwise serialize each group through one task) plus one
+    map-side-combinable aggregate."""
     from big_data_project_datapipeline_spark.operators.prefix import (
         group_rank_frame,
     )
@@ -649,7 +641,7 @@ def weighted_percentile_elements(
     are exact column elements, never interpolations (the q82/q38
     element convention).
 
-    Scale shape (round-6 funnel fix): the per-group decimal cumsum
+    Scale shape: the per-group decimal cumsum
     comes from operators/prefix.group_rank_frame — ONE range exchange
     instead of a cumulative window partitioned by the LOW-cardinality
     group key (which serialized each group through one task) — then
@@ -910,11 +902,11 @@ def _ecdf_frames(df, split_expr, value_col, group_col):
     """Shared two-sample ECDF scaffolding for ks_drift / emd_drift:
     clean NaN/NULL, collapse to per-(group, distinct value) ref/cur
     counts, then per-group cumulative counts + totals + the per-group
-    value rank in ONE group_rank_frame pass (round-6 funnel fix: for
-    continuous values the collapsed frame is still O(rows), and the
-    former cumulative window partitioned by the low-cardinality group
-    key serialized each group through one task; the totals also rode
-    a second consumer of the collapsed frame, recomputing it).
+    value rank in ONE group_rank_frame pass (for continuous values the
+    collapsed frame is still O(rows), and a cumulative window
+    partitioned by the low-cardinality group key would serialize each
+    group through one task; separate totals would be a second consumer
+    of the collapsed frame, recomputing it).
     Returns one frame: (grp, v, cr, cc, ccr, ccc, n_ref, n_cur, __gr)
     — cumulative/total counts exact longs, __gr the per-group ascending
     value rank (emd's lead(v) becomes a rank+1 self-join)."""
@@ -979,7 +971,7 @@ def ks_drift(
     Scale shape: one map-side-combinable groupBy collapses to distinct
     values, then cumulative counts + totals from _ecdf_frames' single
     group_rank_frame pass (one range exchange, no group-partitioned
-    window, no separate totals branch — round-6 funnel fix).
+    window, no separate totals branch).
     """
     cum = _ecdf_frames(df, split_expr, value_col, group_col)
     d = cum.select(
@@ -1156,9 +1148,9 @@ def benford_audit(
     """
     v = F.col(value_col)
     cents = F.round(v * 100).cast("long")
-    # NaN/Infinity/huge guard BEFORE the ANSI long cast (review fix:
-    # a single NaN row would abort the job with CAST_INVALID_INPUT;
-    # |v| >= 9e16 cents would overflow the cast)
+    # NaN/Infinity/huge guard BEFORE the ANSI long cast (a single NaN
+    # row would abort the job with CAST_INVALID_INPUT; |v| >= 9e16
+    # cents would overflow the cast)
     staged = (
         df.filter(v.isNotNull() & ~F.isnan(v) & (F.abs(v) < F.lit(9.0e16)))
         .select(F.col(group_col).alias("grp"), cents.alias("__cents"))
@@ -1192,7 +1184,7 @@ def benford_audit(
     expected = n_d * exp_share
     # decimal(28,9): chi-square terms are unbounded (O(n) per group)
     # unlike the PSI terms — 18,9 would overflow ANSI-fatally exactly
-    # when the deviation signal is strongest (review fix)
+    # when the deviation signal is strongest
     term = F.round(
         (F.col("c").cast("double") - expected)
         * (F.col("c").cast("double") - expected)
@@ -1246,7 +1238,7 @@ def mean_shift_scan(
     k via max(struct(diff, −k)). NaN/NULL excluded up front.
     Single-row groups have no interior split and are absent.
 
-    Scale shape (round-6 funnel fix): prefix sum, rank, group count
+    Scale shape: prefix sum, rank, group count
     and group total all come from ONE group_rank_frame pass (one range
     exchange — the former per-group sort window serialized each
     low-cardinality group through one task, and the totals branch
@@ -1382,7 +1374,7 @@ def trimmed_winsor_summary(
     all. Means are final IEEE divisions, rounded at the surface.
     NaN/NULL excluded up front.
 
-    Scale shape (round-6 funnel fix): per-group rank + count from one
+    Scale shape: per-group rank + count from one
     group_rank_frame pass (one range exchange — the former per-group
     sort window serialized each low-cardinality group through one
     task), one map-side-combinable groupBy — the q126 posture. At
@@ -1417,11 +1409,11 @@ def trimmed_winsor_summary(
     )
     # (26,12) x (11,0) -> precision 26+11+1 = 38: stays inside Spark's
     # decimal cap, so the product is EXACT — (28,12) x long would need
-    # precision 49 and be silently rounded to scale 6 (review fix).
+    # precision 49 and be silently rounded to scale 6.
     # The ADDITIONS must stay exact too: (38,12)+(38,12) would need
     # precision 39, which Spark's precision-loss rule caps at (38,11)
-    # — rounding the 12th fractional digit while DuckDB keeps scale 12
-    # (r4 advice). Downcasting each addend to (36,12) (headroom 10^24,
+    # — rounding the 12th fractional digit while DuckDB keeps scale
+    # 12. Downcasting each addend to (36,12) (headroom 10^24,
     # far above any 100 TB sum of prices) makes the chain
     # (36,12)+(36,12)->(37,12), +(36,12)->(38,12): uncapped, EXACT,
     # bit-matching the oracle at full scale.
@@ -1474,8 +1466,7 @@ def grouped_auc(
     collapsed frame comes from operators/prefix.group_rank_frame (ONE
     range exchange — for CONTINUOUS scores the collapsed frame is
     still O(rows), and a window partitioned by the low-cardinality
-    group key would serialize each group through one task; round-6
-    funnel fix).
+    group key would serialize each group through one task).
     """
     from big_data_project_datapipeline_spark.operators.prefix import (
         group_rank_frame,
@@ -1502,7 +1493,7 @@ def grouped_auc(
     )
     # (18,0) x (19,0) decimal product + decimal sum: contrib2 can reach
     # 2n^2 per group, overflowing int64 (ANSI-fatally) near ~3e9 rows
-    # per group (review fix) — decimals carry it to ~1e37
+    # per group — decimals carry it to ~1e37
     contrib = cum.select(
         *gcols,
         "cp",
@@ -1573,7 +1564,7 @@ def grouped_average_precision(
     collapsed frame derive from group_rank_frame's ascending running
     sums (cum_desc = group_total − cum_asc + current, exact integer) —
     ONE range exchange, no group-partitioned window (for CONTINUOUS
-    scores the collapsed frame is still O(rows); round-6 funnel fix).
+    scores the collapsed frame is still O(rows)).
     """
     from big_data_project_datapipeline_spark.operators.prefix import (
         group_rank_frame,
@@ -1741,7 +1732,7 @@ def grouped_acf(
         F.col(id_col).alias("__id"),
         v.alias("__v"),
     )
-    # Round-6 funnel fix: the lag pairs come from a per-group rank
+    # The lag pairs come from a per-group rank
     # (group_rank_frame — one range exchange) and a (grp, rank − k)
     # self-join instead of lag windows partitioned by the
     # low-cardinality group key (which serialized each group through
@@ -1888,8 +1879,7 @@ def emd_drift(
     Scale shape: identical to ks_drift — one map-side-combinable
     collapse, cumulative counts from _ecdf_frames' group_rank_frame
     pass; the former lead(v) window is a (grp, rank+1) equi-join on
-    the persisted cum frame (round-6 funnel fix — no group-partitioned
-    window anywhere).
+    the persisted cum frame (no group-partitioned window anywhere).
     """
     from big_data_project_datapipeline_spark.operators.caching import (
         attach_cache_release,
@@ -1918,8 +1908,8 @@ def emd_drift(
     )
     # A two-sided group with ONE distinct value has no segments (lead
     # is NULL) but IS comparable with zero drift — emit 0.0, reserving
-    # NULL for genuinely one-sided groups (review fix; ks_drift's 0.0
-    # for the same input is the model).
+    # NULL for genuinely one-sided groups (ks_drift's 0.0 for the same
+    # input is the model).
     both = (F.col("n_ref") > 0) & (F.col("n_cur") > 0)
     res = out.select(
         F.col("grp").alias(group_col),
@@ -2005,15 +1995,15 @@ def bootstrap_mean_ci(
         % F.lit(M - 1)
         + F.lit(1)
     )
-    # Fan the ×B explode out across the cluster (r12, guide §2.5 input
-    # skew): the heavy stage below does B× the scan's row count of
-    # CDF-chain work, and a single-row-group (or gzip) input pins all
-    # of it to one scan task. A deterministic hash repartition on the
-    # unique id moves the PRE-explode rows (1/B of the downstream
-    # work) exactly once — bounded insurance at any scale, and it
-    # makes the replicate pass scale with cores instead of with input
-    # row groups. Hash, not round-robin: no sort-before-repartition
-    # pass, stable under task retry (SPARK-38388).
+    # Fan the ×B explode out across the cluster (input skew): the heavy
+    # stage below does B× the scan's row count of CDF-chain work, and a
+    # single-row-group (or gzip) input pins all of it to one scan task.
+    # A deterministic hash repartition on the unique id moves the
+    # PRE-explode rows (1/B of the downstream work) exactly once —
+    # bounded insurance at any scale, and it makes the replicate pass
+    # scale with cores instead of with input row groups. Hash, not
+    # round-robin: no sort-before-repartition pass, stable under task
+    # retry (SPARK-38388).
     # numPartitions pinned to defaultParallelism (cores — scale-
     # adaptive, not a constant): without it AQE coalesces this tiny
     # pre-explode exchange (~1 MB shuffled) back to ONE partition by
@@ -2189,7 +2179,7 @@ def snapshot_diff(
     NULL-keyed row pair classifies unchanged/modified, never
     added+removed — and multiple NULL-keyed rows per side cross-match
     as one key). SQL mirrors must join with IS NOT DISTINCT FROM, not
-    USING, to reproduce this (r4 advice; q161 does). CALLER CONTRACT:
+    USING, to reproduce this (q161 does). CALLER CONTRACT:
     raw double columns must be pre-rendered to a stable form (e.g.
     exact integer cents) before fingerprinting — double→string is NOT
     cross-engine stable (shortest-repr vs %g).
@@ -2427,8 +2417,7 @@ def quantile_normalize(
     ((r·N + n_g − 1) div n_g, clamped to [1, N]); the mapped value is
     a pooled ELEMENT (never interpolated). NaN/NULL excluded.
 
-    Scale shape (round-5 fix of the r4 verdict's top scale defect,
-    tightened again by the round-6 sf10 smoke): BOTH ranks — the
+    Scale shape: BOTH ranks — the
     pooled global rank AND the within-group rank — come from ONE
     range exchange via operators.prefix.grouped_prefix. The earlier
     form ranked within groups through Window.partitionBy(event_type),
@@ -2592,9 +2581,9 @@ def lorenz_concentration(
 
     Scale shape: one map-side-combinable per-entity collapse, then
     rank + running sum from operators/prefix.group_rank_frame (one
-    range exchange — the report group key is LOW-cardinality, the
-    round-6 funnel contract), then a map-only explode of O(n_points)
-    boundary markers. Output is O(groups × n_points).
+    range exchange — the report group key is LOW-cardinality), then a
+    map-only explode of O(n_points) boundary markers. Output is
+    O(groups × n_points).
     """
     from big_data_project_datapipeline_spark.operators.prefix import (
         group_rank_frame,
@@ -2639,7 +2628,7 @@ def lorenz_concentration(
         # by zero — Spark's non-ANSI division yields NULL, DuckDB's
         # IEEE double division yields inf/NaN. NULL on both sides
         # (mirrored NULLIF in the q182 oracle) is the cross-engine
-        # contract, matching the rest of this module (ADVICE r6).
+        # contract, matching the rest of this module.
         F.round(
             F.col("__w__gcum").cast("double")
             / F.nullif(F.col("__w__gtot").cast("double"), F.lit(0.0)),
@@ -2664,7 +2653,7 @@ def rrf_fusion(
     heterogeneous retrievers (BM25 + dense, quality + freshness).
     Returns the fused top-``k`` per group with each signal's rank.
 
-    NULL-score contract (ADVICE r6): an item NULL in one signal simply
+    NULL-score contract: an item NULL in one signal simply
     lacks that signal's term (Cormack et al. sum over the runs
     containing the document) — it stays in the fusion via the signals
     that DO score it, its ``rank_<s>`` for the missing signal is NULL,
@@ -2677,7 +2666,7 @@ def rrf_fusion(
     engines evaluate the identical IEEE sequence; final order
     (fused DESC, item) is total. round(6) on the surface.
 
-    Scale shape (the round-6 funnel contract, both sides): each
+    Scale shape (both sides): each
     signal's rank feeds a JOIN — not a plain ``<= k`` filter — so it
     gets NO WindowGroupLimit defense and must come from
     operators/prefix.group_rank_frame (one range exchange per signal);
@@ -3089,8 +3078,8 @@ def _daily_pair_frames(
         # data-dependent, so Catalyst cannot constant-fold the key out
         # of the equi-condition — a literal F.lit(1) key folds to
         # TRUE and the join degenerates to a CartesianProduct node
-        # (round-10 fix; the node was latent because the registered
-        # consumers are all grouped). Single-key hash join over the
+        # (latent while every registered consumer is grouped).
+        # Single-key hash join over the
         # max_points-bounded daily frame — same bounded cost, audit-
         # clean plan. NULL-day rows never paired under either scheme
         # (__di < __dj is NULL-false), so semantics are unchanged.
@@ -3262,8 +3251,9 @@ def cramers_v_from_cells(cells: DataFrame) -> DataFrame:
         F.round(F.col("__chi2"), 6).alias("chi2"),
         F.round(
             F.sqrt(
-                # χ² is ≥ 0 mathematically; the round-9 fold can land
-                # an independent table a hair below 0 — clamp before
+                # χ² is ≥ 0 mathematically; the round-9-then-decimal
+                # fold can land an independent table a hair below 0 —
+                # clamp before
                 # sqrt so V is 0.0, never NaN
                 F.greatest(F.col("__chi2"), F.lit(0.0))
                 / F.nullif(
@@ -3778,11 +3768,11 @@ def huber_irls(
         # per-pass lazy localCheckpoint on the O(groups) state (the
         # q215 logistic_irls lineage-cap device): without it each pass
         # nests the whole prior chain as one deep tree re-paid by the
-        # planner per pass (r12 A/B with 256 KB openCost, 6 runs each:
+        # planner per pass (A/B with 256 KB openCost, 6 runs each:
         # best 9.0 s vs 11.0 s warm-solo at sf0.1). ``lineage_cap=
         # False`` keeps the pure-lineage plan for plan inspection.
-        # Snapshots ride on the result via attach_cache_release below
-        # (ADVICE r12): blocks free with the result instead of
+        # Snapshots ride on the result via attach_cache_release below:
+        # blocks free with the result instead of
         # lingering until ContextCleaner GC.
         if not lineage_cap:
             return f

@@ -49,13 +49,8 @@ def safe_div(num: Column, den: Column) -> Column:
     """num/den with zero-denominator -> 0.0: Spark 4 runs ANSI mode by
     default, so a bare division aborts the whole job on the first
     zero-norm vector (padding row, failed encode) — rank it neutral
-    instead of crashing the ranking (review fix, reproduced under this
-    session's config)."""
+    instead of crashing the ranking."""
     return F.when(den != 0.0, num / den).otherwise(F.lit(0.0))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return safe_div(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def cosine_topk(
@@ -133,7 +128,7 @@ def quantize_int8_metrics(
     staged = staged.select(id_col, "__v", scale)
     s = F.col("scale")
     # clamp at -127: floor(x/scale) can land on -128 when rounding error
-    # pushes -absmax/scale a hair below -127 (review fix, ~14% of absmax
+    # pushes -absmax/scale a hair below -127 (~14% of absmax
     # values) — the symmetric-int8 contract is [-127, 127]
     q = F.transform(
         F.col("__v"),
@@ -310,10 +305,10 @@ def _lloyd_fit(
     for _ in range(max_iter):
         # per-center distance columns, NOT the (n, k, dim) broadcast:
         # the 3-D intermediate was measured 90x slower on this numpy
-        # build (5.3 s vs 59 ms for 2000x64, k=16, 8 iters — r12) and
+        # build (5.3 s vs 59 ms for 2000x64, k=16, 8 iters) and
         # each column is the same contiguous last-axis pairwise sum,
         # so every distance is BIT-IDENTICAL to the broadcast form
-        # (asserted in the r12 A/B; centroids are unchanged).
+        # (asserted in an A/B run; centroids are unchanged).
         d = np.empty((len(pts), len(centers)))
         for j in range(len(centers)):
             d[:, j] = ((pts - centers[j]) ** 2).sum(axis=1)
@@ -445,9 +440,8 @@ def ann_topk_lsh(
     buckets = F.array(
         *[srp_bucket(F.col(vec_col), num_bits, dim, t) for t in range(n_tables)]
     )
-    # norms are projected BELOW the join (once per row) — the cosine()
-    # helper would refold each side's norm once per CANDIDATE PAIR
-    # (review fix; same device as cosine_topk/ivf_topk)
+    # norms are projected BELOW the join (once per row), not refolded
+    # once per CANDIDATE PAIR (same device as cosine_topk/ivf_topk)
     expand = lambda d, idc, vc, nc: (  # noqa: E731
         d.select(
             F.col(id_col).alias(idc),
@@ -556,7 +550,7 @@ def pca_project(
     if len(comps) < k:
         # pca_fit can only return min(k, dim) components; indexing
         # __pc[i] past that would die with an opaque ANSI
-        # INVALID_ARRAY_INDEX mid-job (review fix) — fail up front
+        # INVALID_ARRAY_INDEX mid-job — fail up front
         raise ValueError(
             f"k={k} exceeds the {len(comps)} fit components "
             f"(embedding dim limits the basis)"
@@ -861,8 +855,8 @@ def _dvec_expr(vec) -> Column:
     ``F.lit(list)`` / ``F.array(*[F.lit(...)])`` cost a py4j
     round-trip per element/row; for model-sized matrices (IVFPQ: 16
     centroids × 64 dims + 8 codebooks × 16 × 8) that put ~10 s of
-    driver-side plan CONSTRUCTION ahead of a ~7 s execution (r4
-    verdict item #7). One F.expr parse is ~150× faster and
+    driver-side plan CONSTRUCTION ahead of a ~7 s execution. One F.expr
+    parse is ~150× faster and
     value-identical."""
     return F.expr(_dvec_sql(vec))
 
@@ -881,9 +875,9 @@ def _dmat_sql(mat) -> str:
 
 def _sqd_sql(a: str, b: str) -> str:
     """SQL text of :func:`_sqd` over two array<double> SQL fragments —
-    the r13 generalization of the ``_dvec_expr`` device (VERDICT r12
-    item 8): every lambda-based higher-order Column call
-    (zip_with/aggregate/transform) costs ~40–80 ms of py4j round trips
+    the generalization of the ``_dvec_expr`` device: every
+    lambda-based higher-order Column call (zip_with/aggregate/transform)
+    costs ~40–80 ms of py4j round trips
     on this host, and the IVFPQ encode/search constructors issue dozens
     (q117: 4,226 round trips, 8.3 s of pure plan construction per run,
     cProfile-verified). One ``F.expr`` parse of the same tree is
@@ -911,8 +905,8 @@ def ivfpq_train(
     quantizer over ``n_lists`` cells plus ``m`` residual PQ codebooks
     of ``k_sub`` sub-centroids each, all fit on ONE bounded
     deterministic top-N-by-hash sample — O(1) driver memory regardless
-    of corpus size. Returns a plain-dict model (json-serializable; see
-    save_ivfpq_model) that ships into encode/search plans as literals."""
+    of corpus size. Returns a plain-dict model (json-serializable) that
+    ships into encode/search plans as literals."""
     import numpy as np
 
     sample_rows = (
@@ -930,7 +924,7 @@ def ivfpq_train(
         _lloyd_fit(vecs.tolist(), n_lists, seed=seed, max_iter=max_iter)
     )
     # per-center columns, not the (n, k, dim) broadcast — bit-identical
-    # and ~90x faster on this numpy build (see _lloyd_fit, r12)
+    # and ~90x faster on this numpy build (see _lloyd_fit)
     d2 = np.empty((len(vecs), len(cents)))
     for j in range(len(cents)):
         d2[:, j] = ((vecs - cents[j]) ** 2).sum(axis=1)
@@ -953,26 +947,6 @@ def ivfpq_train(
     }
 
 
-def save_ivfpq_model(model: dict, path: str) -> None:
-    """Persist an IVF-PQ model as JSON. Python float repr round-trips
-    IEEE doubles exactly, so a saved+loaded model encodes and searches
-    bit-identically (pinned by test)."""
-    import json
-    import os
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(model, fh)
-    os.replace(tmp, path)
-
-
-def load_ivfpq_model(path: str) -> dict:
-    import json
-
-    with open(path) as fh:
-        return json.load(fh)
-
-
 def ivfpq_encode(
     corpus: DataFrame,
     model: dict,
@@ -987,7 +961,7 @@ def ivfpq_encode(
     sub, m = model["sub"], model["m"]
     cents_sql = _dmat_sql(model["centroids"])
     # whole-expression SQL strings, parsed once each (the _sqd_sql
-    # r13 device): the per-lambda Column API costs made THIS function
+    # device): the per-lambda Column API costs made THIS function
     # a measurable slice of q117's 8.3 s construction
     v_sql = f"cast({quote_ident(vec_col)} as array<double>)"
     coarse_d = F.expr(
@@ -1051,8 +1025,8 @@ def ivfpq_search(
     cents = model["centroids"]
     n_probe = min(n_probe, len(cents))
     cents_sql = _dmat_sql(model["centroids"])
-    # whole-expression SQL strings parsed once (the _sqd_sql r13
-    # device) — this constructor was the bulk of q117's measured 8.3 s
+    # whole-expression SQL strings parsed once (the _sqd_sql device)
+    # — this constructor was the bulk of q117's measured 8.3 s
     # of per-run py4j plan-construction time
     qv_sql = f"cast({quote_ident(vec_col)} as array<double>)"
     q_coarse_sql = "array(" + ",".join(

@@ -200,9 +200,9 @@ def rolling_hll_distinct(
     estimator tail as q176 — bit-identical cross-engine.
     """
     day = F.to_date(F.col(date_col)).alias("__day")
-    # NULL keys are filtered HERE, before the report-day set is built
-    # (ADVICE r5): hll_registers drops them anyway, but a (group, day)
-    # whose events were ALL null-keyed must not become a report day —
+    # NULL keys are filtered HERE, before the report-day set is built:
+    # hll_registers drops them anyway, but a (group, day) whose events
+    # were ALL null-keyed must not become a report day —
     # the day contract and the register contract derive from the same
     # filtered frame, matching the oracle's null-filtered day set.
     staged = df.filter(F.col(key_col).isNotNull()).select(
@@ -311,30 +311,6 @@ def kmv_sketch(
         survivors.select(*gcols, "h", F.row_number().over(w).alias("__rn"))
         .filter(F.col("__rn") <= k)
         .select(*gcols, "h")
-    )
-
-
-def kmv_distinct_estimate(
-    sketch: DataFrame,
-    group_cols: Sequence[str] = (),
-    k: int = 256,
-) -> DataFrame:
-    """Cardinality from a KMV sketch: D̂ = (k−1)·2^60 / h_(k) when the
-    sketch is full (the k-th order statistic of a uniform sample), or
-    the EXACT sketch size when the group has fewer than k distinct
-    keys (the sketch then holds every hash). One IEEE division."""
-    gcols = list(group_cols)
-    agg = sketch.groupBy(*gcols).agg(
-        F.count(F.lit(1)).cast("long").alias("n_sketch"),
-        F.max("h").alias("__hk"),
-    )
-    full = F.col("n_sketch") >= k
-    est = F.when(
-        full,
-        F.lit(float((k - 1) * (1 << 60))) / F.col("__hk").cast("double"),
-    ).otherwise(F.col("n_sketch").cast("double"))
-    return agg.select(
-        *gcols, "n_sketch", F.round(est, 6).alias("estimate")
     )
 
 
@@ -655,14 +631,14 @@ def bloom_probe(
     negatives ever, false positives at the classic (1 − e^(−d·n/m))^d
     rate. The probe positions explode map-side; one left-semi-shaped
     join against the sparse bit frame and a count-equals-depth check
-    per probe. NULL probe keys are filtered (ADVICE r5) — the writer
+    per probe. NULL probe keys are filtered — the writer
     (:func:`bloom_positions`) never hashes NULLs, so probing one
-    previously produced a meaningless maybe=False row."""
+    would produce a meaningless maybe=False row."""
     gcols = list(group_cols)
     h31 = (key_hash60(F.col(key_col)) % F.lit(UH_PRIME)).alias("__h")
     # dedupe BEFORE exploding cells: a duplicated probe row would
     # multiply its cells and push nhit past depth, flipping a true
-    # member to False (review fix — the nhit == depth check relies on
+    # member to False (the nhit == depth check relies on
     # exactly one cell set per hash row)
     staged = (
         probes.filter(F.col(key_col).isNotNull())
@@ -716,7 +692,7 @@ def countmin_lookup(
     The probe frame is broadcast; the counter frame is filtered to the
     probed cells by the join, so the lookup is O(probes · depth).
 
-    Read contract (ADVICE r5): a probe whose group has NO counter
+    Read contract: a probe whose group has NO counter
     frame returns the correct estimate 0 (the sketch of an empty
     stream counts nothing) instead of silently vanishing — the final
     left join from the probe frame guarantees one output row per

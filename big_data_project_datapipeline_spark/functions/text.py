@@ -14,7 +14,7 @@ boundary and derives everything from it.
 
 Ops: token/char statistics, punctuation & stopword ratios, a composite
 quality score, n-gram-free heuristic language ID (stopword voting), and
-document fingerprints (normalized md5 + rolling-shingle fingerprint).
+document fingerprints (normalized md5 + winnowing).
 """
 
 from __future__ import annotations
@@ -158,91 +158,18 @@ def normalized_fingerprint(text: Column) -> Column:
     return F.md5(norm)
 
 
-def shingle_fingerprint(text: Column, k: int = 3) -> Column:
-    """Rolling k-token-shingle fingerprint: md5 of the min shingle hash —
-    a 1-hash minhash, cheap near-dup blocking key."""
-    toks = tokens(text)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingles = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, k)))
-    )
-    # NULL text stays NULL (normalized_fingerprint's convention) —
-    # greatest() skipping the NULL size would otherwise alias missing
-    # docs with genuinely-empty ones under md5('') (review fix)
-    return F.when(text.isNotNull(), F.array_min(shingles))
-
-
-def char_codes(text: Column) -> Column:
-    """Codepoint array of lowercased text (1 code per character)."""
-    clean = F.lower(text)
-    return F.transform(
-        F.sequence(F.lit(1), F.length(clean)),
-        lambda i: F.ascii(clean.substr(i, F.lit(1))).cast("long"),
-    )
-
-
-def gram_hashes_from_codes(codes: Column, k: int = 5, base: int = 256) -> Column:
-    """Polynomial hash of every k-gram: Σ code[i+j]·base^(k−1−j). Injective
-    for single-byte alphabets; fits in a long for k ≤ 7 at base 256."""
-    weights = [base ** (k - 1 - j) for j in range(k)]
-    n_grams = F.size(codes) - F.lit(k) + 1
-
-    def gram(i: Column) -> Column:
-        h = F.element_at(codes, i) * F.lit(weights[0])
-        for j in range(1, k):
-            h = h + F.element_at(codes, i + F.lit(j)) * F.lit(weights[j])
-        return h
-
-    return F.when(
-        n_grams >= 1, F.transform(F.sequence(F.lit(1), n_grams), gram)
-    ).otherwise(F.array().cast("array<long>"))
-
-
-def winnow_from_grams(grams: Column, window: int = 4) -> Column:
-    """Distinct per-window minima of a gram-hash array (winnow select)."""
-    n_windows = F.size(grams) - F.lit(window) + 1
-    return (
-        F.when(F.size(grams) < 1, F.array().cast("array<long>"))
-        .when(n_windows < 1, F.array(F.array_min(grams)))
-        .otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), n_windows),
-                    lambda j: F.array_min(F.slice(grams, j, window)),
-                )
-            )
-        )
-    )
-
-
-def add_winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
-    out_col: str = "fingerprints",
-) -> DataFrame:
-    """Winnowing with the char-code and gram arrays staged as real columns
-    — each evaluated once per row (CollapseProject keeps non-cheap
-    multi-referenced projections staged); staging columns are dropped."""
-    staged = df.withColumn("__codes", char_codes(F.col(text_col))).withColumn(
-        "__grams", gram_hashes_from_codes(F.col("__codes"), k)
-    )
-    return staged.withColumn(
-        out_col, winnow_from_grams(F.col("__grams"), window)
-    ).drop("__codes", "__grams")
-
-
 def winnow_fingerprints_udf(k: int = 5, window: int = 4, base: int = 256):
-    """Arrow-vectorized winnowing (same values as the expression form —
-    integer arithmetic is exact in both). The higher-order-function form
+    """Arrow-vectorized winnowing: a polynomial hash
+    Σ code[i+j]·base^(k−1−j) of every k-gram of the lowercased text's
+    codepoints, then the distinct minima of every ``window`` consecutive
+    gram hashes. Integer arithmetic is exact, so the set equals a
+    higher-order-function expression form's (test-pinned); that form
     evaluates its lambdas interpreted (HOFs are outside whole-stage
-    codegen), ~μs per element; numpy sliding windows do the whole document
-    in two vectorized passes. Measured ~20× faster on the bench corpus.
+    codegen), ~μs per element, while numpy sliding windows do the whole
+    document in two vectorized passes — measured ~20× faster on the
+    bench corpus.
 
-    Returns the fingerprint SET sorted ascending (np.unique); the
-    expression form keeps first-occurrence order — same set.
+    Returns the fingerprint SET sorted ascending (np.unique).
     """
     import numpy as np
     from numpy.lib.stride_tricks import sliding_window_view
@@ -556,7 +483,7 @@ def add_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     # quality_score recomposed from the JUST-materialized stats — calling
     # quality_score(t, tk) here would re-expand the punct regex, stopword
     # filter, and token-length fold a second time per row (no CSE across
-    # a select list; review fix). Same arithmetic on the same doubles —
+    # a select list). Same arithmetic on the same doubles —
     # bit-identical to the inline form (oracle-pinned).
     quality = (
         F.lit(0.25) * (F.col("n_tokens") >= 5).cast("double")

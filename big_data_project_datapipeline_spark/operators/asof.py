@@ -53,7 +53,7 @@ def asof_join(
         raise ValueError(f"unknown direction {direction!r}")
     if tolerance_seconds <= 0:
         # floor(ts/0.0) would null every bucket and silently match
-        # NOTHING (review fix); exact-timestamp matching is a plain
+        # NOTHING; exact-timestamp matching is a plain
         # equi-join, not an as-of join
         raise ValueError(
             f"tolerance_seconds must be > 0, got {tolerance_seconds}"
@@ -78,10 +78,10 @@ def asof_join(
     # tagged frame must have exactly ONE consumer in the plan (it does:
     # the candidate join below) — a second subtree reading `l` would
     # re-evaluate the ids under its own partitioning and the window's
-    # per-left-row groups would mismatch (the round-8 prefix-device
-    # lesson: never join values derived from partition identity across
-    # two separate evaluations). Spark's indeterminate-stage rollback
-    # covers task retries within the single evaluation.
+    # per-left-row groups would mismatch (never join values derived
+    # from partition identity across two separate evaluations).
+    # Spark's indeterminate-stage rollback covers task retries within
+    # the single evaluation.
     l = left.withColumn(_LEFT_ID, F.monotonically_increasing_id()).withColumn(
         _BUCKET, F.floor(F.col(on).cast("double") / tol)
     )

@@ -361,7 +361,7 @@ def inter_event_stats(
     never an interpolated percentile. Mean/std round(6) in double only
     at the end.
 
-    Scale shape (round-6 funnel fix): one per-user lag window (user is
+    Scale shape: one per-user lag window (user is
     high-cardinality — no funnel), then the per-TYPE rank + count over
     the O(events) gap frame from operators/prefix.group_rank_frame
     (one range exchange — event types are LOW-cardinality, and the
@@ -399,7 +399,7 @@ def inter_event_stats(
     # convention)
     # gap_s*gap_s in long arithmetic overflows at ~3e9-second gaps
     # (epoch-0 artifacts); exact decimal products keep the moments
-    # order-independent AND unbounded (review fix, oracle mirrored)
+    # order-independent AND unbounded (the oracle mirrors them)
     g_dec = F.col("gap_s").cast("decimal(19,0)")
     agg = ranked.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_intervals"),
@@ -534,7 +534,7 @@ def markov_removal_attribution(
         )
     # collect-ok: O(states^2) transition matrix (bounded chain solve)
     trows = [(r["src"], r["dst"], r["p"]) for r in trans.collect()]
-    # Sentinel-collision guard (ADVICE r5): the chain reserves 'START'
+    # Sentinel-collision guard: the chain reserves 'START'
     # and 'NULL' as virtual states. A REAL event named 'NULL' would
     # silently become an absorbing non-conversion state, and a real
     # 'START' would merge with the virtual source. Detection is free

@@ -18,41 +18,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def interval_net_deltas(
-    df: DataFrame, start_col: str, end_col: str
-) -> DataFrame:
-    """The sweep-line's mergeable half: per-date NET concurrency
-    deltas (ts, net) — +1 at each interval's start date, −1 the day
-    after its inclusive end date, summed per date. Nets are additive
-    over any partition of the input (sums over a union equal summed
-    parts), so per-tick nets can be folded across cron ticks."""
-    s = F.to_date(F.col(start_col))
-    e = F.to_date(F.col(end_col))
-    iv = df.filter(s.isNotNull() & e.isNotNull() & (e >= s)).select(
-        s.alias("_s"), e.alias("_e")
-    )
-    deltas = iv.select(
-        F.col("_s").alias("ts"), F.lit(1).alias("delta")
-    ).union(
-        iv.select(F.date_add(F.col("_e"), 1).alias("ts"), F.lit(-1))
-    )
-    return deltas.groupBy("ts").agg(
-        F.sum("delta").cast("long").alias("net")
-    )
-
-
-def concurrency_from_net(net: DataFrame) -> DataFrame:
-    """Running-sum tail shared by the batch and streaming paths: net
-    deltas (ts, net) → the step frame (ts, net, concurrent). The
-    window runs over the already-collapsed O(distinct dates) frame."""
-    w = Window.orderBy("ts").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return net.withColumn(
-        "concurrent", F.sum("net").over(w).cast("long")
-    )
-
-
 def interval_concurrency(
     df: DataFrame, start_col: str, end_col: str
 ) -> DataFrame:
@@ -65,8 +30,24 @@ def interval_concurrency(
     dropped — an unclosed or corrupt interval has no defined span;
     filter/repair upstream to count them differently.
     """
-    return concurrency_from_net(
-        interval_net_deltas(df, start_col, end_col)
+    s = F.to_date(F.col(start_col))
+    e = F.to_date(F.col(end_col))
+    iv = df.filter(s.isNotNull() & e.isNotNull() & (e >= s)).select(
+        s.alias("_s"), e.alias("_e")
+    )
+    deltas = iv.select(
+        F.col("_s").alias("ts"), F.lit(1).alias("delta")
+    ).union(
+        iv.select(F.date_add(F.col("_e"), 1).alias("ts"), F.lit(-1))
+    )
+    net = deltas.groupBy("ts").agg(
+        F.sum("delta").cast("long").alias("net")
+    )
+    w = Window.orderBy("ts").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return net.withColumn(
+        "concurrent", F.sum("net").over(w).cast("long")
     )
 
 

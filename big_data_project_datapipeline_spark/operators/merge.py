@@ -48,8 +48,7 @@ def _merge(
     # and the caller's tiebreak, fall back to every remaining column in
     # a fixed order — without it, two same-priority rows tie completely
     # and row_number picks whichever arrives first (partitioning-
-    # dependent), the exact nondeterminism this module exists to forbid
-    # (review fix).
+    # dependent), the exact nondeterminism this module exists to forbid.
     from pyspark.sql import types as T
 
     orderable = (

@@ -4,10 +4,10 @@ zipWithIndex device, relational form.
 A global ``row_number()``/running-sum window with no PARTITION BY
 serializes the whole frame through one task (Spark even warns
 ``WindowExec: No Partition Defined``). That is fine on a collapsed
-O(groups) frame, but a scale-killer when the frame is O(rows) — the
-exact defect the round-4 verdict flagged in quantile-normalize
-(pooled rank over every event), RFM quintiles (3× ntile over every
-customer) and the Heaps-law cumulative curve (cumsum over every doc).
+O(groups) frame, but a scale-killer when the frame is O(rows), as in
+quantile-normalize (pooled rank over every event), RFM quintiles (3×
+ntile over every customer) and the Heaps-law cumulative curve (cumsum
+over every doc).
 
 The classic fix is RDD ``zipWithIndex``: one pass for per-partition
 counts, a tiny driver-side prefix over O(partitions) offsets, one
@@ -15,7 +15,7 @@ map-side pass adding the offset. This module is the DataFrame
 version, generalized to running sums (the ranged frame is pinned to
 ONE materialization via lazy localCheckpoint — repartitionByRange
 samples its boundaries per execution, so letting each pass run its
-own exchange corrupts the offset join; round-8 sf10 finding):
+own exchange corrupts the offset join, as measured at sf10):
 
 1. ``repartitionByRange`` on the (unique) order key → each partition
    holds a contiguous, disjoint key range, so global order =
@@ -84,7 +84,7 @@ def partitioned_prefix(
         if num_partitions
         else df.repartitionByRange(*cols)
     ).withColumn("__pid", F.spark_partition_id())
-    # CORRECTNESS, not caching (round-8 sf10 finding): the totals pass
+    # CORRECTNESS, not caching: the totals pass
     # and the emit pass below MUST see the SAME partition boundaries,
     # but column pruning gives each consumer its own physical range
     # exchange, and repartitionByRange SAMPLES its boundaries per
@@ -191,8 +191,8 @@ def grouped_prefix(
     NULL group keys are ordinary groups (the Window.partitionBy and
     GROUP BY semantics): the key is carried as a one-field struct so
     the totals groupBy, offset windows, and emit join all treat NULL
-    null-safely (ADVICE r6 fix; a plain equi-join dropped NULL-group
-    rows the offsets pass had counted).
+    null-safely (a plain equi-join would drop NULL-group rows the
+    offsets pass had counted).
 
     CONTRACT: intended for group cardinalities where O(partitions ×
     groups) stays a broadcastable frame (monitoring/report groups:
@@ -208,7 +208,7 @@ def grouped_prefix(
     if not order_cols:
         raise ValueError("order_cols must be non-empty")
     cols = [F.col(c) for c in order_cols]
-    # NULL-SAFE group key (ADVICE r6, high): the emit pass re-joins the
+    # NULL-SAFE group key: the emit pass re-joins the
     # offsets frame on the group key, and a plain equi-join drops NULL
     # keys — while the offsets windows COUNT them (NULLS FIRST in the
     # group-major sort), corrupting every later group's offsets. The
@@ -223,8 +223,8 @@ def grouped_prefix(
     # Lazy localCheckpoint for the same reason as partitioned_prefix
     # (see the comment there): the offsets pass and the emit pass must
     # read ONE materialization of the range exchange — per-execution
-    # boundary sampling otherwise corrupts every offset join (the
-    # round-8 sf10 finding: negative group ranks in q184).
+    # boundary sampling otherwise corrupts every offset join (at sf10
+    # it gave negative group ranks in q184).
     part = (
         df.repartitionByRange(*cols)
         .withColumn("__pid", F.spark_partition_id())
@@ -350,8 +350,8 @@ def group_rank_frame(
     :func:`partitioned_prefix` — the drop-in replacement for the
     ``Window.partitionBy(*by).orderBy(*order)`` rank/count/cumsum
     trio on O(rows) frames whose group key has LOW cardinality (the
-    funnel class the round-6 sf10 smoke exposed: such a window is
-    parallel only up to the number of distinct groups).
+    funnel class: such a window is parallel only up to the number of
+    distinct groups).
 
     - empty ``by``  → global: partitioned_prefix rank/cumsums, count
       folded in from one broadcast 1-row aggregate;
@@ -453,8 +453,8 @@ def partitioned_prefix_strict_min(
     running sums, for consumers like the 2-D skyline sweep that ask
     "what is the best value among everything strictly before me".
     Same device: one range exchange pinned to a single lazy
-    localCheckpoint materialization (the round-8 boundary-resampling
-    correctness requirement), per-partition windows, and an
+    localCheckpoint materialization (boundary resampling would
+    otherwise corrupt the offsets), per-partition windows, and an
     O(partitions) broadcast of the strictly-prior partition minima
     (min is associative and commutative, so per-partition
     reassociation is exact for any totally ordered type — no decimal

@@ -46,7 +46,7 @@ def zscore_scale(
         # caller-supplied stats may also be drift-tolerant: a column in
         # df but absent from the fit frame has no stats row — skip it
         # (symmetric with the df-side filter) instead of KeyError-ing
-        # mid-plan (review fix)
+        # mid-plan
         present = [c for c in present if c in stats]
     out = df
     for c in present:

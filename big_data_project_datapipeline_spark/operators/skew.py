@@ -45,7 +45,7 @@ def salted_join(
     Only ``inner``/``left``/``left_semi`` are legal: any join that can
     emit UNMATCHED small-side rows (right/full/right_semi/...) would
     emit every one of its ``salt`` replicas after the salt column drops
-    (review fix) — an unsalted join is the correct tool there.
+    — an unsalted join is the correct tool there.
     """
     allowed = {"inner", "left", "leftouter", "left_outer", "left_semi", "leftsemi"}
     if how.lower().replace("_", "") not in {a.replace("_", "") for a in allowed}:

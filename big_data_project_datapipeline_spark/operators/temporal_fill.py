@@ -55,8 +55,8 @@ def _anchored_slot(ts: Column, lo: Column, step_us: int) -> Column:
     """Bucket ts onto the lo-anchored step grid: lo + floor((ts-lo)/step)*step
     in exact integer microseconds. For a 1-unit step with lo truncated to
     that unit this IS date_trunc; for multi-unit steps ('30 minutes') it is
-    the grid date_trunc silently misaligns with (review fix: observations
-    landing off-grid were dropped by the grid join and their values lost)."""
+    the grid date_trunc silently misaligns with (observations landing
+    off-grid would be dropped by the grid join and their values lost)."""
     off = F.unix_micros(ts) - F.unix_micros(lo)
     return F.timestamp_micros(
         F.unix_micros(lo) + (off - F.pmod(off, F.lit(step_us)))

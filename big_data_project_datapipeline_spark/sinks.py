@@ -11,9 +11,6 @@ Spark-native storage model:
 - **CSV export** kept as a parity/interchange surface (K1/K2 semantics,
   exact column names preserved).
 - **JSON metrics doc** (K3) — O(1) driver-side write.
-- **Content hash manifest** — the engine-side analog of DVC's md5 role
-  (K4): a deterministic order-insensitive hash of the dataset for
-  regression pinning.
 
 One commit protocol replaces data in place. Every write that replaces
 a directory stages the new data in the sibling ``<path>.staging``, then
@@ -207,23 +204,6 @@ def write_metrics_json(metrics: dict, path: str) -> None:
     with open(tmp, "w") as fh:
         json.dump(existing, fh, indent=2, sort_keys=True)
     os.replace(tmp, path)
-
-
-def content_hash(df: DataFrame) -> str:
-    """K4 analog: deterministic, order-insensitive content hash (sum of
-    per-row md5 prefixes over canonicalized values). Plays DVC's md5 role:
-    pin it in a test, re-run the pipeline, compare."""
-    hashed = df.select(
-        F.conv(
-            F.substring(F.md5(F.to_json(F.struct(*sorted(df.columns)))), 1, 15),
-            16,
-            10,
-        )
-        .cast("decimal(38,0)")
-        .alias("h")
-    )
-    total = hashed.agg(F.sum("h").alias("s")).first()["s"]
-    return format(int(total or 0) % (1 << 128), "x")
 
 
 def compact_parquet(

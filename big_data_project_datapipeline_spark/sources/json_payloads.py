@@ -11,9 +11,9 @@ returns a typed DataFrame. The shapes:
   key, coerce bad timestamps to null (reference raw_data.py:114-131).
 - S4 *pivot*: ``{"data": {"generationmix": [{"fuel": .., "perc": ..}]}}`` →
   one wide row, whitelist of 6 fuels (reference raw_data.py:144-154).
-- S5 *catalog + rates*: filter product codes containing "AGILE", parse the
-  tariff code out of a URL, ``value_inc_vat/100`` (reference
-  raw_data.py:158-206).
+- S5 *rates*: ``value_inc_vat/100`` (reference raw_data.py:195-206). The
+  catalog part (pick the AGILE product, parse its tariff code out of a
+  URL) is driver-side, in ``sources/fetch.discover_agile_tariff``.
 
 Each payload's rows enter the plan through :func:`session.local_frame`, as
 a ``LocalRelation``: a job over a normalized frame runs no Python worker,
@@ -35,8 +35,6 @@ from pyspark.sql import types as T
 from big_data_project_datapipeline_spark import schemas
 from big_data_project_datapipeline_spark.operators.pivot import pivot_records
 from big_data_project_datapipeline_spark.session import local_frame
-
-UTC_FMT = "yyyy-MM-dd'T'HH:mm"
 
 
 def _number(x: Any) -> Any:
@@ -112,14 +110,22 @@ def lenient_iso_timestamp(col: "F.Column") -> "F.Column":
     )
 
 
-def carbon_record_columns(df: DataFrame) -> DataFrame:
-    """The S3 column recipe on a frame of CARBON_RECORD rows — shared by
-    the dict-payload batch path and the landed-file streaming path (one
-    definition, two runtimes). Skip-record guard (``from`` missing → drop,
-    reference raw_data.py:116-117, F6) and coerce-to-null timestamp cast
+def normalize_carbon_records(
+    spark: SparkSession, payloads: list[dict[str, Any]]
+) -> DataFrame:
+    """S3: union of per-day record-list payloads → flat typed rows.
+    Skip-record guard (``from`` missing → drop, reference
+    raw_data.py:116-117, F6) and coerce-to-null timestamp cast
     (:129-131, P4) as column predicates, not Python loops."""
+    records = []
+    for p in payloads:
+        for r in p.get("data") or []:
+            inten = r.get("intensity") or {}
+            nums = {k: _number(inten.get(k)) for k in ("actual", "forecast")}
+            records.append({**r, "intensity": {**inten, **nums}})
     return (
-        df.filter(F.col("from").isNotNull() & (F.col("from") != ""))
+        local_frame(spark, records, CARBON_RECORD)
+        .filter(F.col("from").isNotNull() & (F.col("from") != ""))
         .select(
             lenient_iso_timestamp(F.col("from")).alias("datetime"),  # ANSI-safe coerce-to-null
             F.col("intensity.actual").alias("carbon_intensity_actual"),
@@ -128,19 +134,6 @@ def carbon_record_columns(df: DataFrame) -> DataFrame:
         )
         .filter(F.col("datetime").isNotNull())
     )
-
-
-def normalize_carbon_records(
-    spark: SparkSession, payloads: list[dict[str, Any]]
-) -> DataFrame:
-    """S3: union of per-day record-list payloads → flat typed rows."""
-    records = []
-    for p in payloads:
-        for r in p.get("data") or []:
-            inten = r.get("intensity") or {}
-            nums = {k: _number(inten.get(k)) for k in ("actual", "forecast")}
-            records.append({**r, "intensity": {**inten, **nums}})
-    return carbon_record_columns(local_frame(spark, records, CARBON_RECORD))
 
 
 def normalize_generation_mix(
@@ -204,62 +197,3 @@ def normalize_prices(
         F.try_to_timestamp(F.col("valid_from")).alias("datetime"),
         (F.col("value_inc_vat") / F.lit(100.0)).alias("retail_price_£_per_kWh"),
     )
-
-
-def quarantine_split(
-    df: DataFrame, valid: "F.Column"
-) -> tuple[DataFrame, DataFrame]:
-    """Per-record error quarantine (S3-class fault tolerance, SURVEY §2.1):
-    route rows failing the validity predicate to a quarantine frame instead
-    of dropping them silently — at scale the quarantine side lands in its
-    own sink for replay/debugging.
-
-    Both frames share one lineage; Catalyst plans two filters over a single
-    scan (no double read when the source is cached or columnar)."""
-    return df.filter(valid), df.filter(~F.coalesce(valid, F.lit(False)))
-
-
-def read_landed_json(
-    spark,
-    path: str,
-    schema: "T.StructType",
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame]:
-    """The S1–S3 scale path: scan LANDED JSON-lines payloads (one file per
-    fetch, dumped by collectors) with an EXPLICIT schema — no sampling-based
-    inference pass over 100 TB — plus corrupt-record quarantine.
-
-    Returns ``(good, quarantine)``: rows that parsed cleanly (typed per
-    ``schema``) and raw malformed lines with their source file for replay.
-    Mirrors the reference's per-record fault tolerance
-    (raw_data_collection/raw_data.py:93-118) at file scale.
-
-    Spark disallows queries whose only referenced source column is the
-    corrupt-record column, so the parsed frame is persisted before the
-    split (the documented workaround). That is the right call for the
-    reference's MB-scale daily batches; at 100 TB you land ONE bronze
-    parquet pass (schema + corrupt column) and filter the columnar copy —
-    same plan shape, spill-safe, no JSON re-parse per side.
-    """
-    full = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
-    )
-    raw = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-        .withColumn("source_file", F.input_file_name())
-        .cache()
-    )
-    good = raw.filter(F.col(corrupt_col).isNull()).drop(corrupt_col, "source_file")
-    quarantine = raw.filter(F.col(corrupt_col).isNotNull()).select(
-        corrupt_col, "source_file"
-    )
-    return good, quarantine
-
-
-def agile_tariff_code(products_url_col: str = "link"):
-    """S5 (catalog part) column recipe: tariff code = second-to-last URL path
-    segment (reference raw_data.py:176) — ``split`` + ``element_at(-2)``."""
-    return F.element_at(F.split(F.col(products_url_col), "/"), -2)

@@ -3,6 +3,13 @@ silent rows-only downgrades from a typo'd oracle key."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import io
+import os
+import re
+import tokenize
+
 import __spark_entry__ as entrymod
 import bench
 
@@ -81,64 +88,236 @@ def test_gate_prefix_rotation_invariants():
     assert stranded == [], stranded
 
 
-def test_every_package_module_is_reachable_from_an_entry_point():
-    """Every module of the package is imported, directly or through other
-    package modules, from the CLI (``__main__.py``) or the query registry
-    (``__spark_entry__.py``). A module only tests reach is dead weight.
-    Static (stdlib ``ast``), so it needs no Spark: imports inside
-    functions count, and importing ``a.b.c`` also runs ``a`` and
-    ``a.b``'s ``__init__``."""
-    import ast
-    import os
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = "big_data_project_datapipeline_spark"
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = "big_data_project_datapipeline_spark"
+
+def _package_modules() -> dict[str, str]:
+    """Dotted module name -> path for every ``.py`` of the package (a
+    package is named by its ``__init__.py``)."""
     modules = {}
-    for dirpath, _, files in os.walk(os.path.join(repo, pkg)):
+    for dirpath, _, files in os.walk(os.path.join(_REPO, _PKG)):
         for f in files:
             if f.endswith(".py"):
-                rel = os.path.relpath(os.path.join(dirpath, f), repo)[:-3]
+                rel = os.path.relpath(os.path.join(dirpath, f), _REPO)[:-3]
                 parts = rel.split(os.sep)
                 if parts[-1] == "__init__":
                     parts.pop()
                 modules[".".join(parts)] = os.path.join(dirpath, f)
+    return modules
 
-    def imported(name, path):
-        """Package modules a module imports (itself a package if
-        ``path`` is an ``__init__.py``)."""
-        base = name if path.endswith("__init__.py") else name.rpartition(".")[0]
-        out = set()
-        for node in ast.walk(ast.parse(open(path).read())):
-            if isinstance(node, ast.Import):
-                targets = [a.name for a in node.names]
-            elif isinstance(node, ast.ImportFrom):
-                mod = node.module or ""
-                if node.level:
-                    anchor = base.split(".")
-                    anchor = anchor[: len(anchor) - (node.level - 1)]
-                    mod = ".".join(anchor + ([mod] if mod else []))
-                # ``from pkg import sub`` imports the submodule ``sub``
-                targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
-            else:
-                continue
-            for t in targets:
-                parts = t.split(".")
-                for i in range(1, len(parts) + 1):
-                    if ".".join(parts[:i]) in modules:
-                        out.add(".".join(parts[:i]))
-        return out
 
-    seen = set()
-    todo = set()
-    for entry in ("__spark_entry__.py", os.path.join(pkg, "__main__.py")):
-        todo |= imported(pkg, os.path.join(repo, entry))
-    todo.add(f"{pkg}.__main__")
+def _parse(path: str) -> ast.Module:
+    with open(path) as fh:
+        return ast.parse(fh.read())
+
+
+def _imported(modules, name: str, path: str, tree: ast.Module) -> set[str]:
+    """Package modules a file imports anywhere in it, imports inside
+    functions included (``name`` is the file's own module, a package
+    if ``path`` is an ``__init__.py``). Importing ``a.b.c`` also runs
+    ``a`` and ``a.b``, and ``from pkg import sub`` imports ``sub``."""
+    base = name if path.endswith("__init__.py") else name.rpartition(".")[0]
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            targets = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            if node.level:
+                anchor = base.split(".")
+                anchor = anchor[: len(anchor) - (node.level - 1)]
+                mod = ".".join(anchor + ([mod] if mod else []))
+            targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
+        else:
+            continue
+        for t in targets:
+            parts = t.split(".")
+            for i in range(1, len(parts) + 1):
+                if ".".join(parts[:i]) in modules:
+                    out.add(".".join(parts[:i]))
+    return out
+
+
+def _bound(node: ast.stmt) -> list[str]:
+    """Names a top-level statement binds: a function, a class, the
+    plain-name targets of an assignment, or an import alias."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return [(a.asname or a.name).split(".")[0] for a in node.names]
+    targets = (
+        node.targets if isinstance(node, ast.Assign)
+        else [node.target] if isinstance(node, ast.AnnAssign)
+        else []
+    )
+    return [
+        n.id
+        for t in targets
+        for n in (t.elts if isinstance(t, ast.Tuple) else [t])
+        if isinstance(n, ast.Name)
+    ]
+
+
+def _entry_points() -> list[str]:
+    return (
+        [
+            os.path.join(_REPO, "__spark_entry__.py"),
+            os.path.join(_REPO, "bench.py"),
+            os.path.join(_REPO, _PKG, "__main__.py"),
+        ]
+        + sorted(glob.glob(os.path.join(_REPO, "perfbench", "*.py")))
+        + sorted(glob.glob(os.path.join(_REPO, "tools", "*.py")))
+    )
+
+
+def test_every_package_definition_is_reachable_from_an_entry_point():
+    """Every top-level function, class and module-level assignment of
+    the package, and every package module, is reached from an entry
+    point: the CLI (``__main__.py``), the query registry
+    (``__spark_entry__.py``), ``bench.py``, ``perfbench/`` or
+    ``tools/``. Code only tests reach is dead weight; a test oracle
+    lives under ``tests/``.
+
+    Reached code is closed transitively: a reached unit (an entry file,
+    a reached definition, or the top-level statements of a reached
+    module) reaches module M's definition ``x`` when it names ``x`` (as
+    a name or an attribute) and its file is M itself or imports M. So a
+    same-named definition elsewhere does not keep M's alive, and an
+    ``__init__`` re-export is not a use. Static (stdlib ``ast``), so it
+    needs no Spark."""
+    modules = _package_modules()
+    trees = {m: _parse(p) for m, p in modules.items()}
+    scope = {m: _imported(modules, m, modules[m], trees[m]) | {m} for m in modules}
+    defs, rest = {}, {}
+    for m, tree in trees.items():
+        if modules[m].endswith("__init__.py"):
+            continue
+        body = []
+        for node in tree.body:
+            # an import binds no definition; dunders such as ``__all__``
+            # are module metadata
+            names = [
+                n
+                for n in _bound(node)
+                if not isinstance(node, (ast.Import, ast.ImportFrom))
+                and not (n.startswith("__") and n.endswith("__"))
+            ]
+            for n in names:
+                defs[(m, n)] = node
+            if not names:
+                body.append(node)
+        rest[m] = ast.Module(body=body, type_ignores=[])
+
+    todo = []
+    for path in _entry_points():
+        name = f"{_PKG}.__main__" if path.endswith("__main__.py") else "__entry__"
+        tree = _parse(path)
+        own = {name} if name in modules else set()
+        todo.append((_imported(modules, name, path, tree) | own, tree))
+    reached, seen_modules = set(), set()
     while todo:
-        name = todo.pop()
-        if name not in seen:
-            seen.add(name)
-            todo |= imported(name, modules[name])
-    assert sorted(set(modules) - seen) == []
+        imports, node = todo.pop()
+        for m in imports - seen_modules:
+            seen_modules.add(m)
+            if m in rest:
+                todo.append((scope[m], rest[m]))
+        used = {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+        for m in imports:
+            for n in used:
+                if (m, n) in defs and (m, n) not in reached:
+                    reached.add((m, n))
+                    todo.append((scope[m], defs[(m, n)]))
+    unreached = sorted(f"{m}.{n}" for m, n in set(defs) - reached)
+    unreached += sorted(f"{m} (module)" for m in set(modules) - seen_modules)
+    assert unreached == [], "\n".join(unreached)
+
+
+# Round-history tags: "(review fix)", "ADVICE r6", "VERDICT r10 item 6",
+# "(r12 ...)", "round-6 funnel fix". The r-number form skips an
+# assignment such as the "r2 = ..." statistic; the round form skips
+# "round-6-then-decimal", a rounding device, not a round of work.
+_NARRATION = re.compile(
+    r"review fix"
+    r"|\b(?:ADVICE|VERDICT)\b"
+    r"|\br\d{1,2}\b(?!\s*=)"
+    r"|(?i:\b(?:pre-)?round[- ]\d+\b(?!-then))"
+)
+
+
+def test_no_round_history_narration_in_package_comments_or_docstrings():
+    """Package comments (``tokenize``) and docstrings (``ast``) explain
+    the code; none carries a round-history tag. The reason a tag was
+    attached stays in the text, the tag does not."""
+    found = []
+    for path in sorted(_package_modules().values()):
+        rel = os.path.relpath(path, _REPO)
+        with open(path) as fh:
+            src = fh.read()
+        texts = [
+            (tok.start[0], tok.string)
+            for tok in tokenize.generate_tokens(io.StringIO(src).readline)
+            if tok.type == tokenize.COMMENT
+        ]
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            ):
+                doc = ast.get_docstring(node, clean=False)
+                if doc:
+                    texts.append((node.body[0].lineno, doc))
+        found += [
+            f"{rel}:{line}: {m.group(0)!r}"
+            for line, text in texts
+            for m in _NARRATION.finditer(text)
+        ]
+    assert found == [], "\n".join(found)
+
+
+def test_package_imports_outside_the_package_resolve():
+    """Every ``from big_data_project_datapipeline_spark[.mod] import
+    name`` and ``import big_data_project_datapipeline_spark.mod`` in
+    the entry points (``tools/``, ``perfbench/``, ``bench.py``,
+    ``__spark_entry__.py``, ``__main__.py``) and ``tests/`` names an
+    existing module, and ``name`` is a
+    top-level name or a submodule of it. Tier-1 never runs the tools,
+    so a deletion in the package would otherwise break one silently.
+    Static (stdlib ``ast``), so it needs no Spark."""
+    modules = _package_modules()
+    bound = {
+        m: {n for node in _parse(p).body for n in _bound(node)}
+        for m, p in modules.items()
+    }
+    tests = sorted(glob.glob(os.path.join(_REPO, "tests", "*.py")))
+    broken = []
+    for path in _entry_points() + tests:
+        rel = os.path.relpath(path, _REPO)
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == _PKG and a.name not in modules:
+                        broken.append(f"{rel}:{node.lineno}: import {a.name}")
+            elif (
+                isinstance(node, ast.ImportFrom)
+                and not node.level
+                and (node.module or "").split(".")[0] == _PKG
+            ):
+                if node.module not in modules:
+                    broken.append(f"{rel}:{node.lineno}: {node.module}")
+                    continue
+                broken += [
+                    f"{rel}:{node.lineno}: {node.module}.{a.name}"
+                    for a in node.names
+                    if a.name != "*"
+                    and a.name not in bound[node.module]
+                    and f"{node.module}.{a.name}" not in modules
+                ]
+    assert broken == [], "\n".join(broken)
 
 
 def test_no_package_write_overwrites_in_place():

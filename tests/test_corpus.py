@@ -1062,52 +1062,6 @@ class TestTokenGini:
         assert r["top_decile_share"] == 0.96
 
 
-class TestBpeCompressionCurveBatched:
-    def test_batch_k1_reproduces_exact_curve_totals(self, spark):
-        from big_data_project_datapipeline_spark.functions.corpus import (
-            bpe_compression_curve,
-            bpe_compression_curve_batched,
-        )
-
-        docs = spark.createDataFrame(
-            [(1, "aaab aaab ab")], "doc_id long, text string"
-        )
-        exact = [
-            (r["round"], r["total_symbols"], r["compression"])
-            for r in bpe_compression_curve(docs, n_merges=3).collect()
-        ]
-        batched = [
-            (r["round"], r["n_merges_in_round"], r["budget_spent"],
-             r["total_symbols"], r["compression"])
-            for r in bpe_compression_curve_batched(
-                docs, n_rounds=3, batch_k=1
-            ).collect()
-        ]
-        assert [(r, t, c) for r, _, _, t, c in batched] == exact
-        assert [(k, b) for _, k, b, _, _ in batched] == [
-            (1, 1), (1, 2), (1, 3)
-        ]
-
-    def test_multi_merge_batch_totals(self, spark):
-        """'ab'x10 'bc'x8 'de'x6 at batch_k=3: round 1 keeps (a,b) and
-        (d,e) ((b,c) shares b); 48 chars -> 10 + 16 + 6 = 32 symbols,
-        compression 32/48, budget 2 after one round."""
-        from big_data_project_datapipeline_spark.functions.corpus import (
-            bpe_compression_curve_batched,
-        )
-
-        text = " ".join(["ab"] * 10 + ["bc"] * 8 + ["de"] * 6)
-        docs = spark.createDataFrame(
-            [(1, text)], "doc_id long, text string"
-        )
-        r = bpe_compression_curve_batched(
-            docs, n_rounds=1, batch_k=3
-        ).first()
-        assert (r["n_merges_in_round"], r["budget_spent"]) == (2, 2)
-        assert r["total_symbols"] == 32
-        assert r["compression"] == 0.666667
-
-
 class TestVocabCoverage:
     def test_hand_computed_budgets(self, spark):
         """counts z:5 a:2 b:1 (T=8): top-1 covers 5/8, top-2 covers

@@ -56,38 +56,6 @@ def test_incremental_scaler_fits_on_delta_only(spark):
     assert after[2] == 0.0  # delta of one row → (99-99)/1
 
 
-def test_aggregate_state_merge_equals_full_recompute(spark):
-    """Incremental MV maintenance: merging per-partition states must be
-    BIT-equal to the state computed over the full data (decimal sums are
-    exact, min/max lattice, HLL sketch mergeable)."""
-    from big_data_project_datapipeline_spark.operators.incremental import (
-        aggregate_state,
-        merge_aggregate_state,
-        read_aggregate_state,
-    )
-
-    rows = [
-        ("a", float(v), u)
-        for v, u in [(1, 10), (2, 11), (3, 10), (100, 12), (5, 13)]
-    ] + [("b", 7.0, 20), ("b", 9.0, 21)]
-    df = spark.createDataFrame(rows, "k string, value double, user long")
-    part1, part2 = df.filter("value <= 3"), df.filter("value > 3")
-    full = aggregate_state(df, ["k"], "value", "user")
-    merged = merge_aggregate_state(
-        aggregate_state(part1, ["k"], "value", "user"),
-        aggregate_state(part2, ["k"], "value", "user"),
-        ["k"],
-    )
-    f = {r["k"]: r for r in read_aggregate_state(full).collect()}
-    m = {r["k"]: r for r in read_aggregate_state(merged).collect()}
-    for k in ("a", "b"):
-        assert m[k]["n"] == f[k]["n"]
-        assert m[k]["sum_dec"] == f[k]["sum_dec"]  # decimal: bit-equal
-        assert m[k]["vmin"] == f[k]["vmin"] and m[k]["vmax"] == f[k]["vmax"]
-        assert m[k]["mean"] == f[k]["mean"]
-        assert m[k]["approx_distinct"] == f[k]["approx_distinct"]
-
-
 def test_anti_join_delta_null_keys_do_not_reaccumulate(spark):
     from big_data_project_datapipeline_spark.operators.incremental import (
         anti_join_delta,

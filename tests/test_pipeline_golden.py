@@ -1,21 +1,17 @@
 """Golden-output tests for the end-to-end feature pipeline (SURVEY.md
 §5.2.3) — the engine-side analog of DVC's md5 pinning — plus quality
-metrics (A2) and the catalog URL parse (§2.13)."""
+metrics (A2)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from big_data_project_datapipeline_spark import sinks
 from big_data_project_datapipeline_spark.functions.quality import (
     completeness_warnings,
     observe_quality,
-    quality_aggregates,
 )
 from big_data_project_datapipeline_spark.plans.features import incremental_feature_run
-from big_data_project_datapipeline_spark.sources.json_payloads import agile_tariff_code
+from oracles import content_hash
 
 UTC = dt.timezone.utc
 
@@ -39,7 +35,7 @@ def test_feature_pipeline_golden_hash(spark):
     # 4 input + 12 temporal/cyclical + 2 interaction (only temperature-based
     # ones apply to this schema) + 3 scaled (present ∩ DEFAULT_SCALE_COLS)
     assert len(out.columns) == 21
-    golden = sinks.content_hash(out)
+    golden = content_hash(out)
     assert golden == "892f2f0eb2f5d04f", golden
 
 
@@ -47,15 +43,7 @@ def test_feature_pipeline_idempotent_hash(spark):
     raw = _raw(spark)
     once = incremental_feature_run(raw, raw.limit(0).select("datetime"))
     twice = incremental_feature_run(raw, once)
-    assert sinks.content_hash(once) == sinks.content_hash(twice)
-
-
-def test_quality_aggregates_one_job(spark):
-    df = _raw(spark)
-    row = quality_aggregates(df, ["carbon_intensity_actual", "temperature_C"]).first()
-    assert row["row_count"] == 24
-    assert row["missing_carbon_intensity_actual"] == 1
-    assert row["missing_temperature_C"] == 0
+    assert content_hash(once) == content_hash(twice)
 
 
 def test_observe_rides_the_action(spark):
@@ -71,12 +59,3 @@ def test_completeness_warnings_thresholds():
         {"missing_carbon": 2, "missing_prices": 5},
     )
     assert warns == ["missing_carbon: 3 missing > 2"]
-
-
-def test_agile_tariff_code_url_parse(spark):
-    df = spark.createDataFrame(
-        [("https://api.example.com/v1/products/AGILE-24-10-01/",)], "link string"
-    )
-    assert df.select(agile_tariff_code("link").alias("code")).first()["code"] == (
-        "AGILE-24-10-01"
-    )

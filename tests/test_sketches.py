@@ -215,20 +215,6 @@ class TestKmv:
         got = sorted(r["h"] for r in merged.collect())
         assert got == self._sketch_set(spark, a + b, k=64)
 
-    def test_distinct_estimate_exact_small_and_close_large(self, spark):
-        from big_data_project_datapipeline_spark.functions.sketches import (
-            kmv_distinct_estimate,
-            kmv_sketch,
-        )
-        small = kmv_sketch(_kv(spark, list(range(40))), "k", ["grp"], k=64)
-        out = kmv_distinct_estimate(small, ["grp"], k=64).first()
-        assert out["n_sketch"] == 40 and out["estimate"] == 40.0
-        big = kmv_sketch(
-            _kv(spark, list(range(5000))), "k", ["grp"], k=256
-        )
-        est = kmv_distinct_estimate(big, ["grp"], k=256).first()["estimate"]
-        assert abs(est - 5000) / 5000 < 0.2  # typical ~1/sqrt(k) = 6%
-
     def test_pair_overlap_exact_when_sketches_complete(self, spark):
         from big_data_project_datapipeline_spark.functions.sketches import (
             kmv_pair_overlap,
