@@ -50,7 +50,7 @@ from big_data_project_datapipeline_spark.plans.ingest import (
     day_grid,
     merge_all_sources,
 )
-from big_data_project_datapipeline_spark.session import get_spark
+from big_data_project_datapipeline_spark.session import class_archive, get_spark
 from big_data_project_datapipeline_spark.sinks import (
     _recover,
     export_csv,
@@ -144,6 +144,7 @@ def run_ingest(
                 quality, COMPLETENESS_THRESHOLDS
             ),
             "ingest_seconds": round(time.monotonic() - t0, 3),
+            "jvm_class_archive": class_archive(spark),
         },
         os.path.join(store, "_metrics", "ingest.json"),
     )
@@ -186,6 +187,7 @@ def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
             "rows": obs.get["row_count"],
             "columns": len(out.columns),
             "features_seconds": round(time.monotonic() - t0, 3),
+            "jvm_class_archive": class_archive(spark),
         },
         os.path.join(out_dir, "_metrics", "features.json"),
     )

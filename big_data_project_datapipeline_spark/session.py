@@ -10,6 +10,8 @@ reference manages by hand are pinned here once:
 - AQE on — runtime shuffle-partition coalescing + skew-join splitting; this is
   what makes the same plan survive sf0.001 → 100 TB without retuning.
 - Arrow on — vectorized pandas interchange for the few pandas_udf extension ops.
+- A class-data-sharing archive of the driver JVM's classes, kept in the
+  user's cache — a cold JVM skips parsing and verifying Spark's classes.
 
 Every driver-side row set (the parsed payloads, the empty bootstrap gram
 index, registry literals such as q52's dimension, rows computed on the
@@ -19,16 +21,21 @@ driver such as q180's attribution) enters a plan through
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import shutil
+import subprocess
 from collections.abc import Mapping, Sequence
-from typing import Any
+from typing import Any, NamedTuple
 
 import pyarrow as pa
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(
@@ -42,6 +49,10 @@ def get_spark(
     Local mode is a test harness; the config choices (AQE, broadcast
     threshold, partition sizing) are made for a real multi-executor cluster
     and merely *also work* on local[N].
+
+    A process that launches the driver JVM has it map the engine's
+    class-data-sharing archive (:func:`_class_archive`), or record one
+    at exit when there is none yet.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -49,7 +60,7 @@ def get_spark(
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -96,11 +107,185 @@ def get_spark(
         # 4 MB.
         .config("spark.sql.files.openCostInBytes", str(4 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    extra = dict(extra_conf or {})
+    archive = None
+    if (
+        SparkContext._gateway is None
+        and "PYSPARK_GATEWAY_PORT" not in os.environ
+        and "spark.driver.extraClassPath" not in extra
+    ):
+        archive = _class_archive()
+    # the engine's JVM options and the caller's share one string; the
+    # caller's come last, so theirs win where the two disagree
+    java_options = " ".join(
+        o for o in (archive and archive.java_options, extra.pop(_JAVA_OPTIONS, None)) if o
+    )
+    if java_options:
+        builder = builder.config(_JAVA_OPTIONS, java_options)
+    builder = builder.config(map=extra)
+    if archive is None:
+        spark = builder.getOrCreate()
+    else:
+        # the launcher reads the conf dir when it starts the JVM; the
+        # process environment is left as it was
+        os.environ["SPARK_CONF_DIR"] = archive.conf_dir
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            del os.environ["SPARK_CONF_DIR"]
+        if archive.recording:
+            atexit.register(
+                _publish_archive, spark.sparkContext._gateway.proc,
+                archive.recording, archive.path,
+            )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Class-data sharing (JEP 350). A cold driver JVM parses and verifies
+# some 17k Spark classes before its first job; mapping a dynamic archive
+# of them, recorded once by an earlier JVM at its exit, skips that work.
+# The JDK maps or records an archive only when every directory on the
+# JVM's classpath is empty. The launcher puts the conf dir there, and
+# these variables may add more.
+_CLASSPATH_ENV = (
+    "SPARK_CONF_DIR",
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+    "SPARK_DIST_CLASSPATH",
+    "SPARK_PREPEND_CLASSES",
+    "SPARK_TESTING",
+)
+_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+# a recording JVM's dump at exit takes 4-10 s on a 4-CPU VM
+_DUMP_TIMEOUT_S = 60
+
+
+class _ClassArchive(NamedTuple):
+    path: str  # <cache>/<key>.jsa
+    conf_dir: str  # the empty SPARK_CONF_DIR beside it
+    recording: str | None  # the temp file this launch dumps to, if any
+
+    @property
+    def java_options(self) -> str:
+        if self.recording:
+            flag = f"-XX:ArchiveClassesAtExit={self.recording}"
+        else:  # under -Xshare:auto the JVM skips a stale or broken archive
+            flag = f"-XX:SharedArchiveFile={self.path}"
+        # the dump warns once per class it skips (the signed janino jar,
+        # pre-JDK-6 classes); none of it belongs on the job's output
+        return f"{flag} -Xlog:cds*=off"
+
+
+def _class_archive() -> _ClassArchive | None:
+    """The archive a new driver JVM maps, or records when there is none
+    yet, in ``$XDG_CACHE_HOME/spark-graft/cds``. None where the JDK
+    could not use one: a conf dir holding more than Spark's
+    ``*.template`` files, a classpath variable set, no ``java`` or no
+    writable cache.
+
+    The key digests the ``java`` binary, the ``$SPARK_HOME/jars``
+    listing (name, size, mtime) and the conf dir, so a Spark or JDK
+    upgrade records a fresh archive."""
+    if any(k in os.environ for k in _CLASSPATH_ENV):
+        return None
+    spark_home = _find_spark_home()
+    try:
+        if any(
+            not n.endswith(".template")
+            for n in os.listdir(os.path.join(spark_home, "conf"))
+        ):
+            return None
+    except FileNotFoundError:
+        pass
+    java = (
+        os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+        if "JAVA_HOME" in os.environ else shutil.which("java")
+    )
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "spark-graft", "cds",
+    )
+    # the launcher splits the option string on whitespace and quotes
+    if java is None or any(c.isspace() or c in "\"'\\" for c in cache):
+        return None
+    conf_dir = os.path.join(cache, "conf")
+    try:
+        os.makedirs(conf_dir, exist_ok=True)
+        if os.listdir(conf_dir) or not os.access(cache, os.W_OK | os.X_OK):
+            return None
+        h = hashlib.sha256()
+        java = os.path.realpath(java)
+        jars = sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name)
+        for name, st in [(java, os.stat(java))] + [(e.name, e.stat()) for e in jars]:
+            h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+        h.update(conf_dir.encode())
+        key = h.hexdigest()[:16]
+        path = os.path.join(cache, f"{key}.jsa")
+        if os.path.isfile(path):
+            return _ClassArchive(path, conf_dir, None)
+        _sweep_dumps(cache)
+    except OSError:
+        return None
+    return _ClassArchive(path, conf_dir, os.path.join(cache, f"{key}.{os.getpid()}.tmp"))
+
+
+def _sweep_dumps(cache: str) -> None:
+    """Delete the temp dumps (``<key>.<pid>.tmp``) of processes that are
+    gone: killed before their exit hook ran, or timed out in it."""
+    for name in os.listdir(cache):
+        pid = name.removesuffix(".tmp").rpartition(".")[2]
+        if name.endswith(".tmp") and pid.isdigit():
+            try:
+                os.kill(int(pid), 0)
+            except ProcessLookupError:
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(os.path.join(cache, name))
+            except PermissionError:  # alive, another user's
+                pass
+
+
+def _publish_archive(proc: subprocess.Popen, tmp: str, path: str) -> None:
+    """At exit of the process that launched a recording JVM: end the JVM
+    (it exits when its stdin closes), wait for its dump, and move a
+    complete dump into place. ``os.replace`` is atomic, so a concurrent
+    launch maps either the old archive or the new one."""
+    sc = SparkContext._active_spark_context
+    if sc is not None:  # its accumulator server would see the JVM vanish
+        sc.stop()
+    try:
+        proc.stdin.close()
+        rc = proc.wait(timeout=_DUMP_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        return  # the JVM dumps on; a later launch sweeps its temp file
+    with contextlib.suppress(OSError):
+        if rc == 0 and os.path.getsize(tmp) > 0:
+            os.replace(tmp, path)
+        else:
+            os.unlink(tmp)
+
+
+def class_archive(spark: SparkSession) -> str:
+    """How the session's driver JVM got its classes: ``mapped`` from a
+    class-data-sharing archive, ``recording`` one to dump at exit, or
+    ``off``. ``unknown`` where ``/proc`` cannot tell: off Linux, or a
+    JVM this process did not launch."""
+    proc = spark.sparkContext._gateway.proc
+    if proc is None:
+        return "unknown"
+    try:
+        with open(f"/proc/{proc.pid}/cmdline", "rb") as fh:
+            args = fh.read().decode().split("\0")
+        with open(f"/proc/{proc.pid}/maps") as fh:
+            maps = fh.read()
+    except OSError:
+        return "unknown"
+    for a in args:
+        if a.startswith("-XX:ArchiveClassesAtExit="):
+            return "recording"
+        if a.startswith("-XX:SharedArchiveFile="):
+            return "mapped" if a.partition("=")[2] in maps else "off"
+    return "off"
 
 
 def local_frame(

@@ -102,6 +102,9 @@ def test_two_day_ingest_then_incremental_features(spark, tmp_path):
 
     metrics = json.loads((tmp_path / "raw" / "_metrics" / "ingest.json").read_text())
     assert metrics["rows_ingested"] == 2
+    # both records say how the session's driver JVM got its classes
+    assert metrics["jvm_class_archive"] == fm["jvm_class_archive"]
+    assert metrics["jvm_class_archive"] in ("mapped", "recording", "off", "unknown")
 
 
 def test_features_rerun_after_crashed_commit_matches_uninterrupted(

@@ -1,0 +1,148 @@
+"""The driver JVM's class-data-sharing archive (``session._class_archive``):
+where it lives, what keys it, when it is left out, and one real
+record-then-map cycle in two fresh processes."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pytest
+
+from big_data_project_datapipeline_spark import session
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture
+def install(tmp_path, monkeypatch):
+    """A fake Spark home (one jar, a templates-only conf dir), a fake
+    ``java`` and an empty cache dir, with no classpath variable set."""
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    (home / "jars" / "spark-core.jar").write_bytes(b"jar")
+    (home / "conf").mkdir()
+    (home / "conf" / "spark-defaults.conf.template").write_text("# template\n")
+    java = tmp_path / "jdk" / "bin" / "java"
+    java.parent.mkdir(parents=True)
+    java.write_bytes(b"java")
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.setenv("JAVA_HOME", str(tmp_path / "jdk"))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    for k in session._CLASSPATH_ENV:
+        monkeypatch.delenv(k, raising=False)
+    return home
+
+
+def test_archive_key_follows_the_jars_and_the_java_binary(install, tmp_path, monkeypatch):
+    jar = install / "jars" / "spark-core.jar"
+    first = session._class_archive().path
+    assert session._class_archive().path == first
+    jar.write_bytes(b"jar, rebuilt")
+    resized = session._class_archive().path
+    st = jar.stat()
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    touched = session._class_archive().path
+    jdk2 = tmp_path / "jdk2" / "bin" / "java"
+    jdk2.parent.mkdir(parents=True)
+    jdk2.write_bytes(b"java")
+    monkeypatch.setenv("JAVA_HOME", str(tmp_path / "jdk2"))
+    other_java = session._class_archive().path
+    assert len({first, resized, touched, other_java}) == 4
+
+
+def test_templates_only_conf_records_then_maps_with_an_empty_conf(install, tmp_path):
+    cache = tmp_path / "cache" / "spark-graft" / "cds"
+    rec = session._class_archive()
+    assert rec.conf_dir == str(cache / "conf")
+    assert os.listdir(rec.conf_dir) == []
+    assert rec.recording == rec.path.removesuffix(".jsa") + f".{os.getpid()}.tmp"
+    assert rec.java_options.startswith(f"-XX:ArchiveClassesAtExit={rec.recording} ")
+    with open(rec.path, "wb") as fh:
+        fh.write(b"archive")
+    mapped = session._class_archive()
+    assert mapped.recording is None
+    assert mapped.java_options.startswith(f"-XX:SharedArchiveFile={rec.path} ")
+
+
+def test_dumps_of_dead_processes_are_swept(install, tmp_path):
+    rec = session._class_archive()
+    cache = os.path.dirname(rec.path)
+    dead = os.path.join(cache, "0123456789abcdef.4194305.tmp")  # above pid_max
+    live = os.path.join(cache, f"0123456789abcdef.{os.getppid()}.tmp")
+    for p in (dead, live):
+        open(p, "wb").close()
+    session._class_archive()
+    assert not os.path.exists(dead)
+    assert os.path.exists(live)
+
+
+def test_user_conf_gets_no_archive(install, tmp_path, monkeypatch):
+    (install / "conf" / "spark-defaults.conf").write_text("spark.foo bar\n")
+    assert session._class_archive() is None
+    (install / "conf" / "spark-defaults.conf").unlink()
+    assert session._class_archive() is not None
+    monkeypatch.setenv("SPARK_CONF_DIR", str(install / "conf"))
+    assert session._class_archive() is None
+
+
+def test_unwritable_cache_gets_no_archive(install, tmp_path, monkeypatch):
+    blocker = tmp_path / "not-a-dir"
+    blocker.write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(blocker))
+    assert session._class_archive() is None
+
+
+_PROBE = r"""
+import sys
+from big_data_project_datapipeline_spark.session import class_archive, get_spark
+
+spark = get_spark(
+    master="local[1]", shuffle_partitions=1,
+    extra_conf={"spark.driver.memory": "512m",
+                "spark.driver.extraJavaOptions": "-Dgraft.probe=1"},
+)
+pid = spark.sparkContext._gateway.proc.pid
+with open(f"/proc/{pid}/cmdline", "rb") as fh:
+    args = fh.read().decode().split("\0")
+with open(f"/proc/{pid}/maps") as fh:
+    mapped = {line.split()[-1] for line in fh if line.rstrip().endswith(".jsa")}
+print("STATE", class_archive(spark))
+print("PROBE", "-Dgraft.probe=1" in args)
+print("MAPPED", *sorted(mapped))
+"""
+
+
+@pytest.mark.skipif(not sys.platform.startswith("linux"), reason="reads /proc")
+def test_first_jvm_records_the_archive_and_the_next_maps_it(tmp_path):
+    env = {k: v for k, v in os.environ.items() if k not in session._CLASSPATH_ENV}
+    env["XDG_CACHE_HOME"] = str(tmp_path / "cache")
+    cache = tmp_path / "cache" / "spark-graft" / "cds"
+
+    def run() -> dict[str, list[str]]:
+        p = subprocess.run(
+            [sys.executable, "-c", _PROBE], cwd=ROOT, env=env,
+            capture_output=True, text=True, timeout=300,
+        )
+        assert p.returncode == 0, p.stderr[-3000:]
+        for out in (p.stdout, p.stderr):
+            assert "[cds" not in out and "shared archive" not in out.lower(), out
+        return {
+            line.split()[0]: line.split()[1:]
+            for line in p.stdout.splitlines() if line.split()
+        }
+
+    first = run()
+    assert first["STATE"] == ["recording"]
+    assert first["PROBE"] == ["True"]
+    archives = sorted(n for n in os.listdir(cache) if n != "conf")
+    assert len(archives) == 1 and archives[0].endswith(".jsa"), archives
+    archive = str(cache / archives[0])
+    assert os.path.getsize(archive) > 0
+
+    second = run()
+    assert second["STATE"] == ["mapped"]
+    assert second["PROBE"] == ["True"]
+    assert archive in second["MAPPED"]
+    assert sorted(os.listdir(cache)) == sorted(["conf", archives[0]])
