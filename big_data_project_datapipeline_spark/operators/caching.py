@@ -6,8 +6,13 @@ entries pin executor memory for the session lifetime. Eagerly
 checkpointing instead was measured 1.9–2.6× slower at sf0.1 (the extra
 materialization dwarfs the cache it frees), so the contract here is:
 
-- the operator stays a LAZY DataFrame — full speed, caches hit at the
-  caller's terminal action;
+- the operator stays a LAZY DataFrame — full speed, caches fill at the
+  first job that reads them. For operators whose loop builds
+  ``localCheckpoint(eager=False)`` snapshots that is not the caller's
+  terminal action: under AQE, building a checkpoint runs every upstream
+  shuffle stage at once (a cold q87 at sf0.001: 19 jobs while it is
+  built, 1 at its ``toPandas``), so only the last snapshot's final
+  stage waits for the caller;
 - the persisted handles ride on the result; ``release_caches(df)``
   frees them explicitly once the caller is done;
 - a ``weakref.finalize`` releases them AUTOMATICALLY when the result

@@ -76,9 +76,10 @@ def pagerank(
     shuffle within the single action, so k=0 only re-pays plan cost,
     not execution).
 
-    Memory: the per-sweep snapshots are lazy, so none can be freed
-    before the caller's action materializes the result, and every one
-    stays pinned until the result is released
+    Memory: the per-sweep snapshots fill while the loop builds the
+    plan (the last one at the caller's action; see the comment above
+    the sweep loop), and every one stays pinned until the result is
+    released
     (``operators.caching.release_caches``) or garbage-collected.
     Executor storage therefore holds O(``n_iter``) O(nodes) frames at
     once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
@@ -185,16 +186,23 @@ def pagerank(
         if weight is not None
         else (F.col("pr") / F.col("deg"))
     )
-    # LAZY per-sweep checkpoints: the iteration count is fixed —
-    # nothing needs a mid-loop action — so the sweeps materialize in
-    # dependency order at the CALLER's single terminal action (the
-    # kcore_peel device) instead of one eager job + AQE replan cycle
-    # per sweep. Cold-path A/B at sf0.1 (same session, q87 build):
-    # eager 12.4 s vs lazy 5.8 s first run, 4.7 s both warm — the
-    # eager jobs only re-paid driver planning. Plan depth stays O(1)
-    # per sweep either way (LogicalRDD leaf). Snapshots ride on the
-    # result and free (blocking) with it — so all n_iter of them stay
-    # pinned until then (see the docstring).
+    # LAZY per-sweep checkpoints (the kcore_peel device): the
+    # iteration count is fixed, so no sweep needs an action of its own.
+    # Lazy does not mean deferred to the caller, though. Under AQE,
+    # building a checkpoint calls queryExecution.toRdd, which runs
+    # every upstream shuffle stage of the sweep right away, one job
+    # each; only the sweep's final, shuffle-free stage waits, and the
+    # next sweep's first stage computes it. So the sweeps run in order
+    # while this loop builds the plan, and only the last sweep's final
+    # stage runs at the caller's action: a cold q87 at sf0.001 runs 19
+    # jobs while it is built and 1 at its toPandas. What eager adds is
+    # one more job and AQE replan per sweep, to fill each snapshot.
+    # Cold-path A/B at sf0.1 (same session, q87 build): eager 12.4 s
+    # vs lazy 5.8 s first run, 4.7 s both warm — the eager jobs only re-paid
+    # driver planning. Plan depth stays O(1) per sweep either way
+    # (LogicalRDD leaf). Snapshots ride on the result and free
+    # (blocking) with it — so all n_iter of them stay pinned until
+    # then (see the docstring).
     snaps: list[DataFrame] = []
     for _i in range(n_iter):
         contrib = (
@@ -262,9 +270,10 @@ def personalized_pagerank(
     over an empty restart set has no meaning; returning the zero
     vector silently would hide a wiring bug upstream).
 
-    Memory: the per-sweep snapshots are lazy, so none can be freed
-    before the caller's action materializes the result, and every one
-    stays pinned until the result is released
+    Memory: the per-sweep snapshots fill while the loop builds the
+    plan (the last one at the caller's action; see the comment in
+    :func:`pagerank`), and every one stays pinned until the result is
+    released
     (``operators.caching.release_caches``) or garbage-collected.
     Executor storage therefore holds O(``n_iter``) O(nodes) frames at
     once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
@@ -405,9 +414,10 @@ def hits(
     pure-lineage shape; on clusters with preemptible executors swap
     in ``setCheckpointDir`` + ``.checkpoint()``.
 
-    Memory: the per-sweep snapshots are lazy, so none can be freed
-    before the caller's action materializes the result, and every one
-    stays pinned until the result is released
+    Memory: the per-sweep snapshots fill while the loop builds the
+    plan (the last one at the caller's action; see the comment in
+    :func:`pagerank`), and every one stays pinned until the result is
+    released
     (``operators.caching.release_caches``) or garbage-collected.
     Executor storage therefore holds O(``n_iter``) O(nodes) frames at
     once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
@@ -502,11 +512,11 @@ def hits(
             # (profiled: every loop stage TWICE with identical bytes,
             # ~204 MB = half the loop shuffle at sf1). Persist must
             # happen HERE, before the half-sweep, so BOTH consumers
-            # read the cache: with the lazy checkpoints everything
-            # materializes at the post-loop bounded action, whose first
-            # evaluation of the auths subtree fills the cache for the
-            # other consumer (Spark serializes concurrent fills per
-            # partition).
+            # read the cache: the half-sweep's shuffle stage, which
+            # runs when its checkpoint is built (or at the post-loop
+            # bounded action when this sweep is not checkpointed),
+            # fills the cache for the other consumer (Spark serializes
+            # concurrent fills per partition).
             auths = auths.persist()
         hubs = _sweep(
             e_dst.join(auths.withColumnRenamed("node", dst), dst),
@@ -514,8 +524,9 @@ def hits(
         )
         ckpted = checkpoint_every and (_i + 1) % checkpoint_every == 0
         if ckpted:
-            # lazy — the sweeps materialize in dependency order at the
-            # post-loop bounded action (see pagerank; cold-path
+            # lazy — building it runs the sweep's shuffle stages now,
+            # and the next sweep (or the post-loop bounded action)
+            # computes its final stage (see pagerank; cold-path
             # job/replan cost, not execution, is what eagerness pays)
             hubs = hubs.localCheckpoint(eager=False)
             snaps.append(hubs)
@@ -815,9 +826,10 @@ def kcore_peel(
         .localCheckpoint(eager=False)
     )
     # round snapshots ride on the result and free (blocking) with it —
-    # lazy checkpoints materialize at the caller's action, so in-loop
-    # release has no hook; the guarded release skips any that never
-    # computed, and none drains only via ContextCleaner GC
+    # a lazy checkpoint fills when the next round's shuffle stage runs
+    # (at that round's checkpoint build, under AQE) or at the caller's
+    # action, so in-loop release has no hook; the guarded release skips
+    # any that never computed, and none drains only via ContextCleaner GC
     snaps = [cur]
     for _ in range(n_rounds):
         keep = (
@@ -827,8 +839,8 @@ def kcore_peel(
             .select("u")
         )
         # lazy: unlike the convergence-probed loops (CC/resolve),
-        # nothing materializes mid-loop here, so the rounds checkpoint
-        # in dependency order at the caller's single action
+        # no round needs an action of its own; building the checkpoint
+        # still runs the round's shuffle stages now (see pagerank)
         cur = (
             cur.join(keep, "u", "left_semi")
             .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")

@@ -12,6 +12,15 @@ reference manages by hand are pinned here once:
 - Arrow on — vectorized pandas interchange for the few pandas_udf extension ops.
 - A class-data-sharing archive of the driver JVM's classes, kept in the
   user's cache — a cold JVM skips parsing and verifying Spark's classes.
+- Plain JVM case mapping (``spark.sql.icu.caseMappings.enabled=false``) —
+  ``lower``/``upper`` map case as Spark 3.x did, so no JVM builds ICU's
+  title-case table of every code point on its first ``lower``.
+  ``lower`` and ``upper`` each differ from ICU on 67 code points, all
+  mappings added in Unicode 14–16, which JDK 17 predates (Vithkuqi,
+  Garay, Glagolitic and Latin Extended-D additions); ``initcap``, which
+  nothing here calls, differs on 617. Non-ASCII strings are case-mapped
+  in the driver JVM's default locale. To restore ICU, pass
+  ``extra_conf={"spark.sql.icu.caseMappings.enabled": "true"}``.
 
 Every driver-side row set (the parsed payloads, the empty bootstrap gram
 index, registry literals such as q52's dimension, rows computed on the
@@ -106,6 +115,18 @@ def get_spark(
         # (tables._fan_out_unsplittable) instead. Pinned at the stock
         # 4 MB.
         .config("spark.sql.files.openCostInBytes", str(4 * 1024 * 1024))
+        # Plain JVM case mapping: lower/upper use UTF8String's own (an
+        # ASCII fast path, String.toLowerCase otherwise; Spark 3.x did
+        # the same). With ICU case mapping on (the Spark 4 default) the
+        # first lower/upper in a JVM initializes CollationAwareUTF8String,
+        # whose static initializer title-cases all 1,114,112 code points
+        # through ICU. A first lower() over the sf0.001 documents took
+        # 1.8-2.1 s with it, 0.3-0.5 s without (fresh local[4] JVMs), and
+        # its garbage burst made G1 grow a cold cron day's committed
+        # heap from 295 to 550 MB (1g driver) for the rest of the
+        # process. The mappings differ on code points whose case
+        # mappings came in Unicode 14-16 (see the module docstring).
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     extra = dict(extra_conf or {})
     archive = None

@@ -1,6 +1,8 @@
 """The driver JVM's class-data-sharing archive (``session._class_archive``):
 where it lives, what keys it, when it is left out, and one real
-record-then-map cycle in two fresh processes."""
+record-then-map cycle in two fresh processes. And the session's plain
+JVM case mapping: what ``lower``/``upper`` return, and that no JVM
+initializes ICU's case-mapping class."""
 
 from __future__ import annotations
 
@@ -96,13 +98,20 @@ def test_unwritable_cache_gets_no_archive(install, tmp_path, monkeypatch):
 
 _PROBE = r"""
 import sys
-from big_data_project_datapipeline_spark.session import class_archive, get_spark
+from big_data_project_datapipeline_spark.session import (
+    class_archive, get_spark, local_frame,
+)
 
 spark = get_spark(
     master="local[1]", shuffle_partitions=1,
     extra_conf={"spark.driver.memory": "512m",
-                "spark.driver.extraJavaOptions": "-Dgraft.probe=1"},
+                "spark.driver.extraJavaOptions":
+                    f"-Dgraft.probe=1 -Xlog:class+init=info:file={sys.argv[1]}"},
 )
+(row,) = local_frame(spark, [("ÉCOLE straße",)], "s string").selectExpr(
+    "lower(s) AS lo", "upper(s) AS up"
+).collect()
+print("CASE", row.lo == "école straße" and row.up == "ÉCOLE STRASSE")
 pid = spark.sparkContext._gateway.proc.pid
 with open(f"/proc/{pid}/cmdline", "rb") as fh:
     args = fh.read().decode().split("\0")
@@ -120,9 +129,11 @@ def test_first_jvm_records_the_archive_and_the_next_maps_it(tmp_path):
     env["XDG_CACHE_HOME"] = str(tmp_path / "cache")
     cache = tmp_path / "cache" / "spark-graft" / "cds"
 
-    def run() -> dict[str, list[str]]:
+    def run(init_log) -> dict[str, list[str]]:
+        # the launcher splits the option string on whitespace
+        assert not any(c.isspace() for c in str(init_log))
         p = subprocess.run(
-            [sys.executable, "-c", _PROBE], cwd=ROOT, env=env,
+            [sys.executable, "-c", _PROBE, str(init_log)], cwd=ROOT, env=env,
             capture_output=True, text=True, timeout=300,
         )
         assert p.returncode == 0, p.stderr[-3000:]
@@ -133,16 +144,40 @@ def test_first_jvm_records_the_archive_and_the_next_maps_it(tmp_path):
             for line in p.stdout.splitlines() if line.split()
         }
 
-    first = run()
+    first = run(tmp_path / "init-first.log")
     assert first["STATE"] == ["recording"]
     assert first["PROBE"] == ["True"]
+    assert first["CASE"] == ["True"]
     archives = sorted(n for n in os.listdir(cache) if n != "conf")
     assert len(archives) == 1 and archives[0].endswith(".jsa"), archives
     archive = str(cache / archives[0])
     assert os.path.getsize(archive) > 0
 
-    second = run()
+    second = run(tmp_path / "init-second.log")
     assert second["STATE"] == ["mapped"]
     assert second["PROBE"] == ["True"]
+    assert second["CASE"] == ["True"]
     assert archive in second["MAPPED"]
     assert sorted(os.listdir(cache)) == sorted(["conf", archives[0]])
+    # the case mapping ran in a JVM that logged its class initialization
+    # and never built ICU's title-case table
+    init = (tmp_path / "init-second.log").read_text()
+    assert "Initializing 'org/apache/spark/unsafe/types/UTF8String'" in init
+    icu = "Initializing 'org/apache/spark/sql/catalyst/util/CollationAwareUTF8String'"
+    assert icu not in init
+
+
+_CASES = [
+    "Gas", "ÉCOLE Ünïcödé", "straße", "ΑΣ", "ΟΔΟΣ Β", "İstanbul", "Iİıi",
+    "ǅungla", "ﬁx", "ŉ", "ΐ", "Привет МИР", "日本語 ABC", "Ⅻ", "Ꭰ", "ǰ", "ﬀ",
+]
+
+
+def test_lower_and_upper_match_python_under_plain_jvm_case_mapping(spark):
+    """Final sigma, ß, dotted and dotless i, ligatures and titlecase
+    digraphs map as Python's ``str.lower``/``str.upper`` do."""
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    rows = session.local_frame(
+        spark, [(i, s) for i, s in enumerate(_CASES)], "i int, s string"
+    ).selectExpr("i", "lower(s) AS lo", "upper(s) AS up").orderBy("i").collect()
+    assert [(r.lo, r.up) for r in rows] == [(s.lower(), s.upper()) for s in _CASES]
