@@ -50,7 +50,11 @@ from big_data_project_datapipeline_spark.plans.ingest import (
     day_grid,
     merge_all_sources,
 )
-from big_data_project_datapipeline_spark.session import class_archive, get_spark
+from big_data_project_datapipeline_spark.session import (
+    class_archive,
+    get_spark,
+    jvm_peak_rss_mb,
+)
 from big_data_project_datapipeline_spark.sinks import (
     _recover,
     export_csv,
@@ -145,6 +149,7 @@ def run_ingest(
             ),
             "ingest_seconds": round(time.monotonic() - t0, 3),
             "jvm_class_archive": class_archive(spark),
+            "jvm_peak_rss_mb": jvm_peak_rss_mb(spark),
         },
         os.path.join(store, "_metrics", "ingest.json"),
     )
@@ -188,6 +193,7 @@ def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
             "columns": len(out.columns),
             "features_seconds": round(time.monotonic() - t0, 3),
             "jvm_class_archive": class_archive(spark),
+            "jvm_peak_rss_mb": jvm_peak_rss_mb(spark),
         },
         os.path.join(out_dir, "_metrics", "features.json"),
     )

@@ -127,6 +127,10 @@ def cohort_retention(
     user's first event; one output row per (cohort_week, week_offset)
     with distinct active users and the retention rate vs cohort size.
     """
+    # the join and countDistinct drop null users anyway; filtering them
+    # up front gives the join side and the cohort sizes one ``firsts``
+    # plan, so AQE reuses its exchange instead of aggregating it twice
+    events = events.filter(F.col(user_col).isNotNull())
     week = F.date_trunc("week", F.col(ts_col))
     firsts = events.groupBy(user_col).agg(
         F.min(week).alias("cohort_week")

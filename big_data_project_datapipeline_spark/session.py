@@ -21,6 +21,20 @@ reference manages by hand are pinned here once:
   nothing here calls, differs on 617. Non-ASCII strings are case-mapped
   in the driver JVM's default locale. To restore ICU, pass
   ``extra_conf={"spark.sql.icu.caseMappings.enabled": "true"}``.
+- No G1-humongous buffers per stage or task: 1 MB Tungsten pages
+  (``spark.buffer.pageSize``, the floor of the size Spark derives from the
+  heap), 1 MB broadcast blocks (``spark.broadcast.blockSize``) and 4 MB G1
+  regions (``-XX:G1HeapRegionSize=4m``). G1 allocates any object of half
+  a region or more as humongous, and up to a 4g heap its regions are
+  1-2 MB, so Spark's fixed buffers (a 4 MB first broadcast chunk per
+  stage's task binary, a 1 MB chunk per task result, a page per sort or
+  aggregation) each forced a young pause and grew the heap: a cold
+  refresh of the benchmark's query mix (1g driver) made 377 allocations
+  of 512 KB or more, 746 MB in all, and G1 grew its heap from 254 MB to
+  426-443 MB. With the three settings none of them is 2 MB or more. An
+  8g driver already gets 4 MB regions. To restore Spark's defaults, pass
+  the two confs in ``extra_conf`` and a region size in
+  ``spark.driver.extraJavaOptions``, whose flags come after the engine's.
 
 Every driver-side row set (the parsed payloads, the empty bootstrap gram
 index, registry literals such as q52's dimension, rows computed on the
@@ -61,7 +75,7 @@ def get_spark(
 
     A process that launches the driver JVM has it map the engine's
     class-data-sharing archive (:func:`_class_archive`), or record one
-    at exit when there is none yet.
+    at exit when there is none yet, and gives it 4 MB G1 regions.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -127,20 +141,24 @@ def get_spark(
         # process. The mappings differ on code points whose case
         # mappings came in Unicode 14-16 (see the module docstring).
         .config("spark.sql.icu.caseMappings.enabled", "false")
+        # below G1's humongous threshold (half a region; see
+        # _G1_REGION): Spark would size a sort or aggregation page at
+        # 4 MB for a 1g heap and 64 MB for 8g with local[4], and every
+        # broadcast, each stage's task binary among them, starts with a
+        # blockSize chunk (4 MB by default)
+        .config("spark.buffer.pageSize", "1m")
+        .config("spark.broadcast.blockSize", "1m")
     )
     extra = dict(extra_conf or {})
+    caller_options = extra.pop(_JAVA_OPTIONS, None)
     archive = None
-    if (
-        SparkContext._gateway is None
-        and "PYSPARK_GATEWAY_PORT" not in os.environ
-        and "spark.driver.extraClassPath" not in extra
-    ):
-        archive = _class_archive()
-    # the engine's JVM options and the caller's share one string; the
-    # caller's come last, so theirs win where the two disagree
-    java_options = " ".join(
-        o for o in (archive and archive.java_options, extra.pop(_JAVA_OPTIONS, None)) if o
-    )
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # this process launches the driver JVM
+        if "spark.driver.extraClassPath" not in extra:
+            archive = _class_archive()
+        java_options = _java_options(archive, caller_options)
+    else:
+        java_options = caller_options
     if java_options:
         builder = builder.config(_JAVA_OPTIONS, java_options)
     builder = builder.config(map=extra)
@@ -178,6 +196,13 @@ _CLASSPATH_ENV = (
     "SPARK_TESTING",
 )
 _JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+# G1 allocates an object of half a region or more outside the young
+# generation and, with live data near its concurrent-start threshold,
+# starts a young pause for each one. Up to a 4g heap G1 picks
+# 1-2 MB regions, so even the 1 MB chunk of every task result (a size
+# hard-coded in Spark's SerializerHelper) is humongous. G1 picks 4 MB
+# regions for an 8g heap itself.
+_G1_REGION = "-XX:G1HeapRegionSize=4m"
 # a recording JVM's dump at exit takes 4-10 s on a 4-CPU VM
 _DUMP_TIMEOUT_S = 60
 
@@ -196,6 +221,16 @@ class _ClassArchive(NamedTuple):
         # the dump warns once per class it skips (the signed janino jar,
         # pre-JDK-6 classes); none of it belongs on the job's output
         return f"{flag} -Xlog:cds*=off"
+
+
+def _java_options(archive: _ClassArchive | None, caller: str | None) -> str:
+    """The launched driver JVM's options, as one string: the G1 region
+    size, the class archive's flags when there is an archive, then the
+    caller's ``spark.driver.extraJavaOptions``. The JVM takes the last
+    of a repeated flag, so the caller's win where they disagree."""
+    return " ".join(
+        o for o in (_G1_REGION, archive and archive.java_options, caller) if o
+    )
 
 
 def _class_archive() -> _ClassArchive | None:
@@ -307,6 +342,23 @@ def class_archive(spark: SparkSession) -> str:
         if a.startswith("-XX:SharedArchiveFile="):
             return "mapped" if a.partition("=")[2] in maps else "off"
     return "off"
+
+
+def jvm_peak_rss_mb(spark: SparkSession) -> float | None:
+    """The driver JVM's peak resident set (``VmHWM``) so far, in MB.
+    None where ``/proc`` cannot tell: off Linux, or a JVM this process
+    did not launch."""
+    proc = spark.sparkContext._gateway.proc
+    if proc is None:
+        return None
+    try:
+        with open(f"/proc/{proc.pid}/status") as fh:
+            for line in fh:
+                if line.startswith("VmHWM:"):
+                    return round(int(line.split()[1]) / 1024, 1)
+    except OSError:
+        pass
+    return None
 
 
 def local_frame(

@@ -98,6 +98,24 @@ def test_cohort_retention_offsets_and_rates(spark):
     assert out[(w0, 0)]["cohort_size"] == 2
 
 
+def test_cohort_retention_drops_null_users_and_aggregates_firsts_once(spark):
+    rows = [
+        (1, _ts("2024-01-02T00:00:00"), 1, "view", 1.0),
+        (2, _ts("2024-01-16T00:00:00"), 1, "view", 1.0),
+        # a null user: alone in an earlier week, then in u1's cohort week
+        (3, _ts("2023-12-20T00:00:00"), None, "view", 1.0),
+        (4, _ts("2024-01-03T00:00:00"), None, "view", 1.0),
+    ]
+    df = cohort_retention(_events(spark, rows))
+    w0 = _ts("2024-01-01T00:00:00")
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (w0, 0, 1, 1, 1.0),
+        (w0, 2, 1, 1, 1.0),
+    ]
+    # the join side and the cohort sizes read one shuffle of firsts
+    assert "ReusedExchange" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_scd2_collapses_runs_and_versions(spark):
     rows = [
         (1, _ts("2024-01-01T00:00:00"), 1, "a", 1.0),

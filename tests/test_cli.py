@@ -105,6 +105,9 @@ def test_two_day_ingest_then_incremental_features(spark, tmp_path):
     # both records say how the session's driver JVM got its classes
     assert metrics["jvm_class_archive"] == fm["jvm_class_archive"]
     assert metrics["jvm_class_archive"] in ("mapped", "recording", "off", "unknown")
+    # and the driver JVM's peak resident set so far
+    for record in (metrics, fm):
+        assert record["jvm_peak_rss_mb"] > 0
 
 
 def test_features_rerun_after_crashed_commit_matches_uninterrupted(

@@ -1,8 +1,10 @@
 """The driver JVM's class-data-sharing archive (``session._class_archive``):
 where it lives, what keys it, when it is left out, and one real
-record-then-map cycle in two fresh processes. And the session's plain
+record-then-map cycle in two fresh processes. The session's plain
 JVM case mapping: what ``lower``/``upper`` return, and that no JVM
-initializes ICU's case-mapping class."""
+initializes ICU's case-mapping class. And its buffer sizes: 1 MB pages
+and broadcast blocks in 4 MB G1 regions, each overridable by the
+caller."""
 
 from __future__ import annotations
 
@@ -181,3 +183,78 @@ def test_lower_and_upper_match_python_under_plain_jvm_case_mapping(spark):
         spark, [(i, s) for i, s in enumerate(_CASES)], "i int, s string"
     ).selectExpr("i", "lower(s) AS lo", "upper(s) AS up").orderBy("i").collect()
     assert [(r.lo, r.up) for r in rows] == [(s.lower(), s.upper()) for s in _CASES]
+
+
+def _region_bytes(spark) -> int:
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return int(bean.getVMOption("G1HeapRegionSize").getValue())
+
+
+def test_pages_and_broadcast_blocks_stay_below_half_a_g1_region(spark):
+    env = spark._jvm.org.apache.spark.SparkEnv.get()
+    assert env.memoryManager().pageSizeBytes() == 1 << 20
+    assert spark.conf.get("spark.broadcast.blockSize") == "1m"
+    assert _region_bytes(spark) == 4 << 20
+
+
+def test_region_flag_is_passed_when_the_archive_is_skipped(install, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    assert session._class_archive() is None
+    assert session._java_options(None, None) == session._G1_REGION
+    mine = "-XX:G1HeapRegionSize=8m -Dx=1"
+    assert session._java_options(None, mine) == f"{session._G1_REGION} {mine}"
+    monkeypatch.delenv("SPARK_CONF_DIR")
+    archive = session._class_archive()
+    assert session._java_options(archive, mine).split() == [
+        session._G1_REGION, *archive.java_options.split(), *mine.split()
+    ]
+
+
+_OVERRIDE_PROBE = r"""
+from big_data_project_datapipeline_spark.session import get_spark
+
+spark = get_spark(
+    master="local[1]", shuffle_partitions=1,
+    extra_conf={"spark.driver.memory": "512m",
+                "spark.buffer.pageSize": "2m",
+                "spark.broadcast.blockSize": "2m",
+                "spark.driver.extraJavaOptions": "-XX:G1HeapRegionSize=8m"},
+)
+jvm = spark._jvm
+env = jvm.org.apache.spark.SparkEnv.get()
+bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+)
+pid = spark.sparkContext._gateway.proc.pid
+with open(f"/proc/{pid}/cmdline", "rb") as fh:
+    args = fh.read().decode().split("\0")
+print("PAGE", env.memoryManager().pageSizeBytes())
+print("BLOCK", spark.conf.get("spark.broadcast.blockSize"))
+print("REGION", bean.getVMOption("G1HeapRegionSize").getValue())
+print("FLAGS", *[a for a in args if a.startswith("-XX:G1HeapRegionSize")])
+"""
+
+
+@pytest.mark.skipif(not sys.platform.startswith("linux"), reason="reads /proc")
+def test_callers_confs_and_region_size_win_over_the_engines(tmp_path):
+    """A fresh JVM with no class archive (a conf dir set): the engine's
+    region flag is still passed, before the caller's, and the caller's
+    page and block sizes and region size are the ones in force."""
+    env = {k: v for k, v in os.environ.items() if k not in session._CLASSPATH_ENV}
+    env["SPARK_CONF_DIR"] = str(tmp_path)
+    p = subprocess.run(
+        [sys.executable, "-c", _OVERRIDE_PROBE], cwd=ROOT, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert p.returncode == 0, p.stderr[-3000:]
+    out = {
+        line.split()[0]: line.split()[1:]
+        for line in p.stdout.splitlines() if line.split()
+    }
+    assert out["PAGE"] == [str(2 << 20)]
+    assert out["BLOCK"] == ["2m"]
+    assert out["REGION"] == [str(8 << 20)]
+    assert out["FLAGS"] == [session._G1_REGION, "-XX:G1HeapRegionSize=8m"]
