@@ -864,9 +864,7 @@ def _dvec_expr(vec) -> Column:
 def _dmat_expr(mat) -> Column:
     """array<array<double>> literal via one parsed SQL string — the
     matrix companion of :func:`_dvec_expr`."""
-    return F.expr(
-        "array(" + ",".join(_dvec_sql(r) for r in mat) + ")"
-    )
+    return F.expr(_dmat_sql(mat))
 
 
 def _dmat_sql(mat) -> str:

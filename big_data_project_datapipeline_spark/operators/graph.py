@@ -1,30 +1,57 @@
-"""Iterative graph analytics: fixed-iteration PageRank and HITS.
+"""Iterative graph analytics over (src, dst) edge frames: PageRank,
+personalized PageRank, HITS, connected components, k-core and k-truss
+peels, triangle census and local clustering, link prediction, BFS,
+label propagation, harmonic centrality and modularity.
 
-The Pregel-shaped companion to `functions/dedup.resolve_dup_clusters`
-(pointer-jumping connected components): rank state lives in a node
-DataFrame and each iteration is the relational message pass
-``edges ⋈ ranks → groupBy(dst)`` — 2 shuffles per iteration (join on
-src, aggregate on dst), the canonical distributed PageRank shape. No
-driver-side graph state at all; the only scalar is the node count,
-folded into the rank expressions as a literal (one bounded
-O(1)-output count on the persisted node frame).
+The iterative operators are Pregel-shaped: rank or label state lives in
+a node DataFrame and each iteration is the relational message pass
+``edges ⋈ state → groupBy(node)``. No driver-side graph state at all;
+the only scalars are bounded O(1)-output counts folded into later
+expressions as literals.
 
-Parity: the per-target contribution sum accumulates in DECIMAL(28,12)
-(cast from the double ``pr/deg`` — the same order-independence device as
-functions/text.unigram_logprob_scores), so partition order cannot wiggle
-low-order bits and a SQL engine unrolling the same iterations
-reproduces every rank bit-for-bit before the final round(6).
+Each kernel that several operators run exists once, as a private
+helper:
 
-Scale: edges are repartitioned on src once and persisted — iterations
-reuse the co-partitioned edge frame, so each pass shuffles only the
-O(nodes) rank frame, never the edge list. Dangling nodes (out-degree 0)
-lose their mass, as in the simplified textbook formulation; feed an
-undirected (symmetrized) edge list to avoid them entirely.
+- ``_sym_edges``: both directions of every edge, NULL endpoints and
+  self-loops dropped — :func:`connected_components`,
+  :func:`kcore_peel`, :func:`label_propagation`, :func:`bfs_distance`,
+  :func:`multi_source_bfs`. Each caller adds its own distinct and
+  caching tail.
+- ``_canon_edges``: the distinct canonical (least, greatest) pairs —
+  :func:`triangle_count`, :func:`local_clustering`,
+  :func:`neighbor_jaccard`, :func:`ktruss_peel`, :func:`modularity`.
+- ``_canon_degree``: node degree over canonical pairs —
+  ``_triangles`` and :func:`modularity`.
+- ``_triangles``: degree-ordered wedge enumeration and its closing
+  semi-join — :func:`triangle_count`, :func:`local_clustering`,
+  :func:`ktruss_peel`.
+- ``_node_frame``: the distinct endpoints of an edge frame —
+  :func:`pagerank`, :func:`personalized_pagerank`, :func:`hits`.
+- ``_pagerank_edges``: the persisted, co-partitioned out-degree edge
+  frame — :func:`pagerank` (unweighted), :func:`personalized_pagerank`.
+- ``_pagerank_sweeps``: the fixed-count rank sweep loop —
+  :func:`pagerank`, :func:`personalized_pagerank`.
+- ``_frontier_bfs``: the settle-once frontier loop —
+  :func:`bfs_distance`, :func:`multi_source_bfs`.
+
+Parity: the PageRank per-target contribution sum accumulates in
+DECIMAL(28,12) (cast from the double ``pr/deg`` — the same
+order-independence device as functions/text.unigram_logprob_scores),
+so partition order cannot wiggle low-order bits and a SQL engine
+unrolling the same iterations reproduces every rank bit-for-bit before
+the final round(6).
+
+Scale: PageRank edges are repartitioned on src once and persisted —
+iterations reuse the co-partitioned edge frame, so each pass shuffles
+only the O(nodes) rank frame, never the edge list. Dangling nodes
+(out-degree 0) lose their mass, as in the simplified textbook
+formulation; feed an undirected (symmetrized) edge list to avoid them
+entirely.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark.operators.caching import (
@@ -37,6 +64,207 @@ from big_data_project_datapipeline_spark.operators.caching import (
 # detector without a 1e8-edge graph; production value documented in
 # hits()'s docstring.
 _HITS_DEC = "decimal(28,12)"
+
+
+def _sym_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both directions of every edge as (u, v): NULL endpoints and
+    self-loops drop, duplicates stay — each caller adds its own
+    distinct and caching tail."""
+    a, b = F.col(src), F.col(dst)
+    e0 = (
+        edges.select(a.alias("u"), b.alias("v"))
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .filter(F.col("u") != F.col("v"))
+    )
+    return e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct canonical (u < v) pairs of an undirected edge list:
+    either or both directions and duplicates collapse; NULL endpoints
+    and self-loops drop."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _canon_degree(canon: DataFrame) -> DataFrame:
+    """(n, d): the degree of every node of a canonical edge set."""
+    return (
+        canon.select(F.col("u").alias("n"))
+        .union(canon.select(F.col("v").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _triangles(canon: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree-ordered triangle enumeration over a canonical edge set
+    (the node-iterator++ of Suri & Vassilvitskii 2011): returns the
+    degree frame (n, d) and one (p, x, y) row per triangle, p its
+    lowest-(degree, id) vertex and x < y the other two.
+
+    Every edge is oriented from the endpoint with the smaller
+    (degree, id) to the larger, so each triangle has exactly ONE vertex
+    with two out-edges — wedges are enumerated only there, bounding the
+    wedge count by O(m^1.5) regardless of hot hubs (a star graph
+    generates ZERO wedges at the hub, because all its edges point
+    toward it)."""
+    deg = _canon_degree(canon)
+    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
+    # orient low (deg, id) -> high (deg, id)
+    oriented = (
+        canon.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(
+                (F.col("du") < F.col("dv"))
+                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
+                F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
+            )
+            .otherwise(
+                F.struct(F.col("v").alias("s"), F.col("u").alias("t"))
+            )
+            .alias("e")
+        )
+        .select(F.col("e.s").alias("s"), F.col("e.t").alias("t"))
+    )
+    w1 = oriented.select(F.col("s").alias("p"), F.col("t").alias("x"))
+    w2 = oriented.select(F.col("s").alias("p"), F.col("t").alias("y"))
+    wedges = w1.join(w2, "p").filter(F.col("x") < F.col("y"))
+    # close the wedge: the third edge is oriented x->y or y->x; both
+    # endpoints rank above the pivot, so check the UNDIRECTED canonical
+    # pair against the oriented set symmetrized once (small relative to
+    # wedges).
+    closing = oriented.select(
+        F.col("s").alias("x"), F.col("t").alias("y")
+    ).union(
+        oriented.select(F.col("t").alias("x"), F.col("s").alias("y"))
+    )
+    return deg, wedges.join(closing, ["x", "y"], "left_semi")
+
+
+def _node_frame(e: DataFrame, src: str, dst: str) -> DataFrame:
+    """(node): the distinct endpoints of an edge frame."""
+    return (
+        e.select(F.col(src).alias("node"))
+        .union(e.select(F.col(dst).alias("node")))
+        .distinct()
+    )
+
+
+def _pagerank_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The persisted PageRank edge frame: distinct (src, dst) rows with
+    the src's out-degree as ``deg``, hash-partitioned and sorted on
+    src."""
+    # One-exchange edge prep (guide §2.4): repartition the
+    # RAW edges on src FIRST, then dedup — hash(src) partitioning
+    # satisfies the (src, dst) dedup's clustering requirement, so the
+    # aggregate runs partition-local on the one exchange. The
+    # out-degree then comes from a WINDOW over the same partitioning.
+    # Deriving deg as a SECOND aggregate branch joined back would count
+    # on ReusedExchange to share the repartition — but AQE does not
+    # reuse it (verified in the executed plan:
+    # two independent ShuffleQueryStages, the entire upstream edge
+    # build executed twice). count(*) OVER (PARTITION BY src) needs no
+    # second branch, no join, and its required sort IS the
+    # sortWithinPartitions the cached frame wants anyway. Same-session
+    # A/B at sf0.1 (q87 co-purchase build, noop sink): join-deg
+    # 5.53/2.69 s vs window-deg 2.29/1.25 s, values identical.
+    #
+    # The one-time sort makes the cached frame BOTH hash-partitioned
+    # AND sorted on the join key; InMemoryTableScan exposes the cached
+    # plan's outputPartitioning/outputOrdering, so every iteration's
+    # SortMergeJoin skips exchange AND sort on the O(edges) side —
+    # only the O(nodes) rank frame shuffles+sorts per sweep. Without
+    # it each sweep re-sorted the edge side: an sf10 attribution run
+    # measured 78 GB of external-sort spill across 3
+    # iterations on the 60M-edge co-purchase graph; the one-time sort
+    # at cache fill removes all of it. At gate SFs AQE broadcasts the
+    # rank side instead and the sort is simply unused.
+    return (
+        edges.select(src, dst)
+        .repartition(F.col(src))
+        .distinct()
+        .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy(src)))
+        .sortWithinPartitions(src)
+        .persist()
+    )
+
+
+def _pagerank_sweeps(
+    e: DataFrame,
+    nodes: DataFrame,
+    ranks: DataFrame,
+    teleport: Column,
+    msg: Column,
+    src: str,
+    dst: str,
+    damping: float,
+    n_iter: int,
+    checkpoint_every: int,
+) -> DataFrame:
+    """``n_iter`` sweeps pr = teleport + damping·Σ msg from the
+    (node, pr) frame ``ranks``, over the persisted edge frame ``e``
+    (``msg`` reads its columns and ``pr``) and the persisted O(nodes)
+    frame ``nodes``. Returns (node, pr) with pr round(6), releasing
+    ``e``, ``nodes`` and the sweep snapshots with the result."""
+    # LAZY per-sweep checkpoints (the kcore_peel device): the
+    # iteration count is fixed, so no sweep needs an action of its own.
+    # Lazy does not mean deferred to the caller, though. Under AQE,
+    # building a checkpoint calls queryExecution.toRdd, which runs
+    # every upstream shuffle stage of the sweep right away, one job
+    # each; only the sweep's final, shuffle-free stage waits, and the
+    # next sweep's first stage computes it. So the sweeps run in order
+    # while this loop builds the plan, and only the last sweep's final
+    # stage runs at the caller's action: a cold q87 at sf0.001 runs 19
+    # jobs while it is built and 1 at its toPandas. What eager adds is
+    # one more job and AQE replan per sweep, to fill each snapshot.
+    # Cold-path A/B at sf0.1 (same session, q87 build): eager 12.4 s
+    # vs lazy 5.8 s first run, 4.7 s both warm — the eager jobs only re-paid
+    # driver planning. Plan depth stays O(1) per sweep either way
+    # (LogicalRDD leaf). Snapshots ride on the result and free
+    # (blocking) with it — so all n_iter of them stay pinned until
+    # then (see the Memory note of pagerank's docstring).
+    snaps: list[DataFrame] = []
+    for _i in range(n_iter):
+        contrib = (
+            e.join(ranks.withColumnRenamed("node", src), src)
+            .select(
+                F.col(dst).alias("node"),
+                msg.cast("decimal(28,12)").alias("w"),
+            )
+        )
+        sums = contrib.groupBy("node").agg(
+            F.sum("w").cast("double").alias("s")
+        )
+        ranks = (
+            nodes.join(sums, "node", "left")
+            .select(
+                "node",
+                (
+                    teleport
+                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                ).alias("pr"),
+            )
+        )
+        if checkpoint_every and (_i + 1) % checkpoint_every == 0:
+            ranks = ranks.localCheckpoint(eager=False)
+            snaps.append(ranks)
+    out = ranks.select("node", F.round("pr", 6).alias("pr"))
+    # The persisted edge/node frames must not pin executor memory for
+    # the session lifetime; eager checkpointing here was measured 1.9x
+    # slower at sf0.1, so instead their release is tied to the result's
+    # lifetime (auto on GC, or operators.caching.release_caches for
+    # explicit control) — as are the sweep snapshots the result's plan
+    # reads, which would otherwise drain only via ContextCleaner GC and
+    # accumulate across runs.
+    return attach_cache_release(out, (e, nodes), snapshots=snaps)
 
 
 def pagerank(
@@ -77,67 +305,30 @@ def pagerank(
     not execution).
 
     Memory: the per-sweep snapshots fill while the loop builds the
-    plan (the last one at the caller's action; see the comment above
-    the sweep loop), and every one stays pinned until the result is
-    released
+    plan (the last one at the caller's action; see the comment in
+    ``_pagerank_sweeps``), and every one stays pinned until the result
+    is released
     (``operators.caching.release_caches``) or garbage-collected.
     Executor storage therefore holds O(``n_iter``) O(nodes) frames at
     once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
     deep sweep counts on large graphs, raise ``checkpoint_every`` or
     run fewer sweeps per call.
     """
-    # One-exchange edge prep (guide §2.4): repartition the
-    # RAW edges on src FIRST, then dedup — hash(src) partitioning
-    # satisfies the (src, dst) dedup's clustering requirement, so the
-    # aggregate runs partition-local on the one exchange. The
-    # out-degree then comes from a WINDOW over the same partitioning.
-    # Deriving deg as a SECOND aggregate branch joined back would count
-    # on ReusedExchange to share the repartition — but AQE does not
-    # reuse it (verified in the executed plan:
-    # two independent ShuffleQueryStages, the entire upstream edge
-    # build executed twice). count(*) OVER (PARTITION BY src) needs no
-    # second branch, no join, and its required sort IS the
-    # sortWithinPartitions the cached frame wants anyway. Same-session
-    # A/B at sf0.1 (q87 co-purchase build, noop sink): join-deg
-    # 5.53/2.69 s vs window-deg 2.29/1.25 s, values identical.
-    #
-    # The one-time sort makes the cached frame BOTH hash-partitioned
-    # AND sorted on the join key; InMemoryTableScan exposes the cached
-    # plan's outputPartitioning/outputOrdering, so every iteration's
-    # SortMergeJoin skips exchange AND sort on the O(edges) side —
-    # only the O(nodes) rank frame shuffles+sorts per sweep. Without
-    # it each sweep re-sorted the edge side: an sf10 attribution run
-    # measured 78 GB of external-sort spill across 3
-    # iterations on the 60M-edge co-purchase graph; the one-time sort
-    # at cache fill removes all of it. At gate SFs AQE broadcasts the
-    # rank side instead and the sort is simply unused.
-    from pyspark.sql import Window
-
-    wdeg = Window.partitionBy(src)
     if weight is not None:
         # duplicate (src,dst) rows sum their weights; "deg" becomes the
-        # src's total outgoing weight so the unweighted loop body below
-        # is reused verbatim (contribution = pr·w/deg with w folded in).
+        # src's total outgoing weight so the unweighted sweep runs
+        # unchanged (contribution = pr·w/deg with w folded in).
         # Integral weights (recommended, see docstring) keep the window
-        # fold exact; float weights sum in unspecified order.
+        # fold exact; float weights sum in unspecified order. Same
+        # one-exchange, sorted prep as _pagerank_edges.
         e = (
             edges.repartition(F.col(src))
             .groupBy(src, dst)
             .agg(F.sum(weight).alias("__w"))
-            .withColumn("deg", F.sum("__w").over(wdeg))
+            .withColumn("deg", F.sum("__w").over(Window.partitionBy(src)))
             .sortWithinPartitions(src)
             .persist()
         )
-    else:
-        e = (
-            edges.select(src, dst)
-            .repartition(F.col(src))
-            .distinct()
-            .withColumn("deg", F.count(F.lit(1)).over(wdeg))
-            .sortWithinPartitions(src)
-            .persist()
-        )
-    if weight is not None:
         # Weight validation: a NULL weight NULLs the whole
         # (src,dst) group sum, NULL/zero totals NULL the contribution
         # (silently dropped from the rank SUM), and negative weights
@@ -161,15 +352,14 @@ def pagerank(
                 "negative weights break the stochastic-matrix "
                 "semantics."
             )
+        msg = F.col("pr") * F.col("__w") / F.col("deg")
+    else:
+        e = _pagerank_edges(edges, src, dst)
+        msg = F.col("pr") / F.col("deg")
     # nodes is an O(nodes) frame referenced by EVERY unrolled iteration
     # — persist it or the final plan recomputes the edge distinct once
     # per iteration.
-    nodes = (
-        e.select(F.col(src).alias("node"))
-        .union(e.select(F.col(dst).alias("node")))
-        .distinct()
-        .persist()
-    )
+    nodes = _node_frame(e, src, dst).persist()
     # The node count folds in as a LITERAL (one bounded O(1)-output
     # action on the already-persisted node frame) instead of a 1-row
     # crossJoin(broadcast(agg)) referenced by every unrolled iteration —
@@ -179,64 +369,18 @@ def pagerank(
     # evaluated in Python or in the engine, so ranks are bit-identical
     # to the crossJoin formulation and to the unrolled SQL oracle.
     n = nodes.count()
-    base = F.lit((1.0 - damping) / n)
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("pr"))
-    msg = (
-        (F.col("pr") * F.col("__w") / F.col("deg"))
-        if weight is not None
-        else (F.col("pr") / F.col("deg"))
+    return _pagerank_sweeps(
+        e,
+        nodes,
+        nodes.select("node", F.lit(1.0 / n).alias("pr")),
+        F.lit((1.0 - damping) / n),
+        msg,
+        src,
+        dst,
+        damping,
+        n_iter,
+        checkpoint_every,
     )
-    # LAZY per-sweep checkpoints (the kcore_peel device): the
-    # iteration count is fixed, so no sweep needs an action of its own.
-    # Lazy does not mean deferred to the caller, though. Under AQE,
-    # building a checkpoint calls queryExecution.toRdd, which runs
-    # every upstream shuffle stage of the sweep right away, one job
-    # each; only the sweep's final, shuffle-free stage waits, and the
-    # next sweep's first stage computes it. So the sweeps run in order
-    # while this loop builds the plan, and only the last sweep's final
-    # stage runs at the caller's action: a cold q87 at sf0.001 runs 19
-    # jobs while it is built and 1 at its toPandas. What eager adds is
-    # one more job and AQE replan per sweep, to fill each snapshot.
-    # Cold-path A/B at sf0.1 (same session, q87 build): eager 12.4 s
-    # vs lazy 5.8 s first run, 4.7 s both warm — the eager jobs only re-paid
-    # driver planning. Plan depth stays O(1) per sweep either way
-    # (LogicalRDD leaf). Snapshots ride on the result and free
-    # (blocking) with it — so all n_iter of them stay pinned until
-    # then (see the docstring).
-    snaps: list[DataFrame] = []
-    for _i in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", src), src)
-            .select(
-                F.col(dst).alias("node"),
-                msg.cast("decimal(28,12)").alias("w"),
-            )
-        )
-        sums = contrib.groupBy("node").agg(
-            F.sum("w").cast("double").alias("s")
-        )
-        ranks = (
-            nodes.join(sums, "node", "left")
-            .select(
-                "node",
-                (
-                    base
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("pr"),
-            )
-        )
-        if checkpoint_every and (_i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
-            snaps.append(ranks)
-    out = ranks.select("node", F.round("pr", 6).alias("pr"))
-    # The persisted edge/node frames must not pin executor memory for
-    # the session lifetime; eager checkpointing here was measured 1.9x
-    # slower at sf0.1, so instead their release is tied to the result's
-    # lifetime (auto on GC, or operators.caching.release_caches for
-    # explicit control) — as are the sweep snapshots the result's plan
-    # reads, which would otherwise drain only via ContextCleaner GC and
-    # accumulate across runs.
-    return attach_cache_release(out, (e, nodes), snapshots=snaps)
 
 
 def personalized_pagerank(
@@ -261,41 +405,22 @@ def personalized_pagerank(
     0 elsewhere; pr_0 = r; each sweep pr = (1-d)·r + d·M·pr with the
     same simplified-textbook dangling treatment, decimal(28,12)
     contribution accumulation, co-partitioned+sorted persisted edge
-    frame, and per-sweep localCheckpoint default as :func:`pagerank`,
-    for the same measured reasons. |S| folds in as a literal from one
-    bounded count on the persisted seed-flagged node frame — the q87
-    node-count device.
+    frame, and per-sweep localCheckpoint default as :func:`pagerank`
+    (the same ``_pagerank_edges`` and ``_pagerank_sweeps``). |S| folds
+    in as a literal from one bounded count on the persisted
+    seed-flagged node frame — the q87 node-count device.
 
     Raises ValueError when no seed is present in the graph (a PPR
     over an empty restart set has no meaning; returning the zero
     vector silently would hide a wiring bug upstream).
 
-    Memory: the per-sweep snapshots fill while the loop builds the
-    plan (the last one at the caller's action; see the comment in
-    :func:`pagerank`), and every one stays pinned until the result is
-    released
-    (``operators.caching.release_caches``) or garbage-collected.
-    Executor storage therefore holds O(``n_iter``) O(nodes) frames at
-    once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
-    deep sweep counts on large graphs, raise ``checkpoint_every`` or
-    run fewer sweeps per call.
+    Memory: as :func:`pagerank`, all O(``n_iter``) sweep snapshots stay
+    pinned until the result is released or garbage-collected.
     """
-    # one-exchange edge prep with window out-degree — see pagerank
-    from pyspark.sql import Window
-
-    e = (
-        edges.select(src, dst)
-        .repartition(F.col(src))
-        .distinct()
-        .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy(src)))
-        .sortWithinPartitions(src)
-        .persist()
-    )
+    e = _pagerank_edges(edges, src, dst)
     seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
     nodes = (
-        e.select(F.col(src).alias("node"))
-        .union(e.select(F.col(dst).alias("node")))
-        .distinct()
+        _node_frame(e, src, dst)
         .join(seed_nodes.withColumn("__seed", F.lit(1)), "node", "left")
         .select("node", F.coalesce(F.col("__seed"), F.lit(0)).alias("__seed"))
         .persist()
@@ -314,34 +439,18 @@ def personalized_pagerank(
     restart = F.when(
         F.col("__seed") == 1, F.lit(1.0 / ns)
     ).otherwise(F.lit(0.0))
-    ranks = nodes.select("node", restart.alias("pr"))
-    snaps: list[DataFrame] = []  # lazy sweep snapshots — see pagerank
-    for _i in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", src), src)
-            .select(
-                F.col(dst).alias("node"),
-                (F.col("pr") / F.col("deg")).cast("decimal(28,12)").alias("w"),
-            )
-        )
-        sums = contrib.groupBy("node").agg(
-            F.sum("w").cast("double").alias("s")
-        )
-        ranks = (
-            nodes.join(sums, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * restart
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("pr"),
-            )
-        )
-        if checkpoint_every and (_i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
-            snaps.append(ranks)
-    out = ranks.select("node", F.round("pr", 6).alias("pr"))
-    return attach_cache_release(out, (e, nodes), snapshots=snaps)
+    return _pagerank_sweeps(
+        e,
+        nodes,
+        nodes.select("node", restart.alias("pr")),
+        F.lit(1.0 - damping) * restart,
+        F.col("pr") / F.col("deg"),
+        src,
+        dst,
+        damping,
+        n_iter,
+        checkpoint_every,
+    )
 
 
 def hits(
@@ -414,26 +523,19 @@ def hits(
     pure-lineage shape; on clusters with preemptible executors swap
     in ``setCheckpointDir`` + ``.checkpoint()``.
 
-    Memory: the per-sweep snapshots fill while the loop builds the
-    plan (the last one at the caller's action; see the comment in
-    :func:`pagerank`), and every one stays pinned until the result is
-    released
-    (``operators.caching.release_caches``) or garbage-collected.
-    Executor storage therefore holds O(``n_iter``) O(nodes) frames at
-    once (spilling to disk under ``MEMORY_AND_DISK``, not failing); for
-    deep sweep counts on large graphs, raise ``checkpoint_every`` or
-    run fewer sweeps per call.
+    Memory: as :func:`pagerank`, all O(``n_iter``) sweep snapshots stay
+    pinned until the result is released or garbage-collected.
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
     # sortWithinPartitions: the cached copies expose partitioning AND
     # ordering on their half-sweep join key, so each sweep's
     # SortMergeJoin shuffles+sorts only the O(nodes) score frame (see
-    # pagerank — an sf10 attribution run measured ~68 GB of per-sweep
+    # _pagerank_edges — an sf10 attribution run measured ~68 GB of per-sweep
     # edge-side sort spill without this; at small scale AQE broadcasts
     # the score side and the sort is unused). repartition RAW rows
     # before the dedup so the dedup runs partition-local on the one
-    # exchange (pagerank's one-shuffle prep).
+    # exchange (the _pagerank_edges one-shuffle prep).
     e_src = (
         edges.select(src, dst)
         .repartition(F.col(src))
@@ -449,12 +551,7 @@ def hits(
     # InMemoryRelation computes the lineage once and charges only the
     # unavoidable second repartition.
     e_dst = e_src.repartition(F.col(dst)).sortWithinPartitions(dst).persist()
-    nodes = (
-        e_src.select(F.col(src).alias("node"))
-        .union(e_src.select(F.col(dst).alias("node")))
-        .distinct()
-        .persist()
-    )
+    nodes = _node_frame(e_src, src, dst).persist()
     # The loop propagates RAW sums through inner joins: a node absent
     # from a sum frame has score exactly 0 and contributes nothing to
     # the next pass, so completing each frame to all nodes with
@@ -467,7 +564,7 @@ def hits(
     auths = None
     per_sweep_norm = n_iter > 3
     sweep_persists: list[DataFrame] = []
-    snaps: list[DataFrame] = []  # lazy sweep snapshots — see pagerank
+    snaps: list[DataFrame] = []  # lazy sweep snapshots, as _pagerank_sweeps
 
     def _sweep(ed, key, out_node, score_in, ovf_in, score_out, ovf_out):
         # One half-sweep with the sticky overflow flag: a contribution
@@ -526,7 +623,7 @@ def hits(
         if ckpted:
             # lazy — building it runs the sweep's shuffle stages now,
             # and the next sweep (or the post-loop bounded action)
-            # computes its final stage (see pagerank; cold-path
+            # computes its final stage (see _pagerank_sweeps; cold-path
             # job/replan cost, not execution, is what eagerness pays)
             hubs = hubs.localCheckpoint(eager=False)
             snaps.append(hubs)
@@ -664,17 +761,11 @@ def connected_components(
     pathological input short of ~2^20 effective depth; raise
     ``max_iters`` rather than trusting truncated labels.
     """
-    a, b = F.col(src), F.col(dst)
-    e0 = (
-        edges.select(a.alias("u"), b.alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-    )
-    # partitioned AND sorted on the per-round join key (the pagerank
-    # device: the cached ordering lets every round's
+    # partitioned AND sorted on the per-round join key (the
+    # _pagerank_edges device: the cached ordering lets every round's
     # SortMergeJoin skip the O(edges)-side sort)
     sym = (
-        e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        _sym_edges(edges, src, dst)
         .repartition(F.col("u"))
         .distinct()
         .sortWithinPartitions("u")
@@ -814,17 +905,7 @@ def kcore_peel(
     Per-round state is localCheckpoint-bounded (the q119 device), so
     the plan stays O(1) at any depth.
     """
-    a, b = F.col(src), F.col(dst)
-    e0 = (
-        edges.select(a.alias("u"), b.alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-    )
-    cur = (
-        e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    cur = _sym_edges(edges, src, dst).distinct().localCheckpoint(eager=False)
     # round snapshots ride on the result and free (blocking) with it —
     # a lazy checkpoint fills when the next round's shuffle stage runs
     # (at that round's checkpoint build, under AQE) or at the caller's
@@ -840,7 +921,7 @@ def kcore_peel(
         )
         # lazy: unlike the convergence-probed loops (CC/resolve),
         # no round needs an action of its own; building the checkpoint
-        # still runs the round's shuffle stages now (see pagerank)
+        # still runs the round's shuffle stages now (see _pagerank_sweeps)
         cur = (
             cur.join(keep, "u", "left_semi")
             .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
@@ -880,17 +961,12 @@ def triangle_count(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Global triangle count over an undirected edge list (input may
-    contain either or both directions + duplicates; self-loops are
-    dropped). Returns one row: (n_nodes, n_edges, n_triangles).
+    contain either or both directions + duplicates; self-loops and NULL
+    endpoints are dropped). Returns one row: (n_nodes, n_edges,
+    n_triangles).
 
-    Algorithm: degree-ordered edge orientation (the MapReduce-era
-    node-iterator++ of Suri & Vassilvitskii 2011): orient every edge
-    from the endpoint with the smaller (degree, id) to the larger, so
-    each triangle has exactly ONE vertex with two out-edges — wedges
-    are enumerated only at a triangle's lowest-degree vertex, bounding
-    the wedge count by O(m^1.5) regardless of hot hubs (a star graph
-    generates ZERO wedges at the hub because all its edges point
-    outward... toward it).
+    Algorithm: the degree-ordered orientation of ``_triangles`` — each
+    triangle is enumerated once, at its lowest-(degree, id) vertex.
 
     Scale shape: canonicalize + distinct (1 shuffle), degree agg
     (1 shuffle), orientation join, wedge self-join on the pivot, and a
@@ -907,56 +983,8 @@ def triangle_count(
     100 TB an O(edges) cache adds memory pressure the reused shuffle
     files don't). The 141-Exchange q121 plan STRING is repeated
     printing of the same reused subtrees, not repeated execution."""
-    a, b = F.col(src), F.col(dst)
-    canon = (
-        edges.select(
-            F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        canon.select(F.col("u").alias("n"))
-        .union(canon.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(
-        F.col("n").alias("u"), F.col("d").alias("du")
-    )
-    dv = deg.select(
-        F.col("n").alias("v"), F.col("d").alias("dv")
-    )
-    # orient low (deg, id) -> high (deg, id)
-    oriented = (
-        canon.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
-            )
-            .otherwise(
-                F.struct(F.col("v").alias("s"), F.col("u").alias("t"))
-            )
-            .alias("e")
-        )
-        .select(F.col("e.s").alias("s"), F.col("e.t").alias("t"))
-    )
-    w1 = oriented.select(F.col("s").alias("p"), F.col("t").alias("x"))
-    w2 = oriented.select(F.col("s").alias("p"), F.col("t").alias("y"))
-    wedges = w1.join(w2, "p").filter(F.col("x") < F.col("y"))
-    # close the wedge: the third edge is oriented x->y or y->x; both
-    # endpoints rank above the pivot, so check the UNDIRECTED canonical
-    # pair against the oriented set symmetrized once (small relative to
-    # wedges).
-    closing = oriented.select(
-        F.col("s").alias("x"), F.col("t").alias("y")
-    ).union(
-        oriented.select(F.col("t").alias("x"), F.col("s").alias("y"))
-    )
-    tri = wedges.join(closing, ["x", "y"], "left_semi")
+    canon = _canon_edges(edges, src, dst)
+    deg, tri = _triangles(canon)
     return (
         tri.agg(F.count(F.lit(1)).alias("n_triangles"))
         .crossJoin(F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_nodes"))))
@@ -984,57 +1012,13 @@ def local_clustering(
     IEEE division of exact integers (bit-deterministic cross-engine,
     no rounding needed).
 
-    Enumeration is the same degree-ordered orientation as
-    :func:`triangle_count` (wedges only at each triangle's lowest-
-    (degree, id) vertex — O(m^1.5) bound, hub-proof); each closed
-    wedge (p, x, y) is one distinct triangle and credits all three
-    vertices via a map-only 3-way union + one groupBy. The ~25 shared
-    lines are deliberately duplicated from triangle_count rather than
-    extracted: q121's executed plans stay byte-stable (its driver
-    certification is older than this function), and the two ops
-    diverge right after the semi-join anyway.
+    Enumeration is :func:`triangle_count`'s (``_triangles``: wedges
+    only at each triangle's lowest-(degree, id) vertex — O(m^1.5)
+    bound, hub-proof); each closed wedge (p, x, y) is one distinct
+    triangle and credits all three vertices via a map-only 3-way
+    union + one groupBy.
     """
-    a, b = F.col(src), F.col(dst)
-    canon = (
-        edges.select(
-            F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        canon.select(F.col("u").alias("n"))
-        .union(canon.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-    oriented = (
-        canon.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
-            )
-            .otherwise(
-                F.struct(F.col("v").alias("s"), F.col("u").alias("t"))
-            )
-            .alias("e")
-        )
-        .select(F.col("e.s").alias("s"), F.col("e.t").alias("t"))
-    )
-    w1 = oriented.select(F.col("s").alias("p"), F.col("t").alias("x"))
-    w2 = oriented.select(F.col("s").alias("p"), F.col("t").alias("y"))
-    wedges = w1.join(w2, "p").filter(F.col("x") < F.col("y"))
-    closing = oriented.select(
-        F.col("s").alias("x"), F.col("t").alias("y")
-    ).union(
-        oriented.select(F.col("t").alias("x"), F.col("s").alias("y"))
-    )
-    tri = wedges.join(closing, ["x", "y"], "left_semi")
+    deg, tri = _triangles(_canon_edges(edges, src, dst))
     credits = (
         tri.select(F.col("p").alias("n"))
         .union(tri.select(F.col("x").alias("n")))
@@ -1148,13 +1132,7 @@ def neighbor_jaccard(
     else is equi-joins + one map-side-combinable groupBy; the final
     cut is TakeOrdered(top_k), no global sort materialized.
     """
-    a, b = F.col(src), F.col(dst)
-    canon = (
-        edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    canon = _canon_edges(edges, src, dst)
     sym = canon.union(
         canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -1192,6 +1170,32 @@ def neighbor_jaccard(
     ).limit(top_k)
 
 
+def _frontier_bfs(
+    sym: DataFrame, dist: DataFrame, keys: list[str], n_rounds: int
+) -> DataFrame:
+    """Settle-once frontier BFS over the checkpointed symmetrized edge
+    frame ``sym`` (u, v), from the seed rows ``dist`` (*keys, node,
+    dist = 0). A (*keys, node) row settles exactly once: round k joins only
+    the rows first reached at round k−1, then anti-joins the settled
+    set. ``keys`` ([] or ["seed"]) rides through every join, so one
+    loop serves the nearest-seed and the per-seed distance."""
+    snaps = [sym, dist]  # the kcore_peel release device
+    frontier = dist.select(*keys, "node")
+    for k in range(1, n_rounds + 1):
+        new = (
+            sym.join(frontier.withColumnRenamed("node", "u"), "u")
+            .select(*keys, F.col("v").alias("node"))
+            .distinct()
+            .join(dist, [*keys, "node"], "left_anti")
+            .select(*keys, "node", F.lit(k).cast("int").alias("dist"))
+            .localCheckpoint(eager=False)
+        )
+        dist = dist.union(new).localCheckpoint(eager=False)
+        snaps.extend((new, dist))
+        frontier = new.select(*keys, "node")
+    return attach_cache_release(dist, (), snapshots=snaps)
+
+
 def bfs_distance(
     edges: DataFrame,
     seeds: DataFrame,
@@ -1200,7 +1204,7 @@ def bfs_distance(
     node_col: str = "node",
     n_rounds: int = 3,
 ) -> DataFrame:
-    """Multi-source BFS: exact hop distance from the nearest seed, for
+    """Nearest-seed BFS: exact hop distance from the nearest seed, for
     every node within ``n_rounds`` hops over the undirected graph —
     (node, dist) with dist ∈ [0, n_rounds]. The k-hop cap is the
     SEMANTICS (bounded-radius reachability), not a convergence
@@ -1219,17 +1223,7 @@ def bfs_distance(
     localCheckpoint-bounded (the kcore_peel device), so the plan stays
     O(1) at any depth.
     """
-    a, b = F.col(src), F.col(dst)
-    e0 = (
-        edges.select(a.alias("u"), b.alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-    )
-    sym = (
-        e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _sym_edges(edges, src, dst).distinct().localCheckpoint(eager=False)
     dist = (
         seeds.select(F.col(node_col).alias("node"))
         .filter(F.col("node").isNotNull())
@@ -1237,21 +1231,7 @@ def bfs_distance(
         .select("node", F.lit(0).cast("int").alias("dist"))
         .localCheckpoint(eager=False)
     )
-    snaps = [sym, dist]  # the kcore_peel release device
-    frontier = dist.select("node")
-    for k in range(1, n_rounds + 1):
-        new = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(dist, "node", "left_anti")
-            .select("node", F.lit(k).cast("int").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        dist = dist.union(new).localCheckpoint(eager=False)
-        snaps.extend((new, dist))
-        frontier = new.select("node")
-    return attach_cache_release(dist, (), snapshots=snaps)
+    return _frontier_bfs(sym, dist, [], n_rounds)
 
 
 def label_propagation(
@@ -1283,19 +1263,7 @@ def label_propagation(
     row_number window PARTITIONED by node (full-cardinality key — no
     global window). Per-round state is localCheckpoint-bounded.
     """
-    from pyspark.sql import Window
-
-    a, b = F.col(src), F.col(dst)
-    e0 = (
-        edges.select(a.alias("u"), b.alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-    )
-    sym = (
-        e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _sym_edges(edges, src, dst).distinct().localCheckpoint(eager=False)
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     ).localCheckpoint(eager=False)
@@ -1342,7 +1310,7 @@ def ktruss_peel(
     and raises if another round would still drop edges — the kcore
     convergence-guard contract: never silently return a superset.
 
-    Scale shape: per-round support is the triangle_count wedge device
+    Scale shape: per-round support is the ``_triangles`` wedge device
     (degree-ordered orientation — wedges only at each triangle's
     lowest-(degree, id) vertex, O(m_r^1.5) bound, hub-proof), then a
     map-side-combinable per-edge credit groupBy and one semi-join to
@@ -1352,46 +1320,13 @@ def ktruss_peel(
     """
     if k < 3:
         raise ValueError("ktruss_peel(): k must be >= 3 (k-2 >= 1 triangles)")
-    a, b = F.col(src), F.col(dst)
-    cur = (
-        edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    cur = _canon_edges(edges, src, dst).localCheckpoint(eager=False)
     snaps = [cur]  # the kcore_peel release device
 
     def _support(canon: DataFrame) -> DataFrame:
         """Per-edge triangle support over a canonical (u<v) edge set:
         (u, v, sup) for edges in >= 1 triangle."""
-        deg = (
-            canon.select(F.col("u").alias("n"))
-            .union(canon.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        oriented = (
-            canon.join(deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u")
-            .join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
-            .select(
-                F.when(
-                    (F.col("du") < F.col("dv"))
-                    | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                    F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
-                )
-                .otherwise(F.struct(F.col("v").alias("s"), F.col("u").alias("t")))
-                .alias("e")
-            )
-            .select(F.col("e.s").alias("s"), F.col("e.t").alias("t"))
-        )
-        w1 = oriented.select(F.col("s").alias("p"), F.col("t").alias("x"))
-        w2 = oriented.select(F.col("s").alias("p"), F.col("t").alias("y"))
-        wedges = w1.join(w2, "p").filter(F.col("x") < F.col("y"))
-        closing = oriented.select(
-            F.col("s").alias("x"), F.col("t").alias("y")
-        ).union(oriented.select(F.col("t").alias("x"), F.col("s").alias("y")))
-        tri = wedges.join(closing, ["x", "y"], "left_semi")
+        _, tri = _triangles(canon)
         credits = (
             tri.select(
                 F.least("p", "x").alias("u"), F.greatest("p", "x").alias("v")
@@ -1462,17 +1397,7 @@ def multi_source_bfs(
     at dist 0 (the q189 universe contract); NULL seeds/endpoints drop;
     duplicate seeds/edges collapse.
     """
-    a, b = F.col(src), F.col(dst)
-    e0 = (
-        edges.select(a.alias("u"), b.alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-    )
-    sym = (
-        e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _sym_edges(edges, src, dst).distinct().localCheckpoint(eager=False)
     dist = (
         seeds.select(F.col(node_col).alias("seed"))
         .filter(F.col("seed").isNotNull())
@@ -1484,23 +1409,7 @@ def multi_source_bfs(
         )
         .localCheckpoint(eager=False)
     )
-    snaps = [sym, dist]  # the kcore_peel release device
-    frontier = dist.select("seed", "node")
-    for k in range(1, n_rounds + 1):
-        new = (
-            sym.join(frontier.withColumnRenamed("node", "u"), "u")
-            .select("seed", F.col("v").alias("node"))
-            .distinct()
-            .join(dist, ["seed", "node"], "left_anti")
-            .select(
-                "seed", "node", F.lit(k).cast("int").alias("dist")
-            )
-            .localCheckpoint(eager=False)
-        )
-        dist = dist.union(new).localCheckpoint(eager=False)
-        snaps.extend((new, dist))
-        frontier = new.select("seed", "node")
-    return attach_cache_release(dist, (), snapshots=snaps)
+    return _frontier_bfs(sym, dist, ["seed"], n_rounds)
 
 
 def harmonic_centrality(
@@ -1582,19 +1491,8 @@ def modularity(
     endpoints are missing from ``labels`` are EXCLUDED from e_c (and
     from nothing else — document your label universe).
     """
-    a, b = F.col(src), F.col(dst)
-    canon = (
-        edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        canon.select(F.col("u").alias("n"))
-        .union(canon.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    canon = _canon_edges(edges, src, dst)
+    deg = _canon_degree(canon)
     m_frame = canon.agg(F.count(F.lit(1)).cast("long").alias("__m"))
     lab = labels.select(
         F.col(node_col).alias("n"), F.col(label_col).alias("community")

@@ -214,6 +214,31 @@ def test_multi_source_bfs_per_seed_distances(spark):
     }
 
 
+def test_bfs_distance_is_the_min_over_seeds_of_multi_source_bfs(spark):
+    """Both BFS operators run the same frontier loop: on a cycle with
+    a tail, a chord, a self-loop and a seed outside the edge list, the
+    nearest-seed distance is, per node, the minimum of the per-seed
+    distances."""
+    from big_data_project_datapipeline_spark.operators.graph import (
+        multi_source_bfs,
+    )
+
+    ed = _edges(spark, [
+        (0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 0),  # 6-cycle
+        (3, 6), (6, 7), (7, 8), (8, 9),                  # tail
+        (1, 4), (2, 2),                                  # chord, loop
+    ])
+    seeds = spark.createDataFrame([(0,), (8,), (99,)], "node long")
+    nearest = {r["node"]: r["dist"] for r in
+               bfs_distance(ed, seeds, n_rounds=2).collect()}
+    per_seed: dict[int, int] = {}
+    for r in multi_source_bfs(ed, seeds, n_rounds=2).collect():
+        per_seed[r["node"]] = min(per_seed.get(r["node"], r["dist"]), r["dist"])
+    assert nearest == per_seed
+    assert nearest == {0: 0, 1: 1, 5: 1, 2: 2, 4: 2,
+                       8: 0, 7: 1, 9: 1, 6: 2, 99: 0}
+
+
 def test_multi_source_bfs_cap_outside_seed_and_dup_collapse(spark):
     """3-hop cap drops the 4-hop node; a seed outside the edge list
     persists at dist 0 only; duplicate seeds collapse to one

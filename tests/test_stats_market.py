@@ -1128,6 +1128,29 @@ def test_personalized_pagerank_hand_computed(spark):
     assert g[1] == g[2] == g[3]
 
 
+def test_personalized_pagerank_with_every_node_seeded_is_pagerank(spark):
+    """With every node a seed the restart vector is uniform, so PPR
+    runs pagerank's sweeps: on a directed graph with a dangling node
+    the ranks agree per node. Only within 1e-6: PPR's teleport term
+    (1-d)·(1/n) and pagerank's (1-d)/n round differently."""
+    from big_data_project_datapipeline_spark.operators.graph import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    ed = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 1), (4, 2), (1, 4), (3, 5)]
+    edges = spark.createDataFrame(ed, "src long, dst long")
+    seeds = spark.createDataFrame([(i,) for i in range(6)], "node long")
+    g = {r["node"]: r["pr"] for r in pagerank(edges, n_iter=4).collect()}
+    p = {
+        r["node"]: r["pr"]
+        for r in personalized_pagerank(edges, seeds, n_iter=4).collect()
+    }
+    assert set(p) == set(g) == set(range(6))
+    for node, want in g.items():
+        assert p[node] == pytest.approx(want, abs=1e-6), node
+
+
 def test_personalized_pagerank_seed_set_semantics(spark):
     """Duplicate seed rows collapse (|S| counts DISTINCT in-graph
     seeds) and out-of-graph seeds are ignored: seeds {1,1,99} on the
@@ -1407,7 +1430,9 @@ def test_lsh_bucket_stats_hand_computed(spark):
 def test_local_clustering_hand_computed(spark):
     """Triangle 0-1-2 with pendant 2-3: coefficients 1.0 / 1.0 / 1/3 /
     0.0 (degree-1 node defined 0), per-node triangle credits sum to
-    3x the global census."""
+    3x the global census. The sum also holds on K4 {0,1,2,3} plus
+    triangle 3-4-5 plus a star at 0 (5 triangles), with reversed
+    duplicates, a self-loop and NULL endpoints mixed in."""
     from big_data_project_datapipeline_spark.operators.graph import (
         local_clustering,
         triangle_count,
@@ -1425,6 +1450,23 @@ def test_local_clustering_hand_computed(spark):
     assert got[3] == (1, 0, 0.0)
     n_tri = triangle_count(edges).first()["n_triangles"]
     assert sum(t for (_, t, _) in got.values()) == 3 * n_tri == 3
+
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    ed = (
+        k4
+        + [(b, a) for a, b in k4]
+        + [(3, 4), (4, 5), (5, 3)]
+        + [(0, 6), (0, 7), (8, 0)]
+        + [(2, 2), (None, 4), (5, None)]
+    )
+    edges = spark.createDataFrame(ed, "src long, dst long")
+    census = triangle_count(edges).first()
+    assert (census["n_nodes"], census["n_edges"], census["n_triangles"]) == (
+        9, 12, 5
+    )
+    credits = [r["triangles"] for r in local_clustering(edges).collect()]
+    assert len(credits) == 9
+    assert sum(credits) == 3 * census["n_triangles"]
 
 
 def test_degree_assortativity_star_is_minus_one(spark):
