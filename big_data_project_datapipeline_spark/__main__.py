@@ -16,8 +16,9 @@ scope by design), normalizes them through the S1–S5 source ops, runs the
 merge pipeline (J1–J4, F1/F2), upserts the day into a date-partitioned
 parquet store (D1), then writes run metrics with the reference's
 completeness check (K3, A2). ``features`` runs the
-incremental feature pipeline (anti-join delta → X1–X14 + z-score → keep-
-first union) and writes the feature table + CSV export (K2).
+incremental feature pipeline (anti-join delta → X1–X14 + z-score) and
+upserts the engineered delta into a feature table partitioned by
+``date`` like the raw store, then writes the CSV export (K2).
 
 Payload file conventions in ``--payload-dir``:
     weather.json, air_quality.json, generation_mix.json, prices.json and
@@ -43,8 +44,8 @@ from big_data_project_datapipeline_spark.functions.quality import (
     observe_quality,
 )
 from big_data_project_datapipeline_spark.plans.features import (
+    engineered_delta,
     feature_delta,
-    incremental_feature_run,
 )
 from big_data_project_datapipeline_spark.plans.ingest import (
     day_grid,
@@ -59,7 +60,6 @@ from big_data_project_datapipeline_spark.sinks import (
     _recover,
     export_csv,
     merge_into_partitioned,
-    promote_overwrite,
     write_metrics_json,
 )
 from big_data_project_datapipeline_spark.sources.json_payloads import (
@@ -159,10 +159,17 @@ def run_ingest(
 def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
     """Incremental feature run over the raw store; parquet + CSV outputs.
 
+    Only the delta (raw keys the feature table lacks, by a null-safe anti
+    join) is engineered and upserted into the table, which is partitioned
+    by ``date`` like the raw store: a run rewrites only the dirs its delta
+    touches, and an empty delta writes nothing. No delta key is in the
+    table, so the sink's new-wins rule never meets a collision and every
+    earlier row keeps its values (the reference's keep-first, D2).
+
     The delta is persisted for the run, so the empty check, the scaler
-    fit and the write share one execution of it; it is released once
-    the commit ends. The table's row count rides the write as an
-    observation."""
+    fit and the sink's first job share one execution of it. The returned
+    frame and the CSV export hold the table's columns without ``date``;
+    the table's row count rides the export as an observation."""
     t0 = time.monotonic()
     raw = spark.read.parquet(store).drop("date")
     prev_path = os.path.join(out_dir, "features.parquet")
@@ -173,19 +180,25 @@ def run_features(spark: SparkSession, store: str, out_dir: str) -> DataFrame:
         previous = spark.read.parquet(prev_path)
     else:  # bootstrap: no previous output yet
         previous = raw.limit(0).select("datetime")
-    # incremental_feature_run builds this same delta plan, so its empty
-    # check, scaler fit and write all read this one cached execution
+    schema = previous.schema
     delta = feature_delta(raw, previous).cache()
     try:
-        features, obs = observe_quality(
-            incremental_feature_run(raw, previous), "features", []
-        )
-        # the plan reads prev_path → staged swap (sinks.promote_overwrite)
-        promote_overwrite(features, prev_path)
+        engineered = engineered_delta(delta)
+        if engineered is not None:
+            dated = engineered.withColumn("date", F.to_date("datetime"))
+            schema = dated.schema
+            merge_into_partitioned(
+                dated, prev_path, keys=["datetime"], partition_col="date"
+            )
     finally:
         delta.unpersist(blocking=True)
-    out = spark.read.schema(features.schema).parquet(prev_path)
-    export_csv(out, os.path.join(out_dir, "engineered_data.csv"))
+    out = spark.read.schema(schema).parquet(prev_path).drop("date")
+    observed, obs = observe_quality(out, "features", [])
+    # one file (one header) in key order, as the reference's CSV
+    export_csv(
+        observed.coalesce(1).sortWithinPartitions("datetime"),
+        os.path.join(out_dir, "engineered_data.csv"),
+    )
     write_metrics_json(
         {
             "last_run": dt.datetime.now(dt.timezone.utc).isoformat(),

@@ -8,9 +8,9 @@ jobs) — never one job per column.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark.schemas import quote_ident
@@ -675,10 +675,11 @@ def weighted_percentile_elements(
 
 
 def psi_bin(v, rmin, rmax, n_bins: int = 10):
-    """The PSI equal-width bin expression (shared by :func:`psi_drift`
-    and the streaming monitor so both bin identically): floor over the
-    reference-frozen range, out-of-range values clamped into the edge
-    bins, zero-width range collapsed to bin 0 via nullif+coalesce."""
+    """The PSI equal-width bin expression (shared by the divergence
+    family and the histogram sketches so all bin identically): floor
+    over the reference-frozen range, out-of-range values clamped into
+    the edge bins, zero-width range collapsed to bin 0 via
+    nullif+coalesce."""
     return (
         F.coalesce(
             F.least(
@@ -727,8 +728,9 @@ def psi_drift(
     empty bins exist for the smoothing terms. Never a per-row window.
     """
     full = _drift_bin_counts(df, split_expr, value_col, group_col, n_bins)
-    return psi_from_bin_counts(
-        full, group_col=group_col, n_bins=n_bins, smoothing=smoothing
+    return _divergence(
+        full, group_col, n_bins, smoothing, "psi",
+        lambda p, q: (p - q) * (F.log(p) - F.log(q)),
     )
 
 
@@ -789,38 +791,6 @@ def _drift_bin_counts(
     return full
 
 
-def psi_from_bin_counts(
-    full: DataFrame,
-    group_col: str = "event_type",
-    n_bins: int = 10,
-    smoothing: float = 0.5,
-) -> DataFrame:
-    """PSI from an already-binned complete count frame (grp, bin, cr,
-    cc) — the tail of :func:`psi_drift`, split out so (group, bin)
-    counts maintained as mergeable fold state give bit-equal PSI to
-    the batch operator. Expects every (grp, bin) cell present (zeros
-    included) — the Laplace terms need the empty bins."""
-    tot = full.groupBy("grp").agg(
-        F.sum("cr").alias("n_ref"), F.sum("cc").alias("n_cur")
-    )
-    s = float(smoothing)
-    denom_add = s * n_bins
-    with_tot = full.join(F.broadcast(tot), "grp")
-    p = (F.col("cr").cast("double") + F.lit(s)) / (
-        F.col("n_ref").cast("double") + F.lit(denom_add)
-    )
-    q = (F.col("cc").cast("double") + F.lit(s)) / (
-        F.col("n_cur").cast("double") + F.lit(denom_add)
-    )
-    term = F.round((p - q) * (F.log(p) - F.log(q)), 9).cast("decimal(18,9)")
-    out = with_tot.groupBy("grp").agg(
-        F.max("n_ref").cast("long").alias("n_ref"),
-        F.max("n_cur").cast("long").alias("n_cur"),
-        F.round(F.sum(term).cast("double"), 6).alias("psi"),
-    )
-    return out.select(F.col("grp").alias(group_col), "n_ref", "n_cur", "psi")
-
-
 def jsd_drift(
     df: DataFrame,
     split_expr,
@@ -855,23 +825,30 @@ def jsd_drift(
     bins) state. Never a per-row window.
     """
     full = _drift_bin_counts(df, split_expr, value_col, group_col, n_bins)
-    return jsd_from_bin_counts(
-        full, group_col=group_col, n_bins=n_bins, smoothing=smoothing
-    )
+
+    def term(p, q):
+        m = p + q
+        return F.lit(0.5) * p * (F.log(F.lit(2.0) * p) - F.log(m)) + (
+            F.lit(0.5) * q * (F.log(F.lit(2.0) * q) - F.log(m))
+        )
+
+    return _divergence(full, group_col, n_bins, smoothing, "jsd", term)
 
 
-def jsd_from_bin_counts(
+def _divergence(
     full: DataFrame,
-    group_col: str = "event_type",
-    n_bins: int = 10,
-    smoothing: float = 0.5,
+    group_col: str,
+    n_bins: int,
+    smoothing: float,
+    name: str,
+    term: Callable[[Column, Column], Column],
 ) -> DataFrame:
-    """JSD from an already-binned complete count frame (grp, bin, cr,
-    cc) — the tail of :func:`jsd_drift`, split out (the
-    psi_from_bin_counts pattern) so reference-frozen (group, bin)
-    counts maintained as fold state give bit-equal JSD to the batch
-    operator. Expects every (grp, bin) cell present (zeros
-    included)."""
+    """The divergence family's tail over the complete count frame of
+    :func:`_drift_bin_counts` (grp, bin, cr, cc): add-``smoothing``
+    bin shares p (reference) and q (current), ``term(p, q)`` per bin
+    rounded to 9 decimals and summed as DECIMAL, output column
+    ``name``. Every (grp, bin) cell must be present (zeros included):
+    the Laplace terms need the empty bins."""
     tot = full.groupBy("grp").agg(
         F.sum("cr").alias("n_ref"), F.sum("cc").alias("n_cur")
     )
@@ -884,18 +861,13 @@ def jsd_from_bin_counts(
     q = (F.col("cc").cast("double") + F.lit(s)) / (
         F.col("n_cur").cast("double") + F.lit(denom_add)
     )
-    m = p + q
-    term = F.round(
-        F.lit(0.5) * p * (F.log(F.lit(2.0) * p) - F.log(m))
-        + F.lit(0.5) * q * (F.log(F.lit(2.0) * q) - F.log(m)),
-        9,
-    ).cast("decimal(18,9)")
+    rounded = F.round(term(p, q), 9).cast("decimal(18,9)")
     out = with_tot.groupBy("grp").agg(
         F.max("n_ref").cast("long").alias("n_ref"),
         F.max("n_cur").cast("long").alias("n_cur"),
-        F.round(F.sum(term).cast("double"), 6).alias("jsd"),
+        F.round(F.sum(rounded).cast("double"), 6).alias(name),
     )
-    return out.select(F.col("grp").alias(group_col), "n_ref", "n_cur", "jsd")
+    return out.select(F.col("grp").alias(group_col), "n_ref", "n_cur", name)
 
 
 def _ecdf_frames(df, split_expr, value_col, group_col):

@@ -9,9 +9,8 @@ jobs: ``sinks.merge_into_partitioned`` creates a missing store, and
 Spark-first design: the delta is a ``left_anti`` join — one shuffle on the
 key (or a broadcast of the previous side's keys when they are small),
 map-side combinable. Both sides are still read whole, as the reference
-re-reads its whole history file every run: the feature table is not
-partitioned, so no partition filter can prune the previous side to the
-trailing dates yet.
+re-reads its whole history file every run: no partition filter prunes
+either side to the trailing dates yet.
 """
 
 from __future__ import annotations

@@ -5,13 +5,15 @@ output (only new keys are processed), derive ~32 features, union back, and
 keep-first dedup as the idempotency guard. The scaler fits on the *delta
 batch only* — a deliberate reference semantic (SURVEY.md §7.4 trap 6).
 
-One lazy plan from raw scan to sink. Three actions execute the delta: the
-empty check, the O(1) scaler-stats aggregate (12 scalars to the driver,
-then folded back in as literals — the Spark analog of broadcasting fitted
-parameters) and the sink's write. The plan persists nothing itself; a
-caller that persists :func:`feature_delta` of the same inputs first (the
-daily job, ``run_features``) makes all three read one cached execution,
-because Spark substitutes a cached plan wherever an identical one recurs.
+One lazy plan from raw scan to sink. :func:`engineered_delta` is the one
+delta → features chain: :func:`incremental_feature_run` ends it in the
+keep-first union, the daily job (``run_features``) in
+``sinks.merge_into_partitioned`` over the date-partitioned feature table.
+Three actions execute the delta: the empty check, the O(1) scaler-stats
+aggregate (12 scalars to the driver, then folded back in as literals —
+the Spark analog of broadcasting fitted parameters) and the tail's first
+job. The chain persists nothing itself; the daily job persists the delta
+it passes in, so all three read one cached execution.
 """
 
 from __future__ import annotations
@@ -70,6 +72,20 @@ def feature_delta(
     return anti_join_delta(raw, previous.select(ts_col), keys=(ts_col,))
 
 
+def engineered_delta(
+    delta: DataFrame,
+    ts_col: str = "datetime",
+    scale_cols: Sequence[str] = tuple(DEFAULT_SCALE_COLS),
+    scale_stats: dict[str, tuple[float, float]] | None = None,
+) -> DataFrame | None:
+    """The engineered rows of ``delta`` (:func:`feature_delta`), or None
+    when it is empty: the early exit (`isEmpty`, one cheap job —
+    reference data_engineering.py:113-115) comes before the scaler fit."""
+    if delta.isEmpty():
+        return None
+    return engineer_features(delta, ts_col, scale_cols, scale_stats)
+
+
 def incremental_feature_run(
     raw: DataFrame,
     previous: DataFrame,
@@ -79,12 +95,12 @@ def incremental_feature_run(
 ) -> DataFrame:
     """Full incremental run: delta → features → union/dedup (prev wins).
 
-    Returns the new feature table. When the delta is empty the early-exit
-    check (`isEmpty`, one cheap job — reference data_engineering.py:113-115)
-    returns ``previous`` unchanged.
+    Returns the new feature table, or ``previous`` unchanged when the
+    delta is empty.
     """
-    delta = feature_delta(raw, previous, ts_col)
-    if delta.isEmpty():
+    engineered = engineered_delta(
+        feature_delta(raw, previous, ts_col), ts_col, scale_cols, scale_stats
+    )
+    if engineered is None:
         return previous
-    engineered = engineer_features(delta, ts_col, scale_cols, scale_stats)
     return upsert_keep_first(previous, engineered, keys=(ts_col,)).orderBy(ts_col)

@@ -4,10 +4,11 @@ The reference's storage model is append-only CSV rewritten in full every
 day, versioned by DVC md5 (reference raw_data.py:241-269, data/*.dvc). The
 Spark-native storage model:
 
-- **Date-partitioned parquet** as the system of record. The daily upsert
-  reads and rewrites only the target date's ``key=value`` directories
-  instead of rewriting history — at 100 TB that is the difference between
-  an O(day) and O(years) write.
+- **Date-partitioned parquet** as the system of record, for the raw
+  store and the feature table alike. Each daily upsert reads and
+  rewrites only the ``date=`` directories its rows touch instead of
+  rewriting history — at 100 TB that is the difference between an
+  O(day) and O(years) write.
 - **CSV export** kept as a parity/interchange surface (K1/K2 semantics,
   exact column names preserved).
 - **JSON metrics doc** (K3) — O(1) driver-side write.
@@ -18,10 +19,11 @@ a directory stages the new data in the sibling ``<path>.staging``, then
 named subdirectories of it) into the sibling ``<path>.backup``, renames
 its staged twin into place, and drops the backup. The sites:
 
-- whole store: ``promote_overwrite``, ``compact_parquet``,
-  ``export_csv`` and ``write_training_shards`` (its ``data/`` and
-  ``_MANIFEST.json`` swap in together);
-- ``key=value`` partition dirs: ``merge_into_partitioned`` and
+- whole store: ``compact_parquet``, ``export_csv`` and
+  ``write_training_shards`` (its ``data/`` and ``_MANIFEST.json`` swap
+  in together);
+- ``key=value`` partition dirs: ``merge_into_partitioned`` (the raw
+  store's daily ingest and the feature table's daily delta) and
   ``delete_where``;
 - named shards of the streaming gram index (``streaming/dedup.py``): a
   tick's ``docs_<batch>`` and ``grams_<batch>``, and
@@ -135,7 +137,9 @@ def _read_partitions(
 def merge_into_partitioned(
     new: DataFrame, path: str, keys: list[str], partition_col: str
 ) -> None:
-    """Upsert ``new`` into the partitioned sink, new-wins per key (D1).
+    """Upsert ``new`` into the partitioned sink, new-wins per key within
+    its partition dir (D1); duplicate keys within ``new`` keep one row
+    whether or not the dir exists yet.
 
     Only the partition dirs ``new`` touches are read back (by path),
     merged, and swapped in — the reference's read-modify-write of the
@@ -155,28 +159,22 @@ def merge_into_partitioned(
     try:
         names = sorted(_partition_dirs(new, partition_col))
         existing = _read_partitions(new.sparkSession, path, names)
-        merged = (
-            new if existing is None else upsert_keep_last(existing, new, keys=keys)
+        # a first write of these dates upserts against an empty frame, so
+        # duplicate keys in ``new`` collapse as on a retry. Keyed per dir
+        # over sides hashed on the partition column, the window adds no
+        # shuffle and each dir lands in one task: one file in key order
+        # whatever the cache's partitioning, so no later order-sensitive
+        # float sum over the store depends on it.
+        old = new.limit(0) if existing is None else existing
+        merged = upsert_keep_last(
+            old.repartition(partition_col),
+            new.repartition(partition_col),
+            keys=[partition_col, *keys],
         )
-        # one file per partition dir, in key order, whatever partitioning
-        # the cache or the upsert left: the layout, and so every later
-        # order-sensitive float sum over the store, does not depend on it
-        laid_out = merged.repartition(partition_col).sortWithinPartitions(
-            partition_col, *keys
-        )
+        laid_out = merged.sortWithinPartitions(partition_col, *keys)
         _commit(path, laid_out.write.partitionBy(partition_col).parquet, names)
     finally:
         new.unpersist(blocking=True)
-
-
-def promote_overwrite(df: DataFrame, path: str) -> None:
-    """Whole-store parquet overwrite for stores whose OWN plan reads
-    ``path`` (the incremental read-transform-replace shape): the plan
-    reads the live store while the write goes to staging, then
-    :func:`_commit` swaps it in — an input is never clobbered mid-plan
-    and readers never see a half-written store."""
-    _recover(path)
-    _commit(path, df.write.parquet)
 
 
 def export_csv(df: DataFrame, path: str) -> None:

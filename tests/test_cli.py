@@ -62,6 +62,12 @@ def _write_payloads(day_dir, date: str, temps, carbon_hours=None):
     }))
 
 
+def _file_stats(d) -> dict:
+    """Each file in dir ``d`` → (inode, mtime): a rewrite changes both."""
+    stats = {f: os.stat(os.path.join(d, f)) for f in os.listdir(d)}
+    return {f: (st.st_ino, st.st_mtime_ns) for f, st in stats.items()}
+
+
 def test_two_day_ingest_then_incremental_features(spark, tmp_path):
     store = str(tmp_path / "raw")
     out = str(tmp_path / "features")
@@ -75,6 +81,11 @@ def test_two_day_ingest_then_incremental_features(spark, tmp_path):
     f1 = run_features(spark, store, out)
     assert f1.count() == 3
     assert "scaled_temperature_C" in f1.columns and "log_pm10" in f1.columns
+    # the table is partitioned by date; readers never see the column
+    assert "date" not in f1.columns
+    table = tmp_path / "features" / "features.parquet"
+    assert sorted(os.listdir(table)) == ["date=2024-01-15"]
+    day1_files = _file_stats(table / "date=2024-01-15")
     # snapshot NOW: returned frames are lazy over the store files and the
     # next run overwrites them
     v1 = {r["datetime"]: r["scaled_temperature_C"] for r in f1.collect()}
@@ -86,19 +97,29 @@ def test_two_day_ingest_then_incremental_features(spark, tmp_path):
 
     f2 = run_features(spark, store, out)
     assert f2.count() == 5
-    # the metrics doc's row count comes from an observation on the write
+    assert f2.columns == f1.columns
+    # the metrics doc's row count comes from an observation on the export
     fm = json.loads((tmp_path / "features" / "_metrics" / "features.json").read_text())
     assert fm["rows"] == 5 and fm["columns"] == len(f2.columns)
-    # rename-promote leaves no stale .tmp for glob consumers to pick up
-    assert not (tmp_path / "features" / "features.parquet.tmp").exists()
+    # the delta's commit wrote only its own date dir and left no staging
+    # or backup dir for glob consumers to pick up
+    assert sorted(os.listdir(table)) == ["date=2024-01-15", "date=2024-01-16"]
+    assert _file_stats(table / "date=2024-01-15") == day1_files
+    assert sorted(os.listdir(tmp_path / "features")) == [
+        "_metrics", "engineered_data.csv", "features.parquet"
+    ]
     # day-1 rows unchanged by the incremental run (keep-first)
     v2 = {r["datetime"]: r["scaled_temperature_C"] for r in f2.collect()}
     for k, v in v1.items():
         assert v2[k] == v
 
-    # idempotent re-run of the same day: store row count stable
+    # idempotent re-run of the same day: store row count stable, and the
+    # features run that follows finds no delta and writes no partition
     run_ingest(spark, str(tmp_path / "d2"), store, dt.date(2024, 1, 16))
     assert spark.read.parquet(store).count() == 5
+    before = {d: _file_stats(table / d) for d in os.listdir(table)}
+    assert run_features(spark, store, out).count() == 5
+    assert {d: _file_stats(table / d) for d in os.listdir(table)} == before
 
     metrics = json.loads((tmp_path / "raw" / "_metrics" / "ingest.json").read_text())
     assert metrics["rows_ingested"] == 2
@@ -114,30 +135,36 @@ def test_features_rerun_after_crashed_commit_matches_uninterrupted(
     spark, tmp_path
 ):
     """A features run killed inside its commit's swap window leaves the
-    previous features.parquet only in the backup dir. The rerun must
-    read it from there, not bootstrap from an empty previous table and
-    re-fit the z-score over every raw row."""
+    previous version of a touched date dir only in the backup dir. The
+    rerun must read it from there, not take that date's rows for new
+    keys and re-fit the z-score over them."""
     import shutil
 
     from big_data_project_datapipeline_spark import sinks
 
     store = str(tmp_path / "raw")
+    _write_payloads(tmp_path / "d0", "2024-01-14", [3.0, 4.0])
+    run_ingest(spark, str(tmp_path / "d0"), store, dt.date(2024, 1, 14))
     _write_payloads(tmp_path / "d1", "2024-01-15", [5.0, 6.0, 7.0])
     run_ingest(spark, str(tmp_path / "d1"), store, dt.date(2024, 1, 15))
     clean, crashed = tmp_path / "clean", tmp_path / "crashed"
     run_features(spark, store, str(clean))
-    _write_payloads(tmp_path / "d2", "2024-01-16", [8.0, 9.0])
-    run_ingest(spark, str(tmp_path / "d2"), store, dt.date(2024, 1, 16))
+    # day 1 again with two more hours: the delta lands in the existing dir
+    _write_payloads(tmp_path / "d1b", "2024-01-15", [5.0, 6.0, 7.0, 8.0, 9.0])
+    run_ingest(spark, str(tmp_path / "d1b"), store, dt.date(2024, 1, 15))
 
     shutil.copytree(clean, crashed)
     prev = str(crashed / "features.parquet")
     backup = prev + sinks._BACKUP
     os.makedirs(backup)
-    os.rename(prev, os.path.join(backup, sinks._WHOLE_STORE))
+    os.rename(
+        os.path.join(prev, "date=2024-01-15"),
+        os.path.join(backup, "date=2024-01-15"),
+    )
 
     want = sorted(map(tuple, run_features(spark, store, str(clean)).collect()))
     got = sorted(map(tuple, run_features(spark, store, str(crashed)).collect()))
-    assert len(got) == 5
+    assert len(got) == 7
     assert got == want
 
 
@@ -247,9 +274,10 @@ def test_a_second_day_runs_each_plan_once_and_releases_its_caches(
     Ingest runs the day's plan once: the job that names the touched
     partition fills a cache the write reads (14 jobs here, 25 when the
     write re-ran the plan). Features run their delta once: the empty
-    check, the scaler fit and the write share one cached execution (13
-    jobs here, 19 when each re-ran it). The budgets leave a little room
-    for planner variation, not for a second execution of either plan."""
+    check, the scaler fit and the sink's first job share one cached
+    execution, and that job caches the engineered rows for the write (14
+    jobs here). The budgets leave a little room for planner variation,
+    not for a second execution of either plan."""
     import uuid
 
     store, out = str(tmp_path / "raw"), str(tmp_path / "features")

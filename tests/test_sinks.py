@@ -45,10 +45,37 @@ def test_merge_into_partitioned_upsert(spark, tmp_path):
     assert out["2024-01-01T00:00:00"] == 1.0
     assert out["2024-01-01T01:00:00"] == 99.0
     assert out["2024-01-02T00:00:00"] == 3.0
+    # the merge read day 1 back: each touched dir, read back or new, is
+    # still one file with its rows in key order
+    import pyarrow.parquet as pq
+
+    for d in ("date=2024-01-01", "date=2024-01-02"):
+        files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        assert len(files) == 1
+        got = pq.read_table(os.path.join(path, d, files[0]))["datetime"].to_pylist()
+        assert got == sorted(got) and len(got) == (2 if d.endswith("01") else 1)
 
     # idempotent re-merge
     sinks.merge_into_partitioned(day2, path, keys=["datetime"], partition_col="date")
     assert spark.read.parquet(path).count() == 3
+
+
+def test_first_write_of_a_date_collapses_duplicate_keys_as_a_retry_does(
+    spark, tmp_path
+):
+    """A batch with a duplicated key leaves the same rows whether its
+    dates are new to the store or already written by the same batch."""
+    path = str(tmp_path / "hist")
+    batch = _mk(spark, [(ts(1, 0), 1.0), (ts(1, 0), 2.0), (ts(1, 1), 3.0)])
+
+    def rows():
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    sinks.merge_into_partitioned(batch, path, keys=["datetime"], partition_col="date")
+    first = rows()
+    sinks.merge_into_partitioned(batch, path, keys=["datetime"], partition_col="date")
+    assert len(first) == 2
+    assert first == rows()
 
 
 def test_csv_roundtrip_special_columns(spark, tmp_path):
@@ -352,16 +379,6 @@ def _delete_op(spark, root):
     sinks.delete_where(spark, f"{root}/store", F.col("user") == 1, "day")
 
 
-def _promote_build(spark, root):
-    df = spark.createDataFrame([(1,), (2,)], "x long")
-    sinks.promote_overwrite(df, f"{root}/store")
-
-
-def _promote_op(spark, root):
-    df = spark.createDataFrame([(3,)], "x long")
-    sinks.promote_overwrite(df, f"{root}/store")
-
-
 def _compact_build(spark, root):
     spark.range(300).select(
         (F.col("id") % 3).cast("string").alias("date"), "id"
@@ -429,7 +446,6 @@ _SITES = {
     "delete_empties_partition": (
         _delete_build, _delete_op, "store", False, _snapshot
     ),
-    "promote_overwrite": (_promote_build, _promote_op, "store", True, _snapshot),
     "compact_parquet": (_compact_build, _compact_op, "store", True, _snapshot),
     "compact_gram_index": (
         _gram_build, _gram_compact_op, "index", False, _gram_snapshot
@@ -447,7 +463,6 @@ _WINDOWS = {
     # one staged dir (day=d1): swapping is swapped
     "delete_empties_partition": ("staged", "backing_up", "backed_up", "swapped"),
     # one replaced dir (the store): backing_up is backed_up, swapping is swapped
-    "promote_overwrite": ("staged", "backed_up", "swapped"),
     "compact_parquet": ("staged", "backed_up", "swapped"),
     # one staged dir (the merged shard): swapping is swapped
     "compact_gram_index": ("staged", "backing_up", "backed_up", "swapped"),

@@ -1469,7 +1469,7 @@ def test_local_clustering_hand_computed(spark):
     assert sum(credits) == 3 * census["n_triangles"]
 
 
-def test_degree_assortativity_star_is_minus_one(spark):
+def test_degree_assortativity_moment_sums_on_a_star(spark):
     """The q199 moment device on a star graph: perfectly
     disassortative (r = -1), hand-traced sums (n=6, sx=sy=12, sxy=18,
     sxx=syy=30)."""
